@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -10,9 +9,9 @@ object Bench {
     def selected = SparkEntry.queries.filter { case (k, _) => only.forall(_.contains(k)) }
     // Fresh per-run scratch dir, deleted on exit: repeated full runs in a
     // shared /tmp otherwise accumulate leaked blockmgr-*/spark-* trees
-    // from killed sessions (observed: dozens of dirs), and the r9
-    // baseline-pinning runs drifted monotonically 179.9→194.9→208.5 s
-    // across back-to-back invocations with byte-identical plans. The
+    // from killed sessions (observed: dozens of dirs), and baseline-
+    // pinning runs drifted monotonically 179.9→194.9→208.5 s across
+    // back-to-back invocations with byte-identical plans. The
     // canary instrumentation below separates within-run JVM accumulation
     // from this cross-run machine-state component.
     val localDir = java.nio.file.Files.createTempDirectory("graft-bench-").toFile
@@ -22,57 +21,20 @@ object Bench {
       }
       rm(localDir)
     }
-    // NOTE on llm_curate_e2e_v2: the fused in-memory stage mode
-    // (-Dgraft.e2e2.fused=1, see Dag's `materialize` doc) was built and
-    // A/B-measured here at sf0.1 — fused 9.0/9.1s vs materializing
-    // 8.9/9.1s. The r13 "job-COUNT-bound" hypothesis is REFUTED: the
-    // chain is compute-bound (BPE training alone is ~5s of the ~9s;
-    // text_bpe_encode measures it standalone), so the bench stays on
-    // the materializing path — the same path the oracle verifies.
-    val spark = SparkSession.builder()
+    // Run shape only: the posture is GraftConf's, the one Verify checks.
+    val spark = GraftConf.builder("graft-bench", cpus.toInt)
       .master(s"local[$cpus]")
       .config("spark.local.dir", localDir.getAbsolutePath)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Match GraftConf: query builders are written for classic
-      // (null-on-invalid) semantics, not ANSI strict mode.
-      .config("spark.sql.ansi.enabled", "false")
       // Local test files are far below the 128 MB default split size —
       // split aggressively so scans parallelize.
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      // r17 (engine-posture conf, mirrored in GraftConf and Verify — see
-      // OPTIMIZATION_r17.md): AQE may re-plan cached subtrees. The
-      // default (false) pins every .cache() subplan to the static
-      // shuffle-partition count — no post-shuffle coalescing — so each
-      // cached-tier read pays a wave of near-empty tasks. NOT a
-      // local[32] tuning: the conf is scale-independent (it only
-      // matters that no consumer relies on a cached frame's output
-      // partitioning, which the partition-invariance sweeps pin).
-      // Measured 1.4-1.7× on cache-heavy keys at sf0.1; oracle-green at
-      // all SFs after the change. Timing methodology is untouched.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      // The SQL status store retains plan DESCRIPTIONS for up to 1000
-      // executions even with the UI off. Several plans here embed large
-      // constant-folded literal arrays (IVF codebooks, LSH hyperplanes),
-      // so hundreds of retained executions add up to GBs of heap and the
-      // back half of a long run drowns in GC. Keep only the last few.
-      .config("spark.sql.ui.retainedExecutions", "3")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // ContextCleaner frees broadcast blocks / shuffle state only when a
-      // GC collects the weak references — with a 16g heap that can take
-      // 30+ min, by which time ~200 executions' worth of broadcasts have
-      // filled the storage pool and later queries drown in GC pauses
-      // (r02: trivial queries timed 20s+ late in the run, 0.4s isolated).
-      .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Shuffle-write accounting rides the whole run: wall-clock is
     // machine-noisy, but bytes crossing an exchange only change when the
     // PLAN changes — the signal that distinguishes a real regression
-    // from a GC pause (the r03 25.2s-vs-3.6s incident).
+    // from a GC pause (a 25.2 s timing whose isolated truth was 3.6 s).
     val accounting = new org.apache.spark.graftbridge.ShuffleAccounting
     spark.sparkContext.addSparkListener(accounting)
     val shuffleBytes = scala.collection.mutable.Map[String, Long]()
@@ -99,14 +61,14 @@ object Bench {
       // those wait for the ContextCleaner to notice the RDD object was
       // GC'd. Over a 250-query pass the leaked checkpoint blocks
       // fragment the storage pool and the per-job fixed cost of LATER
-      // many-job iterative queries climbs (r11: dedup_clusters 2.7 s
+      // many-job iterative queries climbs (dedup_clusters: 2.7 s
       // isolated vs up to 9.3 s late in a full run, plans byte-equal).
       // Unpersist everything still registered explicitly.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       // Untimed full GC: lets the ContextCleaner reap this query's
       // broadcasts/shuffles NOW instead of letting 200 executions of
-      // state pile into the storage pool (see periodicGC note above).
+      // state pile into the storage pool (see GraftConf's periodicGC note).
       System.gc()
       name -> dt
     }
@@ -142,11 +104,11 @@ object Bench {
       // throughput. Sub-half-second queries get one run (a GC pause there
       // is visible noise, not a grading hazard) to keep total wall time
       // bounded as the inventory grows.
-      // Per-run GC attribution (r14 verdict task 1): a 2.5× run-to-run
+      // Per-run GC attribution: a 2.5× run-to-run
       // spread on a byte-identical plan is scheduler/GC sensitivity, not
       // a plan regression — record the JVM-wide GC time spent DURING the
       // run so a driver-vs-builder timing gap is mechanically explainable
-      // from the artifact instead of re-adjudicated by hand each round.
+      // from the artifact instead of re-adjudicated by hand.
       def timedRun(): (Double, Long) = {
         val g0 = totalGcMs()
         val t0 = System.nanoTime()
@@ -170,8 +132,8 @@ object Bench {
       val runs = if (fast || w < 0.5) 1 else 2
       var (best, bestGc) = (1 to runs).map(_ => timedRun()).minBy(_._1)
       // Session-noise guard: a machine-load window can swallow BOTH timed
-      // runs (r03: dedup_clusters recorded 25.2s where isolated truth was
-      // 3.56s). The warmup pass minutes earlier is an independent
+      // runs (dedup_clusters once recorded 25.2s where isolated truth
+      // was 3.56s). The warmup pass minutes earlier is an independent
       // observation of the same query — when the timed best exceeds 3× it,
       // re-measure (bounded) and keep the overall min, logging both.
       var extra = 0
@@ -200,15 +162,15 @@ object Bench {
     println(fullLine)
     // The driver keeps only the LAST 2000 chars of output, so the short
     // line below folds the tail into "_other_total" — which left the
-    // mechanical bench gate grading only ~50 of the pinned keys (r11
-    // verdict task 2). Persist the COMPLETE per-query record to a file
+    // mechanical bench gate grading only ~50 of the pinned keys.
+    // Persist the COMPLETE per-query record to a file
     // the gate can merge: tools/bench_gate.py trusts it iff its "run" id
     // (a hash over every name:seconds pair) matches the one embedded in
     // the driver-captured short line — binding file and artifact to the
     // same physical run. SUBSET runs (SPARK_GRAFT_BENCH_ONLY pin/iterate
     // runs) go to BENCH_SUBSET.json instead: they used to clobber
     // BENCH_FULL.json, leaving a dirty artifact of record after every
-    // local pin run (r14 verdict task 8).
+    // local pin run.
     val outFile = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), fullLine + "\n")
@@ -227,7 +189,7 @@ object Bench {
   }
 
   /** Machine/JVM provenance for the artifact: CPU model, logical cores,
-    * 1-min load average at run end, JVM version, heap max. The r14
+    * 1-min load average at run end, JVM version, heap max. A
     * driver-vs-builder 1.22× spread on byte-identical plans was only
     * "likely environment drift" because no artifact recorded what either
     * machine looked like — this closes that.

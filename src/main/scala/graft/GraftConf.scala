@@ -2,13 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Production entry point: one place that encodes the session settings
-  * every graft deployment wants, sized by cluster parallelism instead of
-  * Spark's one-size defaults. A consumer replaces the reference runner
-  * with `GraftConf.builder("app", cores).getOrCreate()` and gets the
-  * engine's expected semantics (UTC, ANSI off for BigQuery-style NULL
-  * arithmetic) and scale posture (AQE + skew handling on, shuffle
-  * partitions ∝ cores) without copying config folklore.
+/** The one place that configures a graft session: every entry point
+  * (Bench, Verify, ScaleGen, the RPC server, the test suites) starts
+  * from `GraftConf.builder(app, cores)` and may override only run shape
+  * — master, shuffle partitions, `spark.local.dir` and the scan split
+  * size. Everything else is the posture the DuckDB oracle verifies:
+  * UTC, ANSI off for BigQuery-style NULL arithmetic, AQE allowed to
+  * re-plan cached subtrees, and shuffle partitions ∝ cores.
+  *
+  * The BigQuery dialect is NOT installed here: the shared session keeps
+  * Spark semantics for `split`, `regexp_extract` and friends, and engine
+  * sessions get the dialect from `SessionManager.create`. Deployments
+  * that want it session-wide pass
+  * `--conf spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftConf {
 
@@ -24,6 +30,9 @@ object GraftConf {
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // BigQuery-style arithmetic (NULL on overflow/bad cast/division by
+      // zero, not errors): every query builder is written for it.
+      .config("spark.sql.ansi.enabled", "false")
       // AQE re-plans at runtime: coalesces small shuffles, converts
       // sort-merge to broadcast when a side turns out small, splits
       // skewed partitions — all central to the 100 TB posture.
@@ -43,17 +52,25 @@ object GraftConf {
       // Columnar scans: pushdown + pruning are the difference between
       // reading 100 TB and reading the 2 columns × 3 partitions asked for.
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       // Runtime filters: plant a bloom filter from the selective side of
       // a join onto the fact-side scan (LayoutSpec proves the plans
       // accept it). Size thresholds stay at defaults — they are tuned
       // for cluster-scale inputs, which is exactly the deployment here.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled", "true")
-      // BigQuery-style arithmetic (NULL on overflow/bad cast, not errors).
-      .config("spark.sql.ansi.enabled", "false")
-      // The engine's extension point: native kernels + BigQuery dialect
-      // for every session built on this context.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      // The SQL status store retains plan DESCRIPTIONS for up to 1000
+      // executions even with the UI off. Several plans embed large
+      // constant-folded literal arrays (IVF codebooks, LSH hyperplanes),
+      // so hundreds of retained executions add up to GBs of heap in a
+      // long-lived driver or server. Keep only the last few.
+      .config("spark.sql.ui.retainedExecutions", "3")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      // ContextCleaner frees broadcast blocks / shuffle state only when a
+      // GC collects the weak references — with a large heap that can take
+      // tens of minutes, by which time hundreds of executions' broadcasts
+      // have filled the storage pool and later queries drown in GC pauses.
+      .config("spark.cleaner.periodicGC.interval", "1min")
   }
 }

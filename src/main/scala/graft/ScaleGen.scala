@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the SCALING bench (SURVEY §6j):
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (ANN cost is corpus size, not value distribution; probe queries stay
   * the original vec_id < 10).
   *
-  * `--zipf S` (round 14, SURVEY §6q): the SKEW-ADVERSARIAL tier.
+  * `--zipf S` (SURVEY §6q): the SKEW-ADVERSARIAL tier.
   * Uniform replication can never trigger the salting/AQE-skew paths
   * that SkewOps and AQE skew-join exist for — every join key has the
   * same fan-in at every factor. With --zipf S, replica 0 of each FACT
@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * and referential integrity holds exactly. With S=1 the output is
   * row-for-row identical to the uniform generator. Total fact rows =
   * base·(factor-1+S); with factor=10, S=100 replica 0 holds ~92% of
-  * all rows — "one replica ~100× the others" (r13 verdict task 1).
+  * all rows — "one replica ~100× the others".
   * Base keys are < 1e6 (sf0.1 max is l_orderkey 149,999) so copies
   * stay disjoint for S ≤ 100.
   *
@@ -72,12 +72,10 @@ object ScaleGen {
     }
     val (src, dst, factor) =
       (pos(0), pos(1), if (pos.length > 2) pos(2).toInt else 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val spark = GraftConf.builder("graft-scalegen", cpus.toInt)
+      .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,32 +10,17 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Partition-invariance sweeps (r11 verdict task 4) re-run the full
-    // inventory at several shuffle-partition settings without changing
-    // the executor count; the driver never sets this.
+    // Partition-invariance sweeps re-run the full inventory at several
+    // shuffle-partition settings without changing the executor count;
+    // an ordinary oracle run leaves it unset.
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
+    // Run shape only: the posture is GraftConf's, the one Bench times.
+    val spark = GraftConf.builder("graft-verify", cpus.toInt)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Match GraftConf: query builders are written for classic
-      // (null-on-invalid) semantics, not ANSI strict mode.
-      .config("spark.sql.ansi.enabled", "false")
+      // Local test files are far below the 128 MB default split size —
+      // split aggressively so scans parallelize.
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      // Match GraftConf/Bench (r17): AQE may re-plan cached subtrees.
-      // Verify must validate the exact session posture Bench times.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      // See Bench: retained execution plan descriptions (some with huge
-      // literal arrays) otherwise accumulate GBs of heap over 70+ queries.
-      .config("spark.sql.ui.retainedExecutions", "3")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // See Bench: let the ContextCleaner reap per-query broadcast and
-      // shuffle state promptly instead of flooding the storage pool over
-      // a 100-query run.
-      .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

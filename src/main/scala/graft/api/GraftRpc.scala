@@ -63,20 +63,24 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
   /** Dispatch with the reference's error taxonomy (src/rpc/methods.rs +
     * src/error.rs): engine failures surface as [[GraftError]] kinds, so
     * callers (and the JSON-RPC transport) can branch on code/kind.
+    *
+    *  - analysis over a missing relation → UnknownTable (-32000);
+    *  - any other Spark error while analysing or executing user SQL
+    *    (every [[org.apache.spark.SparkThrowable]], including runtime
+    *    ones such as `raise_error` or a `SparkNumberFormatException`)
+    *    → QueryError (-32000);
+    *  - a wrong-typed or missing parameter value → InvalidParams (-32600).
     */
   def dispatch(method: String, params: Map[String, Any] = Map.empty): Any =
     try dispatchImpl(method, params)
     catch {
       case e: GraftError => throw e
-      // Spark analysis errors over a missing relation = the reference's
-      // "table not found" executor error; everything else from the
-      // engine is a QueryError (error.rs Executor family).
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition != null && e.getCondition.startsWith("TABLE_OR_VIEW_NOT_FOUND") =>
         val table = Option(e.getMessageParameters.get("relationName")).getOrElse("?")
         throw GraftError.UnknownTable(table.stripPrefix("`").stripSuffix("`"))
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw GraftError.QueryError(e.getMessage)
+      case e: org.apache.spark.SparkThrowable =>
+        throw GraftError.QueryError(String.valueOf(e.asInstanceOf[Throwable].getMessage))
       case e @ (_: ClassCastException | _: NoSuchElementException | _: NumberFormatException) =>
         throw GraftError.InvalidParams(s"Malformed params for $method: ${e.getMessage}")
     }

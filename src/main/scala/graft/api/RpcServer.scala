@@ -8,8 +8,6 @@ import java.util.Base64
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** JSON-RPC 2.0 server for the bq.* surface, over the same two
   * transports as the reference (reference: src/main.rs:49-188 —
   * newline-delimited JSON on stdio, or WebSocket text frames; framing
@@ -76,12 +74,13 @@ object RpcServer {
     val wire = System.out
     System.setOut(new PrintStream(new java.io.FileOutputStream(java.io.FileDescriptor.err), true))
 
-    val spark = SparkSession.builder()
-      .appName("graft-rpc")
+    // The oracle-verified posture. Run shape: the master comes from the
+    // deployment setting `graft.rpc.master`; requests are small, so the
+    // session is sized as a 4-core app (8 shuffle partitions) on any
+    // master. `spark.local.dir` and the warehouse dir stay whatever the
+    // launcher passes as -D properties.
+    val spark = graft.GraftConf.builder("graft-rpc", clusterCores = 4)
       .master(sys.props.getOrElse("graft.rpc.master", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     val rpc = new GraftRpc(spark, backend)
 

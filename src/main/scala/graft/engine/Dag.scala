@@ -29,9 +29,8 @@ object DagTable {
   def view(name: String, df: DataFrame): DagTable = DagTable(name, source = Some(df))
   /** A view whose BUILDER runs driver-side work (training collects,
     * checkpoints): deferring the call into the table's scheduler slot
-    * lets it overlap other stages (r17 — eagerly-built views ran at
-    * registration time, serializing e.g. BPE training BEFORE the DAG's
-    * slot scheduler ever started).
+    * lets it overlap other stages instead of running at registration
+    * time, before the slot scheduler starts.
     */
   def lazyView(name: String, mk: () => DataFrame): DagTable = DagTable(name, thunk = Some(mk))
   def derived(name: String, sql: String): DagTable = DagTable(name, sql = Some(sql))
@@ -75,21 +74,7 @@ object Dag {
       .getOrElse(DefaultMaxConcurrency)
 }
 
-/** @param materialize when true (default — the reference's own
-  *   semantics and the 100 TB posture: every derived stage is a
-  *   write-once parquet checkpoint that survives its JVM and is
-  *   re-readable by dependents without recomputation), derived tables
-  *   materialize under `workDir`. When false — the FUSED in-memory
-  *   mode (r13 verdict task 7) — each derived stage registers as a
-  *   lazy temp view instead, so the whole chain collapses into one
-  *   Catalyst plan evaluated at the final read: identical SQL,
-  *   identical results (PipelineE2E2Spec pins fused == materialized), none of
-  *   the per-stage job/commit overhead that dominates toy-scale
-  *   benches. Use it for gate-scale measurement, never as the
-  *   production checkpoint pattern.
-  */
-final class Dag(session: GraftSession, workDir: Option[Path] = None,
-    materialize: Boolean = true) {
+final class Dag(session: GraftSession, workDir: Option[Path] = None) {
 
   private val tables = mutable.LinkedHashMap[String, DagTable]()
   private val deps = mutable.LinkedHashMap[String, Seq[String]]()
@@ -327,7 +312,6 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None,
   /** Materialize one table and register it as a session view. */
   private def execute(name: String): Option[Throwable] =
     try {
-      val t0 = System.nanoTime()
       val t = tables(name)
       t match {
         case DagTable(_, None, _, _, _, Some(mk)) =>
@@ -339,29 +323,13 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None,
           // append the registered literal rows on every run.
           if (!session.listTables().contains(name)) session.createTable(name, schema)
           if (rows.nonEmpty) session.insert(name, rows)
-        case DagTable(_, Some(sql), _, _, _, _) if materialize =>
+        case DagTable(_, Some(sql), _, _, _, _) =>
           val out = dir.resolve(name).toString
           session.sql(sql).write.mode("overwrite").parquet(out)
           session.spark.read.parquet(out).createOrReplaceTempView(name)
-        case DagTable(_, Some(sql), _, _, _, _) =>
-          // EAGER localCheckpoint, not a bare view and not cache():
-          // a bare view INLINES the stage plan at every downstream
-          // reference (gopher sits inside ccnet's scorer AND its final
-          // join — measured 9.4s vs the materializing path's 8.4s from
-          // the recomputation), and a lazy cache defers every stage's
-          // compute to the single final read, which serializes work the
-          // slot scheduler overlaps in the materializing path (bpe
-          // training beside the gopher→ccnet chain — measured 10.7s).
-          // The eager checkpoint computes the stage NOW, inside its
-          // scheduler slot, into in-memory blocks: materialization
-          // semantics and concurrency without the parquet commit
-          // round-trips.
-          session.sql(sql).localCheckpoint().createOrReplaceTempView(name)
         case other =>
           throw new IllegalArgumentException(s"Source table ${other.name} needs a schema or view")
       }
-      if (sys.props.get("graft.dag.profile").contains("1"))
-        System.err.println(f"[dag] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
       None
     } catch { case NonFatal(e) => Some(e) }
 

@@ -26,6 +26,12 @@ final class GraftSession private[engine] (
 
   import GraftSession._
 
+  /** The in-memory blocks behind every insert snapshot. They outlive the
+    * temp views that point at them, so [[SessionManager.destroy]] hands
+    * them back through [[release]].
+    */
+  private val snapshots = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+
   /** Resolve a table through this session's backend (reference:
     * executor/mod.rs dispatch): session temp views win, then the
     * resolver (remote backends register their reads as views so SQL
@@ -51,8 +57,17 @@ final class GraftSession private[engine] (
     // Materialize through a snapshot so the view does not become a
     // self-referencing plan of unbounded depth after many inserts.
     val snap = appended.localCheckpoint(true)
+    snap.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(snapshots.add)
     snap.createOrReplaceTempView(name)
     rows.size.toLong
+  }
+
+  /** Unpersist every insert snapshot this session made. */
+  private[engine] def release(): Unit = {
+    var rdd = snapshots.poll()
+    while (rdd != null) { rdd.unpersist(blocking = false); rdd = snapshots.poll() }
   }
 
   /** Run SQL against this session's tables. In bigquery mode the text is
@@ -107,9 +122,9 @@ object GraftSession {
 
   /** Split a Spark analyzer relation name — `` `a`.`b` `` with literal
     * backticks doubled inside a part, or a bare dotted string — into its
-    * parts (r9 verdict "what's wrong" #2: the old outer-backtick strip
-    * left `` `db`.`tbl` `` with interior backticks, so the retry loop
-    * registered a malformed name that could never resolve). A part
+    * parts (an outer-backtick strip would leave `` `db`.`tbl` `` with
+    * interior backticks, so the retry loop would register a malformed
+    * name that could never resolve). A part
     * containing a literal dot (`` `a.b` ``) stays ONE part.
     */
   private[engine] def parseRelationName(name: String): Seq[String] =
@@ -125,8 +140,7 @@ object GraftSession {
     * query: string literals, backtick identifiers and comments are
     * masked behind placeholder tokens before any pattern runs, so a
     * literal containing `SAFE_CAST(` or `AS INT64)` survives verbatim
-    * (this closes the round-5 documented limitation of the raw-text
-    * pass). Masking also makes UNNEST arrays containing string literals
+    * (a raw-text pass would rewrite inside them). Masking also makes UNNEST arrays containing string literals
     * robust: a `]` inside a quoted element no longer terminates the
     * bracket match, because the literal is a single opaque token when
     * the pattern runs.
@@ -273,7 +287,10 @@ final class SessionManager(root: SparkSession) {
     val s = sessions.remove(id)
     if (s != null) {
       // Temp views die with the wrapped session; drop eagerly anyway.
+      // The snapshot blocks behind them live in the shared SparkContext
+      // and would not: release them too.
       s.spark.catalog.listTables().collect().foreach(t => s.spark.catalog.dropTempView(t.name))
+      s.release()
       true
     } else false
   }

@@ -22,15 +22,15 @@ object GraftFunctions {
       IntersectCountSortedLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** All B Poisson-bootstrap replica weights of a long key in one
-    * native pass (graftbridge.PoissonKernel; r17).
+    * native pass (graftbridge.PoissonKernel).
     */
   def poissonWeights(key: Column, b: Int, thresholds: Seq[Long]): Column =
     ColumnBridge.column(org.apache.spark.sql.graftbridge.PoissonWeights(
       ColumnBridge.expression(key), b, thresholds))
 
-  /** array_min(array_intersect(a, b)) over long arrays in one
-    * allocation-free pass (graftbridge.MinSharedBand; r17 — the graph-ANN
-    * minimal-shared-band emission filter).
+  /** array_min(array_intersect(a, b)) over long arrays without null
+    * elements, in one allocation-free pass (graftbridge.MinSharedBand —
+    * the graph-ANN minimal-shared-band emission filter).
     */
   def minSharedBand(a: Column, b: Column): Column =
     ColumnBridge.column(org.apache.spark.sql.graftbridge.MinSharedBand(
@@ -100,9 +100,9 @@ object GraftFunctions {
     * with literal-delimiter (BigQuery) semantics — every engine session
     * via BQCompat.installDialect — cannot change its meaning.
     * `functions.split` resolves BY NAME through the session registry at
-    * analysis time, which is exactly the hole this closes (r12: BPE
-    * training inside a DAG engine session silently learned zero rules
-    * because its sentinel splits stopped splitting).
+    * analysis time, which is exactly the hole this closes (BPE
+    * training inside a DAG engine session once silently learned zero
+    * rules because its sentinel splits stopped splitting).
     */
   def regexSplit(str: Column, pattern: String, limit: Int = -1): Column =
     ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.StringSplit(

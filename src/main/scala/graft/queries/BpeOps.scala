@@ -47,7 +47,7 @@ import graft.Tables
   * cost `rounds` shuffles, so a vocab of ~64 rules trains in 8 passes
   * instead of 64.
   *
-  * Sentinel collision (r9 verdict "what's wrong" #1): a document that
+  * Sentinel collision: a document that
   * CONTAINS U+001F would corrupt token boundaries, so ingest strips the
   * sentinel from the text first — tokenizer normalization, the same
   * move real tokenizers make for their specials (e.g. stripping
@@ -104,7 +104,7 @@ object BpeOps {
     // (half the allocation of a two-string struct per exploded row); the
     // (cnt DESC, a, b) rank splits the pair back out AFTER the
     // aggregation, where only the vocabulary-sized count table remains.
-    // r16: the per-doc pair stream comes from the native
+    // The per-doc pair stream comes from the native
     // bpe_pair_counts kernel — one byte pass per document emitting a
     // map<pair, count> PRE-AGGREGATED within the doc (identical keys
     // and per-key totals to the old split + transform + explode chain,
@@ -153,13 +153,12 @@ object BpeOps {
     */
   def train(corpus: DataFrame, rounds: Int = Rounds, perRound: Int = PerRound,
       topM: Int = TopM): (Seq[Seq[(String, String)]], DataFrame) = {
-    // r17: ONE eager materialization of the character-wrapped corpus
+    // ONE eager materialization of the character-wrapped corpus
     // (raw-row localCheckpoint — no columnar encode/compress pass), then
     // every round's pair-count job REPLAYS the accumulated
-    // bpe_multi_replace chain from it. The r16 loop cached the full
-    // tokenization once per round; at sf0.1 that columnar cache
-    // write+read cycle was ~0.4 s of every ~0.55 s round (measured via
-    // graft.bpe.profile) while a multi-replace byte pass is
+    // bpe_multi_replace chain from it. Caching the full tokenization
+    // once per round instead cost ~0.4 s of every ~0.55 s round at
+    // sf0.1 (columnar cache write+read) while a multi-replace byte pass is
     // milliseconds — so round k now pays k extra map-only native passes
     // (Σ ≤ rounds²/2 passes of pure memory bandwidth, no shuffle, no
     // materialization) and saves `rounds` corpus materializations.
@@ -172,13 +171,11 @@ object BpeOps {
     val base = corpus.localCheckpoint()
     var cur = base
     var rules = Vector.empty[Seq[(String, String)]]
-    val prof = sys.props.get("graft.bpe.profile").contains("1")
-    for (round <- 0 until rounds) {
-      val t0 = if (prof) System.nanoTime() else 0L
+    for (_ <- 0 until rounds) {
       val sel = selectDisjoint(topPairs(cur, topM), perRound)
       rules = rules :+ sel
       // Commuting replaces applied in rank order (deterministic, and the
-      // order is immaterial by disjointness) — r16: the whole batch in
+      // order is immaterial by disjointness) — the whole batch in
       // ONE native byte pass (bpe_multi_replace) instead of one full
       // string scan-and-copy per rule; byte-identical to the old
       // sequential `replace` fold because the batch is symbol-disjoint
@@ -188,8 +185,6 @@ object BpeOps {
           col("s"),
           sel.map { case (a, b) => S + a + S + S + b + S },
           sel.map { case (a, b) => S + a + b + S }))
-      if (prof) System.err.println(
-        f"[bpe] round $round ${(System.nanoTime() - t0) / 1e9}%.2fs sel=${sel.size}")
     }
     (rules, cur)
   }
@@ -225,7 +220,7 @@ object BpeOps {
     encoded.select(
       col("doc_id"),
       col("n_chars"),
-      // r16: native token count — same integer as size(toks(s)) (split
+      // Native token count — same integer as size(toks(s)) (split
       // keeps empty segments; kernel mirrors that, BpeKernelSpec pins
       // it) without materializing the token array.
       graft.functions.GraftFunctions.bpeTokenCount(col("s")).as("n_tok"),

@@ -27,7 +27,7 @@ import graft.Tables
   * at any corpus size. The edge list is O(n × degree) rows: linear in
   * the corpus, shuffled once at build time, keyed by source node.
   *
-  * SEARCH — fused driver-orchestrated walk (r13, see fusedBeamSearch):
+  * SEARCH — fused driver-orchestrated walk (see fusedBeamSearch):
   * the scored pool and frontier are corpus-independent codebook-scale
   * state held on the driver; each hop runs at most one adjacency job
   * (IN-filter on the distributed n×degree edge list) and one scoring
@@ -72,6 +72,15 @@ object GraphAnnOps {
   val Beam = 9
   val Hops = 3
 
+  /** Largest layer (rows) whose beam walk runs driver-local after two
+    * bounded collects — its vectors (≈34 MB of 64-dim doubles at the
+    * cap) PLUS its n×Degree adjacency (≈0.5 M edge rows ≈ 8 MB). The
+    * ~√n entry layer stays under it up to a 4×10⁹-rep corpus; a larger
+    * layer walks distributed (a size dispatch, not a semantic fork:
+    * GraphAnnSpec pins equality).
+    */
+  val LocalWalkMaxRows = 65536
+
   /** Band resolution for an n-vector corpus: with FIXED planes the
     * expected bucket size is n/2^planes, so banded pair generation is
     * O(n²/2^planes) — quadratic at any fixed setting (measured: the
@@ -99,7 +108,7 @@ object GraphAnnOps {
     // id — duplicates would crowd real neighbors out of the k slots), so
     // each pair is emitted only from the MINIMAL band the two sides
     // share: a map-side filter on the joined rows, no extra shuffle.
-    // (r17 note: a "halved" variant — match each unordered pair once
+    // (A "halved" variant — match each unordered pair once
     // with l < r and mirror map-side via explode — was built and
     // REVERTED: mirroring puts every build-side vec_id into every map
     // partition's q_id domain, so the bounded-top-k PARTIAL heaps grow
@@ -110,8 +119,8 @@ object GraphAnnOps {
     val pairs = keyed.alias("l")
       .join(keyed.alias("r"), Seq("band"))
       .filter(col("l.vec_id") =!= col("r.vec_id"))
-      // r17: the minimal-shared-band test runs through the native
-      // MinSharedBand kernel — array_min(array_intersect(...)) built a
+      // The minimal-shared-band test runs through the native
+      // MinSharedBand kernel — array_min(array_intersect(...)) builds a
       // hash set + result array per joined pair; the kernel is one
       // allocation-free ≤ tables² compare loop with identical value and
       // null (empty-intersection) semantics (VectorKernelSpec pins it).
@@ -148,13 +157,13 @@ object GraphAnnOps {
       top: DataFrame, hopCandidates: Seq[Long], pool: Seq[(Long, Long, Double)])
 
   /** Beam search over a built graph, FUSED to one or two small Spark
-    * jobs per hop (r13; the r12 DataFrame-per-hop loop paid ~25 jobs of
-    * pure scheduling — localCheckpoint + broadcast-collect per hop —
-    * ~0.3 s each at sf0.1). The walk's working set is PROVABLY
+    * jobs per hop (a DataFrame-per-hop loop pays ~25 jobs of pure
+    * scheduling — localCheckpoint + broadcast-collect per hop — ~0.3 s
+    * each at sf0.1). The walk's working set is PROVABLY
     * corpus-independent: the scored pool is ≤ queries × (entries +
     * hops × beam × degree) rows and the frontier ≤ queries × beam ids —
     * codebook-scale state the driver holds directly (the bounded-
-    * `.collect()` discipline every verdict audits). What stays
+    * `.collect()` discipline). What stays
     * distributed is exactly the corpus-scale work: the n×degree edge
     * list (IN-filtered per hop for the ≤ q×beam newly-expanded nodes)
     * and the vector scan + native cosine kernel (per hop one broadcast
@@ -275,7 +284,7 @@ object GraphAnnOps {
     // One scoring job per hop: fetch the ≤ q×beam×degree candidate
     // VECTORS with a bounded filter+collect and evaluate the cosine on
     // the driver with the kernel's exact arithmetic ([[localCosine]]).
-    // r16: this replaces a two-broadcast join per hop (each broadcast a
+    // This replaces a two-broadcast join per hop (each broadcast a
     // sub-job of its own) with one single-stage scan — the collect stays
     // corpus-independent (candidate count is walk geometry, not corpus
     // size), which is the same boundedness the pool already relies on.
@@ -349,7 +358,7 @@ object GraphAnnOps {
     * build: an NSW graph over duplicated vectors degenerates into
     * disjoint cliques of copies — every degree slot is taken by a
     * cosine-1.0 twin, so the walk has no edge OUT of its entry clique.
-    * The r12 sf1 sweep measured exactly that on the 10×-replicated
+    * An sf1 sweep measured exactly that on the 10×-replicated
     * corpus: visited stuck at 360 and recall 0 regardless of hop/beam
     * budget. Production ANN indexes dedupe before building for this
     * reason; representatives keep the navigable property, and the
@@ -358,8 +367,8 @@ object GraphAnnOps {
     * 8-byte value hash, so the group tables join on a narrow key,
     * never on raw vectors.
     *
-    * HNSW ENTRY LAYER (r13; single-layer NSW needs ~log_degree(n) hops
-    * to cross the graph — the r12 budget grew +1 hop per 8× corpus
+    * HNSW ENTRY LAYER (single-layer NSW needs ~log_degree(n) hops
+    * to cross the graph — its budget grows +1 hop per 8× corpus
     * growth, i.e. +1 corpus scan per 8×. A sampled upper layer restores
     * a CONSTANT layer-0 budget): layer 1 is the md5-least ~√n
     * representatives (deterministic, the trainSample discipline) with
@@ -382,9 +391,9 @@ object GraphAnnOps {
     val layer1 = reps.select("vec_id", "v")
       .sort(md5(col("vec_id").cast("string")), col("vec_id")).limit(l1n)
       .cache()
-    // graph1 cached (r17): the entry-layer edge list is l1n×Degree rows
+    // graph1 cached: the entry-layer edge list is l1n×Degree rows
     // and is consumed by every search AND by persistIndex — uncached it
-    // was rebuilt (banded join + two top-k aggregates) once per consumer.
+    // would be rebuilt (banded join + two top-k aggregates) once per consumer.
     val graph1 = buildGraph(layer1, nHint = l1n).cache()
     GraphIndex(reps.select("gid", "vec_id", "v"),
       keyed.select("gid", "vec_id"), graph, layer1, graph1, nReps, l1n)
@@ -401,17 +410,12 @@ object GraphAnnOps {
   def searchIndex(idx: GraphIndex, qs: DataFrame, k: Int = 10): DataFrame = {
     val hops1 = math.max(Hops,
       math.ceil(math.log(idx.l1n.toDouble) / math.log(Degree)).toInt)
-    // r16: the entry layer is ~√n rows — when it fits the bounded-
-    // collect budget (default 65536 rows: ≈34 MB of 64-dim vectors PLUS
-    // the n×Degree adjacency, ≈0.5 M edge rows ≈ 8 MB at the cap — the
-    // budget counts BOTH collects, r16 verdict task 9; √n stays under
-    // it up to a 4×10⁹-rep corpus), collect it ONCE and run the
-    // layer-1 walk driver-local: the walk's ~2×hops₁ Spark jobs over a
-    // √n-row frame were pure scheduling overhead. Same loop, same
-    // cosine arithmetic, same entry ranking (localBeamSearch doc);
-    // beyond the budget the distributed walk below is unchanged — a
-    // size DISPATCH, not a semantic fork (GraphAnnSpec pins equality).
-    val localMax = sys.props.get("graft.ann.localL1Max").map(_.toInt).getOrElse(65536)
+    // The entry layer is ~√n rows — when it fits LocalWalkMaxRows,
+    // collect it ONCE and run the layer-1 walk driver-local: the walk's
+    // ~2×hops₁ Spark jobs over a √n-row frame are pure scheduling
+    // overhead. Same loop, same cosine arithmetic, same entry ranking
+    // (localBeamSearch doc); beyond the budget the distributed walk
+    // below is unchanged.
     lazy val qRows = qs.select(col("q_id"), col("qv")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
     def collectVecs(df: DataFrame): Map[Long, Seq[Double]] =
@@ -420,7 +424,7 @@ object GraphAnnOps {
     def collectAdj(df: DataFrame): Map[Long, Seq[Long]] =
       df.select(col("vec_id"), col("nbr")).collect()
         .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSeq }
-    val l1 = if (idx.l1n <= localMax) {
+    val l1 = if (idx.l1n <= LocalWalkMaxRows) {
       localBeamSearch(idx.layer1.sparkSession,
         collectVecs(idx.layer1), collectAdj(idx.graph1), qRows,
         k = Entries, hops = hops1, excludeSelf = false)
@@ -437,18 +441,17 @@ object GraphAnnOps {
     // slot without producing a row — one spare rep keeps the final
     // top-k full in both regimes.
     //
-    // r17 (verdict task 3): the LAYER-0 walk takes the SAME size
-    // dispatch under the SAME budget (vectors + n×Degree adjacency).
-    // The r16 per-hop filter(isin)+collect jobs were bounded-output but
-    // each one scanned every cached rep partition — at 32 local cores
-    // the ~2×Hops tiny jobs contended with themselves (driver scaling
-    // ratio 0.53: 8 cores beat 32) and the key ran 32% SLOWER. When
+    // The LAYER-0 walk takes the SAME size dispatch under the SAME
+    // budget (vectors + n×Degree adjacency). Per-hop filter(isin)+collect
+    // jobs are bounded-output but each one scans every cached rep
+    // partition — at 32 local cores the ~2×Hops tiny jobs contended with
+    // themselves (scaling ratio 0.53: 8 cores beat 32). When
     // reps fit the budget, TWO bounded collects (rep vectors, edge
     // list) replace every per-hop job and the walk runs driver-local —
     // same beamWalk loop, same localCosine arithmetic, bit-equal pool
     // (GraphAnnSpecR16 pins it with seeds). Beyond the budget the
     // distributed fused walk is unchanged — the 100 TB path.
-    val repTop = (if (idx.nReps <= localMax) {
+    val repTop = (if (idx.nReps <= LocalWalkMaxRows) {
       localBeamSearch(idx.reps.sparkSession,
         collectVecs(idx.reps), collectAdj(idx.graph), qRows,
         k = k + 1, hops = Hops, excludeSelf = false, seeds = Some(seeds))
@@ -494,7 +497,7 @@ object GraphAnnOps {
     // The five snapshot writes are independent (distinct directories,
     // all derived from already-cached parents) — submit them from a
     // driver thread pool so each write's commit/scheduling tail
-    // back-fills the others (guide §2.6 overlap-independent-jobs).
+    // back-fills the others.
     // model.json stays strictly AFTER all five: the commit-marker
     // contract (no readable index unless every half landed) is
     // unchanged, and a failure in any write still propagates.
@@ -598,7 +601,7 @@ object GraphAnnOps {
         |  * LEAST(10, (SELECT COUNT(*) FROM embeddings) - 1) AS BIGINT) AS n_exact,
         |  true AS k_ok, true AS recall_ok""".stripMargin),
 
-    // §2 25kf graph-ANN index persistence (r13 verdict task 2): build
+    // §2 25kf graph-ANN index persistence: build
     // once, persist (edge lists + entry layer + dup-group tables as
     // parquet, model.json commit marker carrying the corpus
     // fingerprint), load back against the SAME corpus, and search both
@@ -617,7 +620,7 @@ object GraphAnnOps {
         // The built-index search and the persist→load→search-reloaded
         // chain are independent until the final diff, and each is a
         // string of BOUNDED driver-orchestrated jobs — run them as two
-        // concurrent driver threads (guide §2.6) so the reloaded
+        // concurrent driver threads so the reloaded
         // chain's write/read I/O overlaps the built search's per-hop
         // jobs. Results unchanged: search is deterministic in index
         // CONTENT (the property this key exists to gate), and the two
@@ -627,8 +630,8 @@ object GraphAnnOps {
         import scala.concurrent.ExecutionContext.Implicits.global
         // Materialize the shared cached index halves BEFORE forking: the
         // two chains' first actions otherwise race to compute the same
-        // cached partitions (duplicate materialization — the r16 runs
-        // showed "Block already exists" churn and multi-×-variance here).
+        // cached partitions (duplicate materialization — "Block already
+        // exists" churn and multi-×-variance in the timings).
         idx.graph.count(); idx.graph1.count()
         val builtF = Future {
           searchIndex(idx, qs)
@@ -656,8 +659,7 @@ object GraphAnnOps {
         |  CAST((SELECT COUNT(*) FROM embeddings WHERE vec_id < 10) AS BIGINT)
         |    AS n_queries""".stripMargin),
 
-    // §2 25km OPERATOR-ONLY twin of ann_graph_persist (r14 verdict
-    // task 3): the gated key above searches TWICE (built index and
+    // §2 25km OPERATOR-ONLY twin of ann_graph_persist: the gated key above searches TWICE (built index and
     // reloaded index) because its contract is persistence-invisibility
     // — so its bench entry times the verification, roughly doubling the
     // operator. This twin is the production path alone: build, persist,

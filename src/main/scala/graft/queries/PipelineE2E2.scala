@@ -142,26 +142,10 @@ object PipelineE2E2 {
       .orderBy("lang", "bin")
   }
 
-  /** Fused stage mode (see [[graft.engine.Dag]]'s `materialize` doc):
-    * ON only when the `graft.e2e2.fused` system property is "1" — an
-    * opt-in knob, nothing sets it by default. A/B measurement at sf0.1
-    * (see Bench's note) showed the chain is COMPUTE-bound (BPE
-    * training ~5s of ~9s), not stage-commit-bound, so fusing buys
-    * ~nothing at gate scale; the mode stays for deployments whose
-    * stage outputs are small relative to their compute. Verify never
-    * sets it, so the oracle gate always exercises the materializing
-    * path; PipelineE2E2Spec pins fused == materialized.
-    */
-  private def fused: Boolean = sys.props.get("graft.e2e2.fused").contains("1")
-
   /** Run the DAG and return the child session holding every stage view
     * (the spec inspects intermediate stages through it).
     */
-  private[graft] def runChainSession(s: SparkSession, dir: String): graft.engine.GraftSession =
-    runChainSession(s, dir, materialize = !fused)
-
-  private[graft] def runChainSession(
-      s: SparkSession, dir: String, materialize: Boolean): graft.engine.GraftSession = {
+  private[graft] def runChainSession(s: SparkSession, dir: String): graft.engine.GraftSession = {
     val gs = new SessionManager(s).create()
     val docsDf = Tables(gs.spark, dir, "documents")
     // Stage snapshots live under per-run subdirectories of ONE temp root
@@ -174,12 +158,12 @@ object PipelineE2E2 {
       case null => ()
       case prev => rmTree(prev.toFile)
     }
-    val dag = new Dag(gs, Some(work), materialize = materialize)
-    // bpe is a LAZY view (r17): encodeStats' training loop collects per
+    val dag = new Dag(gs, Some(work))
+    // bpe is a LAZY view: encodeStats' training loop collects per
     // round, so building the frame eagerly at registration serialized
     // the whole BPE training BEFORE the slot scheduler started; deferred
-    // into its slot it overlaps the gopher→ccnet→…→mixture chain (guide
-    // §2.6 — the two branches only meet at `packed`).
+    // into its slot it overlaps the gopher→ccnet→…→mixture chain (the
+    // two branches only meet at `packed`).
     dag.register(Seq(
       DagTable.view("docs", docsDf),
       DagTable.lazyView("bpe", () => BpeOps.encodeStats(docsDf))) ++

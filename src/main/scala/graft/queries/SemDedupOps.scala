@@ -11,8 +11,8 @@ import graft.Tables
   * oracle-checkable form:
   *
   *  - clusters are 2^p sign buckets, p = [[planesFor]](distinct-vector
-  *    count) — 4 planes at gate scale, +1 per 2× distinct growth (r15:
-  *    the fixed-16-bucket variant was the q_geo_cell_join bug class):
+  *    count) — 4 planes at gate scale, +1 per 2× distinct growth (a
+  *    fixed 16-bucket variant is the q_geo_cell_join bug class):
   *    bucket = Σ_i 2^i·[w_i·v>0] with w_i[d] = ±1 from bit i of the
   *    dimension index (i<6) or a bit_count parity (i≥6) — per-term
   *    products are EXACT double negations quantized to DECIMAL(26,12)
@@ -46,8 +46,8 @@ object SemDedupOps {
   private val BasePlanes = 4
   private val MaxPlanes = 12
 
-  /** Scale-adaptive plane count from the DISTINCT-vector count (r14
-    * verdict item 5 — the q_geo_cell_join bug class: 16 FIXED buckets
+  /** Scale-adaptive plane count from the DISTINCT-vector count (the
+    * q_geo_cell_join bug class: 16 FIXED buckets
     * make per-bucket population linear in corpus size, so within-bucket
     * pairing reverts to quadratic exactly when it hurts). Integer
     * threshold comparisons, never a float log (the GeoOps.cellDepth
@@ -78,29 +78,19 @@ object SemDedupOps {
 
   /** Add the sign-bucket column at a plane count that SCALES with the
     * distinct-vector count (`nd`, a 1-row broadcast frame with column
-    * `nv`): per hyperplane i, each term is an exact double negation
-    * quantized to 12-dp DECIMAL, and the per-plane sums run as REAL
-    * decimal aggregates over a posexplode (exact and order-independent
-    * — a Catalyst array fold would widen the decimal scale away on
-    * every step), so the sign (and with it the bucket) is engine- and
-    * partitioning-exact. All MaxPlanes sums are computed (bounded,
+    * `nv`). Each row folds its own MaxPlanes plane sums over its vector
+    * array, in index order: per hyperplane i, each term is an exact
+    * double negation round(x·w_i, 12) quantized to decimal(26,12), and
+    * the running sum stays decimal(36,12). Decimal addition is exact,
+    * so the fold equals an order-independent SUM digit for digit and
+    * the sign (and with it the bucket) is engine- and
+    * partitioning-exact. The fold is map-only: no explode, no exchange,
+    * no join back. All MaxPlanes sums are computed (bounded,
     * vector-width work); the bucket folds in only the first
-    * planesFor(nv) of them.
+    * planesFor(nv) of them. Empty vectors have no bucket and are
+    * dropped.
     */
   private[queries] def bucketed(e: DataFrame, nd: DataFrame): DataFrame = {
-    // r17: the 12 per-plane sums fold PER ROW over the vector array
-    // instead of posexplode → n×d rows → a vec_id exchange → 12 decimal
-    // SUMs → join back by vec_id (two corpus-scale exchanges for a
-    // quantity each row can compute alone — the #7/#8 row-explosion
-    // class; measured 2.6 s of curate_semdedup's ~5 s). Exactness is
-    // unchanged: each term is the IDENTICAL round(x·w, 12) →
-    // decimal(26,12) quantization, and decimal addition is exact, so
-    // the index-order fold equals the order-independent SUM digit for
-    // digit (the per-step cast keeps scale 12; 36-digit headroom
-    // matches the old SUM's decimal(36,12) result type). The empty-
-    // vector boundary keeps the old inner-join semantics (posexplode of
-    // an empty array emitted no rows, dropping the vector): rows with
-    // size(v)=0 are filtered out explicitly.
     val planeSums = (0 until MaxPlanes).map { i =>
       aggregate(
         transform(col("v"),
@@ -129,8 +119,8 @@ object SemDedupOps {
     // identical bucket arithmetic + greedy rule.
     "curate_semdedup" -> QDef(
       (s, dir) => {
-        // VALUE-GROUP COLLAPSE first (r14, the skewed-sweep hot-cluster
-        // fix — the TextOps.collapseByContent discipline for vectors):
+        // VALUE-GROUP COLLAPSE first (the skewed-sweep hot-cluster fix —
+        // the TextOps.collapseByContent discipline for vectors):
         // verbatim-duplicate vectors share bucket AND pairwise cosine
         // exactly 1.0, so raw within-bucket pairing is quadratic in the
         // duplicate-group size. The cosine kernel runs once per
@@ -150,8 +140,7 @@ object SemDedupOps {
         // collapse map-side before the exchange and full-array
         // hash/compare work only runs on 64-bit-equal candidates, while
         // the exact vector stays in the GROUP key so collisions split,
-        // never merge (the TextOps.collapseByContent discipline, r14
-        // verdict item).
+        // never merge (the TextOps.collapseByContent discipline).
         val grouped = Tables(s, dir, "embeddings")
           .select(col("vec_id"), asDouble(col("embedding")).as("v"))
           .withColumn("__h", xxhash64(col("v")))
@@ -165,7 +154,7 @@ object SemDedupOps {
         // q_geo_cell_join nSupp pattern; never a driver collect.
         val nd = grouped.agg(count(lit(1)).as("nv"))
         // Cached: the bucket-keyed self-join reads it on BOTH sides, and
-        // the r17 map-only bucketed() has no exchange left for
+        // the map-only bucketed() has no exchange left for
         // ReusedExchange to dedupe the two sides through.
         val e = bucketed(reps, nd).cache()
         val a = e.select(col("bucket"), col("vec_id").as("ida"), col("v").as("va"))

@@ -1,16 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native kernels for the LSH / MinHash / shingle hot paths (r16
-  * optimization round). Each replaces a higher-order-function expression
-  * stack that Catalyst evaluates INTERPRETED per array element — the
-  * r9/r14 SimHash64 lesson applied to the three remaining per-row HOF
-  * loops of the dedup/ANN tier:
+/** Native kernels for the LSH / MinHash / shingle hot paths. Each
+  * replaces a higher-order-function expression stack that Catalyst
+  * evaluates INTERPRETED per array element — the SimHash64 lesson
+  * applied to the three remaining per-row HOF loops of the dedup/ANN
+  * tier:
   *
   *  - [[LshKeysKernel]]: multi-table random-hyperplane bucket keys.
   *    The HOF form (transform over tables → aggregate over reversed
@@ -118,7 +119,9 @@ object VectorKernels {
 
   /** Minimum long present in BOTH arrays, boxed (null when the
     * intersection is empty) — the value of
-    * array_min(array_intersect(a, b)) on non-null long arrays, without
+    * array_min(array_intersect(a, b)) on arrays with no null elements
+    * (a null element would read as 0; [[MinSharedBand]] rejects such
+    * inputs at analysis), without
     * array_intersect's per-call hash-set and result-array allocation
     * (the arrays here are the ≤`tables`-element LSH key lists, so the
     * nested membership scan is a handful of compares).
@@ -143,13 +146,27 @@ object VectorKernels {
 }
 
 /** array_min(array_intersect(a, b)) over long arrays in one
-  * allocation-free pass (see VectorKernels.minSharedLong).
+  * allocation-free pass (see VectorKernels.minSharedLong). Both arrays
+  * must be declared `containsNull = false`: the kernel reads elements
+  * unboxed, so an array that may hold nulls is rejected at analysis.
   */
 case class MinSharedBand(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
+    Seq(ArrayType(LongType, containsNull = false), ArrayType(LongType, containsNull = false))
+
+  // Type acceptance ignores element nullability, so check it here.
+  override def checkInputDataTypes(): TypeCheckResult =
+    super.checkInputDataTypes() match {
+      case ok if ok.isSuccess =>
+        children.find(_.dataType.asInstanceOf[ArrayType].containsNull) match {
+          case Some(c) => TypeCheckResult.TypeCheckFailure(
+            s"$prettyName needs arrays without null elements; ${c.sql} may contain nulls")
+          case None => ok
+        }
+      case failed => failed
+    }
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "min_shared_band"

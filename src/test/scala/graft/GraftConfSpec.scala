@@ -31,7 +31,15 @@ class GraftConfSpec extends AnyFunSuite {
     assert(o.get("spark.sql.adaptive.skewJoin.enabled").contains("true"))
     assert(o.get("spark.sql.parquet.filterPushdown").contains("true"))
     assert(o.get("spark.sql.session.timeZone").contains("UTC"))
-    assert(o.get("spark.sql.extensions").contains("graft.GraftExtensions"))
+    // The dialect the oracle verifies: non-ANSI arithmetic, and Spark
+    // builtin semantics in the shared session (engine sessions install
+    // the BigQuery dialect themselves).
+    assert(o.get("spark.sql.ansi.enabled").contains("false"))
+    assert(!o.contains("spark.sql.extensions"))
+    assert(o.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning").contains("true"))
+    // Long-lived drivers and servers keep only a few plan descriptions.
+    assert(o.get("spark.sql.ui.retainedExecutions").contains("3"))
+    assert(o.get("spark.cleaner.periodicGC.interval").contains("1min"))
   }
 
   test("shuffle partitions scale with cluster cores, floored for tiny rigs") {

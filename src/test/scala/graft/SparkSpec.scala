@@ -11,12 +11,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
+  /** GraftConf's posture (the one Verify checks) on a 4-core run shape. */
+  lazy val session: SparkSession = GraftConf.builder("graft-test", 4)
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Match GraftConf/Verify/Bench: classic null-on-invalid semantics.
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

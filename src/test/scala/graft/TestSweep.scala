@@ -4,11 +4,12 @@ package graft
   *
   * Three suites walk every `SparkEntry.queries` builder (determinism,
   * runs-at-sf0.001, plan lint); run sequentially they alone cost ~18
-  * min and pushed `sbt test` past the 30-min CI budget (r16 verdict
-  * task 2). Per-query work is independent and Spark's scheduler runs
-  * concurrent driver threads' jobs side by side, so each sweep fans out
-  * over a fixed pool. Coverage is unchanged — every query still runs;
-  * only the wall-clock shrinks.
+  * min and pushed `sbt test` past the 30-min CI budget. Per-query work
+  * is independent and Spark's scheduler runs concurrent driver threads'
+  * jobs side by side, so each sweep fans out over a fixed pool. Coverage
+  * is unchanged — every query still runs; only the wall-clock shrinks.
+  * Callers give each item its own `spark.newSession()`: builders
+  * register fixed temp-view names, and items run concurrently.
   */
 object TestSweep {
 

@@ -101,4 +101,25 @@ class GraftRpcSpec extends SparkSpec {
     assertThrows[GraftError.UnknownSession](
       rpc.dispatch("bq.query", Map("sessionId" -> s, "sql" -> "SELECT 1")))
   }
+
+  test("destroySession releases the session's insert snapshots") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val s = sid()
+    rpc.dispatch("bq.createTable", Map("sessionId" -> s, "tableName" -> "t",
+      "schema" -> Seq(Map("name" -> "v", "type" -> "INT64"))))
+    (1 to 3).foreach(i => rpc.dispatch("bq.insert",
+      Map("sessionId" -> s, "tableName" -> "t", "rows" -> Seq(Seq(i)))))
+    rpc.dispatch("bq.registerDag", Map("sessionId" -> s, "tables" -> Seq(
+      Map("name" -> "doubled", "sql" -> "SELECT v * 2 AS v2 FROM t"))))
+    val run = rpc.dispatch("bq.runDag", Map("sessionId" -> s)).asInstanceOf[Map[String, Any]]
+    assert(run("success") == true)
+    val during = sc.getPersistentRDDs.keySet -- before
+    assert(during.size >= 3, s"each insert keeps a snapshot: $during")
+    assert(rpc.dispatch("bq.destroySession", Map("sessionId" -> s)) == Map("success" -> true))
+    // Back to the pre-session set: nothing persisted since survives (the
+    // context cleaner may only have removed older entries meanwhile).
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"left persisted: ${sc.getPersistentRDDs.keySet -- before}")
+  }
 }

@@ -175,6 +175,28 @@ class RpcServerSpec extends SparkSpec {
       val bad = client.sendRequest("bq.query", Map("sessionId" -> "nope", "sql" -> "SELECT 1"))
       assert(asMap(bad("error"))("code") == -32002L)
 
+      // The served session runs the posture the oracle verified: non-ANSI
+      // answers come back over stdio exactly as in-process GraftRpc
+      // returns them — NULL for division by zero and a bad cast, the
+      // two's-complement wrap for INT overflow — and a user SQL failure
+      // is a QueryError.
+      val local = asMap(rpc.dispatch("bq.createSession"))("sessionId").toString
+      def rowsOf(result: Any): Any = asMap(Json.parse(Json.write(result)))("rows")
+      for ((probe, expected) <- Seq("SELECT 1/0" -> null, "SELECT CAST('abc' AS INT)" -> null,
+          "SELECT 2147483647 + 1" -> Int.MinValue.toLong)) {
+        val served = rowsOf(client.call("bq.query", Map("sessionId" -> s, "sql" -> probe)))
+        val inProcess = rowsOf(rpc.dispatch("bq.query", Map("sessionId" -> local, "sql" -> probe)))
+        assert(served == inProcess, probe)
+        assert(served == Seq(Map("f" -> Seq(Map("v" -> expected)))), s"$probe: $served")
+      }
+      val raised = client.sendRequest("bq.query", Map("sessionId" -> s, "sql" -> "SELECT raise_error('boom')"))
+      assert(asMap(raised("error"))("code") == -32000L, raised)
+      val raisedLocal = intercept[GraftError] {
+        rpc.dispatch("bq.query", Map("sessionId" -> local, "sql" -> "SELECT raise_error('boom')"))
+      }
+      assert(raisedLocal.code == -32000, raisedLocal)
+      rpc.dispatch("bq.destroySession", Map("sessionId" -> local))
+
       assert(client.call("bq.destroySession", Map("sessionId" -> s))("success") == true)
     } finally client.close()
   }
@@ -250,7 +272,7 @@ class RpcServerSpec extends SparkSpec {
         Map("sessionId" -> s, "tableName" -> "warehouse_missing"))
       assert(asMap(asMap(bad("error"))("data"))("kind") == "UnknownTable", bad.toString)
 
-      // QUALIFIED (schema.table) remote names (r9 verdict wrong #2):
+      // QUALIFIED (schema.table) remote names:
       // lazy catalog resolution parses the backticked multipart
       // relation, mirrors it into the session catalog as a JDBC-sourced
       // table (Derby's default schema is APP), and the original query

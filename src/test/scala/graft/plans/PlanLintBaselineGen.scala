@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the golden plan-lint baseline consumed by
   * [[PlanLintInventorySpec]]: run with
   * `sbt "Test/runMain graft.plans.PlanLintBaselineGen"` after an
@@ -11,12 +9,9 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanLintBaselineGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = graft.GraftConf.builder("graft-plan-lint", 8)
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

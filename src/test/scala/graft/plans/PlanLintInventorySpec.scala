@@ -7,7 +7,7 @@ import graft.SparkSpec
   * and its static physical plan swept for the four scale-killer rules
   * (cartesian product, non-equi nested-loop fallback, missed-broadcast
   * shuffle join, unpartitioned window). The gate is a GOLDEN BASELINE:
-  * the per-query finding counts below were adjudicated by the r7/r8
+  * the per-query finding counts below were adjudicated by
   * anti-pattern audits (every flagged node is one of the repo's
   * documented bounded patterns — see the adjudication notes), and the
   * spec fails when any query exceeds its baseline: a new query (or an
@@ -89,7 +89,7 @@ class PlanLintInventorySpec extends SparkSpec {
     "curate_global_index" -> Map("CARTESIAN_PRODUCT" -> 2, "GLOBAL_WINDOW" -> 1),
     "curate_weighted_sample" -> Map("GLOBAL_WINDOW" -> 1),
     "curate_winsorize" -> Map("CARTESIAN_PRODUCT" -> 4, "GLOBAL_WINDOW" -> 1, "NON_EQUI_JOIN" -> 1),
-    // r14 rep-graph CC: the member→label and cluster-size joins are
+    // Rep-graph CC: the member→label and cluster-size joins are
     // corpus-/cluster-scale at real SF (toy-stats artifacts here), so
     // shuffling both sides is the correct plan — same adjudicated
     // class as the rule doc above; count 1→3 with the collapse.
@@ -101,17 +101,17 @@ class PlanLintInventorySpec extends SparkSpec {
     "emb_mrl_recall" -> Map("CARTESIAN_PRODUCT" -> 2, "GLOBAL_WINDOW" -> 1),
     "emb_scalar_quant" -> Map("CARTESIAN_PRODUCT" -> 1),
     "ev_anomaly_mad" -> Map("CARTESIAN_PRODUCT" -> 3),
-    // r15 SubShard conversions (25ko) lint CLEAN at gate scale: the
+    // SubShard conversions (25ko) lint CLEAN at gate scale: the
     // adaptive dispatch reads the max per-user count as one bounded
     // driver-side long and emits the ORIGINAL single-window plan below
     // the hot threshold — the sub-sharded plan (whose summary joins are
     // the q_geo_cell_join bounded-one-row class) only exists on hot
     // tiers, which the lint's sf0.001 fixture never is.
     //
-    // r15 operator-only twin: same calendar-bounded global window +
+    // Operator-only twin: same calendar-bounded global window +
     // one-row total broadcast as the gated ev_rolling_distinct.
     "ev_rolling_distinct_op" -> Map("CARTESIAN_PRODUCT" -> 1, "GLOBAL_WINDOW" -> 1),
-    // r15 adaptive semdedup (25kp): the one-row distinct-vector-count
+    // Adaptive semdedup (25kp): the one-row distinct-vector-count
     // broadcast (planesFor input) onto the plane-sum subtrees — the
     // same bounded-one-row class as q_geo_cell_join's nSupp.
     "curate_semdedup" -> Map("NON_EQUI_JOIN" -> 4),
@@ -141,7 +141,7 @@ class PlanLintInventorySpec extends SparkSpec {
     "ml_pr_auc" -> Map("CARTESIAN_PRODUCT" -> 10, "GLOBAL_WINDOW" -> 1),
     // 50-row query-set broadcast into the corpus scoring pass
     "ml_ranking_metrics" -> Map("CARTESIAN_PRODUCT" -> 1),
-    // ml_text_classifier: no entry since r11 — the per-iteration weight
+    // ml_text_classifier: no entry — the per-iteration weight
     // frames are localCheckpoint'd (257-row model), so the one-row
     // nDocs crossJoins live in already-executed checkpoint segments and
     // the final visible plan is a single broadcast-join margin pass
@@ -193,20 +193,20 @@ class PlanLintInventorySpec extends SparkSpec {
     // one-row totals/min-max/count broadcasts re-planned per consumer of
     // the lp subtree (the ml_auc class) + the ≤nb bucket-offset window
     "text_ccnet_buckets" -> Map("CARTESIAN_PRODUCT" -> 6, "GLOBAL_WINDOW" -> 1),
-    // KN-scored quartile bands (r13): the same adjudicated classes as
+    // KN-scored quartile bands: the same adjudicated classes as
     // text_ccnet_buckets — one-row broadcasts (bigram-type total,
     // min/max/count frame) riding crossJoins, and the ≤16-row
     // bucket-offset window ordered globally (bounded by construction)
     "text_perplexity_filter" -> Map("CARTESIAN_PRODUCT" -> 6, "GLOBAL_WINDOW" -> 1),
-    // temperature sampling (r13): |domains|-row broadcasts (total,
+    // temperature sampling: |domains|-row broadcasts (total,
     // softmax denominator, remainder) + the ≤5-row largest-remainder
     // rank window; per-domain hash ranks ride (lang, nibble) partitions
     "curate_temperature_sample" ->
       Map("CARTESIAN_PRODUCT" -> 7, "GLOBAL_WINDOW" -> 1),
-    // rho-loss selection (r13): the one-row T_g total broadcast riding
+    // rho-loss selection: the one-row T_g total broadcast riding
     // a crossJoin (the curate_doremi class)
     "curate_rho_loss" -> Map("CARTESIAN_PRODUCT" -> 1),
-    // r13 cell-depth scaling: the one-row supplier-count frame
+    // Cell-depth scaling: the one-row supplier-count frame
     // broadcast onto both join sides (bounded one-row class)
     "q_geo_cell_join" -> Map("NON_EQUI_JOIN" -> 2),
     "text_inverted_index" -> Map("NON_EQUI_JOIN" -> 1),
@@ -231,12 +231,14 @@ class PlanLintInventorySpec extends SparkSpec {
     // concurrently-registered cache can only SUBSTITUTE a subtree (hiding
     // nodes below it), never add a cartesian/non-equi/window above — so
     // interference can only lower a count, which reports as info; the
-    // failure direction (now > was) is unaffected.
+    // failure direction (now > was) is unaffected. Each item runs in its
+    // own session, so fixed view names (orders, documents, events) that
+    // builders register cannot leak between items.
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .grouped(graft.TestSweep.Threads).foreach { batch =>
         val results = graft.TestSweep.sweepResults(batch) { case (name, fn) =>
           val counts: Map[String, Int] =
-            try PlanLints.findings(fn(spark, sfDir))
+            try PlanLints.findings(fn(spark.newSession(), sfDir))
               .groupBy(_.rule).view.mapValues(_.size).toMap
             catch {
               case e: Throwable =>

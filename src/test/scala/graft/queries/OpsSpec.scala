@@ -267,8 +267,10 @@ class OpsSpec extends SparkSpec {
 
   test("every declared query runs at sf0.001 and returns rows") {
     // Parallel sweep (graft.TestSweep doc): same coverage, bounded pool.
+    // Each item gets its own session, so builders that register fixed
+    // view names (orders, documents, events) cannot see each other's.
     val bad = graft.TestSweep.sweep(graft.SparkEntry.queries.toSeq) { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
+      val n = fn(spark.newSession(), sfDir).count()
       if (n > 0) None else Some(s"query $name returned no rows")
     }
     assert(bad.isEmpty, bad.mkString("\n"))

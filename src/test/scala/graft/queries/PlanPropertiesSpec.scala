@@ -95,8 +95,8 @@ class PlanPropertiesSpec extends SparkSpec {
   test("distributed NTILE stays in Catalyst with no single-partition data window") {
     val plan = SparkEntry.queries("q_window_ntile")(spark, sfDir)
       .queryExecution.executedPlan.toString
-    // No RDD detour: the round-3 version dropped to zipWithIndex, which
-    // deserializes every row out of Tungsten.
+    // No RDD detour: a zipWithIndex version would deserialize every row
+    // out of Tungsten.
     assert(!plan.contains("ExistingRDD"), s"ntile left Catalyst: ${plan.take(1000)}")
     // The window over the orders data is partitioned by the range
     // partition id — parallel, not a global ORDER BY window.
@@ -225,10 +225,9 @@ class PlanPropertiesSpec extends SparkSpec {
   }
 
   test("ANN ranks use the bounded top-k aggregate — zero windows anywhere in the tier") {
-    // ann_ivf_topk joined this set in round 7 when its probe-selection
-    // stage (the last window in the ANN tier) moved onto the same
-    // bounded top-k as the final ranks. r17: the GATE queries now
-    // checkpoint their ≤100-row top-k frames (VectorOps.gatePairs), so
+    // ann_ivf_topk's probe-selection stage (the last window in the ANN
+    // tier) runs on the same bounded top-k as the final ranks. The GATE
+    // queries checkpoint their ≤100-row top-k frames (VectorOps.gatePairs), so
     // the gates' own plans end at a LogicalRDD — assert on the OPERATOR
     // frames the gates checkpoint, which is where the rank runs.
     val operators: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
@@ -315,12 +314,14 @@ class PlanPropertiesSpec extends SparkSpec {
         case v => String.valueOf(v)
       }.mkString("|")
     // 280 queries × 2 runs sequentially was ~8 min of the suite's 30-min
-    // budget (r16 verdict task 2); Spark schedules concurrent driver
-    // threads' jobs fine, and determinism-per-query is independent, so
-    // sweep on a bounded pool. Failures aggregate to one assertion.
+    // budget; Spark schedules concurrent driver threads' jobs fine, and
+    // determinism-per-query is independent, so sweep on a bounded pool,
+    // each item in its own session (builders register fixed view names).
+    // Failures aggregate to one assertion.
     val bad = graft.TestSweep.sweep(SparkEntry.queries.toSeq) { case (name, fn) =>
-      val a = fn(spark, sfDir).collect().map(canon).toSeq
-      val b = fn(spark, sfDir).collect().map(canon).toSeq
+      val s = spark.newSession()
+      val a = fn(s, sfDir).collect().map(canon).toSeq
+      val b = fn(s, sfDir).collect().map(canon).toSeq
       if (a != b) Some(s"query $name is nondeterministic") else None
     }
     assert(bad.isEmpty, bad.mkString("\n"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Bit-equality pins for the r16 native LSH / MinHash / shingle kernels
+/** Bit-equality pins for the native LSH / MinHash / shingle kernels
   * (graftbridge.VectorKernels) against the interpreted HOF formulations
   * they replaced, on the real test tables plus edge fixtures.
   */
@@ -63,10 +63,10 @@ class VectorKernelSpec extends SparkSpec {
   }
 
   test("minSharedBand native == array_min(array_intersect), incl. empty intersection") {
-    // r17: the graph-ANN minimal-band emission filter. Pairs come from
-    // the real LSH key lists (guaranteed ≥1 shared band within a band
-    // bucket) plus disjoint/null fixtures for the empty-intersection
-    // and null semantics.
+    // The graph-ANN minimal-band emission filter. Pairs come from the
+    // real LSH key lists (guaranteed ≥1 shared band within a band
+    // bucket) plus disjoint fixtures for the empty-intersection (null)
+    // semantics.
     import spark.implicits._
     val e = graft.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
@@ -85,5 +85,23 @@ class VectorKernelSpec extends SparkSpec {
       .filter(not(col("a") <=> col("b")))
       .count()
     assert(diff === 0L)
+  }
+
+  test("minSharedBand rejects arrays that may hold null elements at analysis") {
+    // The kernel reads elements unboxed, so a null would compare as 0;
+    // the expression refuses such input types instead.
+    import spark.implicits._
+    val nullable = Seq((Seq[java.lang.Long](1L, null), Seq(1L))).toDF("ka", "kb")
+    assert(nullable.schema("ka").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = true))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      nullable.select(graft.functions.GraftFunctions.minSharedBand(col("ka"), col("kb")))
+    }
+    assert(e.getMessage.contains("without null elements"), e.getMessage)
+    // The same data declared non-null on both sides analyses and runs.
+    val ok = Seq((Seq(1L, 3L), Seq(3L, 1L))).toDF("ka", "kb")
+      .select(graft.functions.GraftFunctions.minSharedBand(col("ka"), col("kb")))
+      .collect()
+    assert(ok.head.getLong(0) == 1L)
   }
 }

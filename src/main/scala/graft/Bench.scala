@@ -7,24 +7,12 @@ object Bench {
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     def selected = SparkEntry.queries.filter { case (k, _) => only.forall(_.contains(k)) }
-    // Fresh per-run scratch dir, deleted on exit: repeated full runs in a
-    // shared /tmp otherwise accumulate leaked blockmgr-*/spark-* trees
-    // from killed sessions (observed: dozens of dirs), and baseline-
-    // pinning runs drifted monotonically 179.9→194.9→208.5 s across
-    // back-to-back invocations with byte-identical plans. The
-    // canary instrumentation below separates within-run JVM accumulation
-    // from this cross-run machine-state component.
-    val localDir = java.nio.file.Files.createTempDirectory("graft-bench-").toFile
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(localDir)
-    }
+    // Spark's local dir goes under the scratch root, deleted on exit, so
+    // repeated runs never accumulate leaked blockmgr-*/spark-* trees.
     // Run shape only: the posture is GraftConf's, the one Verify checks.
     val spark = GraftConf.builder("graft-bench", cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir.getAbsolutePath)
+      .config("spark.local.dir", Scratch.dir("spark-local-").toString)
       .config("spark.sql.shuffle.partitions", cpus)
       // Local test files are far below the 128 MB default split size —
       // split aggressively so scans parallelize.
@@ -57,13 +45,9 @@ object Bench {
       // pressure lands on random later queries.
       spark.catalog.clearCache()
       // clearCache drops SQL-cached relations but NOT localCheckpoint'd
-      // RDD blocks (the iterative operators checkpoint per round) —
-      // those wait for the ContextCleaner to notice the RDD object was
-      // GC'd. Over a 250-query pass the leaked checkpoint blocks
-      // fragment the storage pool and the per-job fixed cost of LATER
-      // many-job iterative queries climbs (dedup_clusters: 2.7 s
-      // isolated vs up to 9.3 s late in a full run, plans byte-equal).
-      // Unpersist everything still registered explicitly.
+      // RDD blocks, which otherwise wait for the ContextCleaner and
+      // raise the per-job cost of later many-job queries: unpersist
+      // everything still registered explicitly.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       // Untimed full GC: lets the ContextCleaner reap this query's
@@ -98,17 +82,10 @@ object Bench {
       if (timedIdx % 30 == 0) canary()
       // noop sink forces every output column to be computed (count()
       // would let Catalyst prune the projections entirely). Min of two
-      // timed runs for the slower queries: a single multi-second GC pause
-      // under 32 concurrent tasks otherwise lands on a random query and
-      // masquerades as a plan regression; the min is the steady-state
-      // throughput. Sub-half-second queries get one run (a GC pause there
-      // is visible noise, not a grading hazard) to keep total wall time
-      // bounded as the inventory grows.
-      // Per-run GC attribution: a 2.5× run-to-run
-      // spread on a byte-identical plan is scheduler/GC sensitivity, not
-      // a plan regression — record the JVM-wide GC time spent DURING the
-      // run so a driver-vs-builder timing gap is mechanically explainable
-      // from the artifact instead of re-adjudicated by hand.
+      // timed runs for the slower queries, so a single GC pause does not
+      // masquerade as a plan regression; sub-half-second queries get one
+      // run. The JVM-wide GC time spent during each run is recorded with
+      // it.
       def timedRun(): (Double, Long) = {
         val g0 = totalGcMs()
         val t0 = System.nanoTime()
@@ -131,11 +108,10 @@ object Bench {
       val fast = sys.env.get("SPARK_GRAFT_BENCH_FAST").contains("1")
       val runs = if (fast || w < 0.5) 1 else 2
       var (best, bestGc) = (1 to runs).map(_ => timedRun()).minBy(_._1)
-      // Session-noise guard: a machine-load window can swallow BOTH timed
-      // runs (dedup_clusters once recorded 25.2s where isolated truth
-      // was 3.56s). The warmup pass minutes earlier is an independent
-      // observation of the same query — when the timed best exceeds 3× it,
-      // re-measure (bounded) and keep the overall min, logging both.
+      // Noise guard: a machine-load window can swallow BOTH timed runs.
+      // The warmup pass is an independent observation of the same query —
+      // when the timed best exceeds 3× it, re-measure (bounded) and keep
+      // the overall min, logging both.
       var extra = 0
       while (best > 3 * w && best > 1.0 && extra < 2) {
         extra += 1
@@ -152,25 +128,17 @@ object Bench {
       canarySamples.map { case (i, d) => f"$i:$d%.2f" }.mkString(" "))
     val rid = runId(results.toMap)
     val env = envFingerprint()
-    // Full per-query record first (may be long; also mirrored on stderr):
-    // carries shuffle_bytes AND per-query GC ms for EVERY query, plus the
-    // machine/JVM fingerprint — the provenance that makes a
-    // driver-vs-builder environment gap attributable from artifacts.
+    // Full per-query record first (may be long): shuffle_bytes and GC ms
+    // for every query, plus the machine/JVM fingerprint.
     val fullLine = renderLine(results.toSeq.sortBy(_._1), results.toMap, sfDir,
       shuffle = shuffleBytes.toSeq.sortBy(_._1), runId = rid,
       gc = gcByQuery.toSeq.sortBy(_._1), env = env)
     println(fullLine)
-    // The driver keeps only the LAST 2000 chars of output, so the short
-    // line below folds the tail into "_other_total" — which left the
-    // mechanical bench gate grading only ~50 of the pinned keys.
-    // Persist the COMPLETE per-query record to a file
-    // the gate can merge: tools/bench_gate.py trusts it iff its "run" id
-    // (a hash over every name:seconds pair) matches the one embedded in
-    // the driver-captured short line — binding file and artifact to the
-    // same physical run. SUBSET runs (SPARK_GRAFT_BENCH_ONLY pin/iterate
-    // runs) go to BENCH_SUBSET.json instead: they used to clobber
-    // BENCH_FULL.json, leaving a dirty artifact of record after every
-    // local pin run.
+    // The short line below folds its tail into "_other_total", so the
+    // COMPLETE record also goes to a file: tools/bench_gate.py trusts it
+    // iff its "run" id (a hash over every name:seconds pair) matches the
+    // one in the short line. Subset runs (SPARK_GRAFT_BENCH_ONLY) write
+    // BENCH_SUBSET.json so they never replace BENCH_FULL.json.
     val outFile = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), fullLine + "\n")
@@ -189,10 +157,7 @@ object Bench {
   }
 
   /** Machine/JVM provenance for the artifact: CPU model, logical cores,
-    * 1-min load average at run end, JVM version, heap max. A
-    * driver-vs-builder 1.22× spread on byte-identical plans was only
-    * "likely environment drift" because no artifact recorded what either
-    * machine looked like — this closes that.
+    * 1-min load average at run end, JVM version, heap max.
     */
   def envFingerprint(): Map[String, String] = {
     val cpu =
@@ -241,7 +206,7 @@ object Bench {
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${entries.mkString("{", ",", "}")}${longMap("shuffle_bytes", shuffle)}${longMap("gc_ms", gc)}$envPart$runPart,"sf":"$sfDir"}"""
   }
 
-  /** The FINAL stdout line. The round driver parses a JSON line out of
+  /** The FINAL stdout line. A caller may parse a JSON line out of only
     * the LAST 2000 chars of combined output (after sbt's "[success] …"
     * trailer), so this line must stay well under that: if the full map
     * is too long, keep the slowest 40 queries and fold the rest into

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftbridge.{CosineSimilarity, IntersectCountSortedLong, JaccardSimilarity, JaccardSortedLong, SimHash64}
 
@@ -22,24 +22,35 @@ import graft.functions.BQCompat
   * argument — e.g. `TIMESTAMP_DIFF(day, other_ts, HOUR)` — is untouched.
   */
 object BQUnitArgRule extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.resolveExpressions {
-      case f: UnresolvedFunction
-          if f.nameParts.length == 1 &&
-            BQCompat.UnitArgFunctions.contains(f.nameParts.head.toLowerCase(Locale.ROOT)) =>
-        val unitIdx = BQCompat.UnitArgFunctions(f.nameParts.head.toLowerCase(Locale.ROOT)) match {
-          case BQCompat.UnitPos.Last => f.arguments.length - 1
-          case BQCompat.UnitPos.Second => 1
-        }
-        val rewritten = f.arguments.zipWithIndex.map {
-          case (a: UnresolvedAttribute, i)
-              if i == unitIdx && a.nameParts.length == 1 &&
-                BQCompat.UnitNames.contains(a.name.toUpperCase(Locale.ROOT)) =>
-            Literal(a.name.toUpperCase(Locale.ROOT))
-          case (other, _) => other
-        }
-        f.copy(arguments = rewritten)
-    }
+  private val unitArgs: PartialFunction[Expression, Expression] = {
+    case f: UnresolvedFunction
+        if f.nameParts.length == 1 &&
+          BQCompat.UnitArgFunctions.contains(f.nameParts.head.toLowerCase(Locale.ROOT)) =>
+      val unitIdx = BQCompat.UnitArgFunctions(f.nameParts.head.toLowerCase(Locale.ROOT)) match {
+        case BQCompat.UnitPos.Last => f.arguments.length - 1
+        case BQCompat.UnitPos.Second => 1
+      }
+      val rewritten = f.arguments.zipWithIndex.map {
+        case (a: UnresolvedAttribute, i)
+            if i == unitIdx && a.nameParts.length == 1 &&
+              BQCompat.UnitNames.contains(a.name.toUpperCase(Locale.ROOT)) =>
+          Literal(a.name.toUpperCase(Locale.ROOT))
+        case (other, _) => other
+      }
+      f.copy(arguments = rewritten)
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveExpressions(unitArgs)
+
+  /** The same rewrite over a freshly parsed plan, before any analysis:
+    * it also walks subquery plans and CTE bodies, which the analyzer
+    * would otherwise hand to [[apply]] one by one.
+    */
+  def onParsed(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case w: UnresolvedWith =>
+      w.copy(cteRelations = w.cteRelations.map { case (n, r, d) => (n, onParsed(r).asInstanceOf[SubqueryAlias], d) })
+    case p => p.transformExpressions(unitArgs)
+  }
 }
 
 /** Spark-native installation point: `--conf

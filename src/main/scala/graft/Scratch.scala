@@ -1,0 +1,32 @@
+package graft
+
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+
+/** Where scratch data lives: one root per JVM under `java.io.tmpdir`,
+  * created on first use and deleted by one shutdown hook. Owners delete
+  * their own subtrees earlier when they can (a session's snapshots on
+  * close, a stale Verify output); the hook catches the rest.
+  */
+object Scratch {
+
+  lazy val root: Path = {
+    val r = Files.createTempDirectory("graft-")
+    sys.addShutdownHook(delete(r))
+    r
+  }
+
+  /** A fresh, uniquely named directory under [[root]]. */
+  def dir(prefix: String): Path = Files.createTempDirectory(root, prefix)
+
+  /** Delete `p` and everything under it, without following links. A
+    * missing `p`, or an entry that vanishes mid-walk (Spark's own
+    * shutdown hooks delete inside the same tree), is not an error.
+    */
+  def delete(p: Path): Unit = Files.walkFileTree(p, new SimpleFileVisitor[Path] {
+    override def visitFile(f: Path, a: BasicFileAttributes) = { Files.deleteIfExists(f); FileVisitResult.CONTINUE }
+    override def visitFileFailed(f: Path, e: IOException) = FileVisitResult.CONTINUE
+    override def postVisitDirectory(d: Path, e: IOException) = { Files.deleteIfExists(d); FileVisitResult.CONTINUE }
+  })
+}

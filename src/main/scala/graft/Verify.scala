@@ -37,13 +37,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // Remove any stale output from a previous run so a failure can
         // never masquerade as a pass.
-        val stale = new java.io.File(s"$outDir/$name")
-        if (stale.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(stale)
-        }
+        Scratch.delete(Paths.get(outDir, name))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,10 +1,8 @@
 package graft.api
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.{Dag, DagTable, GraftSession, SessionManager}
+import graft.engine.{DagTable, GraftSession, SessionManager}
 import graft.sources.DirectoryCatalog
 
 /** Method-for-method facade over the reference's RPC surface
@@ -44,11 +42,6 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
           throw graft.api.GraftError.InvalidParams(
             "jdbc backend needs GRAFT_JDBC_URL")))
   }
-  private val dags = new ConcurrentHashMap[String, Dag]()
-  private val lastRun = new ConcurrentHashMap[String, graft.engine.DagResult]()
-  private val defaultProject = new ConcurrentHashMap[String, String]()
-  private val catalogRoot = new ConcurrentHashMap[String, String]()
-
   private def session(params: Map[String, Any]): GraftSession = {
     val id = req(params, "sessionId").toString
     sessions.get(id).getOrElse(throw GraftError.UnknownSession(id))
@@ -56,9 +49,6 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
 
   private def req(params: Map[String, Any], key: String): Any =
     params.getOrElse(key, throw GraftError.InvalidParams(s"Missing param: $key"))
-
-  private def dagOf(s: GraftSession): Dag =
-    dags.computeIfAbsent(s.id, _ => new Dag(s))
 
   /** Dispatch with the reference's error taxonomy (src/rpc/methods.rs +
     * src/error.rs): engine failures surface as [[GraftError]] kinds, so
@@ -91,9 +81,7 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
     case "bq.createSession" => Map("sessionId" -> sessions.create(resolver).id)
 
     case "bq.destroySession" =>
-      val id = req(params, "sessionId").toString
-      dags.remove(id); lastRun.remove(id)
-      Map("success" -> sessions.destroy(id))
+      Map("success" -> sessions.destroy(req(params, "sessionId").toString))
 
     case "bq.query" =>
       // BigQuery's own jobs.query has maxResults paging semantics; cap
@@ -117,7 +105,7 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       val defs = req(params, "tables").asInstanceOf[Seq[Map[String, Any]]].map(GraftRpc.dagTableParam)
       Map(
         "success" -> true,
-        "tables" -> dagOf(s).register(defs).map { case (n, deps) =>
+        "tables" -> s.dag.register(defs).map { case (n, deps) =>
           Map("name" -> n, "dependencies" -> deps)
         })
 
@@ -127,8 +115,8 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       val s = session(params)
       val targets = params.get("tableNames").orElse(params.get("targets"))
         .map(_.asInstanceOf[Seq[String]])
-      val res = dagOf(s).run(targets)
-      lastRun.put(s.id, res)
+      val res = s.dag.run(targets)
+      s.lastRun = Some(res)
       GraftRpc.toRunResult(res)
 
     case "bq.retryDag" =>
@@ -141,23 +129,23 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
         k <- params.get("skippedTables").map(_.asInstanceOf[Seq[String]])
       } yield graft.engine.DagResult(
         failed = f.map(graft.engine.TableError(_, "")), skipped = k)
-      val prev = explicit.orElse(Option(lastRun.get(s.id)))
+      val prev = explicit.orElse(s.lastRun)
         .getOrElse(throw GraftError.InvalidParams("No previous DAG run to retry"))
-      val res = dagOf(s).retryFailed(prev)
-      lastRun.put(s.id, res)
+      val res = s.dag.retryFailed(prev)
+      s.lastRun = Some(res)
       GraftRpc.toRunResult(res)
 
     case "bq.getDag" =>
       // Result shape = reference GetDagResult/DagTableDetail
       // (rpc/types.rs:288): sql key omitted for source tables.
-      Map("tables" -> dagOf(session(params)).getTables.map {
+      Map("tables" -> session(params).dag.getTables.map {
         case (name, sql, isSource, deps) =>
           Map("name" -> name, "isSource" -> isSource, "dependencies" -> deps) ++
             sql.map("sql" -> _)
       })
 
     case "bq.clearDag" =>
-      dagOf(session(params)).clear()
+      session(params).dag.clear()
       Map("success" -> true)
 
     case "bq.loadParquet" =>
@@ -193,14 +181,11 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
         "rowCount" -> count)
 
     case "bq.setDefaultProject" =>
-      params.get("project") match {
-        case Some(p) if p != null => defaultProject.put(session(params).id, p.toString)
-        case _ => defaultProject.remove(session(params).id)
-      }
+      session(params).defaultProject = params.get("project").flatMap(Option(_)).map(_.toString)
       Map("success" -> true)
 
     case "bq.getDefaultProject" =>
-      Map("project" -> defaultProject.get(session(params).id))
+      Map("project" -> session(params).defaultProject.orNull)
 
     case "bq.getProjects" =>
       DirectoryCatalog.listProjects(rootOf(params))
@@ -216,7 +201,7 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       // (rpc/types.rs:456): success + tablesLoaded rows with rowCount.
       val s = session(params)
       val path = reqRoot(params)
-      catalogRoot.put(s.id, path)
+      s.catalogRoot = Some(path)
       Map(
         "success" -> true,
         "tablesLoaded" -> DirectoryCatalog.loadParquetDirectoryInfo(s, path)
@@ -229,9 +214,9 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       // LoadSqlDirectoryResult (methods.rs:331-343, rpc/types.rs:433).
       val s = session(params)
       val path = reqRoot(params)
-      catalogRoot.put(s.id, path)
+      s.catalogRoot = Some(path)
       val (dag, sqlInfos) = DirectoryCatalog.loadSqlDag(s, path)
-      dags.put(s.id, dag)
+      s.dag = dag
       Map(
         "success" -> true,
         "tablesLoaded" -> sqlInfos.map(GraftRpc.sqlTableInfo))
@@ -244,9 +229,9 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       // register_dag return — computed tables only, with dependencies).
       val s = session(params)
       val path = reqRoot(params)
-      catalogRoot.put(s.id, path)
+      s.catalogRoot = Some(path)
       val (dag, srcInfos, sqlInfos) = DirectoryCatalog.loadDagFrom(s, path)
-      dags.put(s.id, dag)
+      s.dag = dag
       Map(
         "success" -> true,
         "sourceTables" -> srcInfos.map { case (d, n) => GraftRpc.parquetTableInfo(d, n) },
@@ -262,13 +247,12 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
 
   private def rootOf(params: Map[String, Any]): String =
     params.get("rootPath").orElse(params.get("path")).map(_.toString)
-      .orElse(Option(catalogRoot.get(session(params).id)))
+      .orElse(session(params).catalogRoot)
       .getOrElse(throw GraftError.LoaderError("No catalog root loaded for session"))
 
   /** Directory-loader root param. The reference deserializes the wire
     * key `rootPath` (rpc/types.rs:428/451/476 serde rename) for all
-    * three bq.load*Directory methods; `path` stays accepted for
-    * clients of this engine's earlier rounds.
+    * three bq.load*Directory methods; `path` stays accepted as an alias.
     */
   private def reqRoot(params: Map[String, Any]): String =
     params.get("rootPath").orElse(params.get("path")).map(_.toString)

@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.nio.file.{Files, Path}
-
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -9,30 +7,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 
-/** One table in the pipeline: a source (schema + literal rows, or an
-  * existing DataFrame) or a derived table (SQL over other tables).
-  * Reference: src/session/pipeline.rs PipelineTable / rpc DagTableDef.
+/** One table in the pipeline: a source (schema + literal rows, or a
+  * view over a DataFrame builder) or a derived table (SQL over other
+  * tables). Reference: src/session/pipeline.rs PipelineTable / rpc
+  * DagTableDef.
   */
 final case class DagTable(
     name: String,
     sql: Option[String] = None,
     schema: Option[Seq[(String, String)]] = None,
     rows: Seq[Seq[Any]] = Nil,
-    source: Option[DataFrame] = None,
-    thunk: Option[() => DataFrame] = None) {
+    view: Option[() => DataFrame] = None) {
   def isSource: Boolean = sql.isEmpty
 }
 
 object DagTable {
   def source(name: String, schema: Seq[(String, String)], rows: Seq[Seq[Any]] = Nil): DagTable =
     DagTable(name, schema = Some(schema), rows = rows)
-  def view(name: String, df: DataFrame): DagTable = DagTable(name, source = Some(df))
-  /** A view whose BUILDER runs driver-side work (training collects,
-    * checkpoints): deferring the call into the table's scheduler slot
-    * lets it overlap other stages instead of running at registration
-    * time, before the slot scheduler starts.
+  /** A view whose frame is built inside the table's scheduler slot on
+    * every run, not at registration: a builder that runs driver-side
+    * work (training collects, checkpoints) then overlaps other stages.
     */
-  def lazyView(name: String, mk: () => DataFrame): DagTable = DagTable(name, thunk = Some(mk))
+  def view(name: String, df: => DataFrame): DagTable = DagTable(name, view = Some(() => df))
   def derived(name: String, sql: String): DagTable = DagTable(name, sql = Some(sql))
 }
 
@@ -58,6 +54,10 @@ final case class DagResult(
   *     table is written once by executors, never serialized through a
   *     driver-side SQL string.
   *
+  * Snapshots live in the session's scratch directory, at
+  * `session.dir/<table>`: [[clear]] deletes those of the tables it
+  * drops, and closing the session deletes the rest.
+  *
   * Matching semantics: re-running a derived table recomputes it from
   * current upstream state; a failed table blocks (skips) its dependents;
   * `run(targets)` executes the transitive dependency closure;
@@ -74,17 +74,15 @@ object Dag {
       .getOrElse(DefaultMaxConcurrency)
 }
 
-final class Dag(session: GraftSession, workDir: Option[Path] = None) {
+final class Dag(session: GraftSession) {
 
   private val tables = mutable.LinkedHashMap[String, DagTable]()
   private val deps = mutable.LinkedHashMap[String, Seq[String]]()
-  private lazy val dir: Path =
-    workDir.getOrElse(Files.createTempDirectory("graft-dag"))
 
   /** Table names become temp-view names AND filesystem paths under the
-    * work directory; restrict to safe identifiers so a name like
-    * "../../etc" can never escape `dir` (overwrite mode deletes the
-    * target before writing).
+    * session directory; restrict to safe identifiers so a name like
+    * "../../etc" can never escape it (overwrite mode and [[clear]]
+    * delete the target).
     */
   private val SafeName = "^[A-Za-z_][A-Za-z0-9_]*$".r
 
@@ -146,8 +144,14 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None) {
   def retryFailed(prev: DagResult, maxConcurrency: Int = Dag.envMaxConcurrency): DagResult =
     runSubset(prev.failed.map(_.table).toSet ++ prev.skipped.toSet, maxConcurrency)
 
+  /** Drop every table: its view, its insert snapshot and its parquet
+    * snapshot.
+    */
   def clear(): Unit = {
-    tables.keys.foreach(n => session.spark.catalog.dropTempView(n))
+    tables.keys.foreach { n =>
+      session.dropTable(n)
+      graft.Scratch.delete(session.dir.resolve(n))
+    }
     tables.clear(); deps.clear()
   }
 
@@ -294,7 +298,7 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None) {
     */
   private def estimateCost(name: String): Long =
     tables.get(name) match {
-      case Some(DagTable(_, Some(sql), _, _, _, _)) =>
+      case Some(DagTable(_, Some(sql), _, _, _)) =>
         try {
           val b = session.sql(sql).queryExecution.optimizedPlan.stats.sizeInBytes
           // Plans over a stats-less leaf report the defaultSizeInBytes
@@ -314,17 +318,15 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None) {
     try {
       val t = tables(name)
       t match {
-        case DagTable(_, None, _, _, _, Some(mk)) =>
+        case DagTable(_, None, _, _, Some(mk)) =>
           mk().createOrReplaceTempView(name)
-        case DagTable(_, None, _, _, Some(df), _) =>
-          df.createOrReplaceTempView(name)
-        case DagTable(_, None, Some(schema), rows, _, _) =>
+        case DagTable(_, None, Some(schema), rows, _) =>
           // Reference semantics (pipeline.rs:556): CREATE IF NOT EXISTS +
           // append the registered literal rows on every run.
-          if (!session.listTables().contains(name)) session.createTable(name, schema)
+          if (!session.spark.catalog.tableExists(name)) session.createTable(name, schema)
           if (rows.nonEmpty) session.insert(name, rows)
-        case DagTable(_, Some(sql), _, _, _, _) =>
-          val out = dir.resolve(name).toString
+        case DagTable(_, Some(sql), _, _, _) =>
+          val out = session.dir.resolve(name).toString
           session.sql(sql).write.mode("overwrite").parquet(out)
           session.spark.read.parquet(out).createOrReplaceTempView(name)
         case other =>

@@ -1,12 +1,19 @@
 package graft.engine
 
-import java.util.UUID
+import java.nio.file.Path
+import java.util.{Locale, UUID}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+
+import graft.BQUnitArgRule
 
 /** Session-isolated query surface, mirroring the reference's session
   * manager (reference: src/session/manager.rs, rpc methods bq.createSession /
@@ -18,6 +25,13 @@ import org.apache.spark.sql.types._
   * cache), but isolated SQLConf, temp-view catalog and function registry.
   * That is exactly the reference's per-session database semantics without
   * per-session process cost.
+  *
+  * The session owns everything it leaves behind: the temp views, one
+  * in-memory snapshot per inserted table, the parquet snapshots of its
+  * DAG's derived tables under [[dir]], and the RPC-level state below.
+  * [[close]] releases all of it. Requests to one session are assumed
+  * not to run concurrently with its mutations (insert, createTable,
+  * dropTable, a DAG run, close); different sessions are independent.
   */
 final class GraftSession private[engine] (
     val id: String,
@@ -26,11 +40,33 @@ final class GraftSession private[engine] (
 
   import GraftSession._
 
-  /** The in-memory blocks behind every insert snapshot. They outlive the
-    * temp views that point at them, so [[SessionManager.destroy]] hands
-    * them back through [[release]].
+  /** This session's scratch directory: derived DAG tables are written
+    * to `dir/<table>`. Nothing is created until the first write.
     */
-  private val snapshots = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+  lazy val dir: Path = graft.Scratch.root.resolve(s"session-$id")
+
+  /** RPC-level state: the DAG bq.registerDag/runDag act on (the
+    * directory loaders replace it), its last run for bq.retryDag, the
+    * default project, and the root the catalog navigation calls list.
+    */
+  @volatile var dag: Dag = new Dag(this)
+  @volatile var lastRun: Option[DagResult] = None
+  @volatile var defaultProject: Option[String] = None
+  @volatile var catalogRoot: Option[String] = None
+
+  /** The in-memory blocks behind each inserted table's current snapshot,
+    * keyed by lower-cased table name (temp views are case-insensitive).
+    * They outlive the views that point at them, so replacing or dropping
+    * a table, and [[close]], unpersist them.
+    */
+  private val snapshots = new ConcurrentHashMap[String, RDD[InternalRow]]()
+
+  /** Make `successor` the table's snapshot and unpersist the one it replaces. */
+  private def release(name: String, successor: Option[RDD[InternalRow]]): Unit = {
+    val key = name.toLowerCase(Locale.ROOT)
+    val old = successor.fold(snapshots.remove(key))(snapshots.put(key, _))
+    if (old != null) old.unpersist(blocking = false)
+  }
 
   /** Resolve a table through this session's backend (reference:
     * executor/mod.rs dispatch): session temp views win, then the
@@ -45,6 +81,7 @@ final class GraftSession private[engine] (
   def createTable(name: String, schema: Seq[(String, String)]): Unit = {
     val st = StructType(schema.map { case (n, t) => StructField(n, bqType(t)) })
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st).createOrReplaceTempView(name)
+    release(name, None)
   }
 
   /** Append rows (positional values matching the table schema). */
@@ -55,19 +92,12 @@ final class GraftSession private[engine] (
     val appended = existing.unionAll(
       spark.createDataFrame(coerced.asJava, st))
     // Materialize through a snapshot so the view does not become a
-    // self-referencing plan of unbounded depth after many inserts.
+    // self-referencing plan of unbounded depth after many inserts. The
+    // snapshot is eager, so the one it replaces can go right after.
     val snap = appended.localCheckpoint(true)
-    snap.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(snapshots.add)
     snap.createOrReplaceTempView(name)
+    release(name, snap.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd })
     rows.size.toLong
-  }
-
-  /** Unpersist every insert snapshot this session made. */
-  private[engine] def release(): Unit = {
-    var rdd = snapshots.poll()
-    while (rdd != null) { rdd.unpersist(blocking = false); rdd = snapshots.poll() }
   }
 
   /** Run SQL against this session's tables. In bigquery mode the text is
@@ -79,7 +109,7 @@ final class GraftSession private[engine] (
     */
   def sql(q: String): DataFrame = resolver match {
     case bq: BigQueryResolver => bq.query(spark, q)
-    case LocalResolver => spark.sql(rewriteBqSyntax(q))
+    case LocalResolver => localSql(q)
     case remote =>
       // Remote CATALOG with local SQL (the jdbc shape): relations the
       // session hasn't seen yet resolve lazily — on TABLE_OR_VIEW_NOT_
@@ -90,7 +120,7 @@ final class GraftSession private[engine] (
       // typed UnknownTable; the seen-set makes non-progress impossible.
       val seen = scala.collection.mutable.Set.empty[String]
       def run(): DataFrame =
-        try spark.sql(rewriteBqSyntax(q))
+        try localSql(q)
         catch {
           case e: org.apache.spark.sql.AnalysisException
               if e.getCondition != null &&
@@ -107,6 +137,14 @@ final class GraftSession private[engine] (
       run()
   }
 
+  /** Spark SQL over the rewritten text, with BigQuery's bare unit
+    * arguments (`DATE_DIFF(a, b, DAY)`) made literals before analysis —
+    * the rule `GraftExtensions` installs, applied here because engine
+    * sessions are children of a session built without the extension.
+    */
+  private def localSql(q: String): DataFrame =
+    ColumnBridge.sql(spark, BQUnitArgRule.onParsed(spark.sessionState.sqlParser.parsePlan(rewriteBqSyntax(q))))
+
   def listTables(): Seq[String] =
     spark.catalog.listTables().collect().map(_.name).toSeq.sorted
 
@@ -115,7 +153,18 @@ final class GraftSession private[engine] (
     (df.schema.fields.map(f => f.name -> sparkTypeToBq(f.dataType)).toSeq, df.count())
   }
 
-  def dropTable(name: String): Unit = spark.catalog.dropTempView(name)
+  def dropTable(name: String): Unit = {
+    spark.catalog.dropTempView(name)
+    release(name, None)
+  }
+
+  /** Drop every view, unpersist every snapshot and delete [[dir]]. */
+  def close(): Unit = {
+    spark.catalog.listTables().collect().foreach(t => spark.catalog.dropTempView(t.name))
+    snapshots.values.forEach(_.unpersist(false))
+    snapshots.clear()
+    graft.Scratch.delete(dir)
+  }
 }
 
 object GraftSession {
@@ -285,14 +334,7 @@ final class SessionManager(root: SparkSession) {
 
   def destroy(id: String): Boolean = {
     val s = sessions.remove(id)
-    if (s != null) {
-      // Temp views die with the wrapped session; drop eagerly anyway.
-      // The snapshot blocks behind them live in the shared SparkContext
-      // and would not: release them too.
-      s.spark.catalog.listTables().collect().foreach(t => s.spark.catalog.dropTempView(t.name))
-      s.release()
-      true
-    } else false
+    if (s != null) { s.close(); true } else false
   }
 
   def list(): Seq[String] = sessions.keySet().asScala.toSeq.sorted

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 
 import graft.Tables
-import graft.engine.{Dag, DagTable, SessionManager}
+import graft.engine.{DagTable, GraftSession, SessionManager}
 
 /** End-to-end DAG pipeline as a verifiable query: parquet sources →
   * three dependency-ordered materialized derived tables → final result.
@@ -11,8 +11,13 @@ import graft.engine.{Dag, DagTable, SessionManager}
   * materializing executor computes exactly what the declarative SQL says
   * (reference: adaptors/clojure/test/bq_runner/dag_test.clj
   * test-dag-complex-pipeline).
+  *
+  * Each call runs in its own engine session and closes the previous
+  * call's, whose result the caller has consumed by then.
   */
 object EngineQueries {
+
+  private val previous = new java.util.concurrent.atomic.AtomicReference[GraftSession]()
 
   /** Derived-stage SQL, in dependency order — exposed for
     * BQCompatShadowSpec (these strings run inside a dialect session).
@@ -37,12 +42,12 @@ object EngineQueries {
     "q_dag_pipeline" -> QDef(
       (s: SparkSession, dir: String) => {
         val session = new SessionManager(s).create()
-        val dag = new Dag(session)
-        dag.register(Seq(
+        Option(previous.getAndSet(session)).foreach(_.close())
+        session.dag.register(Seq(
           DagTable.view("orders_src", Tables(session.spark, dir, "orders")),
           DagTable.view("customer_src", Tables(session.spark, dir, "customer"))) ++
           DagSqls.map { case (name, sql) => DagTable.derived(name, sql) })
-        val res = dag.run()
+        val res = session.dag.run()
         if (!res.allSucceeded)
           throw new IllegalStateException(s"DAG run failed: ${res.failed} skipped=${res.skipped}")
         session.sql("SELECT * FROM segment_stats ORDER BY c_mktsegment")

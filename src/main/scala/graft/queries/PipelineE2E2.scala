@@ -1,15 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.engine.{Dag, DagTable, SessionManager}
+import graft.engine.{DagTable, GraftSession, SessionManager}
 
-/** Round-12 flagship: the FULL curation chain — Gopher quality rules →
-  * CCNet perplexity terciles → exact dedup → benchmark decontamination →
-  * language mixture → BPE-budgeted packing — composed as one dependency
-  * DAG and executed by the ENGINE'S OWN SCHEDULER ([[graft.engine.Dag]]:
+/** The full curation chain — Gopher quality rules → CCNet perplexity
+  * terciles → exact dedup → benchmark decontamination → language
+  * mixture → BPE-budgeted packing — composed as one dependency DAG and
+  * executed by the engine's own scheduler ([[graft.engine.Dag]]:
   * topological slot-based streaming execution, each derived stage
   * materialized as a parquet snapshot exactly as the reference pipeline
   * materializes derived tables). `llm_curate_e2e` proved three operators
@@ -18,34 +18,25 @@ import graft.engine.{Dag, DagTable, SessionManager}
   * stage a registered `DagTable` with parsed dependencies, scheduled by
   * `Dag.run`, snapshotted, and re-read by its dependents — and the final
   * packed output still hash-matches DuckDB replaying the identical
-  * chain (including the full batched BPE training of 25ik).
+  * chain (including the full batched BPE training).
   *
   * Scale shape: every stage keeps the discipline of the operator it is
   * built from — Gopher/dedup/decontam are map-side or hash-keyed
   * (never a global window); the CCNet tercile uses the bucket-offset
-  * global rank (per-bucket ROW_NUMBER + a ≤nb-row offset window, the
-  * 25jc trick — no corpus-scale single-partition window); mixture and
-  * packing window PER LANGUAGE; BPE training is 25ik's batched
-  * vocabulary-sized shuffles. Materialization between stages is the
-  * same write-once parquet a production pipeline would checkpoint.
+  * global rank (per-bucket ROW_NUMBER + a ≤nb-row offset window — no
+  * corpus-scale single-partition window); mixture and packing window
+  * PER LANGUAGE; BPE training is batched vocabulary-sized shuffles.
+  * Materialization between stages is the same write-once parquet a
+  * production pipeline would checkpoint.
+  *
+  * Each run gets its own engine session, and the stage snapshots live
+  * in that session's scratch directory. A run closes the previous run's
+  * session, so one JVM holds at most one run's snapshots; the caller
+  * has consumed the previous result by then.
   */
 object PipelineE2E2 {
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** One temp root + one shutdown hook per JVM; each run gets a
-    * subdirectory (see runChainSession).
-    */
-  private lazy val tempRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-e2e2-")
-    sys.addShutdownHook(rmTree(root.toFile))
-    root
-  }
-
-  private val lastRun =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
+  private val previous = new java.util.concurrent.atomic.AtomicReference[GraftSession]()
 
   /** Spark-dialect stage SQL. Mirrored 1:1 by the DuckDB CTEs in the
     * oracle below — same predicates, same thresholds, same tie-breaks.
@@ -136,39 +127,25 @@ object PipelineE2E2 {
   /** Build + run the DAG in a fresh child session; returns the packed
     * summary read from the engine's own materialized snapshot.
     */
-  def runChain(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val gs = runChainSession(s, dir)
-    gs.spark.table("packed")
-      .orderBy("lang", "bin")
-  }
+  def runChain(s: SparkSession, dir: String): DataFrame =
+    runChainSession(s, dir).spark.table("packed").orderBy("lang", "bin")
 
   /** Run the DAG and return the child session holding every stage view
     * (the spec inspects intermediate stages through it).
     */
-  private[graft] def runChainSession(s: SparkSession, dir: String): graft.engine.GraftSession = {
+  private[graft] def runChainSession(s: SparkSession, dir: String): GraftSession = {
     val gs = new SessionManager(s).create()
+    Option(previous.getAndSet(gs)).foreach(_.close())
     val docsDf = Tables(gs.spark, dir, "documents")
-    // Stage snapshots live under per-run subdirectories of ONE temp root
-    // with ONE shutdown hook (Bench + Verify + the partition-invariance
-    // sweep call this several times per JVM; a root-and-hook per run
-    // accumulated materialization trees and hooks until exit). The
-    // previous run's subtree is deleted eagerly when the next run starts.
-    val work = java.nio.file.Files.createTempDirectory(tempRoot, "run-")
-    lastRun.getAndSet(work) match {
-      case null => ()
-      case prev => rmTree(prev.toFile)
-    }
-    val dag = new Dag(gs, Some(work))
-    // bpe is a LAZY view: encodeStats' training loop collects per
-    // round, so building the frame eagerly at registration serialized
-    // the whole BPE training BEFORE the slot scheduler started; deferred
-    // into its slot it overlaps the gopher→ccnet→…→mixture chain (the
-    // two branches only meet at `packed`).
-    dag.register(Seq(
+    // encodeStats' training loop collects per round; as a view it is
+    // built inside its scheduler slot, so it overlaps the
+    // gopher→ccnet→…→mixture chain (the two branches only meet at
+    // `packed`).
+    gs.dag.register(Seq(
       DagTable.view("docs", docsDf),
-      DagTable.lazyView("bpe", () => BpeOps.encodeStats(docsDf))) ++
+      DagTable.view("bpe", BpeOps.encodeStats(docsDf))) ++
       DagSqls.map { case (name, sql) => DagTable.derived(name, sql) })
-    val res = dag.run()
+    val res = gs.dag.run()
     require(res.allSucceeded,
       s"curate DAG failed: ${res.failed.mkString(", ")}; skipped: ${res.skipped.mkString(", ")}")
     gs

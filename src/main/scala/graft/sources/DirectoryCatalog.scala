@@ -97,17 +97,11 @@ object DirectoryCatalog {
     * parquet-footer-metadata job, not a full scan.
     */
   def loadParquetDirectoryInfo(session: GraftSession, root: String): Seq[(Discovered, Long)] = {
-    val pq = discover(root).filterNot(_.isSql)
-    val counted = pq.map { d =>
-      val df = readTable(session, d)
-      df.createOrReplaceTempView(d.fullName)
-      (d, df.count())
-    }
+    val frames = discover(root).filterNot(_.isSql).map(d => d -> readTable(session, d))
+    frames.foreach { case (d, df) => df.createOrReplaceTempView(d.fullName) }
     // Bare-name aliases for unambiguous tables.
-    pq.groupBy(_.table).collect { case (t, Seq(only)) =>
-      readTable(session, only).createOrReplaceTempView(t)
-    }
-    counted
+    frames.groupBy(_._1.table).collect { case (t, Seq((_, df))) => df.createOrReplaceTempView(t) }
+    frames.map { case (d, df) => (d, df.count()) }
   }
 
   /** SQL-ONLY DAG registration (reference: manager.rs:282-312
@@ -117,9 +111,9 @@ object DirectoryCatalog {
     * a prior loadParquetDirectory call) — exactly the reference's
     * side-effect contract, which differs from [[loadDagFrom]].
     */
-  def loadSqlDag(session: GraftSession, root: String, workDir: Option[Path] = None): (Dag, Seq[Discovered]) = {
+  def loadSqlDag(session: GraftSession, root: String): (Dag, Seq[Discovered]) = {
     val sql = discover(root).filter(_.isSql)
-    val dag = new Dag(session, workDir)
+    val dag = new Dag(session)
     dag.register(sql.map(d => DagTable.derived(d.table, Files.readString(Paths.get(d.path)))))
     (dag, sql)
   }
@@ -127,28 +121,26 @@ object DirectoryCatalog {
   /** Build a Dag: parquet files as source views, .sql files as derived
     * tables (dependency-ordered, materialized on run()).
     */
-  def loadDag(session: GraftSession, root: String, workDir: Option[Path] = None): Dag =
-    loadDagFrom(session, root, workDir)._1
+  def loadDag(session: GraftSession, root: String): Dag =
+    loadDagFrom(session, root)._1
 
   /** [[loadDag]] plus the per-file info the RPC layer serializes into the
     * reference's LoadDagFromDirectoryResult (rpc/types.rs:481): parquet
     * sources with row counts, and the .sql computed tables.
     */
-  def loadDagFrom(session: GraftSession, root: String, workDir: Option[Path] = None)
+  def loadDagFrom(session: GraftSession, root: String)
       : (Dag, Seq[(Discovered, Long)], Seq[Discovered]) = {
     val discovered = discover(root)
-    val dag = new Dag(session, workDir)
-    val srcInfo = discovered.filterNot(_.isSql).map { d =>
-      (d, readTable(session, d).count())
-    }
-    val sources = srcInfo.map { case (d, _) =>
-      DagTable.view(d.table, readTable(session, d))
+    val dag = new Dag(session)
+    val sources = discovered.filterNot(_.isSql).map { d =>
+      val df = readTable(session, d)
+      (d, df, df.count())
     }
     val sql = discovered.filter(_.isSql)
     val derived = sql.map { d =>
       DagTable.derived(d.table, Files.readString(Paths.get(d.path)))
     }
-    dag.register(sources ++ derived)
-    (dag, srcInfo, sql)
+    dag.register(sources.map { case (d, df, _) => DagTable.view(d.table, df) } ++ derived)
+    (dag, sources.map { case (d, _, n) => (d, n) }, sql)
   }
 }

@@ -19,28 +19,12 @@ import graft.queries.QDef
   */
 object SourceOps {
 
-  /** Scratch root per (operator, sf dir, process) — the process id in
-    * the path means concurrent bench and verify runs on the SAME sf dir
-    * can never overwrite each other mid-read; a JVM shutdown hook
-    * removes everything this process created.
+  /** Scratch path per (operator, sf dir) under this JVM's
+    * [[graft.Scratch]] root, so concurrent bench and verify runs on the
+    * SAME sf dir can never overwrite each other mid-read.
     */
-  private val scratchDirs = scala.collection.mutable.HashSet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.synchronized(scratchDirs.toSeq).foreach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(p))
-      }))
-  }
-
-  private[graft] def scratch(op: String, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"${sys.props("java.io.tmpdir")}/graft_${op}_${tag}_p${ProcessHandle.current().pid()}"
-    scratchDirs.synchronized { scratchDirs += path }
-    path
-  }
+  private[graft] def scratch(op: String, dir: String): String =
+    graft.Scratch.root.resolve(s"${op}_${dir.replaceAll("[^A-Za-z0-9]", "_")}").toString
 
   val defs: Map[String, QDef] = Map(
 
@@ -103,8 +87,8 @@ object SourceOps {
           .groupBy("o_orderstatus")
           // Money discipline: per-status groups are corpus-scale (5M rows
           // at sf10), where a double SUM's partial-agg order costs ~0.3
-          // of absolute error — the r10 sf10 sweep caught the two
-          // engines rounding cents apart. o_totalprice is 2-dp exact, so
+          // of absolute error — at sf10 the two engines rounded cents
+          // apart. o_totalprice is 2-dp exact, so
           // the DECIMAL(12,2) cast is lossless and the sum exact.
           .agg(count(lit(1)).as("cnt"),
             round(sum(col("o_totalprice").cast("decimal(12,2)")), 2)

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
@@ -11,12 +12,19 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Column ⇄ Expression bridge plus native Catalyst expressions (with
   * doGenCode) for the hottest scalar kernels of the LLM-pipeline
   * operators. Lives inside the org.apache.spark.sql namespace because
-  * Spark 4 made Column construction and AbstractDataType private[sql] —
-  * the standard pattern for libraries shipping native expressions.
+  * Spark 4 made Column construction, AbstractDataType and
+  * `Dataset.ofRows` private[sql] — the standard pattern for libraries
+  * shipping native expressions.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `SparkSession.sql` for a plan the caller has already parsed. */
+  def sql(spark: SparkSession, parsed: LogicalPlan): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.withActive(classic.Dataset.ofRows(s, parsed))
+  }
 }
 
 /** Cosine similarity of two double arrays (single fused pass computing

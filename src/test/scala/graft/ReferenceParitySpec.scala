@@ -175,6 +175,25 @@ class ReferenceParitySpec extends SparkSpec {
       Seq(Seq("2024-01-25")))
   }
 
+  test("bare BigQuery date/time units resolve in engine sessions; a day column stays a column") {
+    // No BQCompat.install: an engine session's own dialect must suffice.
+    val s = new SessionManager(spark).create()
+    assert(rows(s, "SELECT DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', DAY) AS d, " +
+      "DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', WEEK) AS w, " +
+      "DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', MONTH) AS m") == Seq(Seq(60L, 8L, 2L)))
+    assert(rows(s, "SELECT CAST(TIMESTAMP_TRUNC(TIMESTAMP '2024-01-01 10:42:17', HOUR) AS STRING)") ==
+      Seq(Seq("2024-01-01 10:00:00")))
+    s.createTable("visits", Seq("day" -> "DATE", "n" -> "INT64"))
+    s.insert("visits", Seq(Seq("2024-01-31", 1)))
+    // Only the unit position is rewritten: were `day` made the literal
+    // 'DAY', the MONTH difference would be NULL.
+    assert(rows(s, "SELECT DATE_DIFF(DATE '2024-03-01', day, MONTH) FROM visits") == Seq(Seq(2L)))
+    // Subqueries and CTE bodies are rewritten too.
+    assert(rows(s, "WITH c AS (SELECT DATE_DIFF(DATE '2024-03-01', day, WEEK) AS w FROM visits) " +
+      "SELECT w, (SELECT DATE_DIFF(DATE '2024-03-01', day, DAY) FROM visits) FROM c") ==
+      Seq(Seq(4L, 30L)))
+  }
+
   test("olap_test.clj test-string-functions + test-regexp-functions") {
     val s = fresh()
     assert(rows(s, "SELECT UPPER('hello') as upper_str, LOWER('WORLD') as lower_str, CONCAT('foo', 'bar') as concat_str, LENGTH('test') as str_len") ==

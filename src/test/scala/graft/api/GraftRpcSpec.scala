@@ -115,11 +115,83 @@ class GraftRpcSpec extends SparkSpec {
     val run = rpc.dispatch("bq.runDag", Map("sessionId" -> s)).asInstanceOf[Map[String, Any]]
     assert(run("success") == true)
     val during = sc.getPersistentRDDs.keySet -- before
-    assert(during.size >= 3, s"each insert keeps a snapshot: $during")
+    assert(during.nonEmpty, s"the inserted table keeps a snapshot: $during")
     assert(rpc.dispatch("bq.destroySession", Map("sessionId" -> s)) == Map("success" -> true))
     // Back to the pre-session set: nothing persisted since survives (the
     // context cleaner may only have removed older entries meanwhile).
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       s"left persisted: ${sc.getPersistentRDDs.keySet -- before}")
+  }
+
+  private def call(method: String, params: (String, Any)*): Map[String, Any] =
+    rpc.dispatch(method, params.toMap).asInstanceOf[Map[String, Any]]
+
+  private def ints(resp: Map[String, Any]): Seq[Long] =
+    resp("rows").asInstanceOf[Seq[Map[String, Any]]]
+      .map(_("f").asInstanceOf[Seq[Map[String, Any]]].head("v").asInstanceOf[Long])
+
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Paths under the scratch root that belong to session `id`. */
+  private def scratchOf(id: String): Seq[java.nio.file.Path] = {
+    val root = graft.Scratch.root
+    val walk = java.nio.file.Files.walk(root)
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala
+      .filter(p => root.relativize(p).toString.contains(id)).toSeq
+    finally walk.close()
+  }
+
+  test("insert keeps exactly one snapshot per table and releases the replaced one") {
+    val before = persisted()
+    val s = sid()
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "t",
+      "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
+    (1 to 5).foreach { i =>
+      call("bq.insert", "sessionId" -> s, "tableName" -> "t", "rows" -> Seq(Seq(i), Seq(10 * i)))
+      val held = persisted() -- before
+      assert(held.size == 1, s"after insert $i the session holds $held")
+    }
+    assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM t ORDER BY v")) ==
+      (1 to 5).flatMap(i => Seq(i.toLong, 10L * i)).sorted)
+    // Re-creating the table releases its snapshot too.
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "T",
+      "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
+    assert((persisted() -- before).isEmpty)
+    assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM t")).isEmpty)
+    call("bq.destroySession", "sessionId" -> s)
+  }
+
+  test("destroySession closes only its own session: views, snapshots and scratch dir") {
+    val before = persisted()
+    def populate(): String = {
+      val s = sid()
+      call("bq.createTable", "sessionId" -> s, "tableName" -> "t",
+        "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
+      (1 to 3).foreach(i => call("bq.insert", "sessionId" -> s, "tableName" -> "t", "rows" -> Seq(Seq(i))))
+      call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
+        Map("name" -> "doubled", "sql" -> "SELECT v * 2 AS v FROM t"),
+        Map("name" -> "total", "sql" -> "SELECT SUM(v) AS v FROM doubled")))
+      assert(call("bq.runDag", "sessionId" -> s)("success") == true)
+      s
+    }
+    val first = populate()
+    val firstRdds = persisted() -- before
+    val second = populate()
+    val secondRdds = persisted() -- before -- firstRdds
+    assert(firstRdds.nonEmpty && secondRdds.nonEmpty)
+    assert(scratchOf(first).nonEmpty && scratchOf(second).nonEmpty)
+
+    assert(call("bq.destroySession", "sessionId" -> first)("success") == true)
+    assert(scratchOf(first).isEmpty, s"left behind: ${scratchOf(first)}")
+    assert((persisted() & firstRdds).isEmpty)
+    assert(secondRdds.subsetOf(persisted()))
+    assert(ints(call("bq.query", "sessionId" -> second, "sql" -> "SELECT v FROM total")) == Seq(12L))
+
+    val snapshots = scratchOf(second).filter(p => Set("doubled", "total")(p.getFileName.toString))
+    assert(snapshots.size == 2, scratchOf(second))
+    assert(call("bq.clearDag", "sessionId" -> second)("success") == true)
+    assert(snapshots.forall(p => !java.nio.file.Files.exists(p)))
+    call("bq.destroySession", "sessionId" -> second)
+    assert(scratchOf(second).isEmpty)
   }
 }

@@ -189,6 +189,21 @@ class RpcServerSpec extends SparkSpec {
         assert(served == inProcess, probe)
         assert(served == Seq(Map("f" -> Seq(Map("v" -> expected)))), s"$probe: $served")
       }
+      // BigQuery's bare date/time units resolve on the served path as in
+      // the oracle-verified sessions; a column named `day` in a data
+      // position stays a column.
+      for ((probe, expected) <- Seq(
+          "SELECT DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', DAY)" -> 60L,
+          "SELECT DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', WEEK)" -> 8L,
+          "SELECT DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', MONTH)" -> 2L,
+          "SELECT CAST(TIMESTAMP_TRUNC(TIMESTAMP '2024-01-01 10:42:17', HOUR) AS STRING)" ->
+            "2024-01-01 10:00:00",
+          "SELECT DATE_DIFF(DATE '2024-03-01', day, MONTH) FROM (SELECT DATE '2024-01-31' AS day)" -> 2L)) {
+        val served = rowsOf(client.call("bq.query", Map("sessionId" -> s, "sql" -> probe)))
+        val inProcess = rowsOf(rpc.dispatch("bq.query", Map("sessionId" -> local, "sql" -> probe)))
+        assert(served == inProcess, probe)
+        assert(served == Seq(Map("f" -> Seq(Map("v" -> expected)))), s"$probe: $served")
+      }
       val raised = client.sendRequest("bq.query", Map("sessionId" -> s, "sql" -> "SELECT raise_error('boom')"))
       assert(asMap(raised("error"))("code") == -32000L, raised)
       val raisedLocal = intercept[GraftError] {

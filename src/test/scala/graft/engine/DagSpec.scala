@@ -11,7 +11,7 @@ class DagSpec extends SparkSpec {
 
   private def freshDag(): (GraftSession, Dag) = {
     val s = new SessionManager(spark).create()
-    (s, new Dag(s, Some(Files.createTempDirectory("dagspec"))))
+    (s, new Dag(s))
   }
 
   test("register extracts dependencies from SQL, not CTE names") {
@@ -229,6 +229,44 @@ class DagSpec extends SparkSpec {
     (0 until 5).foreach { i =>
       assert(s.sql(s"SELECT v FROM t2_$i").collect()(0).getLong(0) == 3L * (i + 1))
     }
+  }
+
+  test("a view's builder runs inside run(), once per run, not at register()") {
+    val (s, dag) = freshDag()
+    val built = new java.util.concurrent.atomic.AtomicInteger()
+    def frame() = { built.incrementAndGet(); s.spark.range(3).toDF("v") }
+    dag.register(Seq(
+      DagTable.view("lazy_src", frame()),
+      DagTable.derived("lazy_out", "SELECT SUM(v) AS t FROM lazy_src")))
+    assert(built.get == 0, "register() must not build the view's frame")
+    assert(!s.spark.catalog.tableExists("lazy_src"))
+    assert(dag.run().allSucceeded)
+    assert(built.get == 1)
+    assert(s.sql("SELECT t FROM lazy_out").collect()(0).getLong(0) == 3L)
+    assert(dag.run(Some(Seq("lazy_src"))).allSucceeded)
+    assert(built.get == 2)
+  }
+
+  test("a view whose builder throws fails its table and skips dependents") {
+    val (_, dag) = freshDag()
+    dag.register(Seq(
+      DagTable.view("bad_src", throw new IllegalStateException("builder failed")),
+      DagTable.derived("bad_out", "SELECT * FROM bad_src")))
+    val res = dag.run()
+    assert(res.failed == Seq(TableError("bad_src", "builder failed")))
+    assert(res.skipped == Seq("bad_out"))
+  }
+
+  test("derived snapshots live under the session dir; clear deletes them") {
+    val (s, dag) = freshDag()
+    dag.register(Seq(
+      DagTable.source("snap_src", Seq("v" -> "INT64"), Seq(Seq(1))),
+      DagTable.derived("snap_out", "SELECT v + 1 AS v FROM snap_src")))
+    assert(dag.run().allSucceeded)
+    assert(Files.isDirectory(s.dir.resolve("snap_out")))
+    dag.clear()
+    assert(!Files.exists(s.dir.resolve("snap_out")))
+    assert(!s.spark.catalog.tableExists("snap_out"))
   }
 
   test("clear drops views and registry") {

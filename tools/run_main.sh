@@ -2,7 +2,11 @@
 # Run a graft main with the same JVM shape as `sbt run` (see build.sbt),
 # without taking the sbt project lock. Usage: tools/run_main.sh graft.Verify args...
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# Classes of the checkout this script sits in; Spark jars from the
+# build's own unmanagedBase.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
+CP="$ROOT/target/scala-2.13/classes:$JARS/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do

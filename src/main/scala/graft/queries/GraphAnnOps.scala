@@ -573,7 +573,7 @@ object GraphAnnOps {
   }
 
   def defs: Map[String, QDef] = Map(
-    // §2 25jr graph ANN (NSW beam search). Approximate, so the gate is
+    // Graph ANN (NSW beam search). Approximate, so the gate is
     // the ANN tier's driver-checkable contract: structural k plus a
     // recall floor vs the exact baseline as deterministic hashable
     // output. The floor is 0.2 — IVF-PQ's pinned floor at a LOWER
@@ -601,7 +601,7 @@ object GraphAnnOps {
         |  * LEAST(10, (SELECT COUNT(*) FROM embeddings) - 1) AS BIGINT) AS n_exact,
         |  true AS k_ok, true AS recall_ok""".stripMargin),
 
-    // §2 25kf graph-ANN index persistence: build
+    // Graph-ANN index persistence: build
     // once, persist (edge lists + entry layer + dup-group tables as
     // parquet, model.json commit marker carrying the corpus
     // fingerprint), load back against the SAME corpus, and search both
@@ -616,7 +616,9 @@ object GraphAnnOps {
         val eAll = corpus(s, dir)
         val qs = probeQueries(eAll)
         val idx = buildIndex(eAll)
-        val indexDir = graft.sources.SourceOps.scratch("annidx", dir)
+        // One directory per call: a shared one would be overwritten under
+        // an earlier call's cached frames, which still list its files.
+        val indexDir = graft.Scratch.dir("annidx-").toString
         // The built-index search and the persist→load→search-reloaded
         // chain are independent until the final diff, and each is a
         // string of BOUNDED driver-orchestrated jobs — run them as two
@@ -659,7 +661,7 @@ object GraphAnnOps {
         |  CAST((SELECT COUNT(*) FROM embeddings WHERE vec_id < 10) AS BIGINT)
         |    AS n_queries""".stripMargin),
 
-    // §2 25km OPERATOR-ONLY twin of ann_graph_persist: the gated key above searches TWICE (built index and
+    // OPERATOR-ONLY twin of ann_graph_persist: the gated key above searches TWICE (built index and
     // reloaded index) because its contract is persistence-invisibility
     // — so its bench entry times the verification, roughly doubling the
     // operator. This twin is the production path alone: build, persist,

@@ -18,7 +18,6 @@ object Bench {
       // split aggressively so scans parallelize.
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Shuffle-write accounting rides the whole run: wall-clock is
     // machine-noisy, but bytes crossing an exchange only change when the
     // PLAN changes — the signal that distinguishes a real regression

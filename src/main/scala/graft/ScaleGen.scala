@@ -77,7 +77,6 @@ object ScaleGen {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "32")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     /** @param copyCols primary/copy-linked keys: offset by replica AND
       *                 zipf copy (stay unique across the whole corpus).

@@ -22,7 +22,6 @@ object Verify {
       // split aggressively so scans parallelize.
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -170,9 +170,8 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       }
 
     case "bq.listTables" =>
-      session(params).listTables().map { t =>
-        Map("name" -> t, "rowCount" -> session(params).describeTable(t)._2)
-      }
+      val s = session(params)
+      s.listTables().map(t => Map("name" -> t, "rowCount" -> s.rowCount(t)))
 
     case "bq.describeTable" =>
       val (schema, count) = session(params).describeTable(req(params, "tableName").toString)

@@ -54,19 +54,41 @@ final class GraftSession private[engine] (
   @volatile var defaultProject: Option[String] = None
   @volatile var catalogRoot: Option[String] = None
 
-  /** The in-memory blocks behind each inserted table's current snapshot,
-    * keyed by lower-cased table name (temp views are case-insensitive).
-    * They outlive the views that point at them, so replacing or dropping
-    * a table, and [[close]], unpersist them.
+  /** Each created or inserted table's current snapshot, keyed by
+    * lower-cased table name (temp views are case-insensitive): the RDD
+    * its view reads (the in-memory blocks after an insert) and its row
+    * count. The blocks outlive the views that point at them, so
+    * replacing or dropping a table, and [[close]], unpersist them.
     */
-  private val snapshots = new ConcurrentHashMap[String, RDD[InternalRow]]()
+  private val snapshots = new ConcurrentHashMap[String, Snapshot]()
+
+  /** Register `df` (a frame over one RDD) as the table's view, record it
+    * with `rows` as the table's snapshot, and unpersist the one it
+    * replaces.
+    */
+  private def bind(name: String, df: DataFrame, rows: Option[Long]): Unit = {
+    df.createOrReplaceTempView(name)
+    release(name, df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => Snapshot(l.rdd, rows) })
+  }
 
   /** Make `successor` the table's snapshot and unpersist the one it replaces. */
-  private def release(name: String, successor: Option[RDD[InternalRow]]): Unit = {
+  private def release(name: String, successor: Option[Snapshot]): Unit = {
     val key = name.toLowerCase(Locale.ROOT)
     val old = successor.fold(snapshots.remove(key))(snapshots.put(key, _))
-    if (old != null) old.unpersist(blocking = false)
+    if (old != null) old.rdd.unpersist(blocking = false)
   }
+
+  /** The recorded row count, while the view is still bound to the
+    * snapshot it was recorded for. Another path may have re-bound the
+    * name since (a DAG run, bq.loadParquet, a directory loader, SQL).
+    */
+  private def recordedRows(name: String): Option[Long] =
+    Option(snapshots.get(name.toLowerCase(Locale.ROOT))).filter { s =>
+      spark.sessionState.catalog.getRawTempView(name).flatMap(_.plan).exists {
+        case l: LogicalRDD => l.rdd eq s.rdd
+        case _ => false
+      }
+    }.flatMap(_.rows)
 
   /** Resolve a table through this session's backend (reference:
     * executor/mod.rs dispatch): session temp views win, then the
@@ -80,23 +102,28 @@ final class GraftSession private[engine] (
   /** Create an (initially empty) table from a BigQuery-typed schema. */
   def createTable(name: String, schema: Seq[(String, String)]): Unit = {
     val st = StructType(schema.map { case (n, t) => StructField(n, bqType(t)) })
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st).createOrReplaceTempView(name)
-    release(name, None)
+    bind(name, spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st), Some(0L))
   }
 
-  /** Append rows (positional values matching the table schema). */
+  /** Append rows (positional values matching the table schema). A row
+    * whose width differs from the schema fails the whole call with
+    * InvalidParams, and nothing is appended.
+    */
   def insert(name: String, rows: Seq[Seq[Any]]): Long = {
     val existing = spark.table(name)
     val st = existing.schema
+    rows.iterator.zipWithIndex.find(_._1.size != st.size).foreach { case (r, i) =>
+      throw graft.api.GraftError.InvalidParams(
+        s"Row $i of $name has ${r.size} values, but the table has ${st.size} columns")
+    }
+    val before = recordedRows(name)
     val coerced = rows.map(r => Row.fromSeq(r.zip(st.fields).map { case (v, f) => coerce(v, f.dataType) }))
     val appended = existing.unionAll(
       spark.createDataFrame(coerced.asJava, st))
     // Materialize through a snapshot so the view does not become a
     // self-referencing plan of unbounded depth after many inserts. The
     // snapshot is eager, so the one it replaces can go right after.
-    val snap = appended.localCheckpoint(true)
-    snap.createOrReplaceTempView(name)
-    release(name, snap.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd })
+    bind(name, appended.localCheckpoint(true), before.map(_ + rows.size))
     rows.size.toLong
   }
 
@@ -145,13 +172,19 @@ final class GraftSession private[engine] (
   private def localSql(q: String): DataFrame =
     ColumnBridge.sql(spark, BQUnitArgRule.onParsed(spark.sessionState.sqlParser.parsePlan(rewriteBqSyntax(q))))
 
-  def listTables(): Seq[String] =
-    spark.catalog.listTables().collect().map(_.name).toSeq.sorted
-
-  def describeTable(name: String): (Seq[(String, String)], Long) = {
-    val df = table(name)
-    (df.schema.fields.map(f => f.name -> sparkTypeToBq(f.dataType)).toSeq, df.count())
+  /** Tables and temp views, read from the session catalog (no job). */
+  def listTables(): Seq[String] = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase).map(_.table).sorted
   }
+
+  /** Without a job for a created or inserted table still bound to its
+    * snapshot; tables bound by another path are counted.
+    */
+  def rowCount(name: String): Long = recordedRows(name).getOrElse(table(name).count())
+
+  def describeTable(name: String): (Seq[(String, String)], Long) =
+    (table(name).schema.fields.map(f => f.name -> sparkTypeToBq(f.dataType)).toSeq, rowCount(name))
 
   def dropTable(name: String): Unit = {
     spark.catalog.dropTempView(name)
@@ -160,14 +193,16 @@ final class GraftSession private[engine] (
 
   /** Drop every view, unpersist every snapshot and delete [[dir]]. */
   def close(): Unit = {
-    spark.catalog.listTables().collect().foreach(t => spark.catalog.dropTempView(t.name))
-    snapshots.values.forEach(_.unpersist(false))
+    spark.sessionState.catalog.listLocalTempViews("*").foreach(t => spark.catalog.dropTempView(t.table))
+    snapshots.values.forEach(_.rdd.unpersist(false))
     snapshots.clear()
     graft.Scratch.delete(dir)
   }
 }
 
 object GraftSession {
+
+  private final case class Snapshot(rdd: RDD[InternalRow], rows: Option[Long])
 
   /** Split a Spark analyzer relation name — `` `a`.`b` `` with literal
     * backticks doubled inside a part, or a bare dotted string — into its

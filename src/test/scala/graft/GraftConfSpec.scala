@@ -40,6 +40,11 @@ class GraftConfSpec extends AnyFunSuite {
     // Long-lived drivers and servers keep only a few plan descriptions.
     assert(o.get("spark.sql.ui.retainedExecutions").contains("3"))
     assert(o.get("spark.cleaner.periodicGC.interval").contains("1min"))
+    // Compiled code is shared by every engine session of the JVM, and the
+    // compiled-class cache holds a served suite's working set.
+    assert(o.get("spark.sql.artifact.isolation.enabled").contains("false"))
+    assert(o.get("spark.sql.codegen.cache.maxEntries").contains("1000"))
+    assert(o.get("spark.log.level").contains("WARN"))
   }
 
   test("shuffle partitions scale with cluster cores, floored for tiny rigs") {

@@ -161,6 +161,84 @@ class GraftRpcSpec extends SparkSpec {
     call("bq.destroySession", "sessionId" -> s)
   }
 
+  test("bq.insert rejects a row of the wrong width and leaves the table unchanged") {
+    val s = sid()
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "pairs",
+      "schema" -> Seq(Map("name" -> "k", "type" -> "INT64"), Map("name" -> "name", "type" -> "STRING")))
+    call("bq.insert", "sessionId" -> s, "tableName" -> "pairs", "rows" -> Seq(Seq(1, "a")))
+    def insert(rows: String): Map[String, Any] = Json.parse(RpcServer.processMessage(
+      s"""{"jsonrpc":"2.0","id":7,"method":"bq.insert","params":{"sessionId":"$s","tableName":"pairs","rows":$rows}}""",
+      rpc)).asInstanceOf[Map[String, Any]]
+    Seq("""[[2,"b"],[1,"x",99]]""" -> "Row 1 of pairs has 3 values", "[[2]]" -> "Row 0 of pairs has 1 values")
+      .foreach { case (rows, expected) =>
+        val err = insert(rows)("error").asInstanceOf[Map[String, Any]]
+        assert(err("code") == -32600L, err)
+        assert(err("message").toString.contains(s"$expected, but the table has 2 columns"), err)
+      }
+    assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "pairs")("rowCount") == 1L)
+    assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT k FROM pairs")) == Seq(1L))
+    call("bq.destroySession", "sessionId" -> s)
+  }
+
+  test("describeTable and listTables count inserted tables without a job, exactly") {
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf[A](f: => A): (A, Int) = {
+      ListenerBridge.waitUntilEmpty(sc)
+      val j0 = jobs.get
+      val a = f
+      ListenerBridge.waitUntilEmpty(sc)
+      (a, jobs.get - j0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val s = sid()
+      val schema = Seq(Map("name" -> "v", "type" -> "INT64"))
+      def insert(t: String, vs: Long*): Unit =
+        call("bq.insert", "sessionId" -> s, "tableName" -> t, "rows" -> vs.map(Seq(_)))
+      def described(t: String): (Any, Int) =
+        jobsOf(call("bq.describeTable", "sessionId" -> s, "tableName" -> t)("rowCount"))
+      def listed(): (Map[Any, Any], Int) = jobsOf(rpc.dispatch("bq.listTables", Map("sessionId" -> s))
+        .asInstanceOf[Seq[Map[String, Any]]].map(m => m("name") -> m("rowCount")).toMap)
+
+      call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
+      assert(described("a") == (0L, 0))
+      insert("a", 1, 2); insert("a", 3, 4, 5); insert("a", 6)
+      assert(described("a") == (6L, 0))
+      assert(described("A") == (6L, 0))
+      call("bq.createTable", "sessionId" -> s, "tableName" -> "b", "schema" -> schema)
+      insert("b", 7)
+      assert(listed() == (Map("a" -> 6L, "b" -> 1L), 0))
+
+      // Re-creating a table starts its count over.
+      call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
+      insert("a", 1, 2)
+      assert(described("a") == (2L, 0))
+
+      // Re-bound by bq.loadParquet: the parquet is counted.
+      import spark.implicits._
+      val path = graft.Scratch.dir("rpccount-").resolve("a.parquet").toString
+      (1L to 5L).toDF("v").write.parquet(path)
+      call("bq.loadParquet", "sessionId" -> s, "tableName" -> "a", "path" -> path)
+      assert(described("a")._1 == 5L)
+
+      // Re-bound by a DAG run, then inserted into: counted from the new snapshot.
+      call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
+        Map("name" -> "b", "sql" -> "SELECT v FROM a WHERE v > 2")))
+      assert(call("bq.runDag", "sessionId" -> s)("success") == true)
+      assert(described("b")._1 == 3L)
+      insert("b", 8, 9)
+      assert(described("b")._1 == 5L)
+      assert(listed()._1 == Map("a" -> 5L, "b" -> 5L))
+      call("bq.destroySession", "sessionId" -> s)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("destroySession closes only its own session: views, snapshots and scratch dir") {
     val before = persisted()
     def populate(): String = {

@@ -257,6 +257,20 @@ class DagSpec extends SparkSpec {
     assert(res.skipped == Seq("bad_out"))
   }
 
+  test("a source with a row of the wrong width fails its table and skips dependents") {
+    val (s, dag) = freshDag()
+    dag.register(Seq(
+      DagTable.source("short_src", Seq("k" -> "INT64", "name" -> "STRING"), Seq(Seq(1, "a"), Seq(2))),
+      DagTable.derived("short_out", "SELECT k FROM short_src")))
+    val res = dag.run()
+    assert(res.failed.map(_.table) == Seq("short_src"))
+    assert(res.failed.head.error.contains("Row 1 of short_src has 1 values, but the table has 2 columns"),
+      res.failed.head.error)
+    assert(res.skipped == Seq("short_out"))
+    // Nothing of the failed call was appended.
+    assert(s.sql("SELECT * FROM short_src").count() == 0L)
+  }
+
   test("derived snapshots live under the session dir; clear deletes them") {
     val (s, dag) = freshDag()
     dag.register(Seq(

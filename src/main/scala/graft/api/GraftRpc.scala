@@ -165,7 +165,7 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
               case e: org.apache.spark.sql.AnalysisException =>
                 throw GraftError.LoaderError(s"Failed to load parquet at $path: ${e.getMessage}")
             }
-          df.createOrReplaceTempView(name)
+          s.replaceView(name, df)
           Map("loadedRows" -> df.count())
       }
 

@@ -319,7 +319,7 @@ final class Dag(session: GraftSession) {
       val t = tables(name)
       t match {
         case DagTable(_, None, _, _, Some(mk)) =>
-          mk().createOrReplaceTempView(name)
+          session.replaceView(name, mk())
         case DagTable(_, None, Some(schema), rows, _) =>
           // Reference semantics (pipeline.rs:556): CREATE IF NOT EXISTS +
           // append the registered literal rows on every run.
@@ -328,7 +328,7 @@ final class Dag(session: GraftSession) {
         case DagTable(_, Some(sql), _, _, _) =>
           val out = session.dir.resolve(name).toString
           session.sql(sql).write.mode("overwrite").parquet(out)
-          session.spark.read.parquet(out).createOrReplaceTempView(name)
+          session.replaceView(name, session.spark.read.parquet(out))
         case other =>
           throw new IllegalArgumentException(s"Source table ${other.name} needs a schema or view")
       }

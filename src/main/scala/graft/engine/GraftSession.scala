@@ -32,6 +32,15 @@ import graft.BQUnitArgRule
   * [[close]] releases all of it. Requests to one session are assumed
   * not to run concurrently with its mutations (insert, createTable,
   * dropTable, a DAG run, close); different sessions are independent.
+  *
+  * An insert snapshot is one materialized relation per table, in one
+  * partition per `spark.sql.files.maxPartitionBytes` of its size, and
+  * carries exact statistics. A table at served sizes is therefore one
+  * partition: the planner adds no exchange under aggregates, windows or
+  * sorts over it, and broadcasts it in joins at planning time. Every
+  * graft path that re-binds a name ([[createTable]], [[insert]],
+  * [[replaceView]], [[dropTable]]) releases the snapshot the name read
+  * before; a name re-bound by user SQL keeps it until [[close]].
   */
 final class GraftSession private[engine] (
     val id: String,
@@ -69,6 +78,15 @@ final class GraftSession private[engine] (
   private def bind(name: String, df: DataFrame, rows: Option[Long]): Unit = {
     df.createOrReplaceTempView(name)
     release(name, df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => Snapshot(l.rdd, rows) })
+  }
+
+  /** Bind `name` to a frame built by another path (a parquet load, a DAG
+    * table) and unpersist the snapshot the name read before. `df` must
+    * not read that snapshot itself.
+    */
+  def replaceView(name: String, df: DataFrame): Unit = {
+    df.createOrReplaceTempView(name)
+    release(name, None)
   }
 
   /** Make `successor` the table's snapshot and unpersist the one it replaces. */
@@ -118,13 +136,27 @@ final class GraftSession private[engine] (
     }
     val before = recordedRows(name)
     val coerced = rows.map(r => Row.fromSeq(r.zip(st.fields).map { case (v, f) => coerce(v, f.dataType) }))
-    val appended = existing.unionAll(
-      spark.createDataFrame(coerced.asJava, st))
+    val incoming = spark.createDataFrame(coerced.asJava, st)
+    // An empty created table adds nothing but a leaf without statistics,
+    // which would make every later snapshot's size unknown.
+    val appended = if (before.contains(0L)) incoming else existing.unionAll(incoming)
     // Materialize through a snapshot so the view does not become a
     // self-referencing plan of unbounded depth after many inserts. The
     // snapshot is eager, so the one it replaces can go right after.
-    bind(name, appended.localCheckpoint(true), before.map(_ + rows.size))
+    bind(name, rightSized(appended).localCheckpoint(true), before.map(_ + rows.size))
     rows.size.toLong
+  }
+
+  /** `df` coalesced to one partition per `spark.sql.files.maxPartitionBytes`
+    * of its estimated size, at least one; unchanged when the size is
+    * unknown (Spark's `defaultSizeInBytes` sentinel).
+    */
+  private def rightSized(df: DataFrame): DataFrame = {
+    val conf = spark.sessionState.conf
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val split = conf.filesMaxPartitionBytes
+    if (size >= conf.defaultSizeInBytes) df
+    else df.coalesce(((size + split - 1) / split).max(1).min(Int.MaxValue).toInt)
   }
 
   /** Run SQL against this session's tables. In bigquery mode the text is

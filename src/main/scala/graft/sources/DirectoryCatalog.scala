@@ -98,9 +98,9 @@ object DirectoryCatalog {
     */
   def loadParquetDirectoryInfo(session: GraftSession, root: String): Seq[(Discovered, Long)] = {
     val frames = discover(root).filterNot(_.isSql).map(d => d -> readTable(session, d))
-    frames.foreach { case (d, df) => df.createOrReplaceTempView(d.fullName) }
+    frames.foreach { case (d, df) => session.replaceView(d.fullName, df) }
     // Bare-name aliases for unambiguous tables.
-    frames.groupBy(_._1.table).collect { case (t, Seq((_, df))) => df.createOrReplaceTempView(t) }
+    frames.groupBy(_._1.table).collect { case (t, Seq((_, df))) => session.replaceView(t, df) }
     frames.map { case (d, df) => (d, df.count()) }
   }
 

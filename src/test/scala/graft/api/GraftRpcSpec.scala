@@ -272,4 +272,49 @@ class GraftRpcSpec extends SparkSpec {
     call("bq.destroySession", "sessionId" -> second)
     assert(scratchOf(second).isEmpty)
   }
+
+  test("re-binding an inserted name by bq.loadParquet or a DAG table releases its snapshot") {
+    import spark.implicits._
+    val before = persisted()
+    val s = sid()
+    val schema = Seq(Map("name" -> "v", "type" -> "INT64"))
+    def insert(t: String, vs: Long*): Unit =
+      call("bq.insert", "sessionId" -> s, "tableName" -> t, "rows" -> vs.map(Seq(_)))
+    def described(t: String): Any = call("bq.describeTable", "sessionId" -> s, "tableName" -> t)("rowCount")
+
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
+    insert("a", 1, 2, 3)
+    assert((persisted() -- before).size == 1)
+    val path = graft.Scratch.dir("rpcrebind-").resolve("a.parquet").toString
+    (1L to 5L).toDF("v").write.parquet(path)
+    call("bq.loadParquet", "sessionId" -> s, "tableName" -> "A", "path" -> path)
+    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+    assert(described("a") == 5L)
+
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "b", "schema" -> schema)
+    insert("b", 7, 8)
+    assert((persisted() -- before).size == 1)
+    call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
+      Map("name" -> "b", "sql" -> "SELECT v FROM a WHERE v > 2")))
+    assert(call("bq.runDag", "sessionId" -> s)("success") == true)
+    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+    assert(described("b") == 3L)
+    assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM b ORDER BY v")) == Seq(3L, 4L, 5L))
+    call("bq.destroySession", "sessionId" -> s)
+  }
+
+  test("bq.insert into a name bound by bq.loadParquet appends to the parquet rows") {
+    import spark.implicits._
+    val s = sid()
+    val path = graft.Scratch.dir("rpcappend-").resolve("p.parquet").toString
+    (1L to 5L).toDF("v").write.parquet(path)
+    call("bq.loadParquet", "sessionId" -> s, "tableName" -> "p", "path" -> path)
+    call("bq.insert", "sessionId" -> s, "tableName" -> "p", "rows" -> Seq(Seq(6), Seq(7), Seq(8)))
+    assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM p ORDER BY v")) == (1L to 8L))
+    assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "p")("rowCount") == 8L)
+    call("bq.insert", "sessionId" -> s, "tableName" -> "p", "rows" -> Seq(Seq(9)))
+    assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "p")("rowCount") == 9L)
+    assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT SUM(v) AS v FROM p")) == Seq(45L))
+    call("bq.destroySession", "sessionId" -> s)
+  }
 }

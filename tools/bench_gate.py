@@ -7,6 +7,7 @@ and this script grades any later BENCH_rN.json against it.
 
 Usage: python3 tools/bench_gate.py BENCH_r09.json [BASELINE.json]
        python3 tools/bench_gate.py --skew BENCH_SKEW_r15.json [BASELINE.json]
+       python3 tools/bench_gate.py --scaling BENCH_r17.json BENCH_r17_c8.json
 
 --skew grades a skew-sweep artifact (JSONL, one line per sweep batch;
 keys unioned with min-per-key) against BASELINE.json's `skew_queries`
@@ -15,6 +16,17 @@ single-run fast-mode times under concurrent sweep load — so the bar is
 2x AND +30 s absolute per key, no total bar: it exists to fail the
 NEXT copy-quadratic mechanically (the four found so far ran 4-50x
 their post-fix times at the Z tier) rather than to police noise.
+
+--scaling compares a 32-core run with its 8-core companion of the same
+round and flags every shared key whose 32-core time is more than 1.3x
+its 8-core time: on sf0.1's tiny tables more cores should never cost
+wall time, so such a key is paying for wider stages (more tasks, more
+shuffle partitions) rather than gaining parallelism. Both files load as
+in the default mode, so a folded 32-core short line is graded on its
+unfolded keys against the 8-core run's full record. Given BENCH_r17 and
+BENCH_r17_c8 it flags 19 keys, led by text_oov_rate (6.2x),
+text_bigram_lm (4.0x) and llm_curate_e2e_v2 (3.1x): the round-17
+32-core regression cluster.
 
 Rules:
   - per query: FAIL if t > 2x pinned AND t > pinned + 1.5 s — the
@@ -149,9 +161,32 @@ def skew_main(bench_path, base_path):
     print(f"PASS: {len(shared)} shared keys within the coarse skew gate")
 
 
+SCALING_RATIO = 1.3
+
+
+def scaling_main(wide_path, narrow_path):
+    wide = load_queries(wide_path)
+    narrow = load_queries(narrow_path)
+    shared = sorted((set(wide) & set(narrow)) - {"_other_total"})
+    if not shared:
+        raise SystemExit(f"FAIL: no shared query keys between {wide_path} and {narrow_path}")
+    flagged = sorted(((wide[k] / narrow[k] if narrow[k] else float("inf"), k) for k in shared
+                      if wide[k] > SCALING_RATIO * narrow[k]), reverse=True)
+    for ratio, k in flagged:
+        print(f"FAIL {k}: {wide[k]:.3f}s vs {narrow[k]:.3f}s on 8 cores ({ratio:.2f}x)")
+    if flagged:
+        print(f"{len(flagged)} of {len(shared)} shared keys are over "
+              f"{SCALING_RATIO}x their 8-core time")
+        sys.exit(1)
+    print(f"PASS: {len(shared)} shared keys within {SCALING_RATIO}x of their 8-core time")
+
+
 def main():
     if sys.argv[1] == "--skew":
         skew_main(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else "BASELINE.json")
+        return
+    if sys.argv[1] == "--scaling":
+        scaling_main(sys.argv[2], sys.argv[3])
         return
     bench_path = sys.argv[1]
     base_path = sys.argv[2] if len(sys.argv) > 2 else "BASELINE.json"

@@ -6,8 +6,8 @@ import java.nio.file.attribute.BasicFileAttributes
 
 /** Where scratch data lives: one root per JVM under `java.io.tmpdir`,
   * created on first use and deleted by one shutdown hook. Owners delete
-  * their own subtrees earlier when they can (a session's snapshots on
-  * close, a stale Verify output); the hook catches the rest.
+  * their own subtrees earlier when they can (a stale Verify output); the
+  * hook catches the rest.
   */
 object Scratch {
 

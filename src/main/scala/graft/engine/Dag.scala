@@ -48,15 +48,15 @@ final case class DagResult(
   *   - dependencies come from Spark's own SQL parser (UnresolvedRelation
   *     set minus CTE names), not substring matching
   *     (reference: pipeline.rs:595 extract_dependencies);
-  *   - derived tables materialize as parquet snapshots — columnar,
-  *     splittable, re-readable — instead of row-literal INSERTs
-  *     (reference: pipeline.rs:511 execute_table), so a 100 TB derived
-  *     table is written once by executors, never serialized through a
-  *     driver-side SQL string.
+  *   - the reference's CREATE TABLE + INSERT of the query result
+  *     (pipeline.rs:511 execute_table) is the session's insert snapshot,
+  *     [[GraftSession.materialize]], computed by executors and never
+  *     serialized through a driver-side SQL string.
   *
-  * Snapshots live in the session's scratch directory, at
-  * `session.dir/<table>`: [[clear]] deletes those of the tables it
-  * drops, and closing the session deletes the rest.
+  * A derived table's blocks live in executor storage and are lost with
+  * the executor, as insert snapshots are. Re-running a table releases
+  * its previous snapshot; [[clear]] releases those of the tables it
+  * drops, and closing the session releases the rest.
   *
   * Matching semantics: re-running a derived table recomputes it from
   * current upstream state; a failed table blocks (skips) its dependents;
@@ -79,10 +79,9 @@ final class Dag(session: GraftSession) {
   private val tables = mutable.LinkedHashMap[String, DagTable]()
   private val deps = mutable.LinkedHashMap[String, Seq[String]]()
 
-  /** Table names become temp-view names AND filesystem paths under the
-    * session directory; restrict to safe identifiers so a name like
-    * "../../etc" can never escape it (overwrite mode and [[clear]]
-    * delete the target).
+  /** Table names arrive from clients and directory listings and become
+    * temp-view names; restrict them to plain identifiers so no name
+    * needs quoting in the SQL that reads it.
     */
   private val SafeName = "^[A-Za-z_][A-Za-z0-9_]*$".r
 
@@ -132,26 +131,20 @@ final class Dag(session: GraftSession) {
 
   def run(
       targets: Option[Seq[String]] = None,
-      maxConcurrency: Int = Dag.envMaxConcurrency,
-      costOf: String => Option[Long] = _ => None): DagResult = {
+      maxConcurrency: Int = Dag.envMaxConcurrency): DagResult = {
     val subset = targets match {
       case Some(ts) => closure(ts)
       case None => tables.keySet.toSet
     }
-    runSubset(subset, maxConcurrency, costOf)
+    runSubset(subset, maxConcurrency)
   }
 
   def retryFailed(prev: DagResult, maxConcurrency: Int = Dag.envMaxConcurrency): DagResult =
     runSubset(prev.failed.map(_.table).toSet ++ prev.skipped.toSet, maxConcurrency)
 
-  /** Drop every table: its view, its insert snapshot and its parquet
-    * snapshot.
-    */
+  /** Drop every table: its view and its snapshot. */
   def clear(): Unit = {
-    tables.keys.foreach { n =>
-      session.dropTable(n)
-      graft.Scratch.delete(session.dir.resolve(n))
-    }
+    tables.keys.foreach(session.dropTable)
     tables.clear(); deps.clear()
   }
 
@@ -180,9 +173,7 @@ final class Dag(session: GraftSession) {
     * one level with nothing in flight; here skips propagate to a
     * fixpoint so every downstream table resolves immediately.
     */
-  private def runSubset(
-      subset: Set[String], maxConcurrency: Int,
-      costOf: String => Option[Long] = _ => None): DagResult = {
+  private def runSubset(subset: Set[String], maxConcurrency: Int): DagResult = {
     if (subset.isEmpty) return DagResult()
     val levels = topoLevels(subset) // cycle detection: raises CircularDependency
     val slots = math.max(1, maxConcurrency)
@@ -223,28 +214,13 @@ final class Dag(session: GraftSession) {
       })
       h
     }
-    // Cost tie-break within equal chain heights: under slot contention
-    // the biggest ready table starts first, so the long pole overlaps
-    // the most other work. Cost is the caller's profile-fed override
-    // (e.g. a q_join_cardinality sweep) or Catalyst's own sizeInBytes
-    // statistic over the table's inputs — evaluated lazily because the
-    // inputs only carry statistics once the dependencies have
-    // materialized, and only under contention so uncontended runs pay
-    // no analysis overhead.
-    val costMemo = mutable.Map.empty[String, Long]
-    def cost(n: String): Long = costMemo.getOrElseUpdate(n,
-      costOf(n).getOrElse(estimateCost(n)))
-
     def isPending(n: String) = !completed(n) && !blocked(n) && !inFlight(n)
     def spawnReady(): Unit = {
       val free = slots - inFlight.size
       if (free > 0) {
-        val ready = pendingDeps.keys.toSeq
+        pendingDeps.keys.toSeq
           .filter(n => isPending(n) && pendingDeps(n).isEmpty)
-        val ordered =
-          if (ready.size <= free) ready.sortBy(n => (-height(n), n))
-          else ready.sortBy(n => (-height(n), -cost(n), n))
-        ordered
+          .sortBy(n => (-height(n), n))
           .take(free)
           .foreach { n =>
             inFlight += n
@@ -291,28 +267,6 @@ final class Dag(session: GraftSession) {
     DagResult(succeeded.toSeq, failed.toSeq, skipped.toSeq)
   }
 
-  /** Catalyst sizeInBytes of the table's unexecuted plan — meaningful
-    * once every dependency has materialized as a view (the only time
-    * the scheduler asks). Sources cost their literal row count;
-    * anything unresolvable costs 0 and schedules by height alone.
-    */
-  private def estimateCost(name: String): Long =
-    tables.get(name) match {
-      case Some(DagTable(_, Some(sql), _, _, _)) =>
-        try {
-          val b = session.sql(sql).queryExecution.optimizedPlan.stats.sizeInBytes
-          // Plans over a stats-less leaf report the defaultSizeInBytes
-          // sentinel (Long.MaxValue) — that is "unknown", not "huge";
-          // treating it as huge would let every unknown table outrank
-          // genuinely measured big ones.
-          if (b >= BigInt(session.spark.sessionState.conf.defaultSizeInBytes)) 0L
-          else if (b.isValidLong) b.toLong
-          else Long.MaxValue
-        } catch { case NonFatal(_) => 0L }
-      case Some(t) => t.rows.size.toLong
-      case None => 0L
-    }
-
   /** Materialize one table and register it as a session view. */
   private def execute(name: String): Option[Throwable] =
     try {
@@ -326,9 +280,7 @@ final class Dag(session: GraftSession) {
           if (!session.spark.catalog.tableExists(name)) session.createTable(name, schema)
           if (rows.nonEmpty) session.insert(name, rows)
         case DagTable(_, Some(sql), _, _, _) =>
-          val out = session.dir.resolve(name).toString
-          session.sql(sql).write.mode("overwrite").parquet(out)
-          session.replaceView(name, session.spark.read.parquet(out))
+          session.materialize(name, session.sql(sql))
         case other =>
           throw new IllegalArgumentException(s"Source table ${other.name} needs a schema or view")
       }

@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.nio.file.Path
 import java.util.{Locale, UUID}
 import java.util.concurrent.ConcurrentHashMap
 
@@ -27,20 +26,22 @@ import graft.BQUnitArgRule
   * per-session process cost.
   *
   * The session owns everything it leaves behind: the temp views, one
-  * in-memory snapshot per inserted table, the parquet snapshots of its
-  * DAG's derived tables under [[dir]], and the RPC-level state below.
-  * [[close]] releases all of it. Requests to one session are assumed
-  * not to run concurrently with its mutations (insert, createTable,
-  * dropTable, a DAG run, close); different sessions are independent.
+  * in-memory snapshot per inserted or DAG-derived table, and the
+  * RPC-level state below. It writes no files. [[close]] releases all of
+  * it. Requests to one session are assumed not to run concurrently with
+  * its mutations (insert, createTable, dropTable, a DAG run, close);
+  * different sessions are independent.
   *
-  * An insert snapshot is one materialized relation per table, in one
-  * partition per `spark.sql.files.maxPartitionBytes` of its size, and
-  * carries exact statistics. A table at served sizes is therefore one
-  * partition: the planner adds no exchange under aggregates, windows or
-  * sorts over it, and broadcasts it in joins at planning time. Every
-  * graft path that re-binds a name ([[createTable]], [[insert]],
-  * [[replaceView]], [[dropTable]]) releases the snapshot the name read
-  * before; a name re-bound by user SQL keeps it until [[close]].
+  * [[materialize]] is the one way a table becomes a snapshot: one
+  * materialized relation, in one partition per
+  * `spark.sql.files.maxPartitionBytes` of its size, carrying the
+  * statistics of the plan it was computed from (exact for inserted
+  * rows). A table at served sizes is therefore one partition: the
+  * planner adds no exchange under aggregates, windows or sorts over it,
+  * and broadcasts it in joins at planning time. Every graft path that
+  * re-binds a name ([[createTable]], [[materialize]], [[replaceView]],
+  * [[dropTable]]) releases the snapshot the name read before; a name
+  * re-bound by user SQL keeps it until [[close]].
   */
 final class GraftSession private[engine] (
     val id: String,
@@ -48,11 +49,6 @@ final class GraftSession private[engine] (
     val resolver: TableResolver = LocalResolver) {
 
   import GraftSession._
-
-  /** This session's scratch directory: derived DAG tables are written
-    * to `dir/<table>`. Nothing is created until the first write.
-    */
-  lazy val dir: Path = graft.Scratch.root.resolve(s"session-$id")
 
   /** RPC-level state: the DAG bq.registerDag/runDag act on (the
     * directory loaders replace it), its last run for bq.retryDag, the
@@ -63,11 +59,12 @@ final class GraftSession private[engine] (
   @volatile var defaultProject: Option[String] = None
   @volatile var catalogRoot: Option[String] = None
 
-  /** Each created or inserted table's current snapshot, keyed by
-    * lower-cased table name (temp views are case-insensitive): the RDD
-    * its view reads (the in-memory blocks after an insert) and its row
-    * count. The blocks outlive the views that point at them, so
-    * replacing or dropping a table, and [[close]], unpersist them.
+  /** Each created, inserted or DAG-derived table's current snapshot,
+    * keyed by lower-cased table name (temp views are case-insensitive):
+    * the RDD its view reads (the in-memory blocks of [[materialize]])
+    * and its row count, when known. The blocks outlive the views that
+    * point at them, so replacing or dropping a table, and [[close]],
+    * unpersist them.
     */
   private val snapshots = new ConcurrentHashMap[String, Snapshot]()
 
@@ -80,9 +77,9 @@ final class GraftSession private[engine] (
     release(name, df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => Snapshot(l.rdd, rows) })
   }
 
-  /** Bind `name` to a frame built by another path (a parquet load, a DAG
-    * table) and unpersist the snapshot the name read before. `df` must
-    * not read that snapshot itself.
+  /** Bind `name` to a lazy frame (a parquet load, a DAG view) and
+    * unpersist the snapshot the name read before. `df` must not read
+    * that snapshot itself.
     */
   def replaceView(name: String, df: DataFrame): Unit = {
     df.createOrReplaceTempView(name)
@@ -140,12 +137,19 @@ final class GraftSession private[engine] (
     // An empty created table adds nothing but a leaf without statistics,
     // which would make every later snapshot's size unknown.
     val appended = if (before.contains(0L)) incoming else existing.unionAll(incoming)
-    // Materialize through a snapshot so the view does not become a
-    // self-referencing plan of unbounded depth after many inserts. The
-    // snapshot is eager, so the one it replaces can go right after.
-    bind(name, rightSized(appended).localCheckpoint(true), before.map(_ + rows.size))
+    // A snapshot keeps the view from becoming a self-referencing plan of
+    // unbounded depth after many inserts.
+    materialize(name, appended, before.map(_ + rows.size))
     rows.size.toLong
   }
+
+  /** Bind `name` to an eager, right-sized snapshot of `df` and release
+    * the one it replaces; `rows` is the exact row count when the caller
+    * knows it. The blocks live in executor storage, so they are lost
+    * with their executor.
+    */
+  def materialize(name: String, df: DataFrame, rows: Option[Long] = None): Unit =
+    bind(name, rightSized(df).localCheckpoint(true), rows)
 
   /** `df` coalesced to one partition per `spark.sql.files.maxPartitionBytes`
     * of its estimated size, at least one; unchanged when the size is
@@ -223,12 +227,11 @@ final class GraftSession private[engine] (
     release(name, None)
   }
 
-  /** Drop every view, unpersist every snapshot and delete [[dir]]. */
+  /** Drop every view and unpersist every snapshot. */
   def close(): Unit = {
     spark.sessionState.catalog.listLocalTempViews("*").foreach(t => spark.catalog.dropTempView(t.table))
     snapshots.values.forEach(_.rdd.unpersist(false))
     snapshots.clear()
-    graft.Scratch.delete(dir)
   }
 }
 

@@ -11,8 +11,8 @@ import graft.engine.{DagTable, GraftSession, SessionManager}
   * mixture → BPE-budgeted packing — composed as one dependency DAG and
   * executed by the engine's own scheduler ([[graft.engine.Dag]]:
   * topological slot-based streaming execution, each derived stage
-  * materialized as a parquet snapshot exactly as the reference pipeline
-  * materializes derived tables). `llm_curate_e2e` proved three operators
+  * materialized as the session's insert snapshot, as the reference
+  * pipeline materializes derived tables with CREATE TABLE + INSERT). `llm_curate_e2e` proved three operators
   * compose in one query plan; this proves the real thing: the
   * individually-verified operators compose THROUGH the engine — each
   * stage a registered `DagTable` with parsed dependencies, scheduled by
@@ -26,13 +26,13 @@ import graft.engine.{DagTable, GraftSession, SessionManager}
   * global rank (per-bucket ROW_NUMBER + a ≤nb-row offset window — no
   * corpus-scale single-partition window); mixture and packing window
   * PER LANGUAGE; BPE training is batched vocabulary-sized shuffles.
-  * Materialization between stages is the same write-once parquet a
-  * production pipeline would checkpoint.
+  * Materialization between stages is an eager in-memory snapshot, so a
+  * dependent re-reads computed rows, never the stage's plan.
   *
-  * Each run gets its own engine session, and the stage snapshots live
-  * in that session's scratch directory. A run closes the previous run's
-  * session, so one JVM holds at most one run's snapshots; the caller
-  * has consumed the previous result by then.
+  * Each run gets its own engine session, which holds the stage
+  * snapshots. A run closes the previous run's session, so one JVM holds
+  * at most one run's snapshots; the caller has consumed the previous
+  * result by then.
   */
 object PipelineE2E2 {
 

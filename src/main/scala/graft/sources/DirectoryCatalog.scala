@@ -86,15 +86,13 @@ object DirectoryCatalog {
     }
   }
 
-  /** Register every parquet table as a view in the session. */
-  def loadParquetDirectory(session: GraftSession, root: String): Seq[String] =
-    loadParquetDirectoryInfo(session, root).map(_._1.fullName)
-
-  /** Same registration, but returns the discovered entry plus its row
-    * count — the payload the RPC layer needs for the reference's
-    * ParquetTableInfo result rows (reference: rpc/types.rs:463; its
-    * loader also reports the loaded row count per table). The count is a
-    * parquet-footer-metadata job, not a full scan.
+  /** Register every parquet table as a view in the session, under its
+    * qualified name and, when unambiguous, its bare name. Returns each
+    * discovered entry plus its row count — the payload the RPC layer
+    * needs for the reference's ParquetTableInfo result rows (reference:
+    * rpc/types.rs:463; its loader also reports the loaded row count per
+    * table). The count is a parquet-footer-metadata job, not a full
+    * scan.
     */
   def loadParquetDirectoryInfo(session: GraftSession, root: String): Seq[(Discovered, Long)] = {
     val frames = discover(root).filterNot(_.isSql).map(d => d -> readTable(session, d))
@@ -108,7 +106,7 @@ object DirectoryCatalog {
     * load_sql_directory): the discovered .sql files become derived DAG
     * tables; parquet files are NOT loaded and no source views are
     * created. Sources are expected to exist in the session already (e.g.
-    * a prior loadParquetDirectory call) — exactly the reference's
+    * a prior loadParquetDirectoryInfo call) — exactly the reference's
     * side-effect contract, which differs from [[loadDagFrom]].
     */
   def loadSqlDag(session: GraftSession, root: String): (Dag, Seq[Discovered]) = {
@@ -119,14 +117,10 @@ object DirectoryCatalog {
   }
 
   /** Build a Dag: parquet files as source views, .sql files as derived
-    * tables (dependency-ordered, materialized on run()).
-    */
-  def loadDag(session: GraftSession, root: String): Dag =
-    loadDagFrom(session, root)._1
-
-  /** [[loadDag]] plus the per-file info the RPC layer serializes into the
-    * reference's LoadDagFromDirectoryResult (rpc/types.rs:481): parquet
-    * sources with row counts, and the .sql computed tables.
+    * tables (dependency-ordered, materialized on run()). Also returns the
+    * per-file info the RPC layer serializes into the reference's
+    * LoadDagFromDirectoryResult (rpc/types.rs:481): parquet sources with
+    * row counts, and the .sql computed tables.
     */
   def loadDagFrom(session: GraftSession, root: String)
       : (Dag, Seq[(Discovered, Long)], Seq[Discovered]) = {

@@ -240,36 +240,39 @@ class GraftRpcSpec extends SparkSpec {
   }
 
   test("destroySession closes only its own session: views, snapshots and scratch dir") {
-    val before = persisted()
-    def populate(): String = {
+    /** A session with an inserted `t` and two derived DAG tables over it,
+      * and the persisted RDDs of `t` and of the DAG tables.
+      */
+    def populate(): (String, Set[Int], Set[Int]) = {
+      val start = persisted()
       val s = sid()
       call("bq.createTable", "sessionId" -> s, "tableName" -> "t",
         "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
       (1 to 3).foreach(i => call("bq.insert", "sessionId" -> s, "tableName" -> "t", "rows" -> Seq(Seq(i))))
+      val inserted = persisted() -- start
       call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
         Map("name" -> "doubled", "sql" -> "SELECT v * 2 AS v FROM t"),
         Map("name" -> "total", "sql" -> "SELECT SUM(v) AS v FROM doubled")))
       assert(call("bq.runDag", "sessionId" -> s)("success") == true)
-      s
+      (s, inserted, persisted() -- start -- inserted)
     }
-    val first = populate()
-    val firstRdds = persisted() -- before
-    val second = populate()
-    val secondRdds = persisted() -- before -- firstRdds
-    assert(firstRdds.nonEmpty && secondRdds.nonEmpty)
-    assert(scratchOf(first).nonEmpty && scratchOf(second).nonEmpty)
+    val (first, firstT, firstDag) = populate()
+    val (second, secondT, secondDag) = populate()
+    assert(Seq(firstT, secondT).forall(_.size == 1) && Seq(firstDag, secondDag).forall(_.size == 2))
+    // Sessions write no files: nothing under the scratch root is theirs.
+    assert(scratchOf(first).isEmpty && scratchOf(second).isEmpty, scratchOf(first) ++ scratchOf(second))
 
     assert(call("bq.destroySession", "sessionId" -> first)("success") == true)
-    assert(scratchOf(first).isEmpty, s"left behind: ${scratchOf(first)}")
-    assert((persisted() & firstRdds).isEmpty)
-    assert(secondRdds.subsetOf(persisted()))
+    assert((persisted() & (firstT ++ firstDag)).isEmpty)
+    assert((secondT ++ secondDag).subsetOf(persisted()))
     assert(ints(call("bq.query", "sessionId" -> second, "sql" -> "SELECT v FROM total")) == Seq(12L))
 
-    val snapshots = scratchOf(second).filter(p => Set("doubled", "total")(p.getFileName.toString))
-    assert(snapshots.size == 2, scratchOf(second))
     assert(call("bq.clearDag", "sessionId" -> second)("success") == true)
-    assert(snapshots.forall(p => !java.nio.file.Files.exists(p)))
+    assert((persisted() & secondDag).isEmpty, s"clearDag kept ${persisted() & secondDag}")
+    assert(secondT.subsetOf(persisted()))
+    assert(ints(call("bq.query", "sessionId" -> second, "sql" -> "SELECT v FROM t ORDER BY v")) == Seq(1L, 2L, 3L))
     call("bq.destroySession", "sessionId" -> second)
+    assert((persisted() & secondT).isEmpty)
     assert(scratchOf(second).isEmpty)
   }
 
@@ -296,8 +299,11 @@ class GraftRpcSpec extends SparkSpec {
     assert((persisted() -- before).size == 1)
     call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
       Map("name" -> "b", "sql" -> "SELECT v FROM a WHERE v > 2")))
+    val inserted = persisted() -- before
     assert(call("bq.runDag", "sessionId" -> s)("success") == true)
-    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+    val derived = persisted() -- before
+    assert((derived & inserted).isEmpty, s"the insert snapshot stayed: $derived")
+    assert(derived.size == 1, s"b holds $derived")
     assert(described("b") == 3L)
     assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM b ORDER BY v")) == Seq(3L, 4L, 5L))
     call("bq.destroySession", "sessionId" -> s)

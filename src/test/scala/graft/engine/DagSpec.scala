@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** Mirrors the reference's pipeline test suite semantics
@@ -175,32 +173,6 @@ class DagSpec extends SparkSpec {
       s"scheduler ignored the critical path: ${res.succeeded}")
   }
 
-  test("cost priority: the expensive ready table preempts a cheap same-height one") {
-    // One slot, two ready derived leaves of EQUAL height: "a_cheap"
-    // (selects a 1-row table) and "b_pricey" (selects a 200k-row view).
-    // Height alone ties and name order would start a_cheap; the
-    // Catalyst-stats cost estimate must start b_pricey first so the
-    // long pole overlaps everything else. With one slot, completion
-    // order equals start order.
-    val (s, dag) = freshDag()
-    dag.register(Seq(
-      DagTable.source("m_small", Seq("v" -> "INT64"), Seq(Seq(1))),
-      DagTable.view("m_big", s.spark.range(200000).toDF("v")),
-      DagTable.derived("a_cheap", "SELECT v FROM m_small"),
-      DagTable.derived("b_pricey", "SELECT v FROM m_big")))
-    val res = dag.run(maxConcurrency = 1)
-    assert(res.allSucceeded)
-    assert(res.succeeded.indexOf("b_pricey") < res.succeeded.indexOf("a_cheap"),
-      s"scheduler ignored the cost estimate: ${res.succeeded}")
-    // A profile-fed override outranks the built-in estimate: declare
-    // a_cheap the expensive one and the order flips.
-    val res2 = dag.run(maxConcurrency = 1,
-      costOf = n => if (n == "a_cheap") Some(Long.MaxValue) else Some(0L))
-    assert(res2.allSucceeded)
-    assert(res2.succeeded.indexOf("a_cheap") < res2.succeeded.indexOf("b_pricey"),
-      s"scheduler ignored the cost override: ${res2.succeeded}")
-  }
-
   test("a skip chain deeper than one level fully resolves (no stranded tables)") {
     // a fails → b skipped → c skipped: the reference's single-pass skip
     // (pipeline.rs:327) would strand c with nothing in flight; the
@@ -271,15 +243,27 @@ class DagSpec extends SparkSpec {
     assert(s.sql("SELECT * FROM short_src").count() == 0L)
   }
 
-  test("derived snapshots live under the session dir; clear deletes them") {
+  test("a derived table is one snapshot; re-running it releases the previous one; clear releases all") {
+    val sc = spark.sparkContext
+    def persisted(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted()
     val (s, dag) = freshDag()
     dag.register(Seq(
       DagTable.source("snap_src", Seq("v" -> "INT64"), Seq(Seq(1))),
-      DagTable.derived("snap_out", "SELECT v + 1 AS v FROM snap_src")))
-    assert(dag.run().allSucceeded)
-    assert(Files.isDirectory(s.dir.resolve("snap_out")))
+      DagTable.derived("snap_out", "SELECT v + 1 AS v FROM snap_src"),
+      DagTable.derived("snap_sum", "SELECT SUM(v) AS v FROM snap_out")))
+    var previous = Set.empty[Int]
+    (1 to 3).foreach { run =>
+      assert(dag.run().allSucceeded)
+      val held = persisted() -- before
+      assert(held.size == 3, s"after run $run the session holds $held")
+      assert((held & previous).isEmpty, s"run $run kept ${held & previous}")
+      previous = held
+      // The source appends its literal row on every run.
+      assert(s.sql("SELECT v FROM snap_sum").collect()(0).getLong(0) == 2L * run)
+    }
     dag.clear()
-    assert(!Files.exists(s.dir.resolve("snap_out")))
+    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
     assert(!s.spark.catalog.tableExists("snap_out"))
   }
 

@@ -16,7 +16,8 @@ import graft.api.GraftRpc
   * `spark.sql.files.maxPartitionBytes` and carrying exact statistics, so
   * the planner needs no shuffle for aggregates, windows or joins over
   * tables at served sizes, and still gets the same rows when a small
-  * scan split leaves a table in several partitions.
+  * scan split leaves a table in several partitions. A DAG-derived table
+  * is the same kind of snapshot.
   */
 class InsertSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -65,7 +66,13 @@ class InsertSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("a group by, a window and a join over inserted tables plan no shuffle") {
     val sessions = new SessionManager(spark)
     val s = populated(sessions)
-    queries.foreach { case (what, q) =>
+    // A DAG-derived table is the same snapshot as an inserted one.
+    s.dag.register(Seq(DagTable.derived("recent", "SELECT k, v FROM events WHERE k >= 500")))
+    assert(s.dag.run().allSucceeded)
+    val overDerived = Seq(
+      "group by over a DAG table" -> "SELECT v, COUNT(*) AS n FROM recent GROUP BY v",
+      "order by over a DAG table" -> "SELECT k FROM recent ORDER BY k DESC")
+    (queries ++ overDerived).foreach { case (what, q) =>
       val df = s.sql(q)
       df.collect()
       val shuffles = collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
@@ -73,6 +80,8 @@ class InsertSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(rowsOf(s, queries.head._2) ==
       eventRows.groupBy(_(1)).map { case (v, rs) => s"$v|${rs.size}" }.toSeq.sorted)
+    assert(rowsOf(s, overDerived.head._2) ==
+      eventRows.drop(500).groupBy(_(1)).map { case (v, rs) => s"$v|${rs.size}" }.toSeq.sorted)
     sessions.destroy(s.id)
   }
 

@@ -29,7 +29,7 @@ class DirectoryCatalogSpec extends SparkSpec {
   test("loadParquetDirectory registers qualified and bare views") {
     val root = buildTree()
     val s = new SessionManager(spark).create()
-    val names = DirectoryCatalog.loadParquetDirectory(s, root.toString)
+    val names = DirectoryCatalog.loadParquetDirectoryInfo(s, root.toString).map(_._1.fullName)
     assert(names == Seq("proj1_analytics_items"))
     assert(s.sql("SELECT COUNT(*) FROM proj1_analytics_items").collect()(0).getLong(0) == 3L)
     assert(s.sql("SELECT COUNT(*) FROM items").collect()(0).getLong(0) == 3L)
@@ -46,7 +46,7 @@ class DirectoryCatalogSpec extends SparkSpec {
     Files.writeString(ds.resolve("t.schema.json"),
       """[{"name": "score", "type": "FLOAT64"}, {"name": "id", "type": "INT64"}]""")
     val s = new SessionManager(spark).create()
-    DirectoryCatalog.loadParquetDirectory(s, root.toString)
+    DirectoryCatalog.loadParquetDirectoryInfo(s, root.toString)
     val df = s.sql("SELECT * FROM t")
     assert(df.schema.fields.map(f => (f.name, f.dataType.simpleString)).toSeq ==
       Seq(("score", "double"), ("id", "bigint")))
@@ -56,7 +56,7 @@ class DirectoryCatalogSpec extends SparkSpec {
   test("loadDag wires sql files as derived tables over parquet sources") {
     val root = buildTree()
     val s = new SessionManager(spark).create()
-    val dag = DirectoryCatalog.loadDag(s, root.toString)
+    val dag = DirectoryCatalog.loadDagFrom(s, root.toString)._1
     val tables = dag.getTables
     assert(tables.find(_._1 == "big_items").get._4 == Seq("items"))
     val res = dag.run()

@@ -159,14 +159,9 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
         case bq: graft.engine.BigQueryResolver =>
           Map("loadedRows" -> bq.loadParquet(s.spark, name, path))
         case _ =>
-          val df =
-            try s.spark.read.parquet(path)
-            catch {
-              case e: org.apache.spark.sql.AnalysisException =>
-                throw GraftError.LoaderError(s"Failed to load parquet at $path: ${e.getMessage}")
-            }
+          val (df, rows) = DirectoryCatalog.readParquet(s, path)
           s.replaceView(name, df)
-          Map("loadedRows" -> df.count())
+          Map("loadedRows" -> rows)
       }
 
     case "bq.listTables" =>

@@ -1,6 +1,9 @@
 package graft.engine
 
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, Executors}
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
@@ -57,6 +60,11 @@ final case class DagResult(
   * the executor, as insert snapshots are. Re-running a table releases
   * its previous snapshot; [[clear]] releases those of the tables it
   * drops, and closing the session releases the rest.
+  *
+  * A run is one future per table, chained on its upstream tables'
+  * futures: a table starts as soon as its dependencies finish, at most
+  * `maxConcurrency` at a time, and a failed or skipped table skips its
+  * dependents (see [[runSubset]]).
   *
   * Matching semantics: re-running a derived table recomputes it from
   * current upstream state; a failed table blocks (skips) its dependents;
@@ -158,116 +166,64 @@ final class Dag(session: GraftSession) {
     needed.toSet
   }
 
-  /** Slot-based streaming execution (reference pipeline.rs:50-104
-    * StreamState::ready_tables): a table starts the moment its last
-    * dependency completes, bounded by `maxConcurrency` in-flight slots —
-    * there is NO barrier between topological levels, so a fast branch's
-    * dependents never wait for a slow sibling elsewhere in the DAG.
-    * Concurrent tables become concurrent Spark jobs; the scheduler
-    * interleaves their stages across the cluster.
-    *
-    * All scheduler state is owned by this (driver) thread; workers only
-    * post completion events. One deliberate divergence from the
-    * reference: its post-failure skip pass runs once per event
-    * (pipeline.rs:327-341), which can strand a skip chain deeper than
-    * one level with nothing in flight; here skips propagate to a
-    * fixpoint so every downstream table resolves immediately.
+  /** The subset as a graph of futures, one per table (reference
+    * pipeline.rs:50-104 StreamState::ready_tables). A table's future
+    * runs on a pool of `maxConcurrency` threads once every upstream
+    * future in the subset has completed: it executes the table if all
+    * of them succeeded, and otherwise records it as skipped, so a
+    * failure skips everything downstream of it. There is no barrier
+    * between topological levels. Concurrent tables become concurrent
+    * Spark jobs; Spark's scheduler interleaves their stages. Outcomes
+    * are recorded in completion order.
     */
   private def runSubset(subset: Set[String], maxConcurrency: Int): DagResult = {
     if (subset.isEmpty) return DagResult()
-    val levels = topoLevels(subset) // cycle detection: raises CircularDependency
-    val slots = math.max(1, maxConcurrency)
-    // Per-table unresolved deps (completed deps are removed; blocked
-    // deps stay, which is what marks the table skippable).
-    val pendingDeps = mutable.Map.empty[String, mutable.Set[String]]
-    subset.foreach { n =>
-      pendingDeps(n) = mutable.Set(deps.getOrElse(n, Nil).filter(subset.contains): _*)
-    }
-    val inFlight = mutable.Set[String]()
-    val completed = mutable.Set[String]()
-    val blocked = mutable.Set[String]()
-    val succeeded = mutable.ArrayBuffer[String]()
-    val failed = mutable.ArrayBuffer[TableError]()
-    val skipped = mutable.ArrayBuffer[String]()
-    var processed = 0
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(slots, subset.size))
-    val events = new java.util.concurrent.LinkedBlockingQueue[(String, Option[Throwable])]()
-
-    // Critical-path slot priority: when more tables are ready than slots
-    // are free, start the one heading the longest dependency chain —
-    // the classic makespan heuristic (delaying the critical path delays
-    // the whole DAG; delaying a leaf delays only itself). Height is
-    // pure graph arithmetic (longest chain of dependents within the
-    // subset), memoized once per run; ties break by name so scheduling
-    // stays deterministic.
-    val dependents = subset.map(n => n -> mutable.Buffer.empty[String]).toMap
-    subset.foreach(n =>
-      deps.getOrElse(n, Nil).filter(subset.contains).foreach(d => dependents(d) += n))
-    // Heights computed iteratively in reverse topological order — a
-    // definition that recurses one frame per dependency level would
-    // overflow the driver stack on a pathologically deep chain (tens of
-    // thousands of tables) before any table runs.
-    val height: collection.Map[String, Int] = {
-      val h = mutable.Map.empty[String, Int]
-      levels.reverse.foreach(_.foreach { n =>
-        h(n) = 1 + dependents(n).map(h).maxOption.getOrElse(0)
-      })
-      h
-    }
-    def isPending(n: String) = !completed(n) && !blocked(n) && !inFlight(n)
-    def spawnReady(): Unit = {
-      val free = slots - inFlight.size
-      if (free > 0) {
-        pendingDeps.keys.toSeq
-          .filter(n => isPending(n) && pendingDeps(n).isEmpty)
-          .sortBy(n => (-height(n), n))
-          .take(free)
-          .foreach { n =>
-            inFlight += n
-            // The completion event must post even on FATAL throwables
-            // (OOM during a materialization, linkage errors): a missing
-            // event would leave the driver blocked in events.take()
-            // forever with the table stuck in-flight. execute() already
-            // converts NonFatal failures; this is the last-resort net.
-            pool.execute(() => {
-              val outcome =
-                try execute(n)
-                catch { case t: Throwable => Some(t) }
-              events.put(n -> outcome)
-            })
-          }
-      }
-    }
-
+    val upstream = subset.iterator.map(n => n -> deps.getOrElse(n, Nil).filter(subset.contains)).toMap
+    val succeeded = new ConcurrentLinkedQueue[String]()
+    val failed = new ConcurrentLinkedQueue[TableError]()
+    val skipped = new ConcurrentLinkedQueue[String]()
+    val futures = mutable.Map.empty[String, CompletableFuture[Boolean]]
+    val order = topologicalOrder(upstream) // raises CircularDependency before anything runs
+    val pool = Executors.newFixedThreadPool(math.min(math.max(1, maxConcurrency), subset.size))
     try {
-      spawnReady()
-      while (processed < subset.size) {
-        val (name, outcome) = events.take()
-        processed += 1
-        inFlight -= name
-        outcome match {
-          case None =>
-            completed += name; succeeded += name
-            pendingDeps.values.foreach(_ -= name)
-          case Some(e) =>
-            blocked += name; failed += TableError(name, e.getMessage)
-        }
-        var changed = true
-        while (changed) {
-          changed = false
-          pendingDeps.keys.toSeq.sorted.foreach { n =>
-            if (isPending(n) && pendingDeps(n).exists(blocked.contains)) {
-              blocked += n; skipped += n; processed += 1; changed = true
-            }
-          }
-        }
-        spawnReady()
+      order.foreach { n =>
+        val ups = upstream(n).map(futures)
+        futures(n) = CompletableFuture.allOf(ups: _*).thenApplyAsync(_ =>
+          if (!ups.forall(_.join())) { skipped.add(n); false }
+          else execute(n) match {
+            case None => succeeded.add(n); true
+            case Some(e) => failed.add(TableError(n, e.getMessage)); false
+          }, pool)
       }
+      futures.values.foreach(_.join())
     } finally pool.shutdown()
-    DagResult(succeeded.toSeq, failed.toSeq, skipped.toSeq)
+    DagResult(succeeded.asScala.toSeq, failed.asScala.toSeq, skipped.asScala.toSeq)
   }
 
-  /** Materialize one table and register it as a session view. */
+  /** Kahn's algorithm, ties broken by name. */
+  private def topologicalOrder(upstream: Map[String, Seq[String]]): Seq[String] = {
+    val waiting = mutable.Map.from(upstream.view.mapValues(_.size))
+    val dependents = upstream.toSeq.flatMap { case (n, ds) => ds.map(_ -> n) }.groupMap(_._1)(_._2)
+    val ready = mutable.SortedSet.from(waiting.collect { case (n, 0) => n })
+    val order = mutable.ArrayBuffer[String]()
+    while (ready.nonEmpty) {
+      val n = ready.head
+      ready -= n; order += n
+      dependents.getOrElse(n, Nil).foreach { d =>
+        waiting(d) -= 1
+        if (waiting(d) == 0) ready += d
+      }
+    }
+    // Reference raises cycles as InvalidRequest (session/pipeline.rs:475).
+    if (order.size < upstream.size) throw graft.api.GraftError.CircularDependency()
+    order.toSeq
+  }
+
+  /** Materialize one table and register it as a session view. Every
+    * throwable is the table's failure, fatal ones (an OOM during a
+    * materialization, a `LinkageError` in a view builder) included, so
+    * its future still completes and its dependents are skipped.
+    */
   private def execute(name: String): Option[Throwable] =
     try {
       val t = tables(name)
@@ -285,30 +241,5 @@ final class Dag(session: GraftSession) {
           throw new IllegalArgumentException(s"Source table ${other.name} needs a schema or view")
       }
       None
-    } catch { case NonFatal(e) => Some(e) }
-
-  private[engine] def topoLevels(subset: Set[String]): Seq[Seq[String]] = {
-    val inDeg = mutable.Map[String, Int]()
-    val dependents = mutable.Map[String, mutable.Buffer[String]]()
-    subset.foreach { n =>
-      val ds = deps.getOrElse(n, Nil).filter(subset.contains)
-      inDeg(n) = ds.size
-      ds.foreach(d => dependents.getOrElseUpdate(d, mutable.Buffer()) += n)
-    }
-    val levels = mutable.ArrayBuffer[Seq[String]]()
-    var processed = 0
-    while (inDeg.nonEmpty) {
-      val level = inDeg.collect { case (n, 0) => n }.toSeq.sorted
-      // Reference raises cycles as InvalidRequest (session/pipeline.rs:475).
-      if (level.isEmpty)
-        throw graft.api.GraftError.CircularDependency()
-      level.foreach { n =>
-        inDeg.remove(n)
-        dependents.getOrElse(n, Nil).foreach(d => inDeg.updateWith(d)(_.map(_ - 1)))
-      }
-      processed += level.size
-      levels += level
-    }
-    levels.toSeq
-  }
+    } catch { case e: Throwable => Some(e) }
 }

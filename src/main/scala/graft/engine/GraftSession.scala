@@ -352,7 +352,7 @@ object GraftSession {
     case "JSON" => StringType
     case s if s.startsWith("ARRAY<") =>
       ArrayType(bqType(s.stripPrefix("ARRAY<").stripSuffix(">")))
-    case other => throw new IllegalArgumentException(s"Unsupported BigQuery type: $other")
+    case other => throw graft.api.GraftError.InvalidParams(s"Unsupported BigQuery type: $other")
   }
 
   def sparkTypeToBq(t: DataType): String = t match {
@@ -377,10 +377,17 @@ object GraftSession {
     case (d: Double, LongType) => d.toLong
     case (l: Long, DoubleType) => l.toDouble
     case (f: Float, DoubleType) => f.toDouble
-    case (s: String, DateType) => java.sql.Date.valueOf(s)
-    case (s: String, TimestampType) => java.sql.Timestamp.valueOf(s.replace("T", " "))
+    case (s: String, DateType) => parse(s, "DATE")(java.sql.Date.valueOf(s))
+    case (s: String, TimestampType) => parse(s, "TIMESTAMP")(java.sql.Timestamp.valueOf(s.replace("T", " ")))
     case (x, _) => x
   }
+
+  private def parse[T](s: String, typeName: String)(value: => T): T =
+    try value
+    catch {
+      case _: IllegalArgumentException =>
+        throw graft.api.GraftError.InvalidParams(s"Invalid $typeName value: '$s'")
+    }
 }
 
 /** Registry of live sessions (reference: src/session/manager.rs). */

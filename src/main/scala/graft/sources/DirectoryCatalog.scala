@@ -3,7 +3,11 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
+import org.apache.spark.sql.DataFrame
+
+import graft.api.GraftError
 import graft.engine.{Dag, DagTable, GraftSession}
 
 /** Discovery of a `root/project/dataset/table.{parquet,sql}` tree and
@@ -25,7 +29,7 @@ object DirectoryCatalog {
 
   def discover(root: String): Seq[Discovered] = {
     val rootPath = Paths.get(root)
-    require(Files.isDirectory(rootPath), s"Root path is not a directory: $root")
+    if (!Files.isDirectory(rootPath)) throw GraftError.LoaderError(s"Root path is not a directory: $root")
     def dirs(p: Path) = Files.list(p).iterator().asScala
       .filter(d => Files.isDirectory(d) && !d.getFileName.toString.contains(".")).toSeq
     // A ".parquet" entry may be a single file OR a Spark-written directory
@@ -76,13 +80,25 @@ object DirectoryCatalog {
     })
   }
 
-  private def readTable(session: GraftSession, d: Discovered) = {
-    val df = session.spark.read.parquet(d.path)
+  /** A parquet file or directory and its row count (a footer-metadata
+    * job, not a full scan). Any failure to read it, a missing path or a
+    * corrupt file, is a LoaderError (reference error.rs `Loader`).
+    */
+  def readParquet(session: GraftSession, path: String): (DataFrame, Long) =
+    try {
+      val df = session.spark.read.parquet(path)
+      (df, df.count())
+    } catch {
+      case NonFatal(e) => throw GraftError.LoaderError(s"Failed to load parquet at $path: ${e.getMessage}")
+    }
+
+  private def readTable(session: GraftSession, d: Discovered): (DataFrame, Long) = {
+    val (df, rows) = readParquet(session, d.path)
     declaredSchema(d.path) match {
       case Some(cols) =>
         import org.apache.spark.sql.functions.col
-        df.select(cols.map { case (n, t) => col(n).cast(GraftSession.bqType(t)).as(n) }: _*)
-      case None => df
+        (df.select(cols.map { case (n, t) => col(n).cast(GraftSession.bqType(t)).as(n) }: _*), rows)
+      case None => (df, rows)
     }
   }
 
@@ -91,15 +107,14 @@ object DirectoryCatalog {
     * discovered entry plus its row count — the payload the RPC layer
     * needs for the reference's ParquetTableInfo result rows (reference:
     * rpc/types.rs:463; its loader also reports the loaded row count per
-    * table). The count is a parquet-footer-metadata job, not a full
-    * scan.
+    * table). Every table is read before any view is bound.
     */
   def loadParquetDirectoryInfo(session: GraftSession, root: String): Seq[(Discovered, Long)] = {
     val frames = discover(root).filterNot(_.isSql).map(d => d -> readTable(session, d))
-    frames.foreach { case (d, df) => session.replaceView(d.fullName, df) }
+    frames.foreach { case (d, (df, _)) => session.replaceView(d.fullName, df) }
     // Bare-name aliases for unambiguous tables.
-    frames.groupBy(_._1.table).collect { case (t, Seq((_, df))) => session.replaceView(t, df) }
-    frames.map { case (d, df) => (d, df.count()) }
+    frames.groupBy(_._1.table).collect { case (t, Seq((_, (df, _)))) => session.replaceView(t, df) }
+    frames.map { case (d, (_, n)) => (d, n) }
   }
 
   /** SQL-ONLY DAG registration (reference: manager.rs:282-312
@@ -126,15 +141,12 @@ object DirectoryCatalog {
       : (Dag, Seq[(Discovered, Long)], Seq[Discovered]) = {
     val discovered = discover(root)
     val dag = new Dag(session)
-    val sources = discovered.filterNot(_.isSql).map { d =>
-      val df = readTable(session, d)
-      (d, df, df.count())
-    }
+    val sources = discovered.filterNot(_.isSql).map(d => d -> readTable(session, d))
     val sql = discovered.filter(_.isSql)
     val derived = sql.map { d =>
       DagTable.derived(d.table, Files.readString(Paths.get(d.path)))
     }
-    dag.register(sources.map { case (d, df, _) => DagTable.view(d.table, df) } ++ derived)
-    (dag, sources.map { case (d, _, n) => (d, n) }, sql)
+    dag.register(sources.map { case (d, (df, _)) => DagTable.view(d.table, df) } ++ derived)
+    (dag, sources.map { case (d, (_, n)) => (d, n) }, sql)
   }
 }

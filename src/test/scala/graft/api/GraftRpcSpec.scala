@@ -323,4 +323,52 @@ class GraftRpcSpec extends SparkSpec {
     assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT SUM(v) AS v FROM p")) == Seq(45L))
     call("bq.destroySession", "sessionId" -> s)
   }
+
+  /** The JSON-RPC error a request answers through the wire transport. */
+  private def wireError(method: String, params: (String, Any)*): Map[String, Any] =
+    Json.parse(RpcServer.processMessage(
+      Json.write(Map("jsonrpc" -> "2.0", "id" -> 1, "method" -> method, "params" -> params.toMap)), rpc))
+      .asInstanceOf[Map[String, Any]]("error").asInstanceOf[Map[String, Any]]
+
+  test("loaders answer LoaderError for a missing root and for a corrupt parquet file") {
+    val s = sid()
+    val missing = graft.Scratch.dir("rpcmissing-").resolve("no_such_root").toString
+    Seq("bq.loadParquetDirectory", "bq.loadSqlDirectory", "bq.loadDagFromDirectory", "bq.getProjects")
+      .foreach { m =>
+        val err = wireError(m, "sessionId" -> s, "rootPath" -> missing)
+        assert(err("code") == -32001L, s"$m: $err")
+        assert(err("message").toString.contains(s"Root path is not a directory: $missing"), s"$m: $err")
+      }
+    val root = graft.Scratch.dir("rpccorrupt-")
+    val ds = java.nio.file.Files.createDirectories(root.resolve("proj/mart"))
+    val bad = java.nio.file.Files.write(ds.resolve("broken.parquet"), "not a parquet file".getBytes)
+    Seq("bq.loadParquetDirectory", "bq.loadDagFromDirectory").foreach { m =>
+      val err = wireError(m, "sessionId" -> s, "rootPath" -> root.toString)
+      assert(err("code") == -32001L, s"$m: $err")
+      assert(err("message").toString.contains(s"Failed to load parquet at $bad"), s"$m: $err")
+    }
+    val err = wireError("bq.loadParquet", "sessionId" -> s, "tableName" -> "broken", "path" -> bad.toString)
+    assert(err("code") == -32001L, err)
+    call("bq.destroySession", "sessionId" -> s)
+  }
+
+  test("createTable with an unknown type and insert of an unparseable date or timestamp are InvalidParams") {
+    val s = sid()
+    val unknown = wireError("bq.createTable", "sessionId" -> s, "tableName" -> "w",
+      "schema" -> Seq(Map("name" -> "k", "type" -> "WIBBLE")))
+    assert(unknown("code") == -32600L, unknown)
+    assert(unknown("message").toString.contains("Unsupported BigQuery type: WIBBLE"), unknown)
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "dated",
+      "schema" -> Seq(Map("name" -> "d", "type" -> "DATE"), Map("name" -> "ts", "type" -> "TIMESTAMP")))
+    Seq(
+      Seq("2024-13-45x", "2024-01-02 03:04:05") -> "Invalid DATE value: '2024-13-45x'",
+      Seq("2024-01-02", "yesterday") -> "Invalid TIMESTAMP value: 'yesterday'").foreach { case (row, expected) =>
+      val err = wireError("bq.insert", "sessionId" -> s, "tableName" -> "dated", "rows" -> Seq(row))
+      assert(err("code") == -32600L, err)
+      assert(err("message").toString.contains(expected), err)
+    }
+    call("bq.insert", "sessionId" -> s, "tableName" -> "dated", "rows" -> Seq(Seq("2024-01-02", "2024-01-02T03:04:05")))
+    assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "dated")("rowCount") == 1L)
+    call("bq.destroySession", "sessionId" -> s)
+  }
 }

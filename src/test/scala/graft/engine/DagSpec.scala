@@ -49,17 +49,21 @@ class DagSpec extends SparkSpec {
     assert(out == Seq(12L, 14L, 16L))
   }
 
-  test("diamond topology levels") {
-    val (_, dag) = freshDag()
+  test("diamond runs every table after its dependencies") {
+    val (s, dag) = freshDag()
     dag.register(Seq(
       DagTable.source("root", Seq("x" -> "INT64"), Seq(Seq(10))),
       DagTable.derived("left", "SELECT x + 1 AS x FROM root"),
       DagTable.derived("right", "SELECT x - 1 AS x FROM root"),
       DagTable.derived("bottom", "SELECT l.x AS lx, r.x AS rx FROM left l, right r")))
-    val levels = dag.topoLevels(Set("root", "left", "right", "bottom"))
-    assert(levels == Seq(Seq("root"), Seq("left", "right"), Seq("bottom")))
     val res = dag.run()
     assert(res.allSucceeded)
+    val at = res.succeeded.zipWithIndex.toMap
+    assert(at.keySet == Set("root", "left", "right", "bottom"))
+    assert(at("root") < at("left") && at("root") < at("right"), res.succeeded)
+    assert(at("left") < at("bottom") && at("right") < at("bottom"), res.succeeded)
+    val out = s.sql("SELECT lx, rx FROM bottom").collect()(0)
+    assert((out.getLong(0), out.getLong(1)) == (11L, 9L))
   }
 
   test("run with targets executes only the dependency closure") {
@@ -132,51 +136,37 @@ class DagSpec extends SparkSpec {
   }
 
   test("slot scheduling: a fast branch's dependent finishes while the slow sibling still runs") {
-    // Diamond-ish DAG: root → {slow, fast}, fast → fast_child. Under the
-    // old level-barrier executor fast_child could not START until slow
-    // finished; under ready-queue slots it must COMPLETE before slow does
-    // (slow sleeps 10s — wide margin so a CPU-starved machine running
-    // the suite under load can't make the trivial 1-row fast_child
-    // materialization lose the race and flake the test).
+    // root → {slow, fast}, fast → fast_child → fast_done. slow blocks on
+    // a latch that only fast_done counts down, and fast_done starts only
+    // after fast_child has completed, so slow's await returns true only
+    // if fast_child finished while slow was in flight: a level barrier
+    // would hold the fast branch back until slow timed out.
     val (s, dag) = freshDag()
-    s.spark.udf.register("dagspec_sleep_ident",
-      (ms: Int, x: Long) => { Thread.sleep(ms); x })
+    DagSpec.latch = new java.util.concurrent.CountDownLatch(1)
+    DagSpec.awaited = false
+    s.spark.udf.register("dagspec_await", (x: Long) => {
+      DagSpec.awaited = DagSpec.latch.await(60, java.util.concurrent.TimeUnit.SECONDS); x
+    })
+    s.spark.udf.register("dagspec_count_down", (x: Long) => { DagSpec.latch.countDown(); x })
     dag.register(Seq(
       DagTable.source("root", Seq("x" -> "INT64"), Seq(Seq(10))),
-      DagTable.derived("slow", "SELECT dagspec_sleep_ident(10000, x) AS x FROM root"),
+      DagTable.derived("slow", "SELECT dagspec_await(x) AS x FROM root"),
       DagTable.derived("fast", "SELECT x + 1 AS x FROM root"),
-      DagTable.derived("fast_child", "SELECT x * 2 AS x FROM fast")))
+      DagTable.derived("fast_child", "SELECT x * 2 AS x FROM fast"),
+      DagTable.derived("fast_done", "SELECT dagspec_count_down(x) AS x FROM fast_child")))
     val res = dag.run(maxConcurrency = 4)
     assert(res.allSucceeded)
+    assert(DagSpec.awaited, s"slow's await timed out: the fast branch did not run beside it (${res.succeeded})")
     // succeeded is appended in completion order.
-    assert(res.succeeded.indexOf("fast_child") < res.succeeded.indexOf("slow"),
-      s"fast_child waited for the slow sibling: ${res.succeeded}")
+    assert(res.succeeded.indexOf("fast_child") < res.succeeded.indexOf("slow"), res.succeeded)
     assert(s.sql("SELECT x FROM fast_child").collect()(0).getLong(0) == 22L)
     assert(s.sql("SELECT x FROM slow").collect()(0).getLong(0) == 10L)
   }
 
-  test("critical-path priority: the chain head starts before an alphabetically-earlier leaf") {
-    // One slot, two ready roots: "a_leaf" (no dependents) and "z1", the
-    // head of a 3-deep chain. Name-order scheduling would start a_leaf
-    // first; critical-path priority must start z1 (height 3) so the
-    // chain — the DAG's makespan — begins immediately. With one slot,
-    // completion order equals start order.
-    val (_, dag) = freshDag()
-    dag.register(Seq(
-      DagTable.source("a_leaf", Seq("v" -> "INT64"), Seq(Seq(1))),
-      DagTable.source("z1", Seq("v" -> "INT64"), Seq(Seq(2))),
-      DagTable.derived("z2", "SELECT v + 1 AS v FROM z1"),
-      DagTable.derived("z3", "SELECT v + 1 AS v FROM z2")))
-    val res = dag.run(maxConcurrency = 1)
-    assert(res.allSucceeded)
-    assert(res.succeeded.indexOf("z1") < res.succeeded.indexOf("a_leaf"),
-      s"scheduler ignored the critical path: ${res.succeeded}")
-  }
-
   test("a skip chain deeper than one level fully resolves (no stranded tables)") {
     // a fails → b skipped → c skipped: the reference's single-pass skip
-    // (pipeline.rs:327) would strand c with nothing in flight; the
-    // fixpoint propagation must mark both in one run.
+    // (pipeline.rs:327) would strand c with nothing in flight; here a
+    // skip reaches every downstream table in the same run.
     val (_, dag) = freshDag()
     dag.register(Seq(
       DagTable.source("src2", Seq("v" -> "INT64"), Seq(Seq(1))),
@@ -229,6 +219,17 @@ class DagSpec extends SparkSpec {
     assert(res.skipped == Seq("bad_out"))
   }
 
+  test("a view builder that throws a fatal error fails its table and skips its dependents") {
+    val (_, dag) = freshDag()
+    dag.register(Seq(
+      DagTable.view("x", throw new LinkageError("linkage")),
+      DagTable.derived("x_out", "SELECT * FROM x")))
+    val res = dag.run()
+    assert(res.failed == Seq(TableError("x", "linkage")))
+    assert(res.skipped == Seq("x_out"))
+    assert(res.succeeded.isEmpty)
+  }
+
   test("a source with a row of the wrong width fails its table and skips dependents") {
     val (s, dag) = freshDag()
     dag.register(Seq(
@@ -276,4 +277,12 @@ class DagSpec extends SparkSpec {
     assert(dag.getTables.isEmpty)
     assertThrows[Exception](s.sql("SELECT v FROM tmp").collect())
   }
+}
+
+object DagSpec {
+  /** Reached from the slot test's UDFs, which run in executor task
+    * threads of this JVM (local mode).
+    */
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
+  @volatile var awaited = false
 }

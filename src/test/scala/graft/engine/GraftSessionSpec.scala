@@ -116,7 +116,7 @@ class GraftSessionSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     assert(GraftSession.bqType("ARRAY<INT64>") == ArrayType(LongType))
     assert(GraftSession.bqType("bool") == BooleanType)
-    assertThrows[IllegalArgumentException](GraftSession.bqType("WIBBLE"))
+    assertThrows[graft.api.GraftError.InvalidParams](GraftSession.bqType("WIBBLE"))
   }
 
   test("analyzer relation names parse into parts: backticked, dotted, escaped, literal-dot") {

@@ -100,12 +100,7 @@ object Bench {
         (dt, gd)
       }
       val w = warmup.getOrElse(name, 1.0)
-      // Sweep mode (SPARK_GRAFT_BENCH_FAST=1): one timed run per key —
-      // scale sweeps hunt grinders, not ±10% precision, and the min-of-2
-      // protocol doubles a multi-hour tier sweep. Pin runs and the
-      // artifact of record never set this.
-      val fast = sys.env.get("SPARK_GRAFT_BENCH_FAST").contains("1")
-      val runs = if (fast || w < 0.5) 1 else 2
+      val runs = if (w < 0.5) 1 else 2
       var (best, bestGc) = (1 to runs).map(_ => timedRun()).minBy(_._1)
       // Noise guard: a machine-load window can swallow BOTH timed runs.
       // The warmup pass is an independent observation of the same query —

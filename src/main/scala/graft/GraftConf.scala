@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The BigQuery dialect is NOT installed here: the shared session keeps
   * Spark semantics for `split`, `regexp_extract` and friends, and engine
-  * sessions get the dialect from `SessionManager.create`. Deployments
-  * that want it session-wide pass
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * sessions, the only way to get the dialect, install it in
+  * `SessionManager.create`.
   */
 object GraftConf {
 

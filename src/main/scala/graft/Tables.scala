@@ -53,8 +53,4 @@ object Tables {
       }
     } else readParquet(spark, s"$dir/$name.parquet")
   }
-
-  /** Register every table as a temp view (idempotent). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -53,6 +53,12 @@ object GraftError {
       copy(context = Some(ctx(m, s)))
   }
 
+  /** A method the server does not have (reference handler.rs:66
+    * `method_not_found` → -32601); no context absorption.
+    */
+  final case class MethodNotFound(method: String)
+      extends GraftError(-32601, "MethodNotFound", s"Method not found: $method")
+
   /** reference error.rs `SessionNotFound` → -32002; no context absorption. */
   final case class UnknownSession(id: String)
       extends GraftError(-32002, "UnknownSession", s"Session not found: $id")

@@ -234,9 +234,7 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
           Map("name" -> name, "dependencies" -> deps)
         })
 
-    // Matches reference methods.rs:56; the transport turns this exact
-    // shape into a -32601 method-not-found response (handler.rs:66).
-    case other => throw GraftError.InvalidParams(s"Unknown method: $other")
+    case other => throw GraftError.MethodNotFound(other)
   }
 
   private def rootOf(params: Map[String, Any]): String =

@@ -42,9 +42,6 @@ object RpcServer {
         val sessionId = params.get("sessionId").map(_.toString)
         try Json.write(Map("jsonrpc" -> "2.0", "result" -> rpc.dispatch(method, params), "id" -> id))
         catch {
-          case e: GraftError.InvalidParams if e.getMessage.contains("Unknown method") =>
-            // handler.rs:66 special-cases this into method_not_found.
-            Json.write(errorResponse(id, -32601, s"Method not found: $method"))
           case e: GraftError =>
             val withCtx = e.withContext(method, sessionId)
             Json.write(errorResponse(id, withCtx.code, withCtx.getMessage, Some(withCtx.kind)))

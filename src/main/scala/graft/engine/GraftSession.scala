@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-import graft.BQUnitArgRule
+import graft.functions.BQCompat
 
 /** Session-isolated query surface, mirroring the reference's session
   * manager (reference: src/session/manager.rs, rpc methods bq.createSession /
@@ -166,9 +166,8 @@ final class GraftSession private[engine] (
   /** Run SQL against this session's tables. In bigquery mode the text is
     * pushed VERBATIM to BigQuery as a job through the resolver
     * (reference executor dispatch: BigQuery sessions send SQL to
-    * jobs.query, not the local engine — executor/mod.rs); locally,
-    * BigQuery-dialect syntax Spark's parser rejects is rewritten first
-    * (see [[GraftSession.rewriteBqSyntax]]).
+    * jobs.query, not the local engine — executor/mod.rs); locally, the
+    * text is parsed as BigQuery SQL ([[BQCompat.parse]]).
     */
   def sql(q: String): DataFrame = resolver match {
     case bq: BigQueryResolver => bq.query(spark, q)
@@ -200,13 +199,7 @@ final class GraftSession private[engine] (
       run()
   }
 
-  /** Spark SQL over the rewritten text, with BigQuery's bare unit
-    * arguments (`DATE_DIFF(a, b, DAY)`) made literals before analysis —
-    * the rule `GraftExtensions` installs, applied here because engine
-    * sessions are children of a session built without the extension.
-    */
-  private def localSql(q: String): DataFrame =
-    ColumnBridge.sql(spark, BQUnitArgRule.onParsed(spark.sessionState.sqlParser.parsePlan(rewriteBqSyntax(q))))
+  private def localSql(q: String): DataFrame = ColumnBridge.sql(spark, BQCompat.parse(spark, q))
 
   /** Tables and temp views, read from the session catalog (no job). */
   def listTables(): Seq[String] = {
@@ -250,95 +243,6 @@ object GraftSession {
     if (!name.startsWith("`")) name.split('.').toSeq
     else name.stripPrefix("`").stripSuffix("`")
       .split("`\\.`", -1).toSeq.map(_.replace("``", "`"))
-
-  /** BigQuery constructs Spark's parser rejects, rewritten textually:
-    * `FROM UNNEST([1, 2, 3]) AS x` → a subquery exploding an array()
-    * literal (reference: client_test.clj test-bigquery-syntax). Kept
-    * deliberately narrow — bracket literals only inside UNNEST, so
-    * subscripts are untouched — and applied over a LEXED view of the
-    * query: string literals, backtick identifiers and comments are
-    * masked behind placeholder tokens before any pattern runs, so a
-    * literal containing `SAFE_CAST(` or `AS INT64)` survives verbatim
-    * (a raw-text pass would rewrite inside them). Masking also makes UNNEST arrays containing string literals
-    * robust: a `]` inside a quoted element no longer terminates the
-    * bracket match, because the literal is a single opaque token when
-    * the pattern runs.
-    */
-  def rewriteBqSyntax(q: String): String = {
-    val (masked, saved) = maskProtected(q)
-    val unnestAliased = "(?i)UNNEST\\(\\[([^\\]]*)\\]\\)\\s+AS\\s+(\\w+)".r
-    val unnestBare = "(?i)UNNEST\\(\\[([^\\]]*)\\]\\)".r
-    val step0 = unnestAliased.replaceAllIn(masked, m => s"(SELECT explode(array(${m.group(1)})) AS ${m.group(2)})")
-    val step1 = unnestBare.replaceAllIn(step0, m => s"(SELECT explode(array(${m.group(1)})) AS col)")
-    // SAFE_CAST(x AS T) is cast SYNTAX, not a function call, so no
-    // FunctionRegistry builder can see it; Spark's TRY_CAST has the
-    // identical NULL-on-failure contract. BigQuery type names are mapped
-    // to Spark's (INT64→BIGINT etc.) only in cast-tail position — `AS
-    // <type>` immediately followed by `)` — so a column alias that
-    // happens to be named INT64/BOOL/… is left alone.
-    val step2 = "(?i)\\bSAFE_CAST\\s*\\(".r.replaceAllIn(step1, "TRY_CAST(")
-    val typeMap = Seq(
-      "INT64" -> "BIGINT", "FLOAT64" -> "DOUBLE", "BOOL" -> "BOOLEAN",
-      "BYTES" -> "BINARY", "NUMERIC" -> "DECIMAL(38,9)")
-    val rewritten = typeMap.foldLeft(step2) { case (acc, (bq, sp)) =>
-      s"(?i)\\bAS\\s+$bq\\s*\\)".r.replaceAllIn(acc, s"AS $sp)")
-    }
-    unmask(rewritten, saved)
-  }
-
-  /** Lex q into rewritable text with string literals ('…' / "…", both
-    * backslash and doubled-quote escapes), backtick identifiers and
-    * comments (line comments after `--`, and block comments in the
-    * slash-star form) replaced by control-char placeholder tokens
-    * (U+0001 idx U+0002 — cannot appear in the rewrite
-    * patterns or collide with SQL text). Returns the masked string and
-    * the saved tokens for [[unmask]].
-    */
-  private def maskProtected(q: String): (String, IndexedSeq[String]) = {
-    val out = new StringBuilder
-    val saved = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    def push(tok: String): Unit = {
-      out.append('\u0001').append(saved.size).append('\u0002'); saved += tok; ()
-    }
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (c == '\'' || c == '"') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < q.length && !done) {
-          val ch = q.charAt(i)
-          if (ch == '\\' && i + 1 < q.length) i += 2
-          else if (ch == c && i + 1 < q.length && q.charAt(i + 1) == c) i += 2
-          else if (ch == c) { i += 1; done = true }
-          else i += 1
-        }
-        push(q.substring(start, i))
-      } else if (c == '`') {
-        val start = i
-        i += 1
-        while (i < q.length && q.charAt(i) != '`') i += 1
-        if (i < q.length) i += 1
-        push(q.substring(start, i))
-      } else if (c == '-' && i + 1 < q.length && q.charAt(i + 1) == '-') {
-        val start = i
-        while (i < q.length && q.charAt(i) != '\n') i += 1
-        push(q.substring(start, i))
-      } else if (c == '/' && i + 1 < q.length && q.charAt(i + 1) == '*') {
-        val start = i
-        i += 2
-        while (i + 1 < q.length && !(q.charAt(i) == '*' && q.charAt(i + 1) == '/')) i += 1
-        i = math.min(q.length, i + 2)
-        push(q.substring(start, i))
-      } else { out.append(c); i += 1 }
-    }
-    (out.toString, saved.toIndexedSeq)
-  }
-
-  private def unmask(s: String, saved: IndexedSeq[String]): String =
-    "\u0001(\\d+)\u0002".r.replaceAllIn(s,
-      m => java.util.regex.Matcher.quoteReplacement(saved(m.group(1).toInt)))
 
   /** BigQuery type name → Spark type (reference: rpc/types.rs ColumnDef). */
   def bqType(t: String): DataType = t.trim.toUpperCase match {
@@ -397,11 +301,9 @@ final class SessionManager(root: SparkSession) {
   def create(resolver: TableResolver = LocalResolver): GraftSession = {
     val id = UUID.randomUUID().toString
     val child = root.newSession()
-    // Engine sessions speak BigQuery SQL: the full dialect (gap-filling
-    // functions plus the builtin-name overrides like literal SPLIT) goes
-    // into this session's OWN function registry — newSession() isolation
-    // keeps the root session pure Spark semantics.
-    graft.functions.BQCompat.installDialect(child)
+    // Engine sessions speak BigQuery SQL: the dialect goes into this
+    // session's OWN function registry, so the root keeps Spark semantics.
+    BQCompat.install(child)
     val s = new GraftSession(id, child, resolver)
     sessions.put(id, s)
     s

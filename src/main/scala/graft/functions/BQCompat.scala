@@ -3,13 +3,22 @@ package graft.functions
 import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType, TimestampType}
 
-/** BigQuery-dialect function names missing from Spark SQL, registered as
-  * FunctionRegistry aliases that expand to native Catalyst expressions —
-  * zero runtime cost, fully inside whole-stage codegen (never UDFs).
+/** The BigQuery dialect, the one place that decides what "BigQuery SQL"
+  * means in graft: a function table ([[builders]] for names Spark lacks,
+  * [[dialectOverrides]] for Spark builtin names BigQuery defines
+  * differently), [[install]] to register it in a session's own function
+  * registry, and [[parse]] for the syntax no registry entry can reach.
+  * Engine sessions (`graft.engine.SessionManager.create`) are the only
+  * sessions that get it; every other session keeps Spark semantics.
+  *
+  * Every function is a FunctionRegistry alias that expands to native
+  * Catalyst expressions — zero runtime cost, fully inside whole-stage
+  * codegen (never UDFs).
   *
   * Covers the BigQuery functions exercised by the reference's tests
   * (reference: adaptors/clojure/test/bq_runner/olap_test.clj:
@@ -22,32 +31,29 @@ import org.apache.spark.sql.types.{DateType, DoubleType, LongType, TimestampType
   *
   * Unit arguments: BigQuery spells the unit as a bare identifier —
   * `TIMESTAMP_DIFF(a, b, DAY)`. Spark resolves function ARGUMENTS before
-  * the function itself, so a bare `DAY` dies in ResolveReferences before
-  * any builder runs. Sessions built with `spark.sql.extensions=
-  * graft.GraftExtensions` get an injected resolution rule
-  * ([[graft.GraftExtensions]]) that rewrites those identifiers to string
-  * literals; `BQCompat.install`-only sessions use the `'DAY'`
-  * string-literal spelling, which every builder below also accepts.
+  * the function itself, so a bare `DAY` would die in ResolveReferences
+  * before any builder runs; [[parse]] makes those identifiers string
+  * literals first. Every builder also accepts the `'DAY'` spelling.
   */
 object BQCompat {
 
   /** Unit identifiers that may appear as bare keywords in BigQuery
     * date/time function calls.
     */
-  val UnitNames: Set[String] =
+  private val UnitNames: Set[String] =
     Set("MICROSECOND", "MILLISECOND", "SECOND", "MINUTE", "HOUR",
       "DAY", "WEEK", "MONTH", "QUARTER", "YEAR")
 
   /** Where a function's unit argument sits: BigQuery puts it LAST for the
     * *_DIFF family and SECOND for the *_TRUNC family.
     */
-  object UnitPos extends Enumeration { val Last, Second = Value }
+  private object UnitPos extends Enumeration { val Last, Second = Value }
 
   /** Function → unit-argument position. Only that one position is eligible
     * for the bare-identifier → string-literal rewrite; data arguments that
     * happen to be columns named `day`/`month`/… stay columns.
     */
-  val UnitArgFunctions: Map[String, UnitPos.Value] = Map(
+  private val UnitArgFunctions: Map[String, UnitPos.Value] = Map(
     "timestamp_diff" -> UnitPos.Last,
     "date_diff" -> UnitPos.Last,
     "timestamp_trunc" -> UnitPos.Second,
@@ -104,9 +110,7 @@ object BQCompat {
     case _ => false
   }
 
-  /** name → expression builder, shared by the per-session install() path
-    * and the cluster-wide GraftExtensions injectFunction path.
-    */
+  /** name → expression builder for the BigQuery functions Spark lacks. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
 
     "regexp_contains" -> { case Seq(s, r) => RLike(s, r) },
@@ -303,10 +307,9 @@ object BQCompat {
   )
 
   /** Dialect overrides that CHANGE the semantics of a Spark builtin name
-    * (not just fill a gap). Kept out of [[builders]] so plain `install`
-    * never silently alters Spark-semantics SQL running in the same
-    * session — only BigQuery-dialect sessions ([[installDialect]],
-    * GraftSession, GraftExtensions clusters) opt in.
+    * (not just fill a gap). Listed apart from [[builders]] because code
+    * that runs inside an engine session must not reach these names by
+    * string (BQCompatShadowSpec guards it); [[install]] registers both.
     */
   val dialectOverrides: Seq[(String, Seq[Expression] => Expression)] = Seq(
 
@@ -341,22 +344,148 @@ object BQCompat {
       case Seq(s, r, idx) => RegExpExtract(s, r, idx)
     })
 
+  /** Register the whole dialect, [[builders]] and [[dialectOverrides]],
+    * in `spark`'s own function registry. Only engine sessions call this:
+    * the overrides change what Spark builtin names mean.
+    */
   def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
+    (builders ++ dialectOverrides).foreach { case (name, b) =>
       reg.createOrReplaceTempFunction(name, b, "internal")
     }
   }
 
-  /** Full BigQuery dialect: gap-filling functions PLUS the builtin
-    * overrides. Use on sessions that speak BigQuery SQL (GraftSession);
-    * never on a session that also runs Spark-semantics SQL.
+  /** Parse BigQuery SQL into an unresolved plan for `spark`: the text
+    * rewrite ([[rewriteBqSyntax]]) first, for syntax Spark's parser
+    * rejects, then bare unit arguments made string literals
+    * ([[unitArgsToLiterals]]).
     */
-  def installDialect(spark: SparkSession): Unit = {
-    install(spark)
-    val reg = spark.sessionState.functionRegistry
-    dialectOverrides.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "internal")
+  def parse(spark: SparkSession, sql: String): LogicalPlan =
+    unitArgsToLiterals(spark.sessionState.sqlParser.parsePlan(rewriteBqSyntax(sql)))
+
+  /** BigQuery constructs Spark's parser rejects, rewritten textually:
+    * `FROM UNNEST([1, 2, 3]) AS x` → a subquery exploding an array()
+    * literal (reference: client_test.clj test-bigquery-syntax). Kept
+    * deliberately narrow — bracket literals only inside UNNEST, so
+    * subscripts are untouched — and applied over a LEXED view of the
+    * query: string literals, backtick identifiers and comments are
+    * masked behind placeholder tokens before any pattern runs, so a
+    * literal containing `SAFE_CAST(` or `AS INT64)` survives verbatim
+    * (a raw-text pass would rewrite inside them). Masking also makes UNNEST arrays containing string literals
+    * robust: a `]` inside a quoted element no longer terminates the
+    * bracket match, because the literal is a single opaque token when
+    * the pattern runs.
+    */
+  def rewriteBqSyntax(q: String): String = {
+    val (masked, saved) = maskProtected(q)
+    val unnestAliased = "(?i)UNNEST\\(\\[([^\\]]*)\\]\\)\\s+AS\\s+(\\w+)".r
+    val unnestBare = "(?i)UNNEST\\(\\[([^\\]]*)\\]\\)".r
+    val step0 = unnestAliased.replaceAllIn(masked, m => s"(SELECT explode(array(${m.group(1)})) AS ${m.group(2)})")
+    val step1 = unnestBare.replaceAllIn(step0, m => s"(SELECT explode(array(${m.group(1)})) AS col)")
+    // SAFE_CAST(x AS T) is cast SYNTAX, not a function call, so no
+    // FunctionRegistry builder can see it; Spark's TRY_CAST has the
+    // identical NULL-on-failure contract. BigQuery type names are mapped
+    // to Spark's (INT64→BIGINT etc.) only in cast-tail position — `AS
+    // <type>` immediately followed by `)` — so a column alias that
+    // happens to be named INT64/BOOL/… is left alone.
+    val step2 = "(?i)\\bSAFE_CAST\\s*\\(".r.replaceAllIn(step1, "TRY_CAST(")
+    val typeMap = Seq(
+      "INT64" -> "BIGINT", "FLOAT64" -> "DOUBLE", "BOOL" -> "BOOLEAN",
+      "BYTES" -> "BINARY", "NUMERIC" -> "DECIMAL(38,9)")
+    val rewritten = typeMap.foldLeft(step2) { case (acc, (bq, sp)) =>
+      s"(?i)\\bAS\\s+$bq\\s*\\)".r.replaceAllIn(acc, s"AS $sp)")
     }
+    unmask(rewritten, saved)
+  }
+
+  /** Lex q into rewritable text with string literals ('…' / "…", both
+    * backslash and doubled-quote escapes), backtick identifiers and
+    * comments (line comments after `--`, and block comments in the
+    * slash-star form) replaced by control-char placeholder tokens
+    * (U+0001 idx U+0002 — cannot appear in the rewrite
+    * patterns or collide with SQL text). Returns the masked string and
+    * the saved tokens for [[unmask]].
+    */
+  private def maskProtected(q: String): (String, IndexedSeq[String]) = {
+    val out = new StringBuilder
+    val saved = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    def push(tok: String): Unit = {
+      out.append('\u0001').append(saved.size).append('\u0002'); saved += tok; ()
+    }
+    while (i < q.length) {
+      val c = q.charAt(i)
+      if (c == '\'' || c == '"') {
+        val start = i
+        i += 1
+        var done = false
+        while (i < q.length && !done) {
+          val ch = q.charAt(i)
+          if (ch == '\\' && i + 1 < q.length) i += 2
+          else if (ch == c && i + 1 < q.length && q.charAt(i + 1) == c) i += 2
+          else if (ch == c) { i += 1; done = true }
+          else i += 1
+        }
+        push(q.substring(start, i))
+      } else if (c == '`') {
+        val start = i
+        i += 1
+        while (i < q.length && q.charAt(i) != '`') i += 1
+        if (i < q.length) i += 1
+        push(q.substring(start, i))
+      } else if (c == '-' && i + 1 < q.length && q.charAt(i + 1) == '-') {
+        val start = i
+        while (i < q.length && q.charAt(i) != '\n') i += 1
+        push(q.substring(start, i))
+      } else if (c == '/' && i + 1 < q.length && q.charAt(i + 1) == '*') {
+        val start = i
+        i += 2
+        while (i + 1 < q.length && !(q.charAt(i) == '*' && q.charAt(i + 1) == '/')) i += 1
+        i = math.min(q.length, i + 2)
+        push(q.substring(start, i))
+      } else { out.append(c); i += 1 }
+    }
+    (out.toString, saved.toIndexedSeq)
+  }
+
+  private def unmask(s: String, saved: IndexedSeq[String]): String =
+    "\u0001(\\d+)\u0002".r.replaceAllIn(s,
+      m => java.util.regex.Matcher.quoteReplacement(saved(m.group(1).toInt)))
+
+
+  /** Rewrites BigQuery's bare unit identifiers — `TIMESTAMP_DIFF(a, b,
+    * DAY)` — to string literals. Scoped to the known unit-taking
+    * functions, known unit names, AND the unit argument position of each
+    * function (last for the *_DIFF family, second for the *_TRUNC
+    * family), so a real column named `day` used as a DATA argument —
+    * e.g. `TIMESTAMP_DIFF(day, other_ts, HOUR)` — is untouched.
+    */
+  private val unitArgs: PartialFunction[Expression, Expression] = {
+    case f: UnresolvedFunction
+        if f.nameParts.length == 1 &&
+          UnitArgFunctions.contains(f.nameParts.head.toLowerCase(Locale.ROOT)) =>
+      val unitIdx = UnitArgFunctions(f.nameParts.head.toLowerCase(Locale.ROOT)) match {
+        case UnitPos.Last => f.arguments.length - 1
+        case UnitPos.Second => 1
+      }
+      val rewritten = f.arguments.zipWithIndex.map {
+        case (a: UnresolvedAttribute, i)
+            if i == unitIdx && a.nameParts.length == 1 &&
+              UnitNames.contains(a.name.toUpperCase(Locale.ROOT)) =>
+          Literal(a.name.toUpperCase(Locale.ROOT))
+        case (other, _) => other
+      }
+      f.copy(arguments = rewritten)
+  }
+
+  /** [[unitArgs]] over a freshly parsed plan, before any analysis,
+    * including subquery plans and CTE bodies.
+    */
+  private def unitArgsToLiterals(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case w: UnresolvedWith =>
+      w.copy(cteRelations = w.cteRelations.map { case (n, r, d) =>
+        (n, unitArgsToLiterals(r).asInstanceOf[SubqueryAlias], d)
+      })
+    case p => p.transformExpressions(unitArgs)
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.{BoundedTopK, ColumnBridge, CosineSimilarity, DamerauLevenshtein, DotProduct, HilbertIndex, IntersectCountSortedLong, JaccardSimilarity, JaccardSortedLong, JaroWinklerSim, SignBitHamming}
 
-/** Column-level entry points + SQL registration for the native codegen
-  * kernels defined in org.apache.spark.sql.graftbridge.
+/** Column-level entry points for the native codegen kernels defined in
+  * org.apache.spark.sql.graftbridge.
   */
 object GraftFunctions {
 
@@ -98,7 +98,7 @@ object GraftFunctions {
   /** Registry-proof REGEX split: builds Catalyst's StringSplit node
     * directly, so a session whose function registry overrides SPLIT
     * with literal-delimiter (BigQuery) semantics — every engine session
-    * via BQCompat.installDialect — cannot change its meaning.
+    * via BQCompat.install — cannot change its meaning.
     * `functions.split` resolves BY NAME through the session registry at
     * analysis time, which is exactly the hole this closes (BPE
     * training inside a DAG engine session once silently learned zero
@@ -109,11 +109,4 @@ object GraftFunctions {
       ColumnBridge.expression(str),
       org.apache.spark.sql.catalyst.expressions.Literal(pattern),
       org.apache.spark.sql.catalyst.expressions.Literal(limit)))
-
-  /** Expose to spark.sql as COSINE_SIM / JACCARD_SIM. */
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim", { case Seq(a, b) => CosineSimilarity(a, b) }, "internal")
-    reg.createOrReplaceTempFunction("jaccard_sim", { case Seq(a, b) => JaccardSimilarity(a, b) }, "internal")
-  }
 }

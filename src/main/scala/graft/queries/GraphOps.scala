@@ -24,10 +24,6 @@ object GraphOps {
   /** (src, dst, w): shipment counts between supplier and customer
     * nations — joins are all key-equi and the two nation dims broadcast.
     */
-  /** Exposed for the scratch profiler only. */
-  private[graft] def tradeEdgesForProfiling(s: SparkSession, dir: String): DataFrame =
-    tradeEdges(s, dir)
-
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
     val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")

@@ -89,18 +89,6 @@ object LayoutOps {
     nParts
   }
 
-  /** Per-file bounding-box area over (x, y) — the direct measure of how
-    * prunable a layout is for box predicates (smaller = fewer files
-    * overlap any query box). Used by the layout spec to prove the curve
-    * beats a lexicographic sort on the second dimension.
-    */
-  def fileBoxArea(s: SparkSession, path: String, xCol: String, yCol: String): DataFrame =
-    s.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(
-        ((max(xCol) - min(xCol) + 1) * (max(yCol) - min(yCol) + 1)).as("box_area"),
-        count(lit(1)).as("rows"))
-
   val defs: Map[String, QDef] = Map(
 
     // The z-value computation itself, oracle-checked bit-for-bit: both

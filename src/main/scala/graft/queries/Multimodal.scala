@@ -233,18 +233,6 @@ object Multimodal {
       case None => AudioMeta(id, "unknown", -1, -1, -1, -1L, -1L)
     }
 
-  /** Distributed audio-metadata extraction: same per-partition batch
-    * shape as [[imageMeta]], with the RIFF walker in the inner loop.
-    */
-  def audioMeta(s: SparkSession, audio: DataFrame): DataFrame = {
-    import s.implicits._
-    audio
-      .select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => decodeWav(id, payload) })
-      .toDF()
-  }
-
   final case class MediaFrames(
       doc_id: Long, mime: String, n_frames: Long,
       frame_lens: Seq[Long], thumb: Array[Byte])

@@ -115,7 +115,7 @@ object PipelineE2E2 {
 
   /** Every derived-stage SQL this operator registers, in dependency
     * order. Exposed for BQCompatShadowSpec: these strings run inside a
-    * DIALECT session (GraftSession installs BQCompat.dialectOverrides),
+    * DIALECT session (engine sessions install BQCompat.dialectOverrides),
     * so any call to an overridden builtin name must be vetted for
     * identical semantics under both registries.
     */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.engine.SessionManager
 
 /** Round-3 relational additions: BigQuery-dialect scalar coverage through
   * the SQL surface, aggregate variants (COUNTIF/BOOL/BIT/ARRAY_AGG),
@@ -18,6 +19,16 @@ object Relational4 {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
+  /** Run BigQuery SQL over `tables` the way the server does: in a new
+    * engine session, which holds the dialect in its own registry, so the
+    * shared session keeps Spark semantics for the keys that run after.
+    */
+  private def bqSql(s: SparkSession, dir: String, tables: String*)(sql: String): DataFrame = {
+    val gs = new SessionManager(s).create()
+    tables.foreach(n => t(gs.spark, dir, n).createOrReplaceTempView(n))
+    gs.sql(sql)
+  }
+
   val defs: Map[String, QDef] = Map(
 
     // BigQuery dialect scalars end-to-end THROUGH SQL (not the DataFrame
@@ -26,14 +37,8 @@ object Relational4 {
     // oracle verification. The DuckDB side spells the same semantics with
     // portable arithmetic (BigQuery WEEK = Sunday-start boundary count).
     "q_bq_datetime" -> QDef(
-      (s0, dir) => {
-        // Child session: the dialect functions stay out of the shared
-        // session's registry (queries later in the same run may rely on
-        // Spark-builtin semantics for overlapping names).
-        val s = s0.newSession()
-        graft.functions.BQCompat.install(s)
-        t(s, dir, "orders").createOrReplaceTempView("orders")
-        s.sql(
+      (s, dir) =>
+        bqSql(s, dir, "orders")(
           """SELECT o_orderkey,
             |  DATE_DIFF(CAST(o_orderdate AS DATE), DATE '1995-06-15', 'WEEK') AS wk,
             |  DATE_DIFF(CAST(o_orderdate AS DATE), DATE '1995-06-15', 'QUARTER') AS qtr,
@@ -41,8 +46,7 @@ object Relational4 {
             |  TIMESTAMP_DIFF(o_orderdate, TIMESTAMP '1995-06-15 00:00:00', 'HOUR') AS hrs,
             |  ROUND(SAFE_DIVIDE(o_totalprice * 4.0, CAST(o_orderkey % 3 AS DOUBLE)), 2) AS sdiv,
             |  FORMAT_DATE('%Y-%m-%d', CAST(o_orderdate AS DATE)) AS od
-            |FROM orders ORDER BY o_orderkey""".stripMargin)
-      },
+            |FROM orders ORDER BY o_orderkey""".stripMargin),
       """SELECT o_orderkey,
         |  ((CAST(o_orderdate AS DATE) - DATE '1970-01-01' + 4) // 7)
         |    - ((DATE '1995-06-15' - DATE '1970-01-01' + 4) // 7) AS wk,
@@ -268,14 +272,8 @@ object Relational4 {
     // ARRAY_REVERSE + ARRAY_LENGTH — all resolved to native codegen'd
     // Catalyst expressions by BQCompat.
     "q_bq_strings" -> QDef(
-      (s0, dir) => {
-        // Child session + installDialect: SPLIT/REGEXP_EXTRACT here have
-        // BigQuery semantics, which must never leak into the shared
-        // session where Spark-semantics SQL also runs.
-        val s = s0.newSession()
-        graft.functions.BQCompat.installDialect(s)
-        t(s, dir, "part").createOrReplaceTempView("part")
-        s.sql(
+      (s, dir) =>
+        bqSql(s, dir, "part")(
           """SELECT p_partkey,
             |  SPLIT(p_name, ' ')[0] AS first_tok,
             |  CAST(STRPOS(p_name, 'e') AS BIGINT) AS pos_e,
@@ -283,8 +281,7 @@ object Relational4 {
             |  STARTS_WITH(p_name, 'small') AS starts_small,
             |  REGEXP_EXTRACT(p_name, '(red|green|blue)') AS color,
             |  CAST(ARRAY_LENGTH(ARRAY_REVERSE(SPLIT(p_name, ' '))) AS BIGINT) AS n_toks
-            |FROM part ORDER BY p_partkey""".stripMargin)
-      },
+            |FROM part ORDER BY p_partkey""".stripMargin),
       """SELECT p_partkey,
         |  string_split(p_name, ' ')[1] AS first_tok,
         |  CAST(strpos(p_name, 'e') AS BIGINT) AS pos_e,
@@ -297,18 +294,14 @@ object Relational4 {
 
     // FORMAT_TIMESTAMP / PARSE_TIMESTAMP round-trip stability.
     "q_bq_timestamp_fmt" -> QDef(
-      (s0, dir) => {
-        val s = s0.newSession()
-        graft.functions.BQCompat.install(s)
-        t(s, dir, "orders").createOrReplaceTempView("orders")
-        s.sql(
+      (s, dir) =>
+        bqSql(s, dir, "orders")(
           """SELECT o_orderkey,
             |  FORMAT_TIMESTAMP('%Y-%m-%d %H:%M:%S', o_orderdate) AS ts_str,
             |  FORMAT_TIMESTAMP('%Y-%m-%d',
             |    PARSE_TIMESTAMP('%Y-%m-%d %H:%M:%S',
             |      FORMAT_TIMESTAMP('%Y-%m-%d %H:%M:%S', o_orderdate))) AS rt
-            |FROM orders ORDER BY o_orderkey""".stripMargin)
-      },
+            |FROM orders ORDER BY o_orderkey""".stripMargin),
       """SELECT o_orderkey,
         |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS ts_str,
         |  strftime(strptime(strftime(o_orderdate, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d') AS rt
@@ -318,19 +311,15 @@ object Relational4 {
     // extraction, interval arithmetic, JSON scalar extraction, SAFE_
     // arithmetic and integral DIV — one oracle pass over events.
     "q_bq_safe_funcs" -> QDef(
-      (s0, dir) => {
-        val s = s0.newSession()
-        graft.functions.BQCompat.install(s)
-        t(s, dir, "events").createOrReplaceTempView("events")
-        s.sql(
+      (s, dir) =>
+        bqSql(s, dir, "events")(
           """SELECT event_id,
             |  UNIX_MILLIS(ts) AS ts_ms,
             |  UNIX_MICROS(TIMESTAMP_ADD(ts, INTERVAL 90 MINUTE)) AS plus90m_us,
             |  CAST(JSON_EXTRACT_SCALAR(props, '$.k') AS BIGINT) AS k,
             |  DIV(CAST(JSON_VALUE(props, '$.k') AS BIGINT), 7) AS k_div7,
             |  SAFE_ADD(event_id, 1) AS next_id
-            |FROM events ORDER BY event_id""".stripMargin)
-      },
+            |FROM events ORDER BY event_id""".stripMargin),
       """SELECT event_id,
         |  epoch_ms(ts) AS ts_ms,
         |  epoch_us(ts + INTERVAL 90 MINUTE) AS plus90m_us,

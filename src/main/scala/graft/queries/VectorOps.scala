@@ -48,9 +48,6 @@ object VectorOps {
       (0 until planes).map(_ => Seq.fill(dim)(rnd.nextDouble() - 0.5))
     }
 
-  def hyperplaneBucket(v: Column, planes: Int, table: Int, dim: Int): Column =
-    bucketOf(v, typedlit(hyperplaneSets(planes, tables = table + 1, dim).last))
-
   /** Sign-bit bucket of `v` against one table's plane array (array of
     * plane vectors): Σ_p [proj_p > 0]·2^p, computed as a Horner fold
     * over the REVERSED plane list (acc·2 + bit — no per-row pow) — a

@@ -159,11 +159,6 @@ object StreamOps {
     * snapshot sink); these thin aliases keep the public read/maintenance
     * surface where the streaming docs introduced it.
     */
-  private[streaming] def pruneSnapshots(
-      spark: org.apache.spark.sql.SparkSession, tableDir: String,
-      batchId: Long, retainSnapshots: Int): Unit =
-    SnapshotStore.prune(spark, tableDir, batchId, retainSnapshots)
-
   private[streaming] def fsOf(spark: org.apache.spark.sql.SparkSession, tableDir: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) =
     SnapshotStore.fsOf(spark, tableDir)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.{GraftSession, SessionManager}
-import graft.functions.BQCompat
 
 /** Replays the reference's OLAP test suite VERBATIM — same table schemas,
   * same inserted rows, same SQL text, same expected results
@@ -11,11 +10,7 @@ import graft.functions.BQCompat
   */
 class ReferenceParitySpec extends SparkSpec {
 
-  private def fresh(): GraftSession = {
-    val s = new SessionManager(spark).create()
-    BQCompat.install(s.spark)
-    s
-  }
+  private def fresh(): GraftSession = new SessionManager(spark).create()
 
   private def rows(s: GraftSession, sql: String): Seq[Seq[Any]] =
     s.sql(sql).collect().toSeq.map(_.toSeq)
@@ -176,8 +171,7 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("bare BigQuery date/time units resolve in engine sessions; a day column stays a column") {
-    // No BQCompat.install: an engine session's own dialect must suffice.
-    val s = new SessionManager(spark).create()
+    val s = fresh()
     assert(rows(s, "SELECT DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', DAY) AS d, " +
       "DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', WEEK) AS w, " +
       "DATE_DIFF(DATE '2024-03-01', DATE '2024-01-01', MONTH) AS m") == Seq(Seq(60L, 8L, 2L)))
@@ -192,6 +186,12 @@ class ReferenceParitySpec extends SparkSpec {
     assert(rows(s, "WITH c AS (SELECT DATE_DIFF(DATE '2024-03-01', day, WEEK) AS w FROM visits) " +
       "SELECT w, (SELECT DATE_DIFF(DATE '2024-03-01', day, DAY) FROM visits) FROM c") ==
       Seq(Seq(4L, 30L)))
+    assert(rows(s, "SELECT TIMESTAMP_DIFF(TIMESTAMP '2024-01-02 03:00:00', TIMESTAMP '2024-01-01 00:00:00', HOUR), " +
+      "CAST(DATE_TRUNC(DATE '2024-06-15', MONTH) AS STRING)") == Seq(Seq(27L, "2024-06-01")))
+    assert(rows(s, "SELECT day FROM VALUES (7) t(day)") == Seq(Seq(7)))
+    // A `day` column as TIMESTAMP_DIFF's first (data) argument is read.
+    assert(rows(s, "SELECT TIMESTAMP_DIFF(day, TIMESTAMP '2024-01-01 00:00:00', HOUR) " +
+      "FROM VALUES (TIMESTAMP '2024-01-01 05:30:00') t(day)") == Seq(Seq(5L)))
   }
 
   test("olap_test.clj test-string-functions + test-regexp-functions") {

@@ -49,6 +49,17 @@ class RpcServerSpec extends SparkSpec {
     assert(resp("id") == "abc-123")
   }
 
+  test("a bad value that reads 'Unknown method' is -32600, not method-not-found") {
+    val s = asMap(rpc.dispatch("bq.createSession"))("sessionId").toString
+    rpc.dispatch("bq.createTable", Map("sessionId" -> s, "tableName" -> "days",
+      "schema" -> Seq(Map("name" -> "d", "type" -> "DATE"))))
+    val resp = send(s"""{"jsonrpc":"2.0","method":"bq.insert","params":{"sessionId":"$s","tableName":"days","rows":[["Unknown method"]]},"id":4}""")
+    assert(errOf(resp)("code") == -32600L)
+    assert(errOf(resp)("message") == "Invalid request: Invalid DATE value: 'Unknown method'")
+    assert(asMap(errOf(resp)("data"))("kind") == "InvalidParams")
+    rpc.dispatch("bq.destroySession", Map("sessionId" -> s))
+  }
+
   test("success envelope echoes numeric ids and carries no error key") {
     val resp = send("""{"jsonrpc":"2.0","method":"bq.ping","id":42}""")
     assert(resp("id") == 42L)

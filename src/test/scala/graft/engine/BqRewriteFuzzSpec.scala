@@ -5,8 +5,10 @@ import org.scalacheck.Prop.forAll
 import org.scalacheck.{Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.BQCompat
+
 /** Property-fuzz of the BigQuery-dialect textual rewriter (r8 verdict
-  * task 7): [[GraftSession.rewriteBqSyntax]] was spec-tested on curated
+  * task 7): [[BQCompat.rewriteBqSyntax]] was spec-tested on curated
   * cases; these properties fire 1000+ randomized queries whose string
   * literals, backtick identifiers and comments carry ADVERSARIAL
   * payloads — `SAFE_CAST(`, `UNNEST([…])`, stray `]`, `AS INT64)`,
@@ -98,7 +100,7 @@ class BqRewriteFuzzSpec extends AnyFunSuite {
 
   test("Spark-dialect queries survive the rewrite byte-identical (1000 adversarial cases)") {
     check(forAll(sparkDialectQuery) { q =>
-      GraftSession.rewriteBqSyntax(q) == q
+      BQCompat.rewriteBqSyntax(q) == q
     })
   }
 
@@ -113,7 +115,7 @@ class BqRewriteFuzzSpec extends AnyFunSuite {
     check(forAll(cases) { case (lit, bq, sp, cmt) =>
       val q = s"SELECT SAFE_CAST($lit AS $bq) AS v $cmt FROM t"
       val expected = s"SELECT TRY_CAST($lit AS $sp) AS v $cmt FROM t"
-      GraftSession.rewriteBqSyntax(q) == expected
+      BQCompat.rewriteBqSyntax(q) == expected
     })
   }
 
@@ -127,7 +129,7 @@ class BqRewriteFuzzSpec extends AnyFunSuite {
       val (tail, alias) = if (aliased) (" AS x", "x") else ("", "col")
       val q = s"SELECT * FROM UNNEST([$arr])$tail"
       val expected = s"SELECT * FROM (SELECT explode(array($arr)) AS $alias)"
-      GraftSession.rewriteBqSyntax(q) == expected
+      BQCompat.rewriteBqSyntax(q) == expected
     })
   }
 }

@@ -1,6 +1,7 @@
 package graft.engine
 
 import graft.SparkSpec
+import graft.functions.BQCompat
 
 class GraftSessionSpec extends SparkSpec {
 
@@ -75,18 +76,18 @@ class GraftSessionSpec extends SparkSpec {
     assert(r.getLong(0) == 12L && r.isNullAt(1))
     assert(r.getDouble(2) == 1.5 && r.getBoolean(3))
     // the rewrite is textual — verify it leaves ordinary SQL alone
-    assert(GraftSession.rewriteBqSyntax("SELECT broadcast FROM t") ==
+    assert(BQCompat.rewriteBqSyntax("SELECT broadcast FROM t") ==
       "SELECT broadcast FROM t")
     // type names map only in cast-tail position (`AS INT64)`): a column
     // alias that happens to be named INT64/BOOL survives the pass.
-    assert(GraftSession.rewriteBqSyntax("SELECT a AS INT64, b AS BOOL FROM t") ==
+    assert(BQCompat.rewriteBqSyntax("SELECT a AS INT64, b AS BOOL FROM t") ==
       "SELECT a AS INT64, b AS BOOL FROM t")
-    assert(GraftSession.rewriteBqSyntax("SELECT CAST(a AS INT64) FROM t") ==
+    assert(BQCompat.rewriteBqSyntax("SELECT CAST(a AS INT64) FROM t") ==
       "SELECT CAST(a AS BIGINT) FROM t")
   }
 
   test("rewrite patterns never fire inside literals, identifiers or comments") {
-    import GraftSession.rewriteBqSyntax
+    import BQCompat.rewriteBqSyntax
     // String literals survive verbatim — including rewrite-pattern text
     // (the round-5 raw-text pass rewrote these; the lexed pass must not).
     assert(rewriteBqSyntax("SELECT 'SAFE_CAST(x AS INT64)' AS s FROM t") ==

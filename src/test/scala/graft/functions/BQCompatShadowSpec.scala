@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Override-shadowing sweep (§2 25ji-class hardening, r12 verdict task
   * 8): BQCompat.dialectOverrides CHANGES the semantics of Spark builtin
   * names (`split` regex→literal delimiter, `regexp_extract` ''→NULL) for
-  * any SQL string analyzed inside a dialect session — GraftSession
-  * children, GraftExtensions clusters. The r12 bug class was operator
+  * any SQL string analyzed inside a dialect session (every engine
+  * session). The r12 bug class was operator
   * SQL written for Spark semantics silently picking up the override when
   * run through the engine. This spec mechanically walks every
   * DAG-registered operator SQL string in src/main (the strings that DO

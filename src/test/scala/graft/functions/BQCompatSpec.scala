@@ -1,13 +1,15 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.engine.SessionManager
 
+/** The dialect as engine sessions run it: every query goes through one
+  * engine session's `sql`, which parses BigQuery SQL and resolves names
+  * in the session's own registry. The shared session is never changed.
+  */
 class BQCompatSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    BQCompat.install(spark)
-  }
+  private lazy val bq = new SessionManager(spark).create()
 
   test("FARM_FINGERPRINT matches the independent FarmHash implementation bit-for-bit") {
     // Guava ships farmHashFingerprint64 — the same published algorithm,
@@ -26,10 +28,11 @@ class BQCompatSpec extends SparkSpec {
     }
     // SQL surface: string input hashes its UTF-8 bytes (incl. multibyte)
     val s = "café 日本語"
-    val viaSql = spark.sql(s"SELECT FARM_FINGERPRINT('$s') h").collect()(0).getLong(0)
+    val viaSql = bq.sql(s"SELECT FARM_FINGERPRINT('$s') h").collect()(0).getLong(0)
     assert(viaSql == guava.hashBytes(s.getBytes("UTF-8")).asLong())
     // codegen path over a column (not constant-folded)
-    import spark.implicits._
+    val es = bq.spark
+    import es.implicits._
     val fromCol = Seq("a", "bb", s).toDF("t")
       .selectExpr("FARM_FINGERPRINT(t) h").collect().map(_.getLong(0)).toSeq
     assert(fromCol == Seq("a", "bb", s).map(x =>
@@ -37,7 +40,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("TIMESTAMP_ADD/SUB with interval literals") {
-    val r = spark.sql(
+    val r = bq.sql(
       """SELECT TIMESTAMP_ADD(TIMESTAMP '2024-01-01 00:00:00', INTERVAL 90 MINUTE) a,
         |       TIMESTAMP_SUB(TIMESTAMP '2024-01-01 00:00:00', INTERVAL 1 DAY) b""".stripMargin).collect()(0)
     assert(r.getTimestamp(0).toString.startsWith("2024-01-01 01:30:00"))
@@ -45,7 +48,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("UNIX_SECONDS/MILLIS/MICROS extract the epoch") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT UNIX_SECONDS(TIMESTAMP '1970-01-01 00:01:00+00') s, " +
         "UNIX_MILLIS(TIMESTAMP '1970-01-01 00:01:00+00') ms, " +
         "UNIX_MICROS(TIMESTAMP '1970-01-01 00:01:00+00') us").collect()(0)
@@ -53,7 +56,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("JSON_EXTRACT_SCALAR / JSON_VALUE return unquoted scalars, NULL on non-scalars") {
-    val r = spark.sql(
+    val r = bq.sql(
       """SELECT JSON_EXTRACT_SCALAR('{"a": {"b": 7}, "s": "x"}', '$.a.b') a,
         |       JSON_VALUE('{"a": {"b": 7}, "s": "x"}', '$.s') b,
         |       JSON_EXTRACT_SCALAR('{"a": {"b": 7}}', '$.a') c,
@@ -63,13 +66,13 @@ class BQCompatSpec extends SparkSpec {
     // we (the jsonScalar wrapper nulls results whose text opens '{'/'[').
     assert(r.isNullAt(2))
     assert(r.getString(3) == "plain")
-    val arr = spark.sql(
+    val arr = bq.sql(
       """SELECT JSON_EXTRACT_SCALAR('{"a": [1, 2]}', '$.a') x""").collect()(0)
     assert(arr.isNullAt(0))
   }
 
   test("SAFE_ADD/SUBTRACT/MULTIPLY go NULL on overflow, DIV divides integrally") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT SAFE_ADD(9223372036854775807, 1) a, SAFE_MULTIPLY(9223372036854775807, 2) b, " +
         "SAFE_SUBTRACT(10, 3) c, DIV(7, 2) d").collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1))
@@ -78,57 +81,57 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("APPROX_TOP_COUNT reshapes to value/count structs; APPROX_QUANTILES spans min..max") {
-    import spark.implicits._
+    val es = bq.spark
+    import es.implicits._
     Seq("a", "a", "a", "b", "b", "c").toDF("s").createOrReplaceTempView("letters")
-    val top = spark.sql(
+    val top = bq.sql(
       "SELECT APPROX_TOP_COUNT(s, 2) t FROM letters").collect()(0)
       .getSeq[org.apache.spark.sql.Row](0)
     assert(top.map(r => (r.getString(0), r.get(1).toString.toLong)) ==
       Seq(("a", 3L), ("b", 2L)))
     assert(top.head.schema.fieldNames.toSeq == Seq("value", "count"))
     // int input -> int quantiles (percentile sketch preserves input type)
-    val q = spark.sql(
+    val q = bq.sql(
       "SELECT APPROX_QUANTILES(x, 4) q FROM (SELECT explode(sequence(1, 100)) x)")
       .collect()(0).getSeq[Int](0)
     assert(q.length == 5 && q.head == 1 && q.last == 100)
     assert(q(2) >= 40 && q(2) <= 60) // median of 1..100
     intercept[Exception] {
-      spark.sql("SELECT APPROX_QUANTILES(x, 0) FROM (SELECT 1 x)").collect()
+      bq.sql("SELECT APPROX_QUANTILES(x, 0) FROM (SELECT 1 x)").collect()
     }
   }
 
   test("REGEXP_CONTAINS behaves like the BigQuery function") {
-    val r = spark.sql("SELECT REGEXP_CONTAINS('hello123', '[0-9]+') a, REGEXP_CONTAINS('hello', '[0-9]+') b").collect()(0)
+    val r = bq.sql("SELECT REGEXP_CONTAINS('hello123', '[0-9]+') a, REGEXP_CONTAINS('hello', '[0-9]+') b").collect()(0)
     assert(r.getBoolean(0) && !r.getBoolean(1))
   }
 
   test("SAFE_DIVIDE returns NULL on zero divisor") {
-    val r = spark.sql("SELECT SAFE_DIVIDE(10, 4) a, SAFE_DIVIDE(1, 0) b").collect()(0)
+    val r = bq.sql("SELECT SAFE_DIVIDE(10, 4) a, SAFE_DIVIDE(1, 0) b").collect()(0)
     assert(r.getDouble(0) == 2.5)
     assert(r.isNullAt(1))
   }
 
   test("FORMAT_DATE with BigQuery %-patterns") {
-    val r = spark.sql("SELECT FORMAT_DATE('%Y-%m-%d', DATE '2024-06-15') d").collect()(0)
+    val r = bq.sql("SELECT FORMAT_DATE('%Y-%m-%d', DATE '2024-06-15') d").collect()(0)
     assert(r.getString(0) == "2024-06-15")
   }
 
   test("PARSE_DATE with BigQuery %-patterns") {
-    val r = spark.sql("SELECT PARSE_DATE('%Y-%m-%d', '2024-01-25') d").collect()(0)
+    val r = bq.sql("SELECT PARSE_DATE('%Y-%m-%d', '2024-01-25') d").collect()(0)
     assert(r.getDate(0).toString == "2024-01-25")
   }
 
   test("FARM_FINGERPRINT is deterministic and spreads") {
-    val r = spark.sql("SELECT FARM_FINGERPRINT('abc') a, FARM_FINGERPRINT('abc') b, FARM_FINGERPRINT('abd') c").collect()(0)
+    val r = bq.sql("SELECT FARM_FINGERPRINT('abc') a, FARM_FINGERPRINT('abc') b, FARM_FINGERPRINT('abd') c").collect()(0)
     assert(r.getLong(0) == r.getLong(1))
     assert(r.getLong(0) != r.getLong(2))
   }
 
-  // install()-only sessions use the 'UNIT' string-literal spelling; the
-  // bare-identifier BigQuery syntax needs the GraftExtensions analyzer
-  // rule and is covered by GraftExtensionsSpec.
+  // The 'UNIT' string-literal spelling; bare units (DAY) are covered by
+  // ReferenceParitySpec.
   test("TIMESTAMP_DIFF with string-literal units") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT TIMESTAMP_DIFF(TIMESTAMP '2024-01-02 03:00:00', TIMESTAMP '2024-01-01 00:00:00', 'HOUR') h, " +
         "TIMESTAMP_DIFF(TIMESTAMP '2024-01-03 00:00:00', TIMESTAMP '2024-01-01 12:00:00', 'DAY') d, " +
         "TIMESTAMP_DIFF(TIMESTAMP '2024-01-01 00:01:30', TIMESTAMP '2024-01-01 00:00:00', 'SECOND') s, " +
@@ -142,7 +145,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("DATE_DIFF counts unit boundaries like BigQuery") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT DATE_DIFF(DATE '2024-03-01', DATE '2024-02-28', 'DAY') d, " +
         "DATE_DIFF(DATE '2024-03-01', DATE '2024-01-31', 'MONTH') m, " +
         "DATE_DIFF(DATE '2025-01-01', DATE '2024-12-31', 'YEAR') y, " +
@@ -160,15 +163,15 @@ class BQCompatSpec extends SparkSpec {
 
   test("unsupported or non-static units fail loudly, never silently default") {
     val e1 = intercept[Exception](
-      spark.sql("SELECT TIMESTAMP_DIFF(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-01', 'MONTH')").collect())
+      bq.sql("SELECT TIMESTAMP_DIFF(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-01', 'MONTH')").collect())
     assert(e1.getMessage.contains("MONTH") || e1.getCause.getMessage.contains("MONTH"))
     val e2 = intercept[Exception](
-      spark.sql("SELECT DATE_DIFF(DATE '2024-01-01', DATE '2024-01-01', 'FORTNIGHT')").collect())
+      bq.sql("SELECT DATE_DIFF(DATE '2024-01-01', DATE '2024-01-01', 'FORTNIGHT')").collect())
     assert(e2.getMessage.contains("FORTNIGHT") || e2.getCause.getMessage.contains("FORTNIGHT"))
   }
 
   test("TIMESTAMP_TRUNC and BigQuery-order DATE_TRUNC") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT TIMESTAMP_TRUNC(TIMESTAMP '2024-06-15 13:45:31', 'HOUR') h, " +
         "DATE_TRUNC(DATE '2024-06-15', 'MONTH') m, " +
         "DATE_TRUNC('month', TIMESTAMP '2024-06-15 13:45:31') spark_native").collect()(0)
@@ -178,7 +181,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("ARRAY_LENGTH / GENERATE_ARRAY / TO_JSON_STRING") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT ARRAY_LENGTH(GENERATE_ARRAY(1, 5)) n, " +
         "GENERATE_ARRAY(0, 10, 5) g, " +
         "TO_JSON_STRING(NAMED_STRUCT('a', 1, 'b', 'x')) j").collect()(0)
@@ -187,13 +190,11 @@ class BQCompatSpec extends SparkSpec {
     assert(r.getString(2) == """{"a":1,"b":"x"}""")
   }
 
-  // The builtin-name OVERRIDES (dialect tier) are isolated in a child
-  // session: installDialect must never touch the shared session other
-  // suites run Spark-semantics SQL on.
+  // The builtin-name OVERRIDES live in the engine session's own
+  // registry: the shared session other suites run Spark-semantics SQL
+  // on keeps the builtins.
   test("dialect tier: SPLIT treats a literal delimiter literally, not as regex") {
-    val s = spark.newSession()
-    BQCompat.installDialect(s)
-    val r = s.sql("SELECT SPLIT('a.b.c', '.') s, SPLIT('x||y', '|') p").collect()(0)
+    val r = bq.sql("SELECT SPLIT('a.b.c', '.') s, SPLIT('x||y', '|') p").collect()(0)
     assert(r.getSeq[String](0).toList == List("a", "b", "c"))
     assert(r.getSeq[String](1).toList == List("x", "", "y"))
     // The shared session keeps Spark's regex semantics.
@@ -201,9 +202,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("dialect tier: REGEXP_EXTRACT returns NULL on no match, group on match") {
-    val s = spark.newSession()
-    BQCompat.installDialect(s)
-    val r = s.sql(
+    val r = bq.sql(
       "SELECT REGEXP_EXTRACT('red widget', '(red|blue)') a, " +
         "REGEXP_EXTRACT('hot gear', '(red|blue)') b, " +
         "REGEXP_EXTRACT('abc123', '[0-9]+') whole, " +
@@ -215,31 +214,29 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("dialect tier: REGEXP_EXTRACT rejects >1 capture group and computed patterns like BigQuery") {
-    val s = spark.newSession()
-    BQCompat.installDialect(s)
     val multi = intercept[Exception](
-      s.sql("SELECT REGEXP_EXTRACT('a1', '([a-z])([0-9])')").collect())
+      bq.sql("SELECT REGEXP_EXTRACT('a1', '([a-z])([0-9])')").collect())
     assert((multi.getMessage + Option(multi.getCause).map(_.getMessage).getOrElse(""))
       .contains("at most one capturing group"))
     val computed = intercept[Exception](
-      s.sql("SELECT REGEXP_EXTRACT('a1', CONCAT('[a-z]', '+'))").collect())
+      bq.sql("SELECT REGEXP_EXTRACT('a1', CONCAT('[a-z]', '+'))").collect())
     assert((computed.getMessage + Option(computed.getCause).map(_.getMessage).getOrElse(""))
       .contains("string literal"))
   }
 
   test("FORMAT_TIMESTAMP / PARSE_TIMESTAMP reject computed formats with a clear error") {
     val e = intercept[Exception](
-      spark.sql("SELECT FORMAT_TIMESTAMP(CONCAT('%Y', '-%m'), TIMESTAMP '2024-01-02 03:04:05')").collect())
+      bq.sql("SELECT FORMAT_TIMESTAMP(CONCAT('%Y', '-%m'), TIMESTAMP '2024-01-02 03:04:05')").collect())
     assert((e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse(""))
       .contains("format must be a string literal"))
     val p = intercept[Exception](
-      spark.sql("SELECT PARSE_TIMESTAMP(CONCAT('%Y', '-%m'), '2024-01')").collect())
+      bq.sql("SELECT PARSE_TIMESTAMP(CONCAT('%Y', '-%m'), '2024-01')").collect())
     assert((p.getMessage + Option(p.getCause).map(_.getMessage).getOrElse(""))
       .contains("format must be a string literal"))
   }
 
   test("STRPOS / ENDS_WITH / STARTS_WITH / ARRAY_REVERSE / ARRAY_CONCAT") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT STRPOS('hello', 'l') p, STRPOS('hello', 'z') z, " +
         "ENDS_WITH('widget', 't') e, STARTS_WITH('widget', 'wid') s, " +
         "ARRAY_REVERSE(ARRAY(1, 2, 3)) rev, " +
@@ -251,7 +248,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("FORMAT_TIMESTAMP / PARSE_TIMESTAMP with BigQuery %-patterns") {
-    val r = spark.sql(
+    val r = bq.sql(
       "SELECT FORMAT_TIMESTAMP('%Y-%m-%d %H:%M:%S', TIMESTAMP '2024-06-15 13:45:31') f, " +
         "PARSE_TIMESTAMP('%Y-%m-%d %H:%M:%S', '2024-06-15 13:45:31') p").collect()(0)
     assert(r.getString(0) == "2024-06-15 13:45:31")
@@ -259,7 +256,7 @@ class BQCompatSpec extends SparkSpec {
   }
 
   test("compat functions stay codegen-native (no UDF nodes in plan)") {
-    val plan = spark.sql("SELECT SAFE_DIVIDE(x, 2) FROM VALUES (4.0) t(x)")
+    val plan = bq.sql("SELECT SAFE_DIVIDE(x, 2) FROM VALUES (4.0) t(x)")
       .queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("batchevalpython") && !plan.toLowerCase.contains("scalaudf"))
   }

@@ -90,12 +90,7 @@ class OpsSpec extends SparkSpec {
     assert(jd.forall(_ == 0.0))
   }
 
-  test("native kernels register as SQL functions and stay codegen'd") {
-    graft.functions.GraftFunctions.install(spark)
-    val r = spark.sql("SELECT COSINE_SIM(array(1.0d, 0.0d), array(1.0d, 0.0d)) c, " +
-      "JACCARD_SIM(array('a','b'), array('b','c')) j").collect()(0)
-    assert(r.getDouble(0) == 1.0)
-    assert(math.abs(r.getDouble(1) - 1.0 / 3.0) < 1e-15)
+  test("native kernels stay codegen'd") {
     // Non-foldable input: prove the kernel runs inside a whole-stage
     // codegen'd project (the "*(n)" prefix), not interpreted fallback.
     val e = graft.Tables(spark, sfDir, "embeddings")

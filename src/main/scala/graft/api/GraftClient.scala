@@ -116,9 +116,8 @@ object GraftClient {
   def connect(cmd: Seq[String]): GraftClient = connect(cmd, Map.empty)
 
   /** Spawn with extra environment — how a deployment hands the server
-    * its backend configuration (GRAFT_JDBC_URL, BQ_PROJECT/BQ_DATASET —
-    * the same env contract the reference reads at startup,
-    * bigquery.rs:40).
+    * its backend configuration (BQ_PROJECT/BQ_DATASET — the same env
+    * contract the reference reads at startup, bigquery.rs:40).
     */
   def connect(cmd: Seq[String], env: Map[String, String]): GraftClient = {
     val pb = new ProcessBuilder(cmd: _*)

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 
 import graft.engine.{DagTable, GraftSession, SessionManager}
 import graft.sources.DirectoryCatalog
@@ -36,11 +37,6 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
         defaultDataset = sys.env.get("BQ_DATASET"),
         materializationDataset = sys.env.get("BQ_MATERIALIZATION_DATASET"),
         temporaryGcsBucket = sys.env.get("BQ_TEMP_GCS_BUCKET"))
-    case graft.engine.ExecutorMode.Jdbc =>
-      new graft.engine.JdbcResolver(
-        sys.env.getOrElse("GRAFT_JDBC_URL",
-          throw graft.api.GraftError.InvalidParams(
-            "jdbc backend needs GRAFT_JDBC_URL")))
   }
   private def session(params: Map[String, Any]): GraftSession = {
     val id = req(params, "sessionId").toString
@@ -67,8 +63,10 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
       case e: GraftError => throw e
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition != null && e.getCondition.startsWith("TABLE_OR_VIEW_NOT_FOUND") =>
-        val table = Option(e.getMessageParameters.get("relationName")).getOrElse("?")
-        throw GraftError.UnknownTable(table.stripPrefix("`").stripSuffix("`"))
+        // The analyzer quotes each part: `app`.`missing_t`.
+        val table = Option(e.getMessageParameters.get("relationName"))
+          .fold("?")(UnresolvedAttribute.parseAttributeName(_).mkString("."))
+        throw GraftError.UnknownTable(table)
       case e: org.apache.spark.SparkThrowable =>
         throw GraftError.QueryError(String.valueOf(e.asInstanceOf[Throwable].getMessage))
       case e @ (_: ClassCastException | _: NoSuchElementException | _: NumberFormatException) =>

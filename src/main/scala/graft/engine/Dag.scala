@@ -10,6 +10,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 
+import graft.functions.BQCompat
+
 /** One table in the pipeline: a source (schema + literal rows, or a
   * view over a DataFrame builder) or a derived table (SQL over other
   * tables). Reference: src/session/pipeline.rs PipelineTable / rpc
@@ -48,9 +50,12 @@ final case class DagResult(
   * (reference: src/session/pipeline.rs).
   *
   * Differences from the reference, by design:
-  *   - dependencies come from Spark's own SQL parser (UnresolvedRelation
-  *     set minus CTE names), not substring matching
-  *     (reference: pipeline.rs:595 extract_dependencies);
+  *   - dependencies come from the plan [[graft.functions.BQCompat.parse]]
+  *     gives the SQL, the same parse the table runs through (its
+  *     UnresolvedRelation set, subqueries and CTE bodies included, minus
+  *     CTE names), not substring matching (reference: pipeline.rs:595
+  *     extract_dependencies). SQL that does not parse records none and
+  *     fails when its table runs;
   *   - the reference's CREATE TABLE + INSERT of the query result
   *     (pipeline.rs:511 execute_table) is the session's insert snapshot,
   *     [[GraftSession.materialize]], computed by executors and never
@@ -112,17 +117,17 @@ final class Dag(session: GraftSession) {
     */
   private[engine] def extractDependencies(sql: String): Seq[String] = {
     val root: LogicalPlan =
-      try session.spark.sessionState.sqlParser.parsePlan(sql)
+      try BQCompat.parse(session.spark, sql)
       catch { case NonFatal(_) => return Nil }
     // CTE definition bodies are held in UnresolvedWith.cteRelations, which
-    // plan.collect does NOT traverse — walk them explicitly (recursively,
+    // the plan traversal does NOT visit — walk them explicitly (recursively,
     // for WITH inside WITH).
     val cteNames = mutable.Set[String]()
     val referenced = mutable.Set[String]()
     val work = mutable.Stack[LogicalPlan](root)
     while (work.nonEmpty) {
       val p = work.pop()
-      p.foreach {
+      p.foreachWithSubqueries {
         case w: UnresolvedWith =>
           w.cteRelations.foreach { cte => cteNames += cte._1.toLowerCase; work.push(cte._2) }
         case r: UnresolvedRelation =>

@@ -6,61 +6,41 @@ import graft.api.GraftError
 
 /** Pluggable table-resolution seam, mirroring the reference's executor
   * switch (reference: src/executor/mod.rs `ExecutorMode` { Mock,
-  * BigQuery } and the per-session `Executor` enum; CLI flag `--backend`
-  * in src/main.rs:80).
+  * BigQuery } and the per-session `Executor` enum; CLI flag `--backend
+  * mock|bigquery` in src/main.rs:80). There are two backends, as in the
+  * reference: local ("mock") and BigQuery.
   *
   * Spark-first realization: the thing that actually differs between a
-  * local ("mock") session and a remote-BigQuery session is WHERE a table
-  * name resolves — the session's temp-view catalog, or a DataSource V2
-  * read through the spark-bigquery connector. SQL execution itself stays
-  * Spark either way, so the seam is a [[TableResolver]], not a whole
-  * query engine.
+  * local session and a remote-BigQuery session is WHERE a table name
+  * resolves — the session's temp-view catalog, or a DataSource V2 read
+  * through the spark-bigquery connector — and where SQL runs: locally
+  * through [[graft.functions.BQCompat.parse]], or pushed verbatim to
+  * BigQuery ([[GraftSession.sql]]).
   */
 sealed trait ExecutorMode
 object ExecutorMode {
   case object Local extends ExecutorMode
   case object BigQuery extends ExecutorMode
-  case object Jdbc extends ExecutorMode
 
   def parse(s: String): ExecutorMode = s.trim.toLowerCase match {
     case "mock" | "local" => Local
     case "bigquery" => BigQuery
-    case "jdbc" => Jdbc
-    case other => throw GraftError.InvalidParams(s"Unknown backend: $other (use mock|bigquery|jdbc)")
+    case other => throw GraftError.InvalidParams(s"Unknown backend: $other (use mock|bigquery)")
   }
 }
 
-trait TableResolver {
-  def mode: ExecutorMode
-
+/** Where a table name resolves when it is not a session view:
+  * [[LocalResolver]] or [[BigQueryResolver]].
+  */
+sealed trait TableResolver {
   /** Produce the DataFrame a table name denotes in this backend. */
   def resolve(spark: SparkSession, name: String): DataFrame
-
-  /** Make `name` visible to subsequent SQL in the session (a temp view
-    * over whatever [[resolve]] returns — for the remote backend this is
-    * exactly how the "Spark SQL + BigQuery connector" deployment shape
-    * exposes remote tables to Spark SQL).
-    */
-  def register(spark: SparkSession, name: String): Unit =
-    resolve(spark, name).createOrReplaceTempView(name.split('.').last)
-
-  /** Make a MULTI-PART relation (`db`.`tbl`) visible to session SQL.
-    * Temp views are single-part by construction, so a backend must map
-    * the qualified name into Spark's session catalog to make the
-    * original query text analyzable; backends without such a mapping
-    * fail TYPED here (r9 verdict "what's wrong" #2 — previously the
-    * outer-backtick strip produced a malformed name that burned the
-    * retry loop's seen-set and surfaced the raw analysis error).
-    */
-  def registerQualified(spark: SparkSession, parts: Seq[String]): Unit =
-    throw GraftError.UnknownTable(parts.mkString("."))
 }
 
 /** Default backend: names are session temp views (the reference's Mock /
   * YachtSQL executor, re-expressed as Spark's own catalog).
   */
 object LocalResolver extends TableResolver {
-  val mode: ExecutorMode = ExecutorMode.Local
   def resolve(spark: SparkSession, name: String): DataFrame =
     if (spark.catalog.tableExists(name)) spark.table(name)
     else throw GraftError.UnknownTable(name)
@@ -119,8 +99,6 @@ final class BigQueryResolver(
     endpoint.toSeq.flatMap(e => Seq(
       "bigQueryHttpEndpoint" -> e,
       "bigQueryStorageGrpcEndpoint" -> e)).toMap
-
-  val mode: ExecutorMode = ExecutorMode.BigQuery
 
   /** `project.dataset.table` resolution with BigQuery's default rules. */
   def qualifiedName(name: String): String = name.split('.') match {
@@ -219,86 +197,4 @@ final class BigQueryResolver(
     persist(df, name)
     n
   }
-}
-
-/** Concrete remote backend with REAL I/O through the seam: tables
-  * resolve via Spark's own JDBC source against any JDBC endpoint — in
-  * tests, an embedded Derby database (its jars ship with Spark), the
-  * loopback stand-in for a warehouse behind a JDBC URL. Unlike
-  * [[BigQueryResolver]] (whose connector jar cannot exist in this
-  * zero-egress environment), every [[resolve]] here opens a real
-  * connection, reads the remote schema, and pulls rows through the JDBC
-  * scan — and Spark pushes filters and column pruning into the remote
-  * SQL, so the seam keeps the pushdown discipline at scale.
-  *
-  * [[persist]] closes the loop in the other direction (a materialized
-  * result written back through the same endpoint), which is what the
-  * reference's materialize-derived-tables DAG step does against real
-  * BigQuery (reference src/session/pipeline.rs: CREATE TABLE + INSERT
-  * of each derived query's result).
-  */
-final class JdbcResolver(url: String, options: Map[String, String] = Map.empty)
-    extends TableResolver {
-
-  val mode: ExecutorMode = ExecutorMode.Jdbc
-
-  private def reader(spark: SparkSession) =
-    spark.read.format("jdbc").option("url", url).options(options)
-
-  def resolve(spark: SparkSession, name: String): DataFrame =
-    try reader(spark).option("dbtable", name).load()
-    catch {
-      case e: Exception if missingTable(e) =>
-        throw GraftError.UnknownTable(name)
-      case e: Exception =>
-        throw GraftError.QueryError(s"JDBC backend failed resolving $name ($url): ${e.getMessage}")
-    }
-
-  /** Missing-TABLE detection by SQLState, not message substring —
-    * engines say "does not exist" about schemas, columns, and functions
-    * too, and those must surface as QueryError (a config fault), not
-    * UnknownTable. 42X05 = Derby table/view not found; 42S02 = the
-    * SQL-standard base-table-not-found class (H2, MySQL, SQLServer);
-    * 42P01 = Postgres undefined_table.
-    */
-  private val MissingTableStates = Set("42X05", "42S02", "42P01")
-  private def missingTable(t: Throwable): Boolean =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).exists {
-      case sql: java.sql.SQLException =>
-        Option(sql.getSQLState).exists(MissingTableStates.contains)
-      case _ => false
-    }
-
-  /** Qualified (schema.table) remote names: the resolved remote schema
-    * is mirrored into Spark's session catalog as a JDBC-sourced table —
-    * METADATA only, every scan still reads the endpoint with filter and
-    * column pushdown — because a dotted name can never be a temp view.
-    * `resolve` runs first so a truly-absent remote table fails with the
-    * typed UnknownTable instead of a catalog-creation stack. Three-part
-    * and deeper names have no session-catalog home and fail typed via
-    * the default. Note the session-catalog database is shared across
-    * [[graft.engine.GraftSession]]s of one SparkContext (temp views are
-    * not) — the same sharing the warehouse itself has.
-    */
-  override def registerQualified(spark: SparkSession, parts: Seq[String]): Unit = parts match {
-    case Seq(db, tbl) =>
-      val dotted = s"$db.$tbl"
-      resolve(spark, dotted)
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
-      if (!spark.catalog.tableExists(s"`$db`.`$tbl`")) {
-        spark.catalog.createTable(s"`$db`.`$tbl`", "jdbc",
-          options ++ Map("url" -> url, "dbtable" -> dotted))
-        ()
-      }
-    case _ => super.registerQualified(spark, parts)
-  }
-
-  /** Write a result back through the endpoint (append-or-create). */
-  def persist(df: DataFrame, name: String): Unit =
-    try df.write.format("jdbc").option("url", url).options(options)
-      .option("dbtable", name).mode("append").save()
-    catch {
-      case e: Exception =>
-        throw GraftError.QueryError(s"JDBC backend failed writing $name ($url): ${e.getMessage}")
-    }
 }

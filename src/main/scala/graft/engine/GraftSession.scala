@@ -107,8 +107,8 @@ final class GraftSession private[engine] (
 
   /** Resolve a table through this session's backend (reference:
     * executor/mod.rs dispatch): session temp views win, then the
-    * resolver (remote backends register their reads as views so SQL
-    * sees them).
+    * resolver — a typed UnknownTable locally, a connector read in
+    * bigquery mode.
     */
   def table(name: String): org.apache.spark.sql.DataFrame =
     if (spark.catalog.tableExists(name)) spark.table(name)
@@ -167,39 +167,13 @@ final class GraftSession private[engine] (
     * pushed VERBATIM to BigQuery as a job through the resolver
     * (reference executor dispatch: BigQuery sessions send SQL to
     * jobs.query, not the local engine — executor/mod.rs); locally, the
-    * text is parsed as BigQuery SQL ([[BQCompat.parse]]).
+    * text is parsed as BigQuery SQL by [[BQCompat.parse]], the one way
+    * local SQL enters the engine.
     */
   def sql(q: String): DataFrame = resolver match {
     case bq: BigQueryResolver => bq.query(spark, q)
-    case LocalResolver => localSql(q)
-    case remote =>
-      // Remote CATALOG with local SQL (the jdbc shape): relations the
-      // session hasn't seen yet resolve lazily — on TABLE_OR_VIEW_NOT_
-      // FOUND the missing name is registered through the backend (a view
-      // over the remote scan, so pushdown still reaches the endpoint)
-      // and analysis retries. Each round either registers a NEW table
-      // (bounded by the query's relation count) or throws the backend's
-      // typed UnknownTable; the seen-set makes non-progress impossible.
-      val seen = scala.collection.mutable.Set.empty[String]
-      def run(): DataFrame =
-        try localSql(q)
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition != null &&
-                e.getCondition.startsWith("TABLE_OR_VIEW_NOT_FOUND") =>
-            val parts = parseRelationName(
-              Option(e.getMessageParameters.get("relationName")).getOrElse(throw e))
-            if (!seen.add(parts.mkString("."))) throw e
-            parts match {
-              case Seq(one) => remote.register(spark, one)
-              case many => remote.registerQualified(spark, many)
-            }
-            run()
-        }
-      run()
+    case LocalResolver => ColumnBridge.sql(spark, BQCompat.parse(spark, q))
   }
-
-  private def localSql(q: String): DataFrame = ColumnBridge.sql(spark, BQCompat.parse(spark, q))
 
   /** Tables and temp views, read from the session catalog (no job). */
   def listTables(): Seq[String] = {
@@ -231,18 +205,6 @@ final class GraftSession private[engine] (
 object GraftSession {
 
   private final case class Snapshot(rdd: RDD[InternalRow], rows: Option[Long])
-
-  /** Split a Spark analyzer relation name — `` `a`.`b` `` with literal
-    * backticks doubled inside a part, or a bare dotted string — into its
-    * parts (an outer-backtick strip would leave `` `db`.`tbl` `` with
-    * interior backticks, so the retry loop would register a malformed
-    * name that could never resolve). A part
-    * containing a literal dot (`` `a.b` ``) stays ONE part.
-    */
-  private[engine] def parseRelationName(name: String): Seq[String] =
-    if (!name.startsWith("`")) name.split('.').toSeq
-    else name.stripPrefix("`").stripSuffix("`")
-      .split("`\\.`", -1).toSeq.map(_.replace("``", "`"))
 
   /** BigQuery type name → Spark type (reference: rpc/types.rs ColumnDef). */
   def bqType(t: String): DataType = t.trim.toUpperCase match {

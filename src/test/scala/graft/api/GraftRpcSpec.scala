@@ -371,4 +371,19 @@ class GraftRpcSpec extends SparkSpec {
     assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "dated")("rowCount") == 1L)
     call("bq.destroySession", "sessionId" -> s)
   }
+
+  test("UnknownTable names a missing table without the analyzer's quotes") {
+    val s = sid()
+    Seq(
+      "SELECT * FROM missing_t" -> "missing_t",
+      "SELECT * FROM app.missing_t" -> "app.missing_t",
+      "SELECT * FROM `we``ird`" -> "we`ird",
+      "SELECT * FROM `a.b`" -> "a.b").foreach { case (sql, name) =>
+      val err = wireError("bq.query", "sessionId" -> s, "sql" -> sql)
+      assert(err("code") == -32000L, err)
+      assert(err("data") == Map("kind" -> "UnknownTable"), err)
+      assert(err("message").toString.endsWith(s"Table not found: $name"), err)
+    }
+    call("bq.destroySession", "sessionId" -> s)
+  }
 }

@@ -227,98 +227,6 @@ class RpcServerSpec extends SparkSpec {
     } finally client.close()
   }
 
-  test("--backend jdbc over the wire: remote-warehouse lifecycle through a spawned server (reference main.rs:80 backend selection)") {
-    // Seed a FILE-BASED Derby warehouse from this JVM, then shut the
-    // database down — embedded Derby admits one JVM at a time, and the
-    // spawned server must be the one holding it.
-    val dbDir = java.nio.file.Files.createTempDirectory("graftwire").toString + "/wh"
-    System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("derbywire").toString)
-    Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
-    val conn = java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;create=true")
-    try {
-      val st = conn.createStatement()
-      st.executeUpdate("CREATE TABLE warehouse_docs (d_id INT, lang VARCHAR(8), score DOUBLE)")
-      val ins = conn.prepareStatement("INSERT INTO warehouse_docs VALUES (?, ?, ?)")
-      for ((id, lg, sc) <- Seq((1, "en", 0.9), (2, "en", 0.4), (3, "de", 0.7), (4, "fr", 0.2)))
-        { ins.setInt(1, id); ins.setString(2, lg); ins.setDouble(3, sc); ins.executeUpdate() }
-    } finally conn.close()
-    try java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
-    catch { case _: java.sql.SQLException => () } // 08006 = successful shutdown
-
-    // Backend selection travels the REAL deployment path: CLI flag on
-    // the child's command line, endpoint URL in the child's environment.
-    val client = GraftClient.connect(
-      graft.TestServer.serverCommand("stdio", Seq("--backend", "jdbc")),
-      Map("GRAFT_JDBC_URL" -> s"jdbc:derby:$dbDir"))
-    try {
-      val s = client.call("bq.createSession")("sessionId").toString
-
-      // The remote table resolves through the seam: schema + rows come
-      // over the child's JDBC connection, across the process boundary.
-      val desc = client.call("bq.describeTable", Map("sessionId" -> s, "tableName" -> "warehouse_docs"))
-      assert(desc("rowCount") == 4L, desc.toString)
-
-      // SQL over a never-registered remote relation: the session's lazy
-      // catalog resolution registers it mid-analysis and the aggregate
-      // runs over the remote scan.
-      val q = client.call("bq.query", Map("sessionId" -> s,
-        "sql" -> "SELECT lang, COUNT(*) AS n FROM warehouse_docs GROUP BY lang ORDER BY lang"))
-      val rows = q("rows").asInstanceOf[Seq[Map[String, Any]]]
-        .map(_("f").asInstanceOf[Seq[Map[String, Any]]].map(_("v")))
-      assert(rows == Seq(Seq("de", 1L), Seq("en", 2L), Seq("fr", 1L)), rows.toString)
-
-      // Local session state composes with the remote backend: a temp
-      // table joins the warehouse table in one statement.
-      assert(client.call("bq.createTable", Map("sessionId" -> s, "tableName" -> "lang_names",
-        "schema" -> Seq(Map("name" -> "lang", "type" -> "STRING"),
-          Map("name" -> "label", "type" -> "STRING"))))("success") == true)
-      assert(client.call("bq.insert", Map("sessionId" -> s, "tableName" -> "lang_names",
-        "rows" -> Seq(Seq("en", "English"), Seq("de", "German"))))("insertedRows") == 2L)
-      val j = client.call("bq.query", Map("sessionId" -> s,
-        "sql" -> ("SELECT n.label, d.d_id FROM warehouse_docs d " +
-          "JOIN lang_names n ON d.lang = n.lang WHERE d.score > 0.5 ORDER BY d.d_id")))
-      val jrows = j("rows").asInstanceOf[Seq[Map[String, Any]]]
-        .map(_("f").asInstanceOf[Seq[Map[String, Any]]].map(_("v")))
-      assert(jrows == Seq(Seq("English", 1L), Seq("German", 3L)), jrows.toString)
-
-      // DAG over the remote table: a derived node reads the warehouse,
-      // materializes, and serves downstream SQL.
-      val reg = client.call("bq.registerDag", Map("sessionId" -> s, "tables" -> Seq(
-        Map("name" -> "good_docs", "sql" -> "SELECT d_id, lang FROM warehouse_docs WHERE score >= 0.5"))))
-      assert(reg("success") == true)
-      val run = client.call("bq.runDag", Map("sessionId" -> s))
-      assert(run("success") == true && run("succeededTables") == Seq("good_docs"), run.toString)
-      val q2 = client.call("bq.query", Map("sessionId" -> s, "sql" -> "SELECT COUNT(*) AS c FROM good_docs"))
-      assert(q2("rows").asInstanceOf[Seq[Map[String, Any]]].head("f")
-        .asInstanceOf[Seq[Map[String, Any]]].head("v") == 2L) // ids 1 (0.9) and 3 (0.7)
-
-      // A missing REMOTE table is the typed UnknownTable over the wire.
-      val bad = client.sendRequest("bq.describeTable",
-        Map("sessionId" -> s, "tableName" -> "warehouse_missing"))
-      assert(asMap(asMap(bad("error"))("data"))("kind") == "UnknownTable", bad.toString)
-
-      // QUALIFIED (schema.table) remote names:
-      // lazy catalog resolution parses the backticked multipart
-      // relation, mirrors it into the session catalog as a JDBC-sourced
-      // table (Derby's default schema is APP), and the original query
-      // text runs with pushdown — across the process boundary.
-      val qq = client.call("bq.query", Map("sessionId" -> s,
-        "sql" -> "SELECT COUNT(*) AS c FROM app.warehouse_docs WHERE score >= 0.5"))
-      assert(qq("rows").asInstanceOf[Seq[Map[String, Any]]].head("f")
-        .asInstanceOf[Seq[Map[String, Any]]].head("v") == 2L, qq.toString)
-
-      // A missing QUALIFIED relation fails with the typed UnknownTable
-      // naming the dotted relation — not a burned retry loop, not a raw
-      // analyzer stack.
-      val badq = client.sendRequest("bq.query",
-        Map("sessionId" -> s, "sql" -> "SELECT * FROM app.warehouse_missing"))
-      assert(asMap(asMap(badq("error"))("data"))("kind") == "UnknownTable", badq.toString)
-
-      assert(client.call("bq.destroySession", Map("sessionId" -> s))("success") == true)
-    } finally client.close()
-  }
-
   test("--backend bigquery over the wire: connector-absent queries fail TYPED, not with a raw stack (the sandboxed remote path)") {
     val client = GraftClient.connect(
       graft.TestServer.serverCommand("stdio", Seq("--backend", "bigquery")),

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** BigQueryResolver integration against the recorded-response fake
-  * connector (r12 verdict task 9): the resolver's FULL surface —
+  * connector: the resolver's FULL surface —
   * resolve / query / statement / persist / loadParquet — moves real
   * bytes through Spark's DSv2 scan and write machinery with the exact
   * option contracts the real spark-bigquery-connector documents; the

@@ -268,6 +268,130 @@ class DagSpec extends SparkSpec {
     assert(!s.spark.catalog.tableExists("snap_out"))
   }
 
+  /** Tables derived from `a` in SQL that only the BigQuery dialect parses. */
+  private val dialectTables = Seq(
+    DagTable.derived("safe", "SELECT SAFE_CAST(x AS INT64) AS y FROM a"),
+    DagTable.derived("unnest", "SELECT x, n FROM a, UNNEST([1, 2]) AS n"))
+
+  /** Source `a` and three tables derived from it: `safe` and `unnest` in
+    * BigQuery SQL that Spark's own parser rejects, `plain` in SQL both
+    * parsers accept.
+    */
+  private def dialectDag(
+      source: DagTable = DagTable.source("a", Seq("x" -> "INT64"), Seq(Seq(1), Seq(2), Seq(3))))
+      : (GraftSession, Dag) = {
+    val (s, dag) = freshDag()
+    dag.register(Seq(source) ++ dialectTables :+
+      DagTable.derived("plain", "SELECT CAST(x AS STRING) AS y FROM a"))
+    (s, dag)
+  }
+
+  test("BigQuery-dialect SQL records its dependencies") {
+    val (_, dag) = dialectDag()
+    val deps = dag.getTables.map(t => t._1 -> t._4).toMap
+    assert(deps("safe") == Seq("a"))
+    assert(deps("unnest") == Seq("a"))
+    assert(deps("plain") == Seq("a"))
+  }
+
+  test("a full run over BigQuery-dialect SQL succeeds on a fresh session") {
+    val (s, dag) = dialectDag()
+    val res = dag.run()
+    assert(res.allSucceeded, res)
+    assert(res.succeeded.head == "a", res)
+    assert(s.sql("SELECT SUM(y) FROM safe").collect()(0).getLong(0) == 6L)
+    assert(s.sql("SELECT COUNT(*) FROM unnest").collect()(0).getLong(0) == 6L)
+  }
+
+  test("three runs over BigQuery-dialect SQL in one session all succeed") {
+    val (s, dag) = dialectDag()
+    (1 to 3).foreach { run =>
+      val res = dag.run()
+      assert(!res.failed.exists(_.error.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), s"run $run: $res")
+      assert(res.allSucceeded, s"run $run: $res")
+      // The source appends its three rows on every run.
+      assert(s.sql("SELECT COUNT(*) FROM unnest").collect()(0).getLong(0) == 6L * run)
+    }
+  }
+
+  test("a run targeting a BigQuery-dialect table runs its source first") {
+    val (s, dag) = dialectDag()
+    val res = dag.run(Some(Seq("safe")))
+    assert(res.allSucceeded, res)
+    assert(res.succeeded == Seq("a", "safe"))
+    assert(s.sql("SELECT SUM(y) FROM safe").collect()(0).getLong(0) == 6L)
+  }
+
+  test("a failed source skips its BigQuery-dialect dependents") {
+    val (_, dag) = dialectDag(DagTable.view("a", throw new IllegalStateException("source failed")))
+    val res = dag.run()
+    assert(res.failed == Seq(TableError("a", "source failed")))
+    assert(res.skipped.sorted == Seq("plain", "safe", "unnest"))
+    assert(res.succeeded.isEmpty)
+  }
+
+  test("every derived table depends on exactly the session views its analyzed plan reads") {
+    import org.apache.spark.sql.catalyst.plans.logical.View
+    def src(name: String, cols: (String, String)*) = DagTable.source(name, cols)
+    def der(name: String, sql: String) = DagTable.derived(name, sql)
+    // The DAG cases of the reference's dag_test.clj (ReferenceDagClientParitySpec),
+    // the BigQuery-dialect tables, and a subquery in a predicate.
+    val cases: Seq[Seq[DagTable]] = Seq(
+      Seq(src("users", "id" -> "INT64", "name" -> "STRING"),
+        der("report", "SELECT * FROM users WHERE id > 0")),
+      Seq(src("source_data", "id" -> "INT64", "value" -> "STRING"),
+        der("transformed", "SELECT id, UPPER(value) as upper_value FROM source_data")),
+      Seq(src("a", "x" -> "INT64"), src("b", "x" -> "INT64"),
+        der("from_a", "SELECT x * 10 as x FROM a"),
+        der("from_b", "SELECT x * 100 as x FROM b")),
+      Seq(src("raw", "value" -> "INT64"),
+        der("step1", "SELECT value * 2 as value FROM raw"),
+        der("step2", "SELECT value + 1 as value FROM step1"),
+        der("final", "SELECT SUM(value) as total FROM step2")),
+      Seq(src("source", "n" -> "INT64"),
+        der("double_it", "SELECT n * 2 as doubled FROM source"),
+        der("triple_it", "SELECT n * 3 as tripled FROM source"),
+        der("combined", "SELECT d.doubled, t.tripled FROM double_it d, triple_it t WHERE d.doubled = t.tripled - 1")),
+      Seq(src("src", "x" -> "INT64"), der("derived", "SELECT x FROM src")),
+      Seq(src("a", "x" -> "INT64"), der("b", "SELECT * FROM a")),
+      Seq(src("sales", "region" -> "STRING", "amount" -> "FLOAT64"),
+        der("region_totals", "SELECT region, SUM(amount) as total FROM sales GROUP BY region"),
+        der("summary", "SELECT COUNT(*) as num_regions, SUM(total) as grand_total FROM region_totals")),
+      Seq(src("customers", "id" -> "INT64", "name" -> "STRING"),
+        src("orders", "customer_id" -> "INT64", "amount" -> "FLOAT64"),
+        der("customer_orders",
+          "SELECT c.name, SUM(o.amount) as total FROM customers c JOIN orders o ON c.id = o.customer_id GROUP BY c.name")),
+      Seq(src("numbers", "n" -> "INT64"),
+        der("stats", "WITH evens AS (SELECT n FROM numbers WHERE n % 2 = 0)\nSELECT COUNT(*) as even_count FROM evens")),
+      Seq(src("employees", "dept" -> "STRING", "salary" -> "FLOAT64"),
+        der("ranked",
+          "SELECT dept, salary, ROW_NUMBER() OVER (PARTITION BY dept ORDER BY salary DESC) as rank FROM employees")),
+      Seq(src("products", "id" -> "INT64", "name" -> "STRING", "price" -> "FLOAT64"),
+        src("inventory", "product_id" -> "INT64", "quantity" -> "INT64"),
+        der("product_value",
+          "SELECT p.name, p.price * i.quantity as total_value FROM products p JOIN inventory i ON p.id = i.product_id")),
+      Seq(src("empty_source", "id" -> "INT64"), der("derived", "SELECT COUNT(*) as cnt FROM empty_source")),
+      Seq(src("events", "event_type" -> "STRING", "user_id" -> "INT64", "value" -> "FLOAT64"),
+        der("event_counts", "SELECT event_type, COUNT(*) as cnt FROM events GROUP BY event_type"),
+        der("user_stats", "SELECT user_id, SUM(value) as total_value FROM events GROUP BY user_id"),
+        der("top_user", "SELECT user_id, total_value FROM user_stats ORDER BY total_value DESC LIMIT 1")),
+      src("a", "x" -> "INT64") +: dialectTables,
+      Seq(src("a", "x" -> "INT64"), src("b", "x" -> "INT64"),
+        der("in_b", "SELECT x FROM a WHERE x IN (SELECT x FROM b)")))
+    cases.foreach { tables =>
+      val (s, dag) = freshDag()
+      dag.register(tables)
+      val res = dag.run()
+      assert(res.allSucceeded, res)
+      val recorded = dag.getTables.map(t => t._1 -> t._4).toMap
+      tables.flatMap(t => t.sql.map(t.name -> _)).foreach { case (name, sql) =>
+        val read = s.sql(sql).queryExecution.analyzed
+          .collectWithSubqueries { case v: View => v.desc.identifier.table.toLowerCase }.toSet
+        assert(recorded(name).map(_.toLowerCase).toSet == read, s"$name: $sql")
+      }
+    }
+  }
+
   test("clear drops views and registry") {
     val (s, dag) = freshDag()
     dag.register(Seq(DagTable.source("tmp", Seq("v" -> "INT64"), Seq(Seq(42)))))

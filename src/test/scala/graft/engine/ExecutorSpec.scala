@@ -4,24 +4,28 @@ import graft.SparkSpec
 import graft.api.GraftError
 
 /** The executor seam (reference src/executor/mod.rs ExecutorMode):
-  * sessions resolve tables through a pluggable [[TableResolver]], and
-  * the remote backend has a concrete, verifiable integration point even
-  * though the connector jar cannot exist in this environment.
+  * sessions resolve tables through one of the reference's two backends,
+  * local or BigQuery ([[TableResolver]]), and the remote backend has a
+  * concrete, verifiable integration point even though the connector jar
+  * cannot exist in this environment.
   */
 class ExecutorSpec extends SparkSpec {
 
   test("backend flag parses like the reference CLI") {
     assert(ExecutorMode.parse("mock") == ExecutorMode.Local)
     assert(ExecutorMode.parse("bigquery") == ExecutorMode.BigQuery)
-    val e = intercept[GraftError.InvalidParams](ExecutorMode.parse("duckdb"))
-    assert(e.code == -32600)
+    for (other <- Seq("duckdb", "jdbc")) {
+      val e = intercept[GraftError.InvalidParams](ExecutorMode.parse(other))
+      assert(e.code == -32600)
+      assert(e.getMessage.endsWith(s"Unknown backend: $other (use mock|bigquery)"), e.getMessage)
+    }
   }
 
   test("local resolver resolves session views and types missing tables") {
     val mgr = new SessionManager(spark)
     val s = mgr.create()
     s.createTable("resolver_t", Seq("v" -> "INT64"))
-    assert(s.resolver.mode == ExecutorMode.Local)
+    assert(s.resolver eq LocalResolver)
     assert(s.table("resolver_t").columns.toSeq == Seq("v"))
     val e = intercept[GraftError.UnknownTable](s.table("resolver_missing"))
     assert(e.code == -32000)
@@ -32,7 +36,6 @@ class ExecutorSpec extends SparkSpec {
       defaultProject = Some("proj"),
       defaultDataset = Some("ds"),
       materializationDataset = Some("scratch"))
-    assert(r.mode == ExecutorMode.BigQuery)
     // BigQuery default-qualification rules.
     assert(r.qualifiedName("t") == "proj.ds.t")
     assert(r.qualifiedName("other_ds.t") == "proj.other_ds.t")
@@ -129,7 +132,7 @@ class ExecutorSpec extends SparkSpec {
   test("sessions created through a BigQuery-mode manager carry the remote resolver") {
     val mgr = new SessionManager(spark)
     val s = mgr.create(new BigQueryResolver(defaultProject = Some("p"), defaultDataset = Some("d")))
-    assert(s.resolver.mode == ExecutorMode.BigQuery)
+    assert(s.resolver.isInstanceOf[BigQueryResolver])
     // Session views still win over the remote backend (temp tables are
     // session-local in BigQuery too).
     s.createTable("local_first", Seq("v" -> "INT64"))
@@ -137,62 +140,5 @@ class ExecutorSpec extends SparkSpec {
     // An unregistered name routes to the connector path.
     val e = intercept[GraftError.QueryError](s.table("remote_only"))
     assert(e.getMessage.contains("p.d.remote_only"))
-  }
-
-  test("JDBC resolver moves real bytes through the seam (embedded Derby loopback)") {
-    import org.apache.spark.sql.functions._
-    // Derby ships in Spark's own jars; keep its scratch files in /tmp.
-    System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("derby").toString)
-    Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
-    val url = "jdbc:derby:memory:graftseam;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.executeUpdate(
-        "CREATE TABLE warehouse_orders (o_id INT, region VARCHAR(16), amount DOUBLE)")
-      val ins = conn.prepareStatement("INSERT INTO warehouse_orders VALUES (?, ?, ?)")
-      for ((id, reg, amt) <- Seq((1, "emea", 10.5), (2, "emea", 41.0), (3, "apac", 7.25), (4, "amer", 99.0))) {
-        ins.setInt(1, id); ins.setString(2, reg); ins.setDouble(3, amt)
-        ins.executeUpdate()
-      }
-
-      assert(ExecutorMode.parse("jdbc") == ExecutorMode.Jdbc)
-      val r = new JdbcResolver(url, Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver"))
-
-      // resolve: the remote schema and rows really come over the connection
-      val df = r.resolve(spark, "warehouse_orders")
-      assert(df.columns.map(_.toLowerCase).toSeq == Seq("o_id", "region", "amount"))
-      assert(df.count() == 4)
-
-      // filter pushdown reaches the REMOTE scan, not a post-filter
-      val plan = df.filter(col("amount") > 50.0).queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters") && plan.contains("AMOUNT"), plan.take(1000))
-
-      // register + full SQL over the remote table
-      r.register(spark, "warehouse_orders")
-      val agg = spark.sql(
-        "SELECT region, CAST(SUM(amount) AS DOUBLE) AS total FROM warehouse_orders GROUP BY region")
-      assert(agg.collect().map(x => x.getString(0) -> x.getDouble(1)).toMap ==
-        Map("emea" -> 51.5, "apac" -> 7.25, "amer" -> 99.0))
-
-      // a missing remote table is a typed UnknownTable, not a raw SQLException
-      intercept[GraftError.UnknownTable](r.resolve(spark, "warehouse_missing"))
-
-      // persist: the materialized result goes BACK through the endpoint —
-      // verified by reading it with raw JDBC, bypassing Spark entirely
-      r.persist(agg, "region_totals")
-      // Spark's Derby dialect writes case-preserving (quoted) column names
-      val rs = conn.createStatement()
-        .executeQuery("SELECT COUNT(*), CAST(SUM(\"total\") AS DOUBLE) FROM region_totals")
-      assert(rs.next())
-      assert(rs.getInt(1) == 3 && math.abs(rs.getDouble(2) - 157.75) < 1e-9)
-
-      // sessions wired to the JDBC backend resolve remote names through it
-      val mgr = new SessionManager(spark)
-      val sess = mgr.create(r)
-      assert(sess.resolver.mode == ExecutorMode.Jdbc)
-      assert(sess.table("warehouse_orders").count() == 4)
-    } finally conn.close()
   }
 }

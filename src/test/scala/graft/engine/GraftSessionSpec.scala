@@ -88,8 +88,8 @@ class GraftSessionSpec extends SparkSpec {
 
   test("rewrite patterns never fire inside literals, identifiers or comments") {
     import BQCompat.rewriteBqSyntax
-    // String literals survive verbatim — including rewrite-pattern text
-    // (the round-5 raw-text pass rewrote these; the lexed pass must not).
+    // String literals survive verbatim — including rewrite-pattern text,
+    // which a raw-text rewrite would change.
     assert(rewriteBqSyntax("SELECT 'SAFE_CAST(x AS INT64)' AS s FROM t") ==
       "SELECT 'SAFE_CAST(x AS INT64)' AS s FROM t")
     assert(rewriteBqSyntax("SELECT \"CAST(a AS BOOL)\" FROM t") ==
@@ -118,16 +118,5 @@ class GraftSessionSpec extends SparkSpec {
     assert(GraftSession.bqType("ARRAY<INT64>") == ArrayType(LongType))
     assert(GraftSession.bqType("bool") == BooleanType)
     assertThrows[graft.api.GraftError.InvalidParams](GraftSession.bqType("WIBBLE"))
-  }
-
-  test("analyzer relation names parse into parts: backticked, dotted, escaped, literal-dot") {
-    assert(GraftSession.parseRelationName("`tbl`") == Seq("tbl"))
-    assert(GraftSession.parseRelationName("`db`.`tbl`") == Seq("db", "tbl"))
-    assert(GraftSession.parseRelationName("`cat`.`db`.`tbl`") == Seq("cat", "db", "tbl"))
-    assert(GraftSession.parseRelationName("bare") == Seq("bare"))
-    assert(GraftSession.parseRelationName("db.tbl") == Seq("db", "tbl"))
-    // A part CONTAINING a dot stays one part; doubled backticks unescape.
-    assert(GraftSession.parseRelationName("`a.b`") == Seq("a.b"))
-    assert(GraftSession.parseRelationName("`we``ird`.`t`") == Seq("we`ird", "t"))
   }
 }

@@ -158,7 +158,7 @@ final class GraftRpc(root: SparkSession, backend: graft.engine.ExecutorMode = gr
           Map("loadedRows" -> bq.loadParquet(s.spark, name, path))
         case _ =>
           val (df, rows) = DirectoryCatalog.readParquet(s, path)
-          s.replaceView(name, df)
+          s.replaceView(name, df, Some(rows))
           Map("loadedRows" -> rows)
       }
 

@@ -13,16 +13,17 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 import graft.functions.BQCompat
 
 /** One table in the pipeline: a source (schema + literal rows, or a
-  * view over a DataFrame builder) or a derived table (SQL over other
-  * tables). Reference: src/session/pipeline.rs PipelineTable / rpc
-  * DagTableDef.
+  * view over a DataFrame builder, with the view's row count when its
+  * loader took one) or a derived table (SQL over other tables).
+  * Reference: src/session/pipeline.rs PipelineTable / rpc DagTableDef.
   */
 final case class DagTable(
     name: String,
     sql: Option[String] = None,
     schema: Option[Seq[(String, String)]] = None,
     rows: Seq[Seq[Any]] = Nil,
-    view: Option[() => DataFrame] = None) {
+    view: Option[() => DataFrame] = None,
+    viewRows: Option[Long] = None) {
   def isSource: Boolean = sql.isEmpty
 }
 
@@ -33,7 +34,8 @@ object DagTable {
     * every run, not at registration: a builder that runs driver-side
     * work (training collects, checkpoints) then overlaps other stages.
     */
-  def view(name: String, df: => DataFrame): DagTable = DagTable(name, view = Some(() => df))
+  def view(name: String, df: => DataFrame, rows: Option[Long] = None): DagTable =
+    DagTable(name, view = Some(() => df), viewRows = rows)
   def derived(name: String, sql: String): DagTable = DagTable(name, sql = Some(sql))
 }
 
@@ -57,14 +59,14 @@ final case class DagResult(
   *     extract_dependencies). SQL that does not parse records none and
   *     fails when its table runs;
   *   - the reference's CREATE TABLE + INSERT of the query result
-  *     (pipeline.rs:511 execute_table) is the session's insert snapshot,
+  *     (pipeline.rs:511 execute_table) is a session snapshot,
   *     [[GraftSession.materialize]], computed by executors and never
   *     serialized through a driver-side SQL string.
   *
   * A derived table's blocks live in executor storage and are lost with
-  * the executor, as insert snapshots are. Re-running a table releases
-  * its previous snapshot; [[clear]] releases those of the tables it
-  * drops, and closing the session releases the rest.
+  * the executor. Re-running a table releases its previous snapshot;
+  * [[clear]] releases those of the tables it drops, and closing the
+  * session releases the rest.
   *
   * A run is one future per table, chained on its upstream tables'
   * futures: a table starts as soon as its dependencies finish, at most
@@ -155,7 +157,7 @@ final class Dag(session: GraftSession) {
   def retryFailed(prev: DagResult, maxConcurrency: Int = Dag.envMaxConcurrency): DagResult =
     runSubset(prev.failed.map(_.table).toSet ++ prev.skipped.toSet, maxConcurrency)
 
-  /** Drop every table: its view and its snapshot. */
+  /** Drop every table: its view, its snapshot and its batches. */
   def clear(): Unit = {
     tables.keys.foreach(session.dropTable)
     tables.clear(); deps.clear()
@@ -233,14 +235,14 @@ final class Dag(session: GraftSession) {
     try {
       val t = tables(name)
       t match {
-        case DagTable(_, None, _, _, Some(mk)) =>
-          session.replaceView(name, mk())
-        case DagTable(_, None, Some(schema), rows, _) =>
+        case DagTable(_, None, _, _, Some(mk), n) =>
+          session.replaceView(name, mk(), n)
+        case DagTable(_, None, Some(schema), rows, _, _) =>
           // Reference semantics (pipeline.rs:556): CREATE IF NOT EXISTS +
           // append the registered literal rows on every run.
           if (!session.spark.catalog.tableExists(name)) session.createTable(name, schema)
           if (rows.nonEmpty) session.insert(name, rows)
-        case DagTable(_, Some(sql), _, _, _) =>
+        case DagTable(_, Some(sql), _, _, _, _) =>
           session.materialize(name, session.sql(sql))
         case other =>
           throw new IllegalArgumentException(s"Source table ${other.name} needs a schema or view")

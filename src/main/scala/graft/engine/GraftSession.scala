@@ -6,11 +6,14 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, RowBatch}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.BQCompat
 
@@ -25,23 +28,30 @@ import graft.functions.BQCompat
   * That is exactly the reference's per-session database semantics without
   * per-session process cost.
   *
-  * The session owns everything it leaves behind: the temp views, one
-  * in-memory snapshot per inserted or DAG-derived table, and the
-  * RPC-level state below. It writes no files. [[close]] releases all of
-  * it. Requests to one session are assumed not to run concurrently with
-  * its mutations (insert, createTable, dropTable, a DAG run, close);
-  * different sessions are independent.
+  * The session owns everything it leaves behind: the temp views, the
+  * rows inserted into its tables, one in-memory snapshot per DAG-derived
+  * table, and the RPC-level state below. It writes no files. [[close]]
+  * releases all of it. Requests to one session are assumed not to run
+  * concurrently with its mutations (insert, createTable, dropTable, a DAG
+  * run, close); different sessions are independent.
   *
-  * [[materialize]] is the one way a table becomes a snapshot: one
-  * materialized relation, in one partition per
-  * `spark.sql.files.maxPartitionBytes` of its size, carrying the
-  * statistics of the plan it was computed from (exact for inserted
-  * rows). A table at served sizes is therefore one partition: the
-  * planner adds no exchange under aggregates, windows or sorts over it,
-  * and broadcasts it in joins at planning time. Every graft path that
-  * re-binds a name ([[createTable]], [[materialize]], [[replaceView]],
-  * [[dropTable]]) releases the snapshot the name read before; a name
-  * re-bound by user SQL keeps it until [[close]].
+  * A table holds its inserted rows as immutable [[RowBatch]]es, one
+  * broadcast per [[insert]], under an optional base: the relation the
+  * name read before its first insert (a parquet load, a DAG snapshot or
+  * view; none for a created table). Its view is the base followed by
+  * [[RowBatch.frame]] over the batches: one partition per
+  * `spark.sql.files.maxPartitionBytes` of their size, with exact
+  * statistics. A created table at served sizes is therefore one
+  * partition: the planner adds no exchange under aggregates, windows or
+  * sorts over it, and broadcasts it in joins at planning time. An insert
+  * runs no Spark job and re-reads no row; it rebinds the view over one
+  * more batch.
+  *
+  * [[materialize]] is the one way a table becomes a snapshot. Every graft
+  * path that re-binds a name ([[createTable]], [[materialize]],
+  * [[replaceView]], [[dropTable]]) releases the batches and the snapshot
+  * the name read before; a name re-bound by user SQL keeps them until
+  * [[close]] or the name's next graft re-bind.
   */
 final class GraftSession private[engine] (
     val id: String,
@@ -59,51 +69,44 @@ final class GraftSession private[engine] (
   @volatile var defaultProject: Option[String] = None
   @volatile var catalogRoot: Option[String] = None
 
-  /** Each created, inserted or DAG-derived table's current snapshot,
-    * keyed by lower-cased table name (temp views are case-insensitive):
-    * the RDD its view reads (the in-memory blocks of [[materialize]])
-    * and its row count, when known. The blocks outlive the views that
-    * point at them, so replacing or dropping a table, and [[close]],
-    * unpersist them.
+  /** Each table graft bound, keyed by lower-cased name (temp views are
+    * case-insensitive). Its batches and snapshot outlive the views that
+    * read them, so re-binding or dropping a table, and [[close]], release
+    * them.
     */
-  private val snapshots = new ConcurrentHashMap[String, Snapshot]()
+  private val tables = new ConcurrentHashMap[String, Table]()
 
-  /** Register `df` (a frame over one RDD) as the table's view, record it
-    * with `rows` as the table's snapshot, and unpersist the one it
-    * replaces.
+  /** Register `t`'s view under `name` and release what the table it
+    * replaces held and `t` does not.
     */
-  private def bind(name: String, df: DataFrame, rows: Option[Long]): Unit = {
-    df.createOrReplaceTempView(name)
-    release(name, df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => Snapshot(l.rdd, rows) })
+  private def bind(name: String, t: Table): Unit = {
+    t.view.createOrReplaceTempView(name)
+    Option(tables.put(name.toLowerCase(Locale.ROOT), t)).foreach(release(_, Some(t)))
   }
 
-  /** Bind `name` to a lazy frame (a parquet load, a DAG view) and
-    * unpersist the snapshot the name read before. `df` must not read
-    * that snapshot itself.
+  /** Destroy `old`'s batches and unpersist its snapshot, except what
+    * `successor` still reads.
     */
-  def replaceView(name: String, df: DataFrame): Unit = {
-    df.createOrReplaceTempView(name)
-    release(name, None)
+  private def release(old: Table, successor: Option[Table]): Unit = {
+    val kept = successor.fold(Set.empty[Long])(_.batches.iterator.map(_.id).toSet)
+    old.batches.filterNot(b => kept(b.id)).foreach(_.destroy())
+    old.snapshot.filterNot(rdd => successor.exists(_.snapshot.contains(rdd))).foreach(_.unpersist(blocking = false))
   }
 
-  /** Make `successor` the table's snapshot and unpersist the one it replaces. */
-  private def release(name: String, successor: Option[Snapshot]): Unit = {
-    val key = name.toLowerCase(Locale.ROOT)
-    val old = successor.fold(snapshots.remove(key))(snapshots.put(key, _))
-    if (old != null) old.rdd.unpersist(blocking = false)
-  }
-
-  /** The recorded row count, while the view is still bound to the
-    * snapshot it was recorded for. Another path may have re-bound the
-    * name since (a DAG run, bq.loadParquet, a directory loader, SQL).
+  /** Bind `name` to a lazy frame (a parquet load, a DAG view) whose row
+    * count, when the caller took it, is `rows`, and release what the name
+    * read before. `df` must not read that itself.
     */
-  private def recordedRows(name: String): Option[Long] =
-    Option(snapshots.get(name.toLowerCase(Locale.ROOT))).filter { s =>
-      spark.sessionState.catalog.getRawTempView(name).flatMap(_.plan).exists {
-        case l: LogicalRDD => l.rdd eq s.rdd
-        case _ => false
-      }
-    }.flatMap(_.rows)
+  def replaceView(name: String, df: DataFrame, rows: Option[Long] = None): Unit =
+    bind(name, Table(df, Some(df), Vector.empty, rows))
+
+  /** The table graft bound under `name`, while the view is still the one
+    * it bound. Another path may have re-bound the name since (user SQL).
+    */
+  private def bound(name: String): Option[Table] =
+    Option(tables.get(name.toLowerCase(Locale.ROOT))).filter { t =>
+      spark.sessionState.catalog.getRawTempView(name).flatMap(_.plan).exists(_ eq t.view.queryExecution.analyzed)
+    }
 
   /** Resolve a table through this session's backend (reference:
     * executor/mod.rs dispatch): session temp views win, then the
@@ -117,39 +120,48 @@ final class GraftSession private[engine] (
   /** Create an (initially empty) table from a BigQuery-typed schema. */
   def createTable(name: String, schema: Seq[(String, String)]): Unit = {
     val st = StructType(schema.map { case (n, t) => StructField(n, bqType(t)) })
-    bind(name, spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st), Some(0L))
+    bind(name, Table(RowBatch.frame(spark, st, Nil), None, Vector.empty, Some(0L)))
   }
 
-  /** Append rows (positional values matching the table schema). A row
-    * whose width differs from the schema fails the whole call with
-    * InvalidParams, and nothing is appended.
+  /** Append rows (positional values matching the table schema) as one
+    * more batch of the table. A row whose width differs from the schema,
+    * or a value that is not of its column's type, fails the whole call
+    * with InvalidParams, and nothing is appended.
     */
   def insert(name: String, rows: Seq[Seq[Any]]): Long = {
-    val existing = spark.table(name)
-    val st = existing.schema
-    rows.iterator.zipWithIndex.find(_._1.size != st.size).foreach { case (r, i) =>
-      throw graft.api.GraftError.InvalidParams(
-        s"Row $i of $name has ${r.size} values, but the table has ${st.size} columns")
+    val t = bound(name).getOrElse {
+      val current = spark.table(name)
+      Table(current, Some(current), Vector.empty, None)
     }
-    val before = recordedRows(name)
-    val coerced = rows.map(r => Row.fromSeq(r.zip(st.fields).map { case (v, f) => coerce(v, f.dataType) }))
-    val incoming = spark.createDataFrame(coerced.asJava, st)
-    // An empty created table adds nothing but a leaf without statistics,
-    // which would make every later snapshot's size unknown.
-    val appended = if (before.contains(0L)) incoming else existing.unionAll(incoming)
-    // A snapshot keeps the view from becoming a self-referencing plan of
-    // unbounded depth after many inserts.
-    materialize(name, appended, before.map(_ + rows.size))
+    val st = t.view.schema
+    val cells = rows.zipWithIndex.map { case (r, i) =>
+      if (r.size != st.size)
+        throw graft.api.GraftError.InvalidParams(
+          s"Row $i of $name has ${r.size} values, but the table has ${st.size} columns")
+      new GenericInternalRow(r.iterator.zip(st.fields).map { case (v, f) =>
+        try cell(v, f.dataType)
+        catch {
+          case e: IllegalArgumentException =>
+            throw graft.api.GraftError.InvalidParams(s"Row $i of $name, column ${f.name}: ${e.getMessage}")
+        }
+      }.toArray)
+    }
+    val batches = t.batches :+ RowBatch(spark, st, cells)
+    val appended = RowBatch.frame(spark, st, batches)
+    bind(name, t.copy(view = t.base.fold(appended)(_.unionAll(appended)), batches = batches,
+      rows = t.rows.map(_ + rows.size)))
     rows.size.toLong
   }
 
   /** Bind `name` to an eager, right-sized snapshot of `df` and release
-    * the one it replaces; `rows` is the exact row count when the caller
-    * knows it. The blocks live in executor storage, so they are lost
-    * with their executor.
+    * what the name read before. The blocks live in executor storage, so
+    * they are lost with their executor.
     */
-  def materialize(name: String, df: DataFrame, rows: Option[Long] = None): Unit =
-    bind(name, rightSized(df).localCheckpoint(true), rows)
+  def materialize(name: String, df: DataFrame): Unit = {
+    val snapshot = rightSized(df).localCheckpoint(true)
+    val rdd = snapshot.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+    bind(name, Table(snapshot, Some(snapshot), Vector.empty, None, rdd))
+  }
 
   /** `df` coalesced to one partition per `spark.sql.files.maxPartitionBytes`
     * of its estimated size, at least one; unchanged when the size is
@@ -181,30 +193,40 @@ final class GraftSession private[engine] (
     catalog.listTables(catalog.getCurrentDatabase).map(_.table).sorted
   }
 
-  /** Without a job for a created or inserted table still bound to its
-    * snapshot; tables bound by another path are counted.
+  /** Without a job for a created table, and for a parquet load whose
+    * loader counted it, plus the rows inserted since; other tables (DAG
+    * snapshots, user views) are counted.
     */
-  def rowCount(name: String): Long = recordedRows(name).getOrElse(table(name).count())
+  def rowCount(name: String): Long = bound(name).flatMap(_.rows).getOrElse(table(name).count())
 
   def describeTable(name: String): (Seq[(String, String)], Long) =
     (table(name).schema.fields.map(f => f.name -> sparkTypeToBq(f.dataType)).toSeq, rowCount(name))
 
   def dropTable(name: String): Unit = {
     spark.catalog.dropTempView(name)
-    release(name, None)
+    Option(tables.remove(name.toLowerCase(Locale.ROOT))).foreach(release(_, None))
   }
 
-  /** Drop every view and unpersist every snapshot. */
+  /** Drop every view and release every table's batches and snapshot. */
   def close(): Unit = {
     spark.sessionState.catalog.listLocalTempViews("*").foreach(t => spark.catalog.dropTempView(t.table))
-    snapshots.values.forEach(_.rdd.unpersist(false))
-    snapshots.clear()
+    tables.values.forEach(release(_, None))
+    tables.clear()
   }
 }
 
 object GraftSession {
 
-  private final case class Snapshot(rdd: RDD[InternalRow], rows: Option[Long])
+  /** A table graft bound: its view, the base the view reads under the
+    * inserted batches, the batches, the row count when known, and the
+    * snapshot the table owns (a DAG-derived table's blocks).
+    */
+  private final case class Table(
+      view: DataFrame,
+      base: Option[DataFrame],
+      batches: Vector[RowBatch],
+      rows: Option[Long],
+      snapshot: Option[RDD[InternalRow]] = None)
 
   /** BigQuery type name → Spark type (reference: rpc/types.rs ColumnDef). */
   def bqType(t: String): DataType = t.trim.toUpperCase match {
@@ -234,18 +256,49 @@ object GraftSession {
     case other => other.sql
   }
 
-  private[engine] def coerce(v: Any, dt: DataType): Any = (v, dt) match {
+  /** `v` as the Catalyst value of a `dt` column. A value of another type
+    * raises IllegalArgumentException naming the BigQuery type, and an
+    * unparseable DATE or TIMESTAMP string InvalidParams: nothing is
+    * converted silently, and nothing fails later inside a job.
+    */
+  private def cell(v: Any, dt: DataType): Any = (v, dt) match {
     case (null, _) => null
-    case (i: Int, LongType) => i.toLong
-    case (i: Int, DoubleType) => i.toDouble
-    // JSON-style numerics: a whole number may arrive as Double (the
-    // reference's rows are JSON values with the same looseness).
-    case (d: Double, LongType) => d.toLong
-    case (l: Long, DoubleType) => l.toDouble
-    case (f: Float, DoubleType) => f.toDouble
-    case (s: String, DateType) => parse(s, "DATE")(java.sql.Date.valueOf(s))
-    case (s: String, TimestampType) => parse(s, "TIMESTAMP")(java.sql.Timestamp.valueOf(s.replace("T", " ")))
-    case (x, _) => x
+    case (Whole(n), LongType) => n
+    case (Whole(n), IntegerType) if n.isValidInt => n.toInt
+    case (Whole(n), ShortType) if n.isValidShort => n.toShort
+    case (Whole(n), ByteType) if n.isValidByte => n.toByte
+    case (n: Number, DoubleType) => n.doubleValue
+    case (n: Number, FloatType) => n.floatValue
+    case (n: Number, d: DecimalType) =>
+      scala.util.Try(Decimal(BigDecimal(n.toString))).toOption
+        .filter(_.changePrecision(d.precision, d.scale)).getOrElse(mismatch(v, dt))
+    case (s: String, StringType) => UTF8String.fromString(s)
+    case (b: Boolean, BooleanType) => b
+    case (s: String, DateType) => parse(s, "DATE")(DateTimeUtils.fromJavaDate(java.sql.Date.valueOf(s)))
+    case (d: java.sql.Date, DateType) => DateTimeUtils.fromJavaDate(d)
+    case (d: java.time.LocalDate, DateType) => DateTimeUtils.localDateToDays(d)
+    case (s: String, TimestampType) =>
+      parse(s, "TIMESTAMP")(DateTimeUtils.fromJavaTimestamp(java.sql.Timestamp.valueOf(s.replace("T", " "))))
+    case (t: java.sql.Timestamp, TimestampType) => DateTimeUtils.fromJavaTimestamp(t)
+    case (t: java.time.Instant, TimestampType) => DateTimeUtils.instantToMicros(t)
+    case (b: Array[Byte], BinaryType) => b
+    case (xs: Iterable[_], ArrayType(e, _)) => new GenericArrayData(xs.map(cell(_, e)).toArray)
+    case _ => mismatch(v, dt)
+  }
+
+  private def mismatch(v: Any, dt: DataType): Nothing =
+    throw new IllegalArgumentException(s"expected ${sparkTypeToBq(dt)}, got ${graft.api.Json.write(v)}")
+
+  /** A whole number: JSON integers arrive as Long (BigInt past 64 bits),
+    * Scala callers pass Int, and a whole number may arrive as a Double.
+    */
+  private object Whole {
+    def unapply(v: Any): Option[Long] = v match {
+      case n @ (_: Long | _: Int | _: Short | _: Byte) => Some(n.asInstanceOf[Number].longValue)
+      case n: BigInt if n.isValidLong => Some(n.toLong)
+      case d: Double if d.toLong.toDouble == d => Some(d.toLong)
+      case _ => None
+    }
   }
 
   private def parse[T](s: String, typeName: String)(value: => T): T =

@@ -111,9 +111,9 @@ object DirectoryCatalog {
     */
   def loadParquetDirectoryInfo(session: GraftSession, root: String): Seq[(Discovered, Long)] = {
     val frames = discover(root).filterNot(_.isSql).map(d => d -> readTable(session, d))
-    frames.foreach { case (d, (df, _)) => session.replaceView(d.fullName, df) }
+    frames.foreach { case (d, (df, n)) => session.replaceView(d.fullName, df, Some(n)) }
     // Bare-name aliases for unambiguous tables.
-    frames.groupBy(_._1.table).collect { case (t, Seq((_, (df, _)))) => session.replaceView(t, df) }
+    frames.groupBy(_._1.table).collect { case (t, Seq((_, (df, n)))) => session.replaceView(t, df, Some(n)) }
     frames.map { case (d, (_, n)) => (d, n) }
   }
 
@@ -146,7 +146,7 @@ object DirectoryCatalog {
     val derived = sql.map { d =>
       DagTable.derived(d.table, Files.readString(Paths.get(d.path)))
     }
-    dag.register(sources.map { case (d, (df, _)) => DagTable.view(d.table, df) } ++ derived)
+    dag.register(sources.map { case (d, (df, n)) => DagTable.view(d.table, df, Some(n)) } ++ derived)
     (dag, sources.map { case (d, (_, n)) => (d, n) }, sql)
   }
 }

@@ -1,5 +1,9 @@
 package graft.api
 
+import org.apache.spark.graftbridge.BatchBlocks
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
 import graft.SparkSpec
 
 /** Drives the full reference RPC flow end-to-end through the facade
@@ -103,8 +107,7 @@ class GraftRpcSpec extends SparkSpec {
   }
 
   test("destroySession releases the session's insert snapshots") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+    val before = held()
     val s = sid()
     rpc.dispatch("bq.createTable", Map("sessionId" -> s, "tableName" -> "t",
       "schema" -> Seq(Map("name" -> "v", "type" -> "INT64"))))
@@ -114,13 +117,13 @@ class GraftRpcSpec extends SparkSpec {
       Map("name" -> "doubled", "sql" -> "SELECT v * 2 AS v2 FROM t"))))
     val run = rpc.dispatch("bq.runDag", Map("sessionId" -> s)).asInstanceOf[Map[String, Any]]
     assert(run("success") == true)
-    val during = sc.getPersistentRDDs.keySet -- before
-    assert(during.nonEmpty, s"the inserted table keeps a snapshot: $during")
+    val during = held() -- before
+    assert(during.count(_.startsWith("batch")) == 3, s"the inserted table keeps its batches: $during")
+    assert(during.count(_.startsWith("rdd")) == 1, s"the DAG table keeps a snapshot: $during")
     assert(rpc.dispatch("bq.destroySession", Map("sessionId" -> s)) == Map("success" -> true))
-    // Back to the pre-session set: nothing persisted since survives (the
+    // Back to the pre-session set: nothing held since survives (the
     // context cleaner may only have removed older entries meanwhile).
-    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-      s"left persisted: ${sc.getPersistentRDDs.keySet -- before}")
+    released(during)
   }
 
   private def call(method: String, params: (String, Any)*): Map[String, Any] =
@@ -132,6 +135,20 @@ class GraftRpcSpec extends SparkSpec {
 
   private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** The data sessions hold: persisted RDDs (DAG snapshots) and the row
+    * batches of inserted tables.
+    */
+  private def held(): Set[String] =
+    persisted().map(id => s"rdd $id") ++ BatchBlocks.live().map(id => s"batch $id")
+
+  /** Wait until none of `data` is held. A batch's blocks are removed
+    * asynchronously after the session releases it.
+    */
+  private def released(data: Set[String]): Unit =
+    eventually(timeout(10.seconds), interval(20.millis)) {
+      assert((held() & data).isEmpty, s"still held: ${held() & data}")
+    }
+
   /** Paths under the scratch root that belong to session `id`. */
   private def scratchOf(id: String): Seq[java.nio.file.Path] = {
     val root = graft.Scratch.root
@@ -142,21 +159,26 @@ class GraftRpcSpec extends SparkSpec {
   }
 
   test("insert keeps exactly one snapshot per table and releases the replaced one") {
-    val before = persisted()
+    // An inserted table holds one copy of its rows: one batch per insert,
+    // kept by later inserts, and no persisted RDD.
+    val before = held()
     val s = sid()
     call("bq.createTable", "sessionId" -> s, "tableName" -> "t",
       "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
+    var previous = Set.empty[String]
     (1 to 5).foreach { i =>
       call("bq.insert", "sessionId" -> s, "tableName" -> "t", "rows" -> Seq(Seq(i), Seq(10 * i)))
-      val held = persisted() -- before
-      assert(held.size == 1, s"after insert $i the session holds $held")
+      val now = held() -- before
+      assert(now.size == i && now.forall(_.startsWith("batch")), s"after insert $i the session holds $now")
+      assert(previous.subsetOf(now), s"insert $i dropped ${previous -- now}")
+      previous = now
     }
     assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM t ORDER BY v")) ==
       (1 to 5).flatMap(i => Seq(i.toLong, 10L * i)).sorted)
-    // Re-creating the table releases its snapshot too.
+    // Re-creating the table releases its batches.
     call("bq.createTable", "sessionId" -> s, "tableName" -> "T",
       "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
-    assert((persisted() -- before).isEmpty)
+    released(previous)
     assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM t")).isEmpty)
     call("bq.destroySession", "sessionId" -> s)
   }
@@ -220,12 +242,16 @@ class GraftRpcSpec extends SparkSpec {
       insert("a", 1, 2)
       assert(described("a") == (2L, 0))
 
-      // Re-bound by bq.loadParquet: the parquet is counted.
+      // Re-bound by bq.loadParquet: the loader's count, then inserts on top.
       import spark.implicits._
-      val path = graft.Scratch.dir("rpccount-").resolve("a.parquet").toString
+      val root = graft.Scratch.dir("rpccount-")
+      val path = root.resolve("a.parquet").toString
       (1L to 5L).toDF("v").write.parquet(path)
       call("bq.loadParquet", "sessionId" -> s, "tableName" -> "a", "path" -> path)
-      assert(described("a")._1 == 5L)
+      assert(described("a") == (5L, 0))
+      call("bq.loadParquet", "sessionId" -> s, "tableName" -> "p", "path" -> path)
+      insert("p", 6, 7)
+      assert(described("p") == (7L, 0))
 
       // Re-bound by a DAG run, then inserted into: counted from the new snapshot.
       call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
@@ -234,51 +260,68 @@ class GraftRpcSpec extends SparkSpec {
       assert(described("b")._1 == 3L)
       insert("b", 8, 9)
       assert(described("b")._1 == 5L)
-      assert(listed()._1 == Map("a" -> 5L, "b" -> 5L))
+      assert(listed()._1 == Map("a" -> 5L, "b" -> 5L, "p" -> 7L))
       call("bq.destroySession", "sessionId" -> s)
+
+      // Directory loaders: every parquet name keeps the count its loader took.
+      val ds = java.nio.file.Files.createDirectories(root.resolve("tree/proj/mart"))
+      (1L to 3L).toDF("k").write.parquet(ds.resolve("facts.parquet").toString)
+      java.nio.file.Files.writeString(ds.resolve("big.sql"), "SELECT k FROM facts WHERE k > 1")
+      val d = sid()
+      call("bq.loadParquetDirectory", "sessionId" -> d, "rootPath" -> root.resolve("tree").toString)
+      assert(jobsOf(rpc.dispatch("bq.listTables", Map("sessionId" -> d))
+        .asInstanceOf[Seq[Map[String, Any]]].map(m => m("name") -> m("rowCount")).toMap) ==
+        (Map("facts" -> 3L, "proj_mart_facts" -> 3L), 0))
+      call("bq.loadDagFromDirectory", "sessionId" -> d, "rootPath" -> root.resolve("tree").toString)
+      assert(call("bq.runDag", "sessionId" -> d)("success") == true)
+      assert(jobsOf(call("bq.describeTable", "sessionId" -> d, "tableName" -> "facts")("rowCount")) == (3L, 0))
+      assert(call("bq.describeTable", "sessionId" -> d, "tableName" -> "big")("rowCount") == 2L)
+      call("bq.destroySession", "sessionId" -> d)
     } finally sc.removeSparkListener(listener)
   }
 
   test("destroySession closes only its own session: views, snapshots and scratch dir") {
     /** A session with an inserted `t` and two derived DAG tables over it,
-      * and the persisted RDDs of `t` and of the DAG tables.
+      * and the data `t` and the DAG tables hold.
       */
-    def populate(): (String, Set[Int], Set[Int]) = {
-      val start = persisted()
+    def populate(): (String, Set[String], Set[String]) = {
+      val start = held()
       val s = sid()
       call("bq.createTable", "sessionId" -> s, "tableName" -> "t",
         "schema" -> Seq(Map("name" -> "v", "type" -> "INT64")))
       (1 to 3).foreach(i => call("bq.insert", "sessionId" -> s, "tableName" -> "t", "rows" -> Seq(Seq(i))))
-      val inserted = persisted() -- start
+      val inserted = held() -- start
       call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
         Map("name" -> "doubled", "sql" -> "SELECT v * 2 AS v FROM t"),
         Map("name" -> "total", "sql" -> "SELECT SUM(v) AS v FROM doubled")))
       assert(call("bq.runDag", "sessionId" -> s)("success") == true)
-      (s, inserted, persisted() -- start -- inserted)
+      (s, inserted, held() -- start -- inserted)
     }
     val (first, firstT, firstDag) = populate()
     val (second, secondT, secondDag) = populate()
-    assert(Seq(firstT, secondT).forall(_.size == 1) && Seq(firstDag, secondDag).forall(_.size == 2))
+    // `t` holds one batch per insert; each DAG table one snapshot.
+    assert(Seq(firstT, secondT).forall(t => t.size == 3 && t.forall(_.startsWith("batch"))), (firstT, secondT))
+    assert(Seq(firstDag, secondDag).forall(d => d.size == 2 && d.forall(_.startsWith("rdd"))), (firstDag, secondDag))
     // Sessions write no files: nothing under the scratch root is theirs.
     assert(scratchOf(first).isEmpty && scratchOf(second).isEmpty, scratchOf(first) ++ scratchOf(second))
 
     assert(call("bq.destroySession", "sessionId" -> first)("success") == true)
-    assert((persisted() & (firstT ++ firstDag)).isEmpty)
-    assert((secondT ++ secondDag).subsetOf(persisted()))
+    released(firstT ++ firstDag)
+    assert((secondT ++ secondDag).subsetOf(held()))
     assert(ints(call("bq.query", "sessionId" -> second, "sql" -> "SELECT v FROM total")) == Seq(12L))
 
     assert(call("bq.clearDag", "sessionId" -> second)("success") == true)
-    assert((persisted() & secondDag).isEmpty, s"clearDag kept ${persisted() & secondDag}")
-    assert(secondT.subsetOf(persisted()))
+    assert((held() & secondDag).isEmpty, s"clearDag kept ${held() & secondDag}")
+    assert(secondT.subsetOf(held()))
     assert(ints(call("bq.query", "sessionId" -> second, "sql" -> "SELECT v FROM t ORDER BY v")) == Seq(1L, 2L, 3L))
     call("bq.destroySession", "sessionId" -> second)
-    assert((persisted() & secondT).isEmpty)
+    released(secondT)
     assert(scratchOf(second).isEmpty)
   }
 
   test("re-binding an inserted name by bq.loadParquet or a DAG table releases its snapshot") {
     import spark.implicits._
-    val before = persisted()
+    val before = held()
     val s = sid()
     val schema = Seq(Map("name" -> "v", "type" -> "INT64"))
     def insert(t: String, vs: Long*): Unit =
@@ -287,23 +330,24 @@ class GraftRpcSpec extends SparkSpec {
 
     call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
     insert("a", 1, 2, 3)
-    assert((persisted() -- before).size == 1)
+    val insertedA = held() -- before
+    assert(insertedA.size == 1)
     val path = graft.Scratch.dir("rpcrebind-").resolve("a.parquet").toString
     (1L to 5L).toDF("v").write.parquet(path)
     call("bq.loadParquet", "sessionId" -> s, "tableName" -> "A", "path" -> path)
-    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+    released(insertedA)
     assert(described("a") == 5L)
 
     call("bq.createTable", "sessionId" -> s, "tableName" -> "b", "schema" -> schema)
     insert("b", 7, 8)
-    assert((persisted() -- before).size == 1)
+    val inserted = held() -- before
+    assert(inserted.size == 1)
     call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
       Map("name" -> "b", "sql" -> "SELECT v FROM a WHERE v > 2")))
-    val inserted = persisted() -- before
     assert(call("bq.runDag", "sessionId" -> s)("success") == true)
-    val derived = persisted() -- before
-    assert((derived & inserted).isEmpty, s"the insert snapshot stayed: $derived")
-    assert(derived.size == 1, s"b holds $derived")
+    released(inserted)
+    val derived = held() -- before
+    assert(derived.size == 1 && derived.forall(_.startsWith("rdd")), s"b holds $derived")
     assert(described("b") == 3L)
     assert(ints(call("bq.query", "sessionId" -> s, "sql" -> "SELECT v FROM b ORDER BY v")) == Seq(3L, 4L, 5L))
     call("bq.destroySession", "sessionId" -> s)
@@ -369,6 +413,26 @@ class GraftRpcSpec extends SparkSpec {
     }
     call("bq.insert", "sessionId" -> s, "tableName" -> "dated", "rows" -> Seq(Seq("2024-01-02", "2024-01-02T03:04:05")))
     assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "dated")("rowCount") == 1L)
+
+    // A value of the wrong type names its row, column and BigQuery type,
+    // and nothing of the call is appended.
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "typed", "schema" -> Seq(
+      Map("name" -> "s", "type" -> "STRING"), Map("name" -> "n", "type" -> "INT64"),
+      Map("name" -> "b", "type" -> "BOOL"), Map("name" -> "x", "type" -> "FLOAT64")))
+    val good = Seq("a", 1, true, 1.5)
+    Seq(
+      Seq(42, 1, true, 1.5) -> "Row 1 of typed, column s: expected STRING, got 42",
+      Seq(Map("k" -> 1), 1, true, 1.5) -> """Row 1 of typed, column s: expected STRING, got {"k":1}""",
+      Seq("a", "1", true, 1.5) -> """Row 1 of typed, column n: expected INT64, got "1"""",
+      Seq("a", 1, "true", 1.5) -> """Row 1 of typed, column b: expected BOOL, got "true"""",
+      Seq("a", 1, true, "1.5") -> """Row 1 of typed, column x: expected FLOAT64, got "1.5"""").foreach {
+      case (row, expected) =>
+        val err = wireError("bq.insert", "sessionId" -> s, "tableName" -> "typed", "rows" -> Seq(good, row))
+        assert(err("code") == -32600L, err)
+        assert(err("message").toString.contains(expected), err)
+    }
+    assert(call("bq.describeTable", "sessionId" -> s, "tableName" -> "typed")("rowCount") == 0L)
+    assert(call("bq.query", "sessionId" -> s, "sql" -> "SELECT * FROM typed")("totalRows") == "0")
     call("bq.destroySession", "sessionId" -> s)
   }
 

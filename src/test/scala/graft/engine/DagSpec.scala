@@ -1,5 +1,9 @@
 package graft.engine
 
+import org.apache.spark.graftbridge.BatchBlocks
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
 import graft.SparkSpec
 
 /** Mirrors the reference's pipeline test suite semantics
@@ -245,26 +249,32 @@ class DagSpec extends SparkSpec {
   }
 
   test("a derived table is one snapshot; re-running it releases the previous one; clear releases all") {
-    val sc = spark.sparkContext
-    def persisted(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    val before = persisted()
+    // What the session holds: the derived tables' snapshots (persisted
+    // RDDs) and the source's row batches, one per run's insert.
+    def held(): Set[String] = spark.sparkContext.getPersistentRDDs.keySet.map(id => s"rdd $id").toSet ++
+      BatchBlocks.live().map(id => s"batch $id")
+    val before = held()
     val (s, dag) = freshDag()
     dag.register(Seq(
       DagTable.source("snap_src", Seq("v" -> "INT64"), Seq(Seq(1))),
       DagTable.derived("snap_out", "SELECT v + 1 AS v FROM snap_src"),
       DagTable.derived("snap_sum", "SELECT SUM(v) AS v FROM snap_out")))
-    var previous = Set.empty[Int]
+    var previous = Set.empty[String]
     (1 to 3).foreach { run =>
       assert(dag.run().allSucceeded)
-      val held = persisted() -- before
-      assert(held.size == 3, s"after run $run the session holds $held")
-      assert((held & previous).isEmpty, s"run $run kept ${held & previous}")
-      previous = held
+      val now = held() -- before
+      val (snapshots, batches) = now.partition(_.startsWith("rdd"))
+      assert(snapshots.size == 2 && batches.size == run, s"after run $run the session holds $now")
+      assert((snapshots & previous).isEmpty, s"run $run kept ${snapshots & previous}")
+      assert(previous.filter(_.startsWith("batch")).subsetOf(batches), s"run $run dropped a batch of $previous")
+      previous = now
       // The source appends its literal row on every run.
       assert(s.sql("SELECT v FROM snap_sum").collect()(0).getLong(0) == 2L * run)
     }
     dag.clear()
-    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+    eventually(timeout(10.seconds), interval(20.millis)) {
+      assert((held() -- before).isEmpty, s"left held: ${held() -- before}")
+    }
     assert(!s.spark.catalog.tableExists("snap_out"))
   }
 

@@ -12,12 +12,13 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.SparkSpec
 import graft.api.GraftRpc
 
-/** An inserted table is one materialized relation, sized by
-  * `spark.sql.files.maxPartitionBytes` and carrying exact statistics, so
-  * the planner needs no shuffle for aggregates, windows or joins over
-  * tables at served sizes, and still gets the same rows when a small
-  * scan split leaves a table in several partitions. A DAG-derived table
-  * is the same kind of snapshot.
+/** An inserted table is one relation over its row batches, in one
+  * partition per `spark.sql.files.maxPartitionBytes` of their size and
+  * carrying exact statistics, so the planner needs no shuffle for
+  * aggregates, windows or joins over tables at served sizes, and still
+  * gets the same rows when a small scan split leaves a table in several
+  * partitions. A DAG-derived table is a snapshot right-sized the same
+  * way.
   */
 class InsertSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 

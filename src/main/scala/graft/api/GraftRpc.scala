@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.graftbridge.ServedJob
 
 import graft.engine.{DagTable, GraftSession, SessionManager}
 import graft.sources.DirectoryCatalog
@@ -262,31 +263,28 @@ object GraftRpc {
     * totalRows, jobComplete.
     *
     * Materialization is bounded: `limit(maxResults + 1)` plans a
-    * CollectLimit, which pulls partitions incrementally and stops once
-    * the limit is satisfied — the full result is never resident on the
-    * driver. When the result exceeds the cap, the response carries
-    * `truncated: true` so clients can re-query with a filter or a
-    * higher explicit maxResults.
+    * CollectLimit, whose one result partition holds at most that many
+    * rows, so the full result is never resident on the driver. It runs
+    * as one SQL execution and one job ([[ServedJob.collect]]), whose task
+    * function is a named class rather than a lambda: for a lambda, Spark
+    * re-reads and parses the class file that declares it on every job,
+    * over a third of a small query's time. When the result exceeds
+    * the cap, the response carries `truncated: true` so clients can
+    * re-query with a filter or a higher explicit maxResults.
     */
   def toBqResponse(df: DataFrame, maxResults: Int = DefaultMaxResults): Map[String, Any] = {
     if (maxResults <= 0) throw GraftError.InvalidParams(s"maxResults must be positive: $maxResults")
     val schema = df.schema.fields.map(f =>
       Map("name" -> f.name, "type" -> GraftSession.sparkTypeToBq(f.dataType)))
-    val it = df.limit(maxResults + 1).toLocalIterator()
-    val rows = Vector.newBuilder[Map[String, Any]]
-    var n = 0
-    while (it.hasNext && n < maxResults) {
-      rows += Map("f" -> it.next().toSeq.map(v => Map("v" -> v)))
-      n += 1
-    }
-    val truncated = it.hasNext
+    val all = ServedJob.collect(df.limit(maxResults + 1))
+    val rows = all.take(maxResults).map(r => Map("f" -> r.toSeq.map(v => Map("v" -> v))))
     Map(
       "kind" -> "bigquery#queryResponse",
       "schema" -> Map("fields" -> schema.toSeq),
-      "rows" -> rows.result(),
-      "totalRows" -> n.toString,
+      "rows" -> rows,
+      "totalRows" -> rows.size.toString,
       "jobComplete" -> true) ++
-      (if (truncated) Map("truncated" -> true) else Map.empty)
+      (if (all.size > maxResults) Map("truncated" -> true) else Map.empty)
   }
 
   private def schemaParam(params: Map[String, Any]): Seq[(String, String)] =

@@ -10,8 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graftbridge.{ColumnBridge, RowBatch}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, RowBatch, ServedJob}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -153,14 +152,15 @@ final class GraftSession private[engine] (
     rows.size.toLong
   }
 
-  /** Bind `name` to an eager, right-sized snapshot of `df` and release
-    * what the name read before. The blocks live in executor storage, so
-    * they are lost with their executor.
+  /** Bind `name` to a right-sized snapshot of `df` and release what the
+    * name read before. One job ([[ServedJob.snapshot]]) both stores the
+    * snapshot and counts its rows, so the table's statistics and
+    * [[rowCount]] carry the exact count. The blocks live in executor
+    * storage, so they are lost with their executor.
     */
   def materialize(name: String, df: DataFrame): Unit = {
-    val snapshot = rightSized(df).localCheckpoint(true)
-    val rdd = snapshot.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-    bind(name, Table(snapshot, Some(snapshot), Vector.empty, None, rdd))
+    val (snapshot, rdd, rows) = ServedJob.snapshot(rightSized(df))
+    bind(name, Table(snapshot, Some(snapshot), Vector.empty, Some(rows), Some(rdd)))
   }
 
   /** `df` coalesced to one partition per `spark.sql.files.maxPartitionBytes`
@@ -193,9 +193,10 @@ final class GraftSession private[engine] (
     catalog.listTables(catalog.getCurrentDatabase).map(_.table).sorted
   }
 
-  /** Without a job for a created table, and for a parquet load whose
-    * loader counted it, plus the rows inserted since; other tables (DAG
-    * snapshots, user views) are counted.
+  /** Without a job for every table graft bound (a created table, a
+    * parquet load, whose loader counted it, and a DAG snapshot, counted
+    * by the job that made it), plus the rows inserted since; a name
+    * re-bound by user SQL is counted with a job.
     */
   def rowCount(name: String): Long = bound(name).flatMap(_.rows).getOrElse(table(name).count())
 

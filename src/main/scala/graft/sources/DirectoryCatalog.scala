@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.ServedJob
 
 import graft.api.GraftError
 import graft.engine.{Dag, DagTable, GraftSession}
@@ -80,14 +81,15 @@ object DirectoryCatalog {
     })
   }
 
-  /** A parquet file or directory and its row count (a footer-metadata
-    * job, not a full scan). Any failure to read it, a missing path or a
-    * corrupt file, is a LoaderError (reference error.rs `Loader`).
+  /** A parquet file or directory and its row count, taken by one job
+    * over a scan with no columns, which reads no column data. Any
+    * failure to read it, a missing path or a corrupt file, is a
+    * LoaderError (reference error.rs `Loader`).
     */
   def readParquet(session: GraftSession, path: String): (DataFrame, Long) =
     try {
       val df = session.spark.read.parquet(path)
-      (df, df.count())
+      (df, ServedJob.count(df.select()))
     } catch {
       case NonFatal(e) => throw GraftError.LoaderError(s"Failed to load parquet at $path: ${e.getMessage}")
     }

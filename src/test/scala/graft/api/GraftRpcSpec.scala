@@ -133,6 +133,24 @@ class GraftRpcSpec extends SparkSpec {
     resp("rows").asInstanceOf[Seq[Map[String, Any]]]
       .map(_("f").asInstanceOf[Seq[Map[String, Any]]].head("v").asInstanceOf[Long])
 
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      ListenerBridge.waitUntilEmpty(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** The data sessions hold: persisted RDDs (DAG snapshots) and the row
@@ -203,81 +221,75 @@ class GraftRpcSpec extends SparkSpec {
   }
 
   test("describeTable and listTables count inserted tables without a job, exactly") {
-    import org.apache.spark.graftbridge.ListenerBridge
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf[A](f: => A): (A, Int) = {
-      ListenerBridge.waitUntilEmpty(sc)
-      val j0 = jobs.get
-      val a = f
-      ListenerBridge.waitUntilEmpty(sc)
-      (a, jobs.get - j0)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val s = sid()
-      val schema = Seq(Map("name" -> "v", "type" -> "INT64"))
-      def insert(t: String, vs: Long*): Unit =
-        call("bq.insert", "sessionId" -> s, "tableName" -> t, "rows" -> vs.map(Seq(_)))
-      def described(t: String): (Any, Int) =
-        jobsOf(call("bq.describeTable", "sessionId" -> s, "tableName" -> t)("rowCount"))
-      def listed(): (Map[Any, Any], Int) = jobsOf(rpc.dispatch("bq.listTables", Map("sessionId" -> s))
-        .asInstanceOf[Seq[Map[String, Any]]].map(m => m("name") -> m("rowCount")).toMap)
+    val s = sid()
+    val schema = Seq(Map("name" -> "v", "type" -> "INT64"))
+    def insert(t: String, vs: Long*): Unit =
+      call("bq.insert", "sessionId" -> s, "tableName" -> t, "rows" -> vs.map(Seq(_)))
+    def described(t: String): (Any, Int) =
+      jobsOf(call("bq.describeTable", "sessionId" -> s, "tableName" -> t)("rowCount"))
+    def listed(id: String = s): (Map[Any, Any], Int) = jobsOf(rpc.dispatch("bq.listTables", Map("sessionId" -> id))
+      .asInstanceOf[Seq[Map[String, Any]]].map(m => m("name") -> m("rowCount")).toMap)
 
-      call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
-      assert(described("a") == (0L, 0))
-      insert("a", 1, 2); insert("a", 3, 4, 5); insert("a", 6)
-      assert(described("a") == (6L, 0))
-      assert(described("A") == (6L, 0))
-      call("bq.createTable", "sessionId" -> s, "tableName" -> "b", "schema" -> schema)
-      insert("b", 7)
-      assert(listed() == (Map("a" -> 6L, "b" -> 1L), 0))
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
+    assert(described("a") == (0L, 0))
+    insert("a", 1, 2); insert("a", 3, 4, 5); insert("a", 6)
+    assert(described("a") == (6L, 0))
+    assert(described("A") == (6L, 0))
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "b", "schema" -> schema)
+    insert("b", 7)
+    assert(listed() == (Map("a" -> 6L, "b" -> 1L), 0))
 
-      // Re-creating a table starts its count over.
-      call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
-      insert("a", 1, 2)
-      assert(described("a") == (2L, 0))
+    // Re-creating a table starts its count over.
+    call("bq.createTable", "sessionId" -> s, "tableName" -> "a", "schema" -> schema)
+    insert("a", 1, 2)
+    assert(described("a") == (2L, 0))
 
-      // Re-bound by bq.loadParquet: the loader's count, then inserts on top.
-      import spark.implicits._
-      val root = graft.Scratch.dir("rpccount-")
-      val path = root.resolve("a.parquet").toString
-      (1L to 5L).toDF("v").write.parquet(path)
-      call("bq.loadParquet", "sessionId" -> s, "tableName" -> "a", "path" -> path)
-      assert(described("a") == (5L, 0))
-      call("bq.loadParquet", "sessionId" -> s, "tableName" -> "p", "path" -> path)
-      insert("p", 6, 7)
-      assert(described("p") == (7L, 0))
+    // Re-bound by bq.loadParquet: the loader's count, then inserts on top.
+    import spark.implicits._
+    val root = graft.Scratch.dir("rpccount-")
+    val path = root.resolve("a.parquet").toString
+    (1L to 5L).toDF("v").write.parquet(path)
+    call("bq.loadParquet", "sessionId" -> s, "tableName" -> "a", "path" -> path)
+    assert(described("a") == (5L, 0))
+    call("bq.loadParquet", "sessionId" -> s, "tableName" -> "p", "path" -> path)
+    insert("p", 6, 7)
+    assert(described("p") == (7L, 0))
 
-      // Re-bound by a DAG run, then inserted into: counted from the new snapshot.
-      call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
-        Map("name" -> "b", "sql" -> "SELECT v FROM a WHERE v > 2")))
-      assert(call("bq.runDag", "sessionId" -> s)("success") == true)
-      assert(described("b")._1 == 3L)
-      insert("b", 8, 9)
-      assert(described("b")._1 == 5L)
-      assert(listed()._1 == Map("a" -> 5L, "b" -> 5L, "p" -> 7L))
-      call("bq.destroySession", "sessionId" -> s)
+    // Re-bound by a DAG run, then inserted into: the snapshot's job counted it.
+    call("bq.registerDag", "sessionId" -> s, "tables" -> Seq(
+      Map("name" -> "b", "sql" -> "SELECT v FROM a WHERE v > 2")))
+    assert(call("bq.runDag", "sessionId" -> s)("success") == true)
+    assert(described("b") == (3L, 0))
+    insert("b", 8, 9)
+    assert(described("b") == (5L, 0))
+    assert(listed() == (Map("a" -> 5L, "b" -> 5L, "p" -> 7L), 0))
+    call("bq.destroySession", "sessionId" -> s)
 
-      // Directory loaders: every parquet name keeps the count its loader took.
-      val ds = java.nio.file.Files.createDirectories(root.resolve("tree/proj/mart"))
-      (1L to 3L).toDF("k").write.parquet(ds.resolve("facts.parquet").toString)
-      java.nio.file.Files.writeString(ds.resolve("big.sql"), "SELECT k FROM facts WHERE k > 1")
-      val d = sid()
-      call("bq.loadParquetDirectory", "sessionId" -> d, "rootPath" -> root.resolve("tree").toString)
-      assert(jobsOf(rpc.dispatch("bq.listTables", Map("sessionId" -> d))
-        .asInstanceOf[Seq[Map[String, Any]]].map(m => m("name") -> m("rowCount")).toMap) ==
-        (Map("facts" -> 3L, "proj_mart_facts" -> 3L), 0))
-      call("bq.loadDagFromDirectory", "sessionId" -> d, "rootPath" -> root.resolve("tree").toString)
-      assert(call("bq.runDag", "sessionId" -> d)("success") == true)
-      assert(jobsOf(call("bq.describeTable", "sessionId" -> d, "tableName" -> "facts")("rowCount")) == (3L, 0))
-      assert(call("bq.describeTable", "sessionId" -> d, "tableName" -> "big")("rowCount") == 2L)
-      call("bq.destroySession", "sessionId" -> d)
-    } finally sc.removeSparkListener(listener)
+    // Directory loaders: every parquet name keeps the count its loader
+    // took, and every derived table the count its snapshot took.
+    val ds = java.nio.file.Files.createDirectories(root.resolve("tree/proj/mart"))
+    (1L to 3L).toDF("k").write.parquet(ds.resolve("facts.parquet").toString)
+    java.nio.file.Files.writeString(ds.resolve("big.sql"), "SELECT k FROM facts WHERE k > 1")
+    val d = sid()
+    call("bq.loadParquetDirectory", "sessionId" -> d, "rootPath" -> root.resolve("tree").toString)
+    assert(listed(d) == (Map("facts" -> 3L, "proj_mart_facts" -> 3L), 0))
+    call("bq.loadDagFromDirectory", "sessionId" -> d, "rootPath" -> root.resolve("tree").toString)
+    assert(call("bq.runDag", "sessionId" -> d)("success") == true)
+    assert(jobsOf(call("bq.describeTable", "sessionId" -> d, "tableName" -> "facts")("rowCount")) == (3L, 0))
+    assert(jobsOf(call("bq.describeTable", "sessionId" -> d, "tableName" -> "big")("rowCount")) == (2L, 0))
+    assert(listed(d) == (Map("big" -> 2L, "facts" -> 3L, "proj_mart_facts" -> 3L), 0))
+    call("bq.destroySession", "sessionId" -> d)
+  }
+
+  test("bq.loadParquet runs two jobs: the schema read and one row count") {
+    import spark.implicits._
+    val s = sid()
+    val path = graft.Scratch.dir("rpcload-").resolve("t.parquet").toString
+    (1L to 40L).toDF("v").repartition(4).write.parquet(path)
+    val (loaded, jobs) = jobsOf(call("bq.loadParquet", "sessionId" -> s, "tableName" -> "t", "path" -> path))
+    assert(loaded("loadedRows") == 40L)
+    assert(jobs == 2, s"$jobs jobs")
+    call("bq.destroySession", "sessionId" -> s)
   }
 
   test("destroySession closes only its own session: views, snapshots and scratch dir") {

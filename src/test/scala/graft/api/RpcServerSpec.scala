@@ -217,10 +217,12 @@ class RpcServerSpec extends SparkSpec {
       }
       val raised = client.sendRequest("bq.query", Map("sessionId" -> s, "sql" -> "SELECT raise_error('boom')"))
       assert(asMap(raised("error"))("code") == -32000L, raised)
+      assert(asMap(raised("error"))("message").toString.contains("boom"), raised)
       val raisedLocal = intercept[GraftError] {
         rpc.dispatch("bq.query", Map("sessionId" -> local, "sql" -> "SELECT raise_error('boom')"))
       }
       assert(raisedLocal.code == -32000, raisedLocal)
+      assert(raisedLocal.getMessage.contains("boom"), raisedLocal)
       rpc.dispatch("bq.destroySession", Map("sessionId" -> local))
 
       assert(client.call("bq.destroySession", Map("sessionId" -> s))("success") == true)

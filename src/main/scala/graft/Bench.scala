@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,34 +28,41 @@ object Bench {
     val accounting = new org.apache.spark.graftbridge.ShuffleAccounting
     spark.sparkContext.addSparkListener(accounting)
     val shuffleBytes = scala.collection.mutable.Map[String, Long]()
+    // One run of a query into the noop sink, which forces every output
+    // column to be computed (count() would let Catalyst prune the
+    // projections entirely). Returns its wall seconds; the query's
+    // Materialize scope is released after the clock stops.
+    def run(fn: (SparkSession, String) => DataFrame): Double = {
+      val (dt, scope) = Materialize.scope {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () }
+        (System.nanoTime() - t0) / 1e9
+      }
+      scope.release()
+      dt
+    }
+    // Untimed, between queries: drop whatever a query left cached or
+    // checkpointed outside its scope, then a full GC so the
+    // ContextCleaner frees this query's broadcasts and shuffles now
+    // instead of letting 200 executions of state pile into the storage
+    // pool (see GraftConf's periodicGC note).
+    def sweep(): Unit = {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      System.gc()
+    }
     // Full untimed warmup pass: JIT, codegen cache, parquet footers.
     // Otherwise whichever query happens to run first absorbs ~4s of JVM
     // warmup and the per-query numbers are order-dependent. Shuffle
     // volume is attributed here (one clean measured pass per query;
     // plan-shape, so the warmup and timed plans are identical).
     val warmup = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val (sb, _) = accounting.measure(spark.sparkContext) {
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
+      var dt = 0.0
+      val (sb, _) = accounting.measure(spark.sparkContext) { dt = run(fn) }
       shuffleBytes(name) = sb
       System.err.println(f"[bench] warmup $name $dt%.1fs shuffle ${sb / 1024 / 1024}mb")
-      // Queries that cache() build fresh lineage per invocation; without
-      // this the cached blocks of every past run accumulate and GC
-      // pressure lands on random later queries.
-      spark.catalog.clearCache()
-      // clearCache drops SQL-cached relations but NOT localCheckpoint'd
-      // RDD blocks, which otherwise wait for the ContextCleaner and
-      // raise the per-job cost of later many-job queries: unpersist
-      // everything still registered explicitly.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // Untimed full GC: lets the ContextCleaner reap this query's
-      // broadcasts/shuffles NOW instead of letting 200 executions of
-      // state pile into the storage pool (see GraftConf's periodicGC note).
-      System.gc()
+      sweep()
       name -> dt
     }
     // Drift canary: one fixed sub-second query (TPC-H Q6 — one scan, one
@@ -68,10 +78,7 @@ object Bench {
     val canarySamples = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     var timedIdx = 0
     def canary(): Unit = canaryFn.foreach { fn =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = run(fn)
       canarySamples += ((timedIdx, dt))
       System.err.println(f"[bench] canary at=$timedIdx $dt%.2fs")
     }
@@ -79,23 +86,15 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       timedIdx += 1
       if (timedIdx % 30 == 0) canary()
-      // noop sink forces every output column to be computed (count()
-      // would let Catalyst prune the projections entirely). Min of two
-      // timed runs for the slower queries, so a single GC pause does not
-      // masquerade as a plan regression; sub-half-second queries get one
-      // run. The JVM-wide GC time spent during each run is recorded with
-      // it.
+      // Min of two timed runs for the slower queries, so a single GC
+      // pause does not masquerade as a plan regression; sub-half-second
+      // queries get one run. The JVM-wide GC time spent during each run
+      // is recorded with it.
       def timedRun(): (Double, Long) = {
         val g0 = totalGcMs()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = run(fn)
         val gd = totalGcMs() - g0
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
+        sweep()
         System.err.println(f"[bench] timed $name $dt%.1fs gc ${gd}ms")
         (dt, gd)
       }

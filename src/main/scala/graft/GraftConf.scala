@@ -39,7 +39,7 @@ object GraftConf {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Let AQE re-plan INSIDE cached plans too (default false): without
-      // it every .cache() subtree plans with the static shuffle-partition
+      // it every cached subtree plans with the static shuffle-partition
       // count — no coalescing, no runtime join re-selection — and each
       // cached-tier read pays a full wave of near-empty tasks. Scale-
       // independent: the default exists only to preserve cached output

@@ -5,9 +5,10 @@ import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
 import java.nio.file.attribute.BasicFileAttributes
 
 /** Where scratch data lives: one root per JVM under `java.io.tmpdir`,
-  * created on first use and deleted by one shutdown hook. Owners delete
-  * their own subtrees earlier when they can (a stale Verify output); the
-  * hook catches the rest.
+  * created on first use and deleted by one shutdown hook. A directory
+  * made inside a [[Materialize]] scope is deleted when the scope is
+  * released; owners delete other subtrees earlier when they can (a stale
+  * Verify output), and the hook catches the rest.
   */
 object Scratch {
 
@@ -17,8 +18,10 @@ object Scratch {
     r
   }
 
-  /** A fresh, uniquely named directory under [[root]]. */
-  def dir(prefix: String): Path = Files.createTempDirectory(root, prefix)
+  /** A fresh, uniquely named directory under [[root]], owned by the
+    * innermost open [[Materialize]] scope.
+    */
+  def dir(prefix: String): Path = Materialize.own(Files.createTempDirectory(root, prefix))(delete)
 
   /** Delete `p` and everything under it, without following links. A
     * missing `p`, or an entry that vanishes mid-walk (Spark's own

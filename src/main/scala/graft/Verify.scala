@@ -27,9 +27,9 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        spark.catalog.clearCache()
+        val (_, scope) = Materialize.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+        scope.release()
         System.gc()
       }
       catch { case e: Throwable =>

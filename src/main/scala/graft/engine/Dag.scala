@@ -64,9 +64,13 @@ final case class DagResult(
   *     serialized through a driver-side SQL string.
   *
   * A derived table's blocks live in executor storage and are lost with
-  * the executor. Re-running a table releases its previous snapshot;
-  * [[clear]] releases those of the tables it drops, and closing the
-  * session releases the rest.
+  * the executor. Each snapshot is a [[graft.Materialize]] scope that the
+  * session's table owns: re-running a table releases its previous
+  * snapshot, [[clear]] releases those of the tables it drops, and
+  * closing the session releases the rest. The table slots are threads
+  * the run starts, so a run inside an open scope (a query builder under
+  * Verify or Bench) also leaves every snapshot and view-builder cache to
+  * that scope, released after the caller's sink.
   *
   * A run is one future per table, chained on its upstream tables'
   * futures: a table starts as soon as its dependencies finish, at most

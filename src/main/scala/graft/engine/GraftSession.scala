@@ -5,15 +5,14 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, RowBatch, ServedJob}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Materialize
 import graft.functions.BQCompat
 
 /** Session-isolated query surface, mirroring the reference's session
@@ -83,13 +82,13 @@ final class GraftSession private[engine] (
     Option(tables.put(name.toLowerCase(Locale.ROOT), t)).foreach(release(_, Some(t)))
   }
 
-  /** Destroy `old`'s batches and unpersist its snapshot, except what
-    * `successor` still reads.
+  /** Destroy `old`'s batches and release its snapshot's scope, except
+    * what `successor` still reads.
     */
   private def release(old: Table, successor: Option[Table]): Unit = {
     val kept = successor.fold(Set.empty[Long])(_.batches.iterator.map(_.id).toSet)
     old.batches.filterNot(b => kept(b.id)).foreach(_.destroy())
-    old.snapshot.filterNot(rdd => successor.exists(_.snapshot.contains(rdd))).foreach(_.unpersist(blocking = false))
+    old.snapshot.filterNot(s => successor.exists(_.snapshot.contains(s))).foreach(_.release())
   }
 
   /** Bind `name` to a lazy frame (a parquet load, a DAG view) whose row
@@ -155,12 +154,15 @@ final class GraftSession private[engine] (
   /** Bind `name` to a right-sized snapshot of `df` and release what the
     * name read before. One job ([[ServedJob.snapshot]]) both stores the
     * snapshot and counts its rows, so the table's statistics and
-    * [[rowCount]] carry the exact count. The blocks live in executor
-    * storage, so they are lost with their executor.
+    * [[rowCount]] carry the exact count. The table owns the snapshot's
+    * [[Materialize.Scope]] until the name is re-bound or dropped, or the
+    * session closes; a scope open around the call owns it too. The
+    * blocks live in executor storage, so they are lost with their
+    * executor.
     */
   def materialize(name: String, df: DataFrame): Unit = {
-    val (snapshot, rdd, rows) = ServedJob.snapshot(rightSized(df))
-    bind(name, Table(snapshot, Some(snapshot), Vector.empty, Some(rows), Some(rdd)))
+    val ((snapshot, rows), scope) = Materialize.scope(ServedJob.snapshot(rightSized(df)))
+    bind(name, Table(snapshot, Some(snapshot), Vector.empty, Some(rows), Some(scope)))
   }
 
   /** `df` coalesced to one partition per `spark.sql.files.maxPartitionBytes`
@@ -220,14 +222,14 @@ object GraftSession {
 
   /** A table graft bound: its view, the base the view reads under the
     * inserted batches, the batches, the row count when known, and the
-    * snapshot the table owns (a DAG-derived table's blocks).
+    * scope of the snapshot the table owns (a DAG-derived table's blocks).
     */
   private final case class Table(
       view: DataFrame,
       base: Option[DataFrame],
       batches: Vector[RowBatch],
       rows: Option[Long],
-      snapshot: Option[RDD[InternalRow]] = None)
+      snapshot: Option[Materialize.Scope] = None)
 
   /** BigQuery type name → Spark type (reference: rpc/types.rs ColumnDef). */
   def bqType(t: String): DataType = t.trim.toUpperCase match {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Market-basket and customer-scoring analytics: association rules
   * (support/confidence/lift), RFM quintile segmentation, and
@@ -47,7 +47,7 @@ object BasketOps {
         // Part-dim scale, referenced twice (antecedent + consequent
         // joins): cache so the fact-scale distinct feeding it runs once
         // for both references.
-        val supp = items.groupBy("p").agg(count(lit(1)).as("sa")).cache()
+        val supp = Materialize.cache(items.groupBy("p").agg(count(lit(1)).as("sa")))
         val pairs = items
           .groupBy("o").agg(sort_array(collect_set(col("p"))).as("its"))
           .filter(size(col("its")) >= 2)
@@ -119,7 +119,7 @@ object BasketOps {
         // re-derives the whole upstream inside every Buckets.assign
         // min/max aggregate and DOUBLES the plan tree per level — the
         // chained form planned 326 exchanges; this one is linear.
-        val cc = cust.cache()
+        val cc = Materialize.cache(cust)
         // |customers| rides along as a broadcast one-row aggregate, not
         // a driver-side count() — one action, one fused execution.
         val nrow = broadcast(cc.agg(count(lit(1)).as("nc")))

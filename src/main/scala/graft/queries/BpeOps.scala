@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** BPE tokenizer TRAINING + APPLICATION (closing the loop that
   * `text_bpe_pairs` opened — that operator counts merge candidates;
@@ -168,7 +168,7 @@ object BpeOps {
     // At 100 TB the trade reads the one checkpoint `rounds` times
     // instead of writing `rounds` caches and reading each twice —
     // strictly fewer corpus-scale materializations.
-    val base = corpus.localCheckpoint()
+    val base = Materialize.checkpoint(corpus, eager = true)
     var cur = base
     var rules = Vector.empty[Seq[(String, String)]]
     for (_ <- 0 until rounds) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** CCNet-style perplexity bucketing (Wenzek et al. 2020 — the CommonCrawl
   * curation recipe behind CCNet/LLaMA data: score every document under a
@@ -107,23 +107,10 @@ object CCNetOps {
     * streaming twin [[graft.streaming.AnnealStream]], which re-runs
     * it per micro-batch over the maintained docWord state.
     */
-  private[graft] def annealScheduleFromRanked(rankedIn: DataFrame): DataFrame =
-    annealScheduleFromRankedReleasable(rankedIn)._1
-
-  /** [[annealScheduleFromRanked]] plus a release handle that unpersists
-    * the two frames the computation caches. One-shot batch callers can
-    * ignore it (Verify/Bench clear the cache per query), but long-lived
-    * callers — the streaming twin re-runs the schedule on every
-    * micro-batch — must invoke it once the schedule is materialized, or
-    * the cached blocks of every past batch accumulate in the block
-    * manager for the lifetime of the stream.
-    */
-  private[graft] def annealScheduleFromRankedReleasable(
-      rankedIn: DataFrame): (DataFrame, () => Unit) = {
-    val ranked = rankedIn
+  private[graft] def annealScheduleFromRanked(rankedIn: DataFrame): DataFrame = {
+    val ranked = Materialize.cache(rankedIn
       .select(col("doc_id"), col("n_toks"), col("bucket"),
-        substring(md5(col("doc_id").cast("string")), 1, 12).as("h"))
-      .cache()
+        substring(md5(col("doc_id").cast("string")), 1, 12).as("h")))
     val bud = ranked.agg(sum("n_toks").as("total"))
       .withColumn("t_budget", floor(col("total") * 2 / 5))
       .withColumn("m_budget", floor(col("t_budget") * 4 / 5))
@@ -143,7 +130,7 @@ object CCNetOps {
         Window.partitionBy("bucket").orderBy("sb")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("bucket", "sb", "toff")
-    val cum = sub.join(broadcast(offs), Seq("bucket", "sb"))
+    val cum = Materialize.cache(sub.join(broadcast(offs), Seq("bucket", "sb"))
       .withColumn("prev", col("toff") + coalesce(sum("n_toks").over(
         Window.partitionBy("bucket", "sb").orderBy("h", "doc_id")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -154,11 +141,10 @@ object CCNetOps {
       .withColumn("qa", when(col("bucket") === "head", col("qa_head"))
         .when(col("bucket") === "middle", col("qa_middle"))
         .otherwise(col("qa_tail")))
-      .withColumn("is_main", col("prev") < col("qm"))
-      .cache()
+      .withColumn("is_main", col("prev") < col("qm")))
     val mt = cum.groupBy("bucket")
       .agg(sum(when(col("is_main"), col("n_toks")).otherwise(lit(0L))).as("mt"))
-    val schedule = cum.join(broadcast(mt), "bucket")
+    cum.join(broadcast(mt), "bucket")
       .withColumn("phase", when(col("is_main"), "main")
         .when(col("prev") - col("mt") < col("qa"), "anneal"))
       .filter(col("phase").isNotNull)
@@ -167,7 +153,6 @@ object CCNetOps {
         (col("prev") - when(col("is_main"), lit(0L)).otherwise(col("mt")))
           .as("phase_cum_before"))
       .orderBy("phase", "bucket", "doc_id")
-    (schedule, () => { ranked.unpersist(false); cum.unpersist(false); () })
   }
 
   def defs: Map[String, QDef] = Map(

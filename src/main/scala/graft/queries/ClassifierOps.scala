@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** fastText-style discriminative quality/language classifier over hashed
   * bag-of-words features (Joulin et al. 2016; the filtering family GPT-3
@@ -104,20 +104,19 @@ object ClassifierOps {
     "ml_text_classifier" -> QDef(
       (s, dir) => {
         val (feat0, ntk) = features(s, dir)
-        val feat = feat0.cache()
-        // r16: two-step distinct-then-count instead of a global
+        val feat = Materialize.cache(feat0)
+        // Two-step distinct-then-count instead of a global
         // countDistinct — the keyed hash agg partial-dedupes map-side in
         // codegen; the single-group distinct builds per-partition object
         // hash sets (§6s heap lesson). Identical integer.
-        val nDocs = feat.select(col("doc_id")).distinct()
-          .agg(count(lit(1)).as("n")).localCheckpoint()
+        val nDocs = Materialize.checkpoint(feat.select(col("doc_id")).distinct()
+          .agg(count(lit(1)).as("n")), eager = true)
         // Iteration 1, closed-form (w=0 ⇒ p=1/2 exactly): pure decimal.
-        val w1 = feat
+        val w1 = Materialize.checkpoint(feat
           .groupBy("b")
           .agg(sum(col("x") * (col("y").cast("decimal(2,1)") - lit(BigDecimal("0.5")))).as("g"))
           .crossJoin(broadcast(nDocs))
-          .select(col("b"), q12(lit(Eta) * col("g").cast("double") / col("n")).as("wv"))
-          .localCheckpoint()
+          .select(col("b"), q12(lit(Eta) * col("g").cast("double") / col("n")).as("wv")), eager = true)
         // Iterations 2..T: margins → 6-dp sigmoid residual → gradient.
         // Each step is checkpointed: the 257-row model is consumed twice
         // (margins + next step), so the lineage cut keeps plan size
@@ -126,7 +125,7 @@ object ClassifierOps {
           val resid = margins(feat, w)
             .select(col("doc_id"),
               (col("y").cast("decimal(8,6)") - p6(col("m"))).as("resid"))
-          step(feat, nDocs, w, resid).localCheckpoint()
+          Materialize.checkpoint(step(feat, nDocs, w, resid), eager = true)
         }
         margins(feat, wT)
           .join(ntk.select("doc_id", "n_tok"), "doc_id")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Near-duplicate CLUSTERING: connected components over the verified
   * near-dup pair graph, with one canonical document per cluster — the
@@ -33,17 +33,16 @@ object ClusterOps {
     * never re-exchanges the static side.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val edges = Materialize.checkpoint(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
+      .repartition(col("src")), eager = true)
     // Lazy checkpoints throughout the loop: the convergence probe
     // (labelSum) is the action that materializes each round's frame, so
     // a round costs ONE job instead of two (eager checkpoint + probe).
     // On shallow near-dup graphs the per-round fixed cost IS the
     // operator's cost, so halving the job count halves the wall.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(false)
+    var labels = Materialize.checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")), eager = false)
     // Explicit cast: sum over a non-integral label type would return
     // Double/Decimal (ClassCastException here) or — worse — null→0,
     // which would report convergence after one round. Fail loudly on a
@@ -57,9 +56,8 @@ object ClusterOps {
     while (!converged && iter < maxIter) {
       val msgs = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
-      val next = labels.union(msgs)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(false)
+      val next = Materialize.checkpoint(labels.union(msgs)
+        .groupBy("id").agg(min("label").as("label")), eager = false)
       val s = labelSum(next)
       labels = next
       converged = s == prevSum
@@ -75,8 +73,8 @@ object ClusterOps {
     // canonical = min doc_id per component, singletons cluster alone.
     "dedup_clusters" -> QDef(
       (s, dir) => {
-        // Components run on the REP graph (r14, the skewed-sweep
-        // hot-cluster fix — see TextOps.collapseByContent): a verbatim-
+        // Components run on the REP graph (the hot-cluster fix — see
+        // TextOps.collapseByContent): a verbatim-
         // duplicate group is ONE node, so a 100-copy clique never enters
         // the iteration (it would contribute C(100,2) edges per round);
         // members inherit their rep's component label afterwards. The

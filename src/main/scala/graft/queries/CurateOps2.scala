@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Coreset selection for training-data diversity: greedy k-center
   * (farthest-point traversal) over the embedding corpus.
@@ -28,10 +28,9 @@ object CurateOps2 {
       (s, dir) => {
         import s.implicits._
         val k = 8
-        val pts = Tables(s, dir, "embeddings")
+        val pts = Materialize.cache(Tables(s, dir, "embeddings")
           .filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-          .cache() // scanned k times; reaped by the harness clearCache + unpersist below
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))) // scanned k times
         val seed = pts.orderBy("vec_id").limit(1).collect()(0)
         // (step, vec_id, embedding, dist-at-selection)
         var chosen = List((1, seed.getLong(0), seed.getSeq[Double](1), 0.0))
@@ -52,7 +51,6 @@ object CurateOps2 {
           chosen = chosen :+ ((step, next.getLong(0), next.getSeq[Double](2), next.getDouble(1)))
           step += 1
         }
-        pts.unpersist()
         chosen.map { case (st, id, _, d) => (st, id, d) }
           .toDF("step", "vec_id", "dist")
           .select(col("step"), col("vec_id"), round(col("dist"), 4).as("dist"))

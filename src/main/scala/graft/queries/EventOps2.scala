@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Interval analytics over the events table: overlap merging and
   * sweep-line concurrency — the two classic "events as time ranges"
@@ -28,7 +28,7 @@ object EventOps2 {
     // per-user analytic; nothing global.
     "ev_interval_merge" -> QDef(
       (s, dir) => {
-        // r15: running max(en) and the island cumsum ride SubShard
+        // Running max(en) and the island cumsum ride SubShard
         // (chainedRunningAgg + chainedCumsum over user × time-bucket
         // sub-shards) so a hot user's intervals parallelize; output
         // identical to the plain window for any bucket width. The
@@ -91,13 +91,11 @@ object EventOps2 {
         // a and b are each referenced twice (next stage + final count);
         // cache the per-user anchors or their event scans re-execute
         // per reference.
-        val a = e.filter(col("event_type") === "signup")
-          .groupBy("user_id").agg(min("ts_s").as("ta"))
-          .cache()
-        val b = e.filter(col("event_type") === "click").join(a, "user_id")
+        val a = Materialize.cache(e.filter(col("event_type") === "signup")
+          .groupBy("user_id").agg(min("ts_s").as("ta")))
+        val b = Materialize.cache(e.filter(col("event_type") === "click").join(a, "user_id")
           .filter(col("ts_s") > col("ta") && col("ts_s") <= col("ta") + 3600L)
-          .groupBy("user_id").agg(min("ts_s").as("tb"))
-          .cache()
+          .groupBy("user_id").agg(min("ts_s").as("tb")))
         val c = e.filter(col("event_type") === "purchase").join(b, "user_id")
           .filter(col("ts_s") > col("tb") && col("ts_s") <= col("tb") + 3600L)
           .groupBy("user_id").agg(min("ts_s").as("tc"))
@@ -134,14 +132,13 @@ object EventOps2 {
       (s, dir) => {
         val e = ev(s, dir)
           .select(col("user_id"), col("event_type"), unix_timestamp(col("ts")).as("ts_s"))
-        val a = e.filter(col("event_type") === "signup")
-          .groupBy("user_id").agg(min("ts_s").as("ta"))
-          .cache()
+        val a = Materialize.cache(e.filter(col("event_type") === "signup")
+          .groupBy("user_id").agg(min("ts_s").as("ta")))
         val p = e.filter(col("event_type") === "purchase").join(a, "user_id")
           .filter(col("ts_s") > col("ta") && col("ts_s") <= col("ta") + 3600L)
           .groupBy("user_id").agg(min("ts_s").as("tp"))
         // j feeds both the error-interval join and the final counts.
-        val j = p.join(a, "user_id").cache()
+        val j = Materialize.cache(p.join(a, "user_id"))
         val bad = e.filter(col("event_type") === "error").join(j, "user_id")
           .filter(col("ts_s") > col("ta") && col("ts_s") < col("tp"))
           .select("user_id").distinct()

@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
-/** Round-7 event tranche 2: time-decay multi-touch attribution and
+/** Event operators: time-decay multi-touch attribution and
   * burstiness (Fano-factor) profiling.
   */
 object EventOps3 {
@@ -30,8 +30,8 @@ object EventOps3 {
       (s, dir) => {
         def q12(c: Column): Column = round(c, 12).cast("decimal(26,12)")
         val e = ev(s, dir)
-        // MULTIPLICITY COLLAPSE first (r15 — the 4th copy-quadratic the
-        // Z-big sweep caught, at 230 s: the per-user purchase × touch
+        // MULTIPLICITY COLLAPSE first (a copy-quadratic the Z-big sweep
+        // caught, at 230 s: the per-user purchase × touch
         // join pays the FULL copy fan, 100×100 pairs per base pair on a
         // duplicated tier, while every copy-pair shares the exact same
         // weight — w depends only on the two timestamps). Events
@@ -99,7 +99,7 @@ object EventOps3 {
     // chain's row-normalized probabilities are exact-integer ratios.
     "ev_markov_stationary" -> QDef(
       (s, dir) => {
-        // r15: lead re-expressed as SubShard.withPrev (an adjacent pair
+        // Lead re-expressed as SubShard.withPrev (an adjacent pair
         // is (prev_event_type → event_type) on rows with a prev) — the
         // ev_transition_matrix hot-user sub-sharding, micro ticks.
         val base = ev(s, dir)
@@ -111,10 +111,9 @@ object EventOps3 {
           .agg(count(lit(1)).as("n"))
         val outd = pairs.groupBy("cur").agg(sum("n").as("tot"))
         // |types|²-row transition matrix, referenced by all three steps.
-        val pmat = pairs.join(broadcast(outd), "cur")
+        val pmat = Materialize.cache(pairs.join(broadcast(outd), "cur")
           .select(col("cur"), col("nxt"),
-            (col("n") / col("tot").cast("double")).as("p"))
-          .cache()
+            (col("n") / col("tot").cast("double")).as("p")))
         val k = broadcast(pmat.select(countDistinct("cur").as("k")))
         val pi0 = pmat.select(col("cur").as("state")).distinct()
           .crossJoin(k)
@@ -171,7 +170,7 @@ object EventOps3 {
     // windows only; the histogram partial-aggregates to ≤64 rows.
     "ev_gap_histogram" -> QDef(
       (s, dir) => {
-        // r15: the lag rides SubShard.withPrev (micro ticks — the
+        // The lag rides SubShard.withPrev (micro ticks — the
         // original window ordered by the raw microsecond timestamp).
         val base = Tables(s, dir, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_s"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Graph-based ANN (the HNSW/NSW family, Malkov & Yashunin 2016,
   * flattened to the single-layer navigable-small-world case): a
@@ -382,19 +382,17 @@ object GraphAnnOps {
     */
   def buildIndex(eAll: DataFrame): GraphIndex = {
     val keyed = eAll.select(col("vec_id"), col("v"), xxhash64(col("v")).as("gid"))
-    val reps = keyed.groupBy("gid")
-      .agg(min("vec_id").as("vec_id"), min_by(col("v"), col("vec_id")).as("v"))
-      .cache()
+    val reps = Materialize.cache(keyed.groupBy("gid")
+      .agg(min("vec_id").as("vec_id"), min_by(col("v"), col("vec_id")).as("v")))
     val nReps = reps.count()
-    val graph = buildGraph(reps.select("vec_id", "v"), nHint = nReps).cache()
+    val graph = Materialize.cache(buildGraph(reps.select("vec_id", "v"), nHint = nReps))
     val l1n = math.max(32, math.ceil(math.sqrt(nReps.toDouble)).toInt)
-    val layer1 = reps.select("vec_id", "v")
-      .sort(md5(col("vec_id").cast("string")), col("vec_id")).limit(l1n)
-      .cache()
+    val layer1 = Materialize.cache(reps.select("vec_id", "v")
+      .sort(md5(col("vec_id").cast("string")), col("vec_id")).limit(l1n))
     // graph1 cached: the entry-layer edge list is l1n×Degree rows
     // and is consumed by every search AND by persistIndex — uncached it
     // would be rebuilt (banded join + two top-k aggregates) once per consumer.
-    val graph1 = buildGraph(layer1, nHint = l1n).cache()
+    val graph1 = Materialize.cache(buildGraph(layer1, nHint = l1n))
     GraphIndex(reps.select("gid", "vec_id", "v"),
       keyed.select("gid", "vec_id"), graph, layer1, graph1, nReps, l1n)
   }
@@ -557,8 +555,8 @@ object GraphAnnOps {
   }
 
   private def corpus(s: SparkSession, dir: String): DataFrame =
-    Eval.barrier(Eval.fanOut(
-      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))).cache()
+    Materialize.cache(Eval.barrier(Eval.fanOut(
+      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))))
 
   private def probeQueries(eAll: DataFrame): DataFrame =
     eAll.filter(col("vec_id") < 10)
@@ -626,26 +624,30 @@ object GraphAnnOps {
         // chain's write/read I/O overlaps the built search's per-hop
         // jobs. Results unchanged: search is deterministic in index
         // CONTENT (the property this key exists to gate), and the two
-        // chains share only immutable cached frames.
-        import scala.concurrent.{Await, Future}
+        // chains share only immutable cached frames. The threads are
+        // started here, not taken from a shared pool, so they see the
+        // caller's Materialize scope.
+        import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
         // Materialize the shared cached index halves BEFORE forking: the
         // two chains' first actions otherwise race to compute the same
         // cached partitions (duplicate materialization — "Block already
         // exists" churn and multi-×-variance in the timings).
         idx.graph.count(); idx.graph1.count()
-        val builtF = Future {
-          searchIndex(idx, qs)
-            .select("q_id", "neighbor_id", "cosine", "rank").cache()
-        }
-        val reloadedF = Future {
-          persistIndex(s, indexDir, idx, corpusFingerprint(eAll))
-          searchIndex(loadIndex(s, indexDir, eAll), qs)
-            .select("q_id", "neighbor_id", "cosine", "rank").cache()
-        }
-        val built = Await.result(builtF, Duration.Inf)
-        val reloaded = Await.result(reloadedF, Duration.Inf)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+        val (built, reloaded) = try {
+          val builtF = Future {
+            Materialize.cache(searchIndex(idx, qs)
+              .select("q_id", "neighbor_id", "cosine", "rank"))
+          }
+          val reloadedF = Future {
+            persistIndex(s, indexDir, idx, corpusFingerprint(eAll))
+            Materialize.cache(searchIndex(loadIndex(s, indexDir, eAll), qs)
+              .select("q_id", "neighbor_id", "cosine", "rank"))
+          }
+          (Await.result(builtF, Duration.Inf), Await.result(reloadedF, Duration.Inf))
+        } finally pool.shutdown()
         val diff = built.exceptAll(reloaded)
           .unionByName(reloaded.exceptAll(built))
           .agg(count(lit(1)).as("n_diff"))
@@ -671,7 +673,7 @@ object GraphAnnOps {
       (s, dir) => {
         val eAll = corpus(s, dir)
         val idx = buildIndex(eAll)
-        val indexDir = graft.sources.SourceOps.scratch("annidxop", dir)
+        val indexDir = graft.Scratch.dir("annidxop-").toString
         persistIndex(s, indexDir, idx, corpusFingerprint(eAll))
         val reloaded = searchIndex(loadIndex(s, indexDir, eAll), probeQueries(eAll))
         reloaded.groupBy("q_id").agg(count(lit(1)).as("k"))

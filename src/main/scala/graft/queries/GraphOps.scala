@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Iterative graph analytics over relational data: PageRank on the
   * nation-level trade graph (supplier nation → customer nation, edge
@@ -49,18 +49,15 @@ object GraphOps {
         // and Spark performs no cross-subtree common-plan elimination,
         // so as plain DataFrames the fact join would re-execute once
         // per plan reference (m ×3 iterations, nodes ×3, plus the
-        // count ≈ 7×). Cache all three; the harness's clearCache
-        // between queries reaps the handful of rows.
-        val edges = tradeEdges(s, dir).cache()
+        // count ≈ 7×). Cache all three.
+        val edges = Materialize.cache(tradeEdges(s, dir))
         // Row-count share of each out-edge; tot is integral so the
         // division is a single exact-rounded double op on both engines.
-        val m = edges
+        val m = Materialize.cache(edges
           .join(edges.groupBy("src").agg(sum("w").as("tot")), "src")
-          .select(col("src"), col("dst"), (col("w") / col("tot").cast("double")).as("share"))
-          .cache()
-        val nodes = edges.select(col("src").as("node"))
-          .union(edges.select(col("dst").as("node"))).distinct()
-          .cache()
+          .select(col("src"), col("dst"), (col("w") / col("tot").cast("double")).as("share")))
+        val nodes = Materialize.cache(edges.select(col("src").as("node"))
+          .union(edges.select(col("dst").as("node"))).distinct())
         // |nodes| rides along as a broadcast one-row aggregate (the
         // oracle's nn CTE) instead of a driver-side count(): profiling
         // showed the query is overhead-bound, not data-bound — a
@@ -126,13 +123,12 @@ object GraphOps {
     // shape as PageRank, O(|edges|) forever. Unreached nodes report -1.
     "q_bfs_hops" -> QDef(
       (s, dir) => {
-        val all = tradeEdges(s, dir).cache()
+        val all = Materialize.cache(tradeEdges(s, dir))
         val tot = broadcast(all.agg(
           sum("w").as("totw"), count(lit(1)).as("ne")))
-        val edges = all.crossJoin(tot)
+        val edges = Materialize.cache(all.crossJoin(tot)
           .filter(col("w") * col("ne") * 2L >= col("totw") * 3L)
-          .select("src", "dst")
-          .cache()
+          .select("src", "dst"))
         val nodes = Tables(s, dir, "nation").select(col("n_name").as("node"))
         val src = nodes.agg(min("node").as("node"))
         var dist = broadcast(src).withColumn("d", lit(0L))
@@ -184,19 +180,17 @@ object GraphOps {
     // closure. The node-id filter bounds the demo subgraph and pushes
     // to both scans. The edge list is referenced five times downstream
     // (degrees, two wedge arms, closure probe, edge count) — cache it
-    // or Spark re-executes the fact self-join per reference; the
-    // harness's clearCache between queries reaps the storage.
+    // or Spark re-executes the fact self-join per reference.
     "q_triangle_count" -> QDef(
       (s, dir) => {
         val li = Tables(s, dir, "lineitem")
           .filter(col("l_partkey") < 300)
           .select(col("l_orderkey"), col("l_partkey"))
-        val und = li.as("a").join(li.as("b"),
+        val und = Materialize.cache(li.as("a").join(li.as("b"),
             col("a.l_orderkey") === col("b.l_orderkey") &&
               col("a.l_partkey") < col("b.l_partkey"))
           .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-          .distinct()
-          .cache()
+          .distinct())
         val deg = und.select(col("u").as("x"))
           .union(und.select(col("v").as("x")))
           .groupBy("x").agg(count(lit(1)).as("d"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** DSIR-style importance weighting for data selection (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"): to
@@ -35,12 +35,11 @@ object ImportanceOps {
   def defs: Map[String, QDef] = Map(
     "curate_dsir_weights" -> QDef(
       (s, dir) => {
-        val toks = docs(s, dir)
+        val toks = Materialize.cache(docs(s, dir)
           .select(col("doc_id"), col("lang"),
             explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) > 0)
-          .select(col("doc_id"), col("lang"), substring(md5(col("w")), 1, 2).as("b"))
-          .cache()
+          .select(col("doc_id"), col("lang"), substring(md5(col("w")), 1, 2).as("b")))
         val pool = toks.groupBy("b").agg(count(lit(1)).as("cs"))
         val tgt = toks.filter(col("lang") === "en")
           .groupBy("b").agg(count(lit(1)).as("ct"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions.cosineSim
 
 /** IVF (inverted-file) approximate nearest neighbour: a coarse quantizer
@@ -31,10 +31,10 @@ object IvfOps {
     * adds `cid` (argmax cosine, ties to the lowest id) and `csim` (the
     * winning similarity — the quantizer objective's raw material).
     *
-    * ONE array-loop expression over the codebook literal (r9): the
-    * previous form unrolled k separate per-centroid struct expressions,
-    * and Janino-compiling k × dim-literal trees dominated a training
-    * pass at small data; the loop form is O(1) codegen size in k with
+    * ONE array-loop expression over the codebook literal: unrolled into
+    * k separate per-centroid struct expressions, Janino-compiling k ×
+    * dim-literal trees dominated a training pass at small data; the loop
+    * form is O(1) codegen size in k with
     * the identical argmax semantics (struct max ties to the larger
     * negcid = the lower cid).
     */
@@ -55,8 +55,8 @@ object IvfOps {
     * standard k-means sizing. Cached: each Lloyd iteration re-reads it.
     */
   private[graft] def trainSample(e: DataFrame, n: Int): DataFrame =
-    e.sort(md5(col("vec_id").cast("string")), col("vec_id")).limit(n)
-      .select("v").cache()
+    Materialize.cache(e.sort(md5(col("vec_id").cast("string")), col("vec_id")).limit(n)
+      .select("v"))
 
   /** Iterative Lloyd training of a coarse quantizer: assign (map-only
     * against the literal codebook) → re-center (one partial-aggregated
@@ -85,7 +85,7 @@ object IvfOps {
     assignLiteral(sample, cents).agg(avg("csim")).collect()(0).getDouble(0)
 
   /** One Lloyd iteration: per-(cell, dim) means → new centroid arrays.
-    * r16: d per-column means in ONE aggregation keyed by cid (the
+    * d per-column means in ONE aggregation keyed by cid (the
     * SpectralOps matvec shape) instead of posexplode → n×d rows → a
     * (cid, pos)-key exchange → collect_list/sort — same per-cell means
     * (double sum/count, the same partial-merge class), one codegen'd
@@ -106,8 +106,8 @@ object IvfOps {
   private[queries] def trainedCells(
       s: SparkSession, dir: String): (DataFrame, Seq[Seq[Double]], DataFrame) = {
     val k = 16
-    val e = Eval.barrier(Eval.fanOut(
-      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))).cache()
+    val e = Materialize.cache(Eval.barrier(Eval.fanOut(
+      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))))
     // Deterministic seeds spread across the id range; the Lloyd step
     // trains on an absolute-size hash-rank sample (256 rows per cell
     // — constant as the corpus grows; the quantizer needs cluster
@@ -222,32 +222,31 @@ object IvfOps {
         // Materialize the shared inputs BEFORE the sweep fans out, so
         // concurrent branches read cached blocks instead of racing to
         // compute them (duplicate-materialization churn).
-        val cached = cells.cache(); cached.count()
-        val brute = VectorOps.bruteTopK(s, dir)
-          .select(col("q_id"), col("neighbor_id")).cache()
+        val cached = Materialize.cache(cells); cached.count()
+        val brute = Materialize.cache(VectorOps.bruteTopK(s, dir)
+          .select(col("q_id"), col("neighbor_id")))
         brute.count()
         val nExact = brute.agg(count(lit(1)).as("n_exact"))
-        // r17: the five sweep points used to ride ONE union plan, with
-        // each branch's ivf subtree planned twice (hits join + shape
-        // agg) — a ~270 KB physical plan whose planning/codegen, not its
+        // The five sweep points do not ride ONE union plan: with each
+        // branch's ivf subtree planned twice (hits join + shape agg) that
+        // is a ~270 KB physical plan whose planning/codegen, not its
         // trivial compute (≤ corpus × 10 queries of cosine), dominated
         // the key (12.3 s measured, 34 s on a GC-hit run). Guide §3.3:
         // materialize intermediates to truncate huge plans; §2.6:
-        // overlap independent jobs. Each point now checkpoints its
+        // overlap independent jobs. Each point checkpoints its
         // 100-row top-k (so hits + shape share one computation) and the
         // points run as concurrent driver threads; the final 5-row
         // frame carries identical values through the same window/selects.
         val points = Seq(1, 2, 4, 8, 16).map { np => () =>
-          val ivf = searchCells(s, cached, cents, qs, k = 10, nprobe = np)
-            .select(col("q_id"), col("neighbor_id")).localCheckpoint()
-          ivf.join(brute, Seq("q_id", "neighbor_id"))
+          val ivf = Materialize.checkpoint(searchCells(s, cached, cents, qs, k = 10, nprobe = np)
+            .select(col("q_id"), col("neighbor_id")), eager = true)
+          Materialize.checkpoint(ivf.join(brute, Seq("q_id", "neighbor_id"))
             .agg(count(lit(1)).as("hits"))
             .crossJoin(ivf.groupBy("q_id").agg(count(lit(1)).as("kq"))
               .agg(min("kq").as("kmin"), max("kq").as("kmax"),
                 count(lit(1)).as("nq")))
             .select(lit(np.toLong).as("nprobe"), col("hits"),
-              col("kmin"), col("kmax"), col("nq"))
-            .localCheckpoint()
+              col("kmin"), col("kmax"), col("nq")), eager = true)
         }
         val pool = java.util.concurrent.Executors.newFixedThreadPool(points.size)
         val perProbe = try {

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions.cosineSim
 import graft.queries.PqOps.PqModel
 
@@ -76,8 +76,8 @@ object IvfPqOps {
     // Residual corpus for PQ seeding + residual sample for PQ Lloyd.
     val resCorpus = toResiduals(IvfOps.assignLiteral(e, cents), cents)
       .select("vec_id", "v")
-    val resSample = toResiduals(IvfOps.assignLiteral(sample, cents), cents)
-      .select("v").cache()
+    val resSample = Materialize.cache(toResiduals(IvfOps.assignLiteral(sample, cents), cents)
+      .select("v"))
     IvfPqModel(cents,
       PqOps.train(resCorpus, m, sub, codes, iters, sharedSample = Some(resSample)))
   }
@@ -142,7 +142,7 @@ object IvfPqOps {
     VectorOps.topKPerQuery(reranked, "cosine", k)
   }
 
-  /** Durable one-shot index (r9 verdict task 5): `ivfpqTopK` retrains
+  /** Durable one-shot index: `ivfpqTopK` retrains
     * per invocation — right for the self-contained oracle harness,
     * wrong as a user API, where an index is built once and searched
     * many times. Layout mirrors the streaming snapshot chain's payload
@@ -205,8 +205,8 @@ object IvfPqOps {
     * 16 codes, 50-candidate shortlist, exact re-rank.
     */
   def ivfpqTopK(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val e = Eval.barrier(Eval.fanOut(
-      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))).cache()
+    val e = Materialize.cache(Eval.barrier(Eval.fanOut(
+      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))))
     val model = train(e, cells = 16, m = 8, sub = 8, codes = 16, iters = 2)
     val corpus = encode(e, model)
     val probes = e.filter(col("vec_id") < 10)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** MODIFIED Kneser-Ney trigram scoring (Chen & Goodman 1999 §3, the
   * KenLM formulation production perplexity filters actually ship): the
@@ -98,20 +98,19 @@ object KnModifiedOps {
     */
   private[queries] def scored(s: SparkSession, dir: String, docLimit: Int = 100): DataFrame = {
     val t = tokd(s, dir)
-    val tri = t.select(col("doc_id"),
+    val tri = Materialize.cache(t.select(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("toks")) - 2),
           i => struct(
             element_at(col("toks"), i).as("w1"),
             element_at(col("toks"), i + 1).as("w2"),
             element_at(col("toks"), i + 2).as("w3")))).as("g"))
       .select(col("doc_id"), col("g.w1").as("w1"),
-        col("g.w2").as("w2"), col("g.w3").as("w3"))
-      .cache()
+        col("g.w2").as("w2"), col("g.w3").as("w3")))
     // The 25ju count-table stack: trigram types, mid-level (w2,w3) type
     // counts, low-level continuation counts.
-    val ct = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ctv")).cache()
-    val nm = ct.groupBy("w2", "w3").agg(count(lit(1)).as("nm")).cache()
-    val nb = nm.groupBy("w3").agg(count(lit(1)).as("nb")).cache()
+    val ct = Materialize.cache(tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ctv")))
+    val nm = Materialize.cache(ct.groupBy("w2", "w3").agg(count(lit(1)).as("nm")))
+    val nb = Materialize.cache(nm.groupBy("w3").agg(count(lit(1)).as("nb")))
     val h3 = historyBuckets(ct, Seq("w1", "w2"), "ctv", "h3", "ch3")
     val h2 = historyBuckets(nm, Seq("w2"), "nm", "h2", "nc2")
     // Per-level discounts (1-row broadcasts). The low level also
@@ -158,8 +157,8 @@ object KnModifiedOps {
   }
 
   /** Per-quadgram-token scored frame (doc_id, w1..w4, p4) — the
-    * order-4 generalization of [[scored]] (r15 verdict task 6, SURVEY
-    * §7c2 item 4): one more level on the same recursion. Raw quadgram
+    * order-4 generalization of [[scored]] (SURVEY §7c2 item 4): one
+    * more level on the same recursion. Raw quadgram
     * counts at the top; the trigram/bigram/unigram levels below are
     * all KN TYPE (continuation) counts; every level estimates its OWN
     * three discounts from its OWN count-of-counts. Scale shape is the
@@ -182,8 +181,8 @@ object KnModifiedOps {
         col("g.w3").as("w3"), col("g.w4").as("w4"))
 
   private[queries] def scoredQuad(s: SparkSession, dir: String, docLimit: Int = 100): DataFrame = {
-    // r17: the corpus-scale exploded quadgram frame is no longer
-    // .cache()d. Its only remaining consumer is the cq count table
+    // The corpus-scale exploded quadgram frame is not cached. Its only
+    // consumer is the cq count table
     // (the scored side below re-scans the parquet with doc_id <
     // docLimit PUSHED to the scan — identical rows, the filter commutes
     // with the per-row split/explode — instead of filtering a cached
@@ -202,10 +201,10 @@ object KnModifiedOps {
     // Count-table stack: raw quadgram counts, then per-level
     // continuation TYPE counts (Chen & Goodman: lower levels count the
     // distinct extended contexts, not raw occurrences).
-    val cq = quad.groupBy("w1", "w2", "w3", "w4").agg(count(lit(1)).as("cqv")).cache()
-    val nt = cq.groupBy("w2", "w3", "w4").agg(count(lit(1)).as("nt")).cache()
-    val nm = nt.groupBy("w3", "w4").agg(count(lit(1)).as("nm")).cache()
-    val nb = nm.groupBy("w4").agg(count(lit(1)).as("nb")).cache()
+    val cq = Materialize.cache(quad.groupBy("w1", "w2", "w3", "w4").agg(count(lit(1)).as("cqv")))
+    val nt = Materialize.cache(cq.groupBy("w2", "w3", "w4").agg(count(lit(1)).as("nt")))
+    val nm = Materialize.cache(nt.groupBy("w3", "w4").agg(count(lit(1)).as("nm")))
+    val nb = Materialize.cache(nm.groupBy("w4").agg(count(lit(1)).as("nb")))
     val h4 = historyBuckets(cq, Seq("w1", "w2", "w3"), "cqv", "h4", "ch4")
     val h3 = historyBuckets(nt, Seq("w2", "w3"), "nt", "h3", "ct3")
     val h2 = historyBuckets(nm, Seq("w3"), "nm", "h2", "nc2")
@@ -263,8 +262,7 @@ object KnModifiedOps {
   }
 
   val defs: Map[String, QDef] = Map(
-    // §2 25kg modified Kneser-Ney trigram surprisal (r13 verdict task
-    // 5): per-doc mean −log2 p(w3|w1w2) under modified-KN smoothing,
+    // §2 25kg modified Kneser-Ney trigram surprisal: per-doc mean −log2 p(w3|w1w2) under modified-KN smoothing,
     // count-of-counts discount estimation replayed in the oracle.
     "text_kn_modified" -> QDef(
       (s, dir) =>
@@ -369,8 +367,7 @@ object KnModifiedOps {
         |  ROUND(AVG(-log2(p3)), 4) AS mean_mkn_surprisal
         |FROM s3 GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // §2 25kr modified Kneser-Ney QUADGRAM surprisal (r15 verdict task
-    // 6): per-doc mean −log2 p(w4|w1w2w3), order-4 recursion with
+    // §2 25kr modified Kneser-Ney QUADGRAM surprisal: per-doc mean −log2 p(w4|w1w2w3), order-4 recursion with
     // per-level count-of-counts discounts replayed in the oracle.
     "text_kn_quadgram" -> QDef(
       (s, dir) =>

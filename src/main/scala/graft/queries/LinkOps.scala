@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions
 
 /** Record-linkage and dataset-maintenance operators: fuzzy entity
@@ -109,13 +109,8 @@ object LinkOps {
     "q_entity_resolution" -> QDef(
       (s, dir) => {
         val p = parts(s, dir)
-        val names = p.groupBy("adj", "noun").agg(count(lit(1)).as("n_rows"))
-          .withColumn("name", concat_ws(" ", col("adj"), col("noun")))
-          // Feeds edges + both propagation rounds + the final join; the
-          // returned lazy plan still references it, so no in-operator
-          // unpersist is possible — the harness clearCache reaps it
-          // (same lifecycle as text_bigram_lm's bi cache).
-          .cache()
+        val names = Materialize.cache(p.groupBy("adj", "noun").agg(count(lit(1)).as("n_rows"))
+          .withColumn("name", concat_ws(" ", col("adj"), col("noun"))))
         val e0 = names.select(col("noun"), col("adj"), col("name"))
         val edges = e0.as("a").join(e0.as("b"),
             col("a.noun") === col("b.noun") && col("a.name") =!= col("b.name"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Distributed ML beyond closed-form: kNN auto-labeling through the
   * bounded top-k kernel, and iterative Newton logistic regression whose
@@ -207,7 +207,7 @@ object MlOps {
     // 2tp/(n_true+n_pred) form — no intermediate P/R rounding).
     "ml_eval_metrics" -> QDef(
       (s, dir) => {
-        val preds = knnPredictions(s, dir).cache()
+        val preds = Materialize.cache(knnPredictions(s, dir))
         val byTrue = preds.groupBy(col("true_label").as("label"))
           .agg(count(lit(1)).as("n_true"),
             sum((col("true_label") === col("pred_label")).cast("long")).as("tp_t"))
@@ -271,7 +271,7 @@ object MlOps {
     // with identical operation order on both engines.
     "ml_kappa_mcc" -> QDef(
       (s, dir) => {
-        val preds = knnPredictions(s, dir).cache()
+        val preds = Materialize.cache(knnPredictions(s, dir))
         val byTrue = preds.groupBy(col("true_label").as("label"))
           .agg(count(lit(1)).as("n_true"),
             sum((col("true_label") === col("pred_label")).cast("long")).as("tp_t"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with
   * typed metadata, and batched per-partition feature extraction.
@@ -390,15 +390,12 @@ object Multimodal {
     "mm_dhash_neardup" -> QDef(
       (s, dir) => {
         import s.implicits._
-        val dh = Eval.fanOut(
+        val dh = Materialize.cache(Eval.fanOut(
             Tables(s, dir, "documents")
               .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes")))
           .as[(Long, Array[Byte])]
           .mapPartitions(_.map { case (id, b) => (id, dHash(pngBytes(b))) })
-          .toDF("doc_id", "dh")
-          // Feeds both band sides + the output join; harness clearCache
-          // reaps it (text_bigram_lm lifecycle).
-          .cache()
+          .toDF("doc_id", "dh"))
         val bands = dh.select(col("doc_id"), col("dh"),
             explode(array((0 until 4).map(lit(_)): _*)).as("k"))
           .withColumn("bv", expr("shiftright(dh, k * 16) & 65535"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions.dot
 
 /** Product quantization (PQ) approximate nearest neighbour: vectors are
@@ -38,7 +38,7 @@ object PqOps {
     */
   private[graft] def withCodes(df: DataFrame, model: PqModel): DataFrame = {
     // Per subspace, ONE array-loop argmax over the sub-book literal
-    // (see IvfOps.assignLiteral — same r9 codegen-size fix, same
+    // (see IvfOps.assignLiteral — same codegen-size fix, same
     // ties-to-lowest-code semantics via the (d, -c) struct max).
     val codeCols: Seq[Column] = (0 until model.m).map { mi =>
       val sv = slice(col("v"), mi * model.sub + 1, model.sub)
@@ -114,8 +114,8 @@ object PqOps {
     */
   def pqTopK(s: SparkSession, dir: String, k: Int = 10, shortlist: Int = 50): DataFrame = {
     val m = 8; val sub = 8; val codes = 16
-    val e = Eval.barrier(Eval.fanOut(
-      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))).cache()
+    val e = Materialize.cache(Eval.barrier(Eval.fanOut(
+      emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))))
     val model = train(e, m, sub, codes, iters = 2)
     val corpus = withCodes(e, model).select("vec_id", "v", "code")
 

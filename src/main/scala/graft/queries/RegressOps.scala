@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Closed-form model fitting as single-pass aggregates: multivariate
   * ridge regression via the normal equations, per-label embedding
@@ -125,12 +125,10 @@ object RegressOps {
           .select(col("label"), col("d"),
             round(col("x").cast("double"), 7).cast("decimal(20,7)").as("v"))
         // d×k rows, referenced twice (global agg + join): cache so the
-        // corpus-scale explode+agg runs ONCE; the harness's clearCache
-        // between queries reaps it.
-        val byLabel = e.groupBy("label", "d")
+        // corpus-scale explode+agg runs ONCE.
+        val byLabel = Materialize.cache(e.groupBy("label", "d")
           .agg(sum("v").as("sv"), count(lit(1)).as("nv"))
-          .withColumn("cl", col("sv").cast("double") / col("nv"))
-          .cache()
+          .withColumn("cl", col("sv").cast("double") / col("nv")))
         val global = byLabel.groupBy("d")
           .agg(sum("sv").as("sg"), sum("nv").as("ng"))
           .withColumn("cg", col("sg").cast("double") / col("ng"))
@@ -192,7 +190,7 @@ object RegressOps {
         val toks = docs(s, dir)
           .select(col("doc_id"), col("lang").as("true_lang"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-        // r16: |V| derives from cwl's keys (distinct w over the
+        // |V| derives from cwl's keys (distinct w over the
         // (w, lang)-type table = distinct w over the corpus; identical
         // integer) instead of a corpus-scale countDistinct whose
         // single-group partial-distinct hash sets are the one

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Relational SQL surface of the reference engine, re-expressed with the
   * DataFrame API (Catalyst-optimized: pushdown, pruning, broadcast joins).
@@ -44,7 +44,7 @@ object Relational {
     "q1_pricing_summary" -> QDef(
       (s, dir) => {
         // Exact DECIMAL money arithmetic (the q_tpch_q9 recipe, applied
-        // suite-wide in r9 after the sf1 sweep flipped 1-cent rounding
+        // suite-wide after the sf1 sweep flipped 1-cent rounding
         // ties in double sums): TPC-H money IS decimal by spec, decimal
         // sums are order-independent at any corpus size, and the avgs
         // become ONE fixed-operand-order double division each.
@@ -175,12 +175,11 @@ object Relational {
         val parts = math.max(2, s.sparkContext.defaultParallelism / 4)
         // cache: pid comes from the physical range exchange, so the
         // ranks and the offsets must read the SAME materialization.
-        val local = base
+        val local = Materialize.cache(base
           .repartitionByRange(parts, col("o_totalprice"), col("o_orderkey"))
           .withColumn("pid", spark_partition_id())
           .withColumn("lrank", row_number().over(
-            Window.partitionBy("pid").orderBy("o_totalprice", "o_orderkey")))
-          .cache()
+            Window.partitionBy("pid").orderBy("o_totalprice", "o_orderkey"))))
         val n = local.count()
         val bsz = n / k
         val rem = n % k
@@ -564,7 +563,7 @@ object Relational {
           .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
           .groupBy("r_name", "n_name")
           // Exact DECIMAL revenue (q_tpch_q9 recipe): the double sum
-          // flipped a 1-cent rounding tie at sf1 (r9 scale sweep).
+          // flipped a 1-cent rounding tie at sf1.
           .agg(
             round(sum(col("l_extendedprice").cast("decimal(12,2)") *
               (lit(BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)"))), 2)

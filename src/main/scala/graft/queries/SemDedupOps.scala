@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** SemDeDup-style semantic deduplication (Abbas et al., 2023: cluster
   * the embedding corpus, then drop all-but-one of every within-cluster
@@ -141,12 +141,11 @@ object SemDedupOps {
         // hash/compare work only runs on 64-bit-equal candidates, while
         // the exact vector stays in the GROUP key so collisions split,
         // never merge (the TextOps.collapseByContent discipline).
-        val grouped = Tables(s, dir, "embeddings")
+        val grouped = Materialize.cache(Tables(s, dir, "embeddings")
           .select(col("vec_id"), asDouble(col("embedding")).as("v"))
           .withColumn("__h", xxhash64(col("v")))
           .groupBy("__h", "v")
-          .agg(min("vec_id").as("rep"), collect_list("vec_id").as("ids"))
-          .cache()
+          .agg(min("vec_id").as("rep"), collect_list("vec_id").as("ids")))
         val members = grouped.select(col("rep"), explode(col("ids")).as("vec_id"))
         val reps = grouped.select(col("rep").as("vec_id"), col("v"))
         // Distinct-vector count drives the plane count (planesFor) — a
@@ -156,7 +155,7 @@ object SemDedupOps {
         // Cached: the bucket-keyed self-join reads it on BOTH sides, and
         // the map-only bucketed() has no exchange left for
         // ReusedExchange to dedupe the two sides through.
-        val e = bucketed(reps, nd).cache()
+        val e = Materialize.cache(bucketed(reps, nd))
         val a = e.select(col("bucket"), col("vec_id").as("ida"), col("v").as("va"))
         val b = e.select(col("bucket"), col("vec_id").as("idb"), col("v").as("vb"))
         val repPairs = a.join(b, Seq("bucket"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Distributed POWER ITERATION on the embedding second-moment matrix
   * M = Σ v·vᵀ — the top principal direction of a corpus, the building
@@ -39,7 +39,7 @@ object SpectralOps {
     */
   private def matvec(vecs: DataFrame, x: Seq[Double]): (Seq[Double], Double) = {
     val xl = typedlit(x)
-    // r16: y's d components as d sum columns of ONE partial aggregation
+    // y's d components as d sum columns of ONE partial aggregation
     // (same per-row products v[j]·(v·x), same partition-wise partial-sum
     // merge class) instead of posexplode → n×d rows → a d-key exchange →
     // collect_list/sort. One codegen'd map stage and a 1-row merge per
@@ -69,7 +69,7 @@ object SpectralOps {
     */
   private def matvec2(vecs: DataFrame, x1: Seq[Double], x2: Seq[Double])
       : (Seq[Double], Seq[Double], Double, Double) = {
-    // Same r16 shape as [[matvec]]: 2d sum columns in ONE partial
+    // Same shape as [[matvec]]: 2d sum columns in ONE partial
     // aggregation replace the posexplode + d-key exchange.
     val d = x1.length
     val sums = (0 until d).map(j =>
@@ -94,8 +94,8 @@ object SpectralOps {
     // §2 25fj top principal direction of the embedding corpus.
     "emb_top_eigvec" -> QDef(
       (s, dir) => {
-        val vecs = Eval.barrier(Eval.fanOut(
-          emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))).cache()
+        val vecs = Materialize.cache(Eval.barrier(Eval.fanOut(
+          emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))))
         val d = vecs.select(size(col("v"))).head().getInt(0)
         // Deterministic start: uniform direction.
         var x: Seq[Double] = normalize(Seq.fill(d)(1.0))
@@ -144,8 +144,8 @@ object SpectralOps {
     // explained-variance share within (0, 1].
     "emb_pca_top2" -> QDef(
       (s, dir) => {
-        val vecs = Eval.barrier(Eval.fanOut(
-          emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))).cache()
+        val vecs = Materialize.cache(Eval.barrier(Eval.fanOut(
+          emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v")))))
         val d = vecs.select(size(col("v"))).head().getInt(0)
         def orth(y: Seq[Double], u: Seq[Double]): Seq[Double] = {
           val c = y.zip(u).map { case (a, b) => a * b }.sum

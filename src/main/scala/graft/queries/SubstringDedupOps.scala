@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** EXACT-SUBSTRING cross-document deduplication (Lee et al. 2021,
   * "Deduplicating Training Data Makes Language Models Better"): find —
@@ -126,7 +126,7 @@ object SubstringDedupOps {
     val base = t.select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"))
     // Cached — the mark stage reads it twice (count table + join
     // back), and without the cache the whole explode re-runs.
-    val anchors = anchorsOf(t).cache()
+    val anchors = Materialize.cache(anchorsOf(t))
     val dupKeys = anchors.groupBy("ph")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2).select("ph")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Text-analysis and deduplication operators for LLM training-data
   * pipelines, over the `documents` table.
@@ -53,7 +53,7 @@ object TextOps {
   def shingleHashes(sh: Column): Column = transform(sh, s => xxhash64(s))
 
   /** Fused native form of
-    * array_sort(shingleHashes(shinglesFromToks(toks))) (r16): distinct
+    * array_sort(shingleHashes(shinglesFromToks(toks))): distinct
     * word n-grams → xxhash64 (seed 42) → ascending sort in ONE codegen'd
     * pass, replacing three interpreted HOF passes and their per-row
     * array allocations. Bit-equality to the expression stack pinned by
@@ -75,7 +75,7 @@ object TextOps {
     */
   def minhashSignature(hs: Column, k: Int): Column = {
     // Affine permutations over Z/p with p = 2^31-1: (h%p)*m + a stays
-    // under 2^62, safe under ANSI overflow checking. r16: all k minima
+    // under 2^62, safe under ANSI overflow checking. All k minima
     // in ONE native pass (graftbridge.VectorKernels.minhashSig — exact
     // integer arithmetic, bit-identical; VectorKernelSpec pins it
     // against the k-transform HOF form below, which evaluated k
@@ -89,7 +89,7 @@ object TextOps {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(hs), ms, as, P))
   }
 
-  /** The pre-r16 HOF formulation, kept as the spec's reference. */
+  /** The HOF formulation, kept as the spec's reference. */
   private[queries] def minhashSignatureRef(hs: Column, k: Int): Column = {
     val P = 2147483647L
     val rnd = new java.util.SplittableRandom(42)
@@ -152,8 +152,8 @@ object TextOps {
        |  WHERE len(list_intersect(ta.sh, tb.sh)) * 1.0 / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5)""".stripMargin
   }
 
-  /** CONTENT-GROUP COLLAPSE for the pairwise near-dup tier (r14, found
-    * by the Zipf-skew sweep): one node per DISTINCT shingle set before
+  /** CONTENT-GROUP COLLAPSE for the pairwise near-dup tier (found by
+    * the Zipf-skew sweep): one node per DISTINCT shingle set before
     * any candidate generation. Raw-doc pair generation is quadratic in
     * duplicate-cluster size — a 100-copy cluster (the skewed tier's hot
     * bucket; real corpora have far worse boilerplate clusters) puts all
@@ -166,7 +166,7 @@ object TextOps {
     * expansion back to doc pairs is map-side fan-out (each row constant
     * work) and within-group pairs score exactly 1.0 with NO kernel call
     * — output bit-identical to the per-doc formulation. (The same
-    * discipline the r12 ANN fix applied to vectors: production dedups
+    * discipline the ANN dedup applies to vectors: production dedups
     * verbatim content before pairwise anything.)
     *
     * Returns (reps, members): reps = the min-doc_id row per distinct
@@ -174,8 +174,7 @@ object TextOps {
     * corpus-scale exchange keyed by the set itself.
     */
   private[queries] def collapseByContent(d: DataFrame, langBlocked: Boolean): (DataFrame, DataFrame) = {
-    // AGGREGATION, not a window, over the content key (r14 verdict: the
-    // window form shuffled EVERY row partitioned by the full
+    // AGGREGATION, not a window, over the content key (a window form shuffled EVERY row partitioned by the full
     // hashed-shingle array — kilobytes of key material per row at real
     // document sizes, plus a WindowExec sort that compares whole
     // arrays). The group-by plans partial → exchange → final: copies of
@@ -194,11 +193,10 @@ object TextOps {
     // CollapseByContentSpec.
     val hashCols = if (langBlocked) Seq(col("lang"), col("hs")) else Seq(col("hs"))
     val keyCols = d.columns.filterNot(_ == "doc_id").toSeq.map(col)
-    val grouped = d
+    val grouped = Materialize.cache(d
       .withColumn("__h", xxhash64(hashCols: _*))
       .groupBy(col("__h") +: keyCols: _*)
-      .agg(min("doc_id").as("rep"), collect_list("doc_id").as("ids"))
-      .cache()
+      .agg(min("doc_id").as("rep"), collect_list("doc_id").as("ids")))
     val members = grouped.select(col("rep"), explode(col("ids")).as("doc_id"))
     val reps = grouped.select(col("rep").as("doc_id") +: keyCols: _*)
     (reps, members)
@@ -239,7 +237,7 @@ object TextOps {
       tokenized(s, dir).select(col("doc_id"),
         sortedShingleHashes(col("toks")).as("hs")))
     val (reps, members) = collapseByContent(dAll, langBlocked = false)
-    val d = reps.cache()
+    val d = Materialize.cache(reps)
     val sig = d.select(col("doc_id"), minhashSignature(col("hs"), k).as("sig"))
     val banded = sig.select(
       col("doc_id"), posexplode(bandHashes(col("sig"), bands, rows)).as(Seq("band", "bhash")))
@@ -286,7 +284,7 @@ object TextOps {
           sortedShingleHashes(col("toks")).as("hs"))
         .withColumn("nsh", size(col("hs"))))
     val (reps, members) = collapseByContent(dAll, langBlocked = true)
-    val d = reps.cache()
+    val d = Materialize.cache(reps)
     val prefix = d.select(col("doc_id"), col("lang"), col("nsh"),
       explode(slice(col("hs"), lit(1), (col("nsh") / 2).cast("int") + 1)).as("ph"))
     // Lossless size bound: J(A,B) >= 0.5 implies max(|A|,|B|) <= 2*min.
@@ -412,7 +410,7 @@ object TextOps {
         |SELECT doc_a, doc_b, jaccard FROM p
         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    // §2 25kk GROUP-granularity near-dup artifact (r14): the rep-level
+    // §2 25kk GROUP-granularity near-dup artifact: the rep-level
     // near-dup relation with duplicate-group masses — one row per
     // DISTINCT-CONTENT pair, never per doc pair. This is the output a
     // 100 TB pipeline actually stores: the doc-pair contract
@@ -420,7 +418,7 @@ object TextOps {
     // DEFINITION (a million-copy boilerplate cluster is 5·10^11 pairs
     // nobody materializes), while this table is linear — membership
     // joins recover any doc-level view on demand. Comes straight from
-    // minhashRepPairs (compute already cluster-linear after the r14
+    // minhashRepPairs (compute already cluster-linear after the
     // collapse); n_doc_pairs carries the implied doc-pair mass so
     // downstream takedown accounting needs no expansion. The oracle
     // replays the identical group collapse (min-doc_id rep per distinct

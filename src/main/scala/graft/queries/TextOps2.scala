@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
-/** Round-7 text operators: a smoothed bigram language model (the
+/** Text operators: a smoothed bigram language model (the
   * sequence-aware upgrade of text_unigram_logprob's quality signal) and
   * asymmetric n-gram CONTAINMENT (quote/subset detection — the near-dup
   * relation Jaccard misses, because a short document embedded verbatim
@@ -42,16 +42,14 @@ object TextOps2 {
         // bi feeds four subtrees (bigram counts, unigram counts, the
         // vocabulary size and the per-doc join) and Spark performs no
         // cross-subtree common-plan elimination — cache it once or the
-        // tokenize+explode re-executes per reference (the round-5
-        // PageRank lesson; the harness's clearCache reaps it).
-        val bi = t.select(col("doc_id"),
+        // tokenize+explode re-executes per reference.
+        val bi = Materialize.cache(t.select(col("doc_id"),
             explode(transform(sequence(lit(1), size(col("toks")) - 1),
               i => struct(
                 element_at(col("toks"), i).as("w1"),
                 element_at(col("toks"), i + 1).as("w2")))).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-          .cache()
-        // r16 optimization: vocabulary size derives from the bigram-TYPE
+          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
+        // Vocabulary size derives from the bigram-TYPE
         // table (distinct w2 of cbi keys = distinct w2 of the corpus —
         // identical integer), so the corpus-scale countDistinct and its
         // partial-distinct hash sets are gone (§6s heap lesson). cBi's
@@ -104,22 +102,21 @@ object TextOps2 {
     "text_kn_bigram" -> QDef(
       (s, dir) => {
         val t = tokd(s, dir)
-        val bi = t.select(col("doc_id"),
+        val bi = Materialize.cache(t.select(col("doc_id"),
             explode(transform(sequence(lit(1), size(col("toks")) - 1),
               i => struct(
                 element_at(col("toks"), i).as("w1"),
                 element_at(col("toks"), i + 1).as("w2")))).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-          .cache()
-        // r16: every statistic derives from the bigram-TYPE table, the
+          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
+        // Every statistic derives from the bigram-TYPE table, the
         // trigram key's formulation — c(w1·) = Σ cb, N1+(w1,·) and
         // N1+(·,w2) = type-row counts per side. Same exact integers,
         // but the two corpus-scale countDistinct aggregations are gone:
         // their partial-distinct hash sets were the one object-heavy
         // operator in the family and made this key ~1.6× slower on
         // ≥32 GiB heaps (compressed oops off), while the trigram's
-        // type-count stack measured heap-neutral (§6s r16 isolation).
-        val cBi = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")).cache()
+        // type-count stack measured heap-neutral (§6s isolation).
+        val cBi = Materialize.cache(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
         val cUni = cBi.groupBy("w1").agg(sum("cb").as("cu"),
           count(lit(1)).as("nf"))
         val n1b = cBi.groupBy("w2").agg(count(lit(1)).as("nb"))
@@ -180,28 +177,27 @@ object TextOps2 {
     "text_kn_trigram" -> QDef(
       (s, dir) => {
         val t = tokd(s, dir)
-        val tri = t.select(col("doc_id"),
+        val tri = Materialize.cache(t.select(col("doc_id"),
             explode(transform(sequence(lit(1), size(col("toks")) - 2),
               i => struct(
                 element_at(col("toks"), i).as("w1"),
                 element_at(col("toks"), i + 1).as("w2"),
                 element_at(col("toks"), i + 2).as("w3")))).as("g"))
           .select(col("doc_id"), col("g.w1").as("w1"),
-            col("g.w2").as("w2"), col("g.w3").as("w3"))
-          .cache()
-        // Trigram-type and history tables (top level). r16: the history
+            col("g.w2").as("w2"), col("g.w3").as("w3")))
+        // Trigram-type and history tables (top level). The history
         // tables derive from the TYPE table one level up instead of
         // running countDistinct — c(w1w2·) = Σ ctv and N1+(w1w2·) = the
         // type-row count per history (identical integers, ct rows are
         // distinct trigrams), which removes the two remaining
         // partial-distinct hash-set aggregations (§6s heap lesson: the
         // kn_bigram fix, applied to this key's own corpus-scale ch).
-        val ct = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ctv")).cache()
+        val ct = Materialize.cache(tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ctv")))
         val ch = ct.groupBy("w1", "w2").agg(sum("ctv").as("ch"),
           count(lit(1)).as("nf3"))
         // Mid level: type counts OVER the trigram-type table (ct rows
         // are distinct trigrams, so COUNT(*) per (w2,w3) = distinct w1).
-        val nm = ct.groupBy("w2", "w3").agg(count(lit(1)).as("nm")).cache()
+        val nm = Materialize.cache(ct.groupBy("w2", "w3").agg(count(lit(1)).as("nm")))
         // nc = ct rows per w2 = Σ nm; nf2 = distinct w3 per w2 over ct
         // = nm rows per w2 — both from the (w2,w3)-type table.
         val nc = nm.groupBy("w2").agg(sum("nm").as("nc"),
@@ -265,12 +261,11 @@ object TextOps2 {
         val t = tokd(s, dir).filter(size(col("toks")) >= 8)
         // win feeds both the global passage counts and the per-doc join —
         // cache, or the window explode runs twice.
-        val win = t.select(col("doc_id"),
+        val win = Materialize.cache(t.select(col("doc_id"),
             explode(array_distinct(transform(sequence(lit(1), size(col("toks")) - 7),
               i => xxhash64(concat_ws(" ",
-                (0 to 7).map(o => element_at(col("toks"), i + o)): _*))))).as("ph"))
-          .cache()
-        // r16: win's passages are array_distinct per doc, so (doc_id, ph)
+                (0 to 7).map(o => element_at(col("toks"), i + o)): _*))))).as("ph")))
+        // win's passages are array_distinct per doc, so (doc_id, ph)
         // rows are already unique — COUNT(*) per passage IS the distinct
         // doc count. Same integer, no partial-distinct hash sets (§6s).
         val docsPer = win.groupBy("ph").agg(count(lit(1)).as("nd"))
@@ -347,9 +342,8 @@ object TextOps2 {
     // end-to-end.
     "text_oov_rate" -> QDef(
       (s, dir) => {
-        val toks = tokd(s, dir)
-          .select(col("doc_id"), explode(col("toks")).as("t"))
-          .cache()
+        val toks = Materialize.cache(tokd(s, dir)
+          .select(col("doc_id"), explode(col("toks")).as("t")))
         val vocab = toks.groupBy("t").agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("t")).limit(10)
           .select(col("t"), lit(1L).as("in_vocab"))
@@ -434,7 +428,7 @@ object TextOps2 {
     "text_containment" -> QDef(
       (s, dir) => {
         // Content-group collapse first (TextOps.collapseByContent — the
-        // r14 skewed-sweep hot-cluster fix): candidates and the exact
+        // skewed-sweep hot-cluster fix): candidates and the exact
         // merge-count kernel run on DISTINCT shingle sets; member pairs
         // fan out afterwards, DIRECTIONALLY (containment is asymmetric)
         // and with within-group ordered pairs at containment 1.0 (the
@@ -444,7 +438,7 @@ object TextOps2 {
             TextOps.sortedShingleHashes(col("toks")).as("hs"))
             .withColumn("nsh", size(col("hs"))))
         val (reps, members) = TextOps.collapseByContent(dAll, langBlocked = false)
-        val d = reps.cache()
+        val d = Materialize.cache(reps)
         // Contained side exposes only its prefix (1 - τ share + 1);
         // container side indexes ALL shingles.
         val prefix = d.select(col("doc_id"), col("nsh"),

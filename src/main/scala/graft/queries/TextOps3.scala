@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
-/** Round-7 text tranche: RAKE keyphrase extraction (Rose et al. 2010) —
+/** Text operators: RAKE keyphrase extraction (Rose et al. 2010) —
   * the classic unsupervised keyword miner: candidate phrases are
   * maximal stopword-free token runs, word score = degree/frequency
   * over phrase co-membership, phrase score = Σ member word scores.
@@ -269,12 +269,11 @@ object TextOps3 {
     // gram-vocabulary partial-agg shuffle (min(doc_id) per gram); the
     // join back is keyed by gram (the same exchange), per-doc counts
     // partial-aggregate — no corpus-scale window, no all-pairs. The
-    // trigram frame feeds two subtrees, so it is cached once (the
-    // round-5 PageRank lesson; harness clearCache reaps it). Integer
+    // trigram frame feeds two subtrees, so it is cached once. Integer
     // counts; the ratio rounds at 4dp.
     "text_ngram_novelty" -> QDef(
       (s, dir) => {
-        val tri = docTrigrams(docs(s, dir)).cache()
+        val tri = Materialize.cache(docTrigrams(docs(s, dir)))
         val first = tri.groupBy("g").agg(min("doc_id").as("fd"))
         tri.join(first, "g")
           .groupBy("doc_id")
@@ -320,24 +319,23 @@ object TextOps3 {
         val t = docs(s, dir)
           .select(col("doc_id"), split(col("text"), " ").as("toks"))
           .filter(size(col("toks")) >= 3)
-        val bi = t.select(col("doc_id"),
+        val bi = Materialize.cache(t.select(col("doc_id"),
             explode(transform(sequence(lit(1), size(col("toks")) - 1),
               i => struct(
                 element_at(col("toks"), i).as("w1"),
                 element_at(col("toks"), i + 1).as("w2")))).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-          .cache()
-        // r16: all KN statistics derive from the bigram-TYPE table (the
+          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
+        // All KN statistics derive from the bigram-TYPE table (the
         // text_kn_bigram §6s fix, applied to the same stack here):
         // c(w1·) = Σ cb, N1+(w1,·) / N1+(·,w2) = type-row counts per
         // side. Identical integers; the two corpus-scale countDistinct
         // partial-distinct hash-set aggregations are gone.
-        // cBi cached (r17): the r16 uncached form relied on the four
-        // consumers sharing one ReusedExchange — with AQE re-planning
-        // cached subtrees (the r17 engine-posture conf) that reuse is no
-        // longer reliable and the corpus→vocab shuffle re-ran per
-        // consumer (measured +1 s). The table is vocabulary-scale.
-        val cBi = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")).cache()
+        // cBi cached: uncached, it relies on the four consumers sharing
+        // one ReusedExchange — with AQE re-planning cached subtrees (the
+        // engine-posture conf) that reuse is not reliable and the
+        // corpus→vocab shuffle re-ran per consumer (measured +1 s). The
+        // table is vocabulary-scale.
+        val cBi = Materialize.cache(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
         val cUni = cBi.groupBy("w1").agg(sum("cb").as("cu"),
           count(lit(1)).as("nf"))
         val n1b = cBi.groupBy("w2").agg(count(lit(1)).as("nb"))

@@ -1,10 +1,9 @@
-// (round 3: Q15/Q18 added at the bottom of defs)
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Additional TPC-H headline queries (adapted to the driver's synthetic
   * schema — no o_shippriority/l_commitdate columns, so predicates use the
@@ -65,7 +64,7 @@ object TpchOps {
           .filter(col("l_shipdate") >= "1996-03-01" && col("l_shipdate") < "1996-04-01")
         val p = t(s, dir, "part")
         l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-          // Exact DECIMAL sums ([[Money]], r9) + one fixed-order double
+          // Exact DECIMAL sums ([[Money]]) + one fixed-order double
           // expression mirrored in the oracle.
           .agg(round(
             lit(100.0) * sum(when(col("p_type").startsWith("PROMO"), Money.revenue)
@@ -84,15 +83,14 @@ object TpchOps {
     // only at output.
     "q_tpch_q15" -> QDef(
       (s, dir) => {
-        val rev = t(s, dir, "lineitem")
+        val rev = Materialize.cache(t(s, dir, "lineitem")
           .filter(col("l_shipdate") >= "1996-01-01" && col("l_shipdate") < "1996-04-01")
           .groupBy(col("l_suppkey"))
-          // Exact DECIMAL totals ([[Money]], r9): the max-filter
+          // Exact DECIMAL totals ([[Money]]): the max-filter
           // equality join compares EXACT values, so it cannot tie-flip
           // under any partitioning — the cache below is now belt-and-
           // suspenders (one evaluation is still cheaper than two).
-          .agg(sum(Money.revenue).as("tr"))
-          .cache()
+          .agg(sum(Money.revenue).as("tr")))
         val mx = rev.agg(max("tr").as("mx"))
         rev.join(broadcast(mx), rev("tr") === mx("mx"))
           .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** The remaining TPC-H query patterns (Q2, Q9, Q11, Q16, Q17, Q20, Q21,
   * Q22), completing the full 22-query suite together with TpchOps /
@@ -154,31 +154,24 @@ object TpchOps2 {
     "q_tpch_q11" -> QDef(
       (s, dir) => {
         val asiaSupp = regionSuppliers(s, dir, "ASIA").select("s_suppkey")
-        val perPart = t(s, dir, "lineitem")
+        val perPart = Materialize.cache(t(s, dir, "lineitem")
           .join(broadcast(asiaSupp), col("l_suppkey") === col("s_suppkey"))
           .groupBy(col("l_partkey"))
-          // Exact DECIMAL values ([[Money]], r9/r10): the threshold
+          // Exact DECIMAL values ([[Money]]): the threshold
           // compare is value×1000 > tot, IDENTICALLY on both engines and
           // entirely in bounded decimals — value recast to decimal(32,4)
           // so the ×1000 product (decimal(37,4) here, decimal(36,4) in
-          // DuckDB) never exceeds precision 38 on either engine. The r9
+          // DuckDB) never exceeds precision 38 on either engine. A
           // tot×0.001 form overflowed: Spark rounded the product's scale
           // under allowPrecisionLoss while DuckDB fell back to DOUBLE, so
           // the two thresholds could disagree within ~1e-6 of the cutoff.
-          .agg(sum(Money.revenue).as("value"))
-          .cache()
+          .agg(sum(Money.revenue).as("value")))
         val total = perPart.agg(sum("value").as("tot"))
-        val out = perPart.join(broadcast(total))
+        Materialize.checkpoint(perPart.join(broadcast(total))
           .filter(col("value").cast("decimal(32,4)") * lit(1000).cast("decimal(4,0)") > col("tot"))
           .select(col("l_partkey").as("p_partkey"),
             round(col("value"), 2).cast("double").as("part_value"))
-          .orderBy("p_partkey")
-          // Pin the single evaluation, then release the cache: the suite
-          // runs 130 queries in one JVM, and a left-behind cache leaks
-          // storage-pool pages into every later query.
-          .localCheckpoint()
-        perPart.unpersist()
-        out
+          .orderBy("p_partkey"), eager = true)
       },
       s"""WITH perpart AS (
         |  SELECT l_partkey, SUM(${Money.revenueSql}) AS value

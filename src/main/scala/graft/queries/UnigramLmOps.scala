@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Unigram-LM (SentencePiece-style) tokenizer TRAINING + APPLICATION
   * (Kudo 2018, "Subword Regularization") — the OTHER tokenizer family
@@ -143,7 +143,7 @@ object UnigramLmOps {
     * One vocabulary-sized collect per round — the only driver traffic.
     */
   def trainVocab(words: DataFrame): Seq[(String, Long)] = {
-    val sc = seedCounts(words).cache()
+    val sc = Materialize.cache(seedCounts(words))
     // Alphabet (bounded) + bounded TakeOrdered top-SeedMulti: never a
     // full substring-table collect.
     val singles = sc.filter(length(col("piece")) === 1)
@@ -151,7 +151,6 @@ object UnigramLmOps {
     val multi = sc.filter(length(col("piece")) > 1)
       .orderBy(col("cnt").desc, col("piece").asc).limit(SeedMulti)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    sc.unpersist(false)
     val sel = singles ++ multi
     val t = sel.map(_._2).sum.toDouble
     var vocab: Seq[(String, Long)] = sel.map { case (p, c) => p -> costMicros(c.toDouble, t) }
@@ -293,7 +292,7 @@ object UnigramLmOps {
     "text_unigram_lm" -> QDef(
       (s, dir) => {
         val d = docs(s, dir)
-        val words = wordFreq(d).cache()
+        val words = Materialize.cache(wordFreq(d))
         val vocab = trainVocab(words)
         encodeDocs(d, words, vocab)
       },
@@ -322,7 +321,7 @@ object UnigramLmOps {
     "text_tokenizer_fertility" -> QDef(
       (s, dir) => {
         val d = docs(s, dir)
-        val words = wordFreq(d).cache()
+        val words = Materialize.cache(wordFreq(d))
         val vocab = trainVocab(words)
         val seg = segment(words, vocab)
           .select(col("word"), col("v.n").as("n"), col("v.u").as("u"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float] column).
   *
@@ -53,7 +53,7 @@ object VectorOps {
     * over the REVERSED plane list (acc·2 + bit — no per-row pow) — a
     * single loop expression over the literal, O(1) codegen size in
     * planes×dim (the unrolled form Janino-compiled planes×dim literal
-    * trees per table — the r9 ANN codegen fix, same class as
+    * trees per table — the ANN codegen fix, same class as
     * IvfOps.assignLiteral).
     */
   private def bucketOf(v: Column, tblPlanes: Column): Column =
@@ -66,7 +66,7 @@ object VectorOps {
 
   /** Multi-table LSH keys: array of (table, bucket) composite longs. Each
     * vector lands in `tables` buckets; a candidate pair only needs to
-    * collide in ONE table, which is what buys recall. r16: one native
+    * collide in ONE table, which is what buys recall. One native
     * codegen'd kernel call per row (graftbridge.VectorKernels.lshKeys —
     * identical Horner/dot arithmetic in identical order, pinned
     * bit-equal to the HOF form below by VectorKernelSpec); the HOF form
@@ -79,7 +79,7 @@ object VectorOps {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(v),
         hyperplaneSets(planes, tables, dim), tables))
 
-  /** The pre-r16 HOF formulation, kept as the spec's reference. */
+  /** The HOF formulation, kept as the spec's reference. */
   private[queries] def lshKeysRef(v: Column, planes: Int, tables: Int, dim: Int = 64): Column =
     transform(typedlit(hyperplaneSets(planes, tables, dim)), (tbl, t) =>
       bucketOf(v, tbl) * lit(tables.toLong) + t.cast("long"))
@@ -104,7 +104,7 @@ object VectorOps {
         (col("pos") + 1).cast("long").as("rank"))
 
   /** Eagerly-materialized (q_id, neighbor_id) frame for the ANN recall
-    * gates (r17): every gate consumes its approximate top-k AND the
+    * gates: every gate consumes its approximate top-k AND the
     * brute baseline TWICE (hits join + shape/n_exact aggregate), so the
     * un-materialized subtree — whose plan embeds codebook/hyperplane
     * literal arrays, 50-330 KB of plan string — was planned and
@@ -115,7 +115,7 @@ object VectorOps {
     * rows and the gate booleans are unchanged.
     */
   private[queries] def gatePairs(df: DataFrame): DataFrame =
-    df.select(col("q_id"), col("neighbor_id")).localCheckpoint()
+    Materialize.checkpoint(df.select(col("q_id"), col("neighbor_id")), eager = true)
 
   /** Brute-force cosine top-10 for the 10 probe vectors — the exact
     * baseline every approximate ANN path is gated against. Scoring is a
@@ -223,7 +223,7 @@ object VectorOps {
         |  * LEAST(10, (SELECT COUNT(*) FROM embeddings) - 1) AS BIGINT) AS n_exact,
         |  true AS recall_ok""".stripMargin),
 
-    // §2 25kl OPERATOR-ONLY twin of ann_lsh_topk (r14 verdict task 3):
+    // §2 25kl OPERATOR-ONLY twin of ann_lsh_topk:
     // the gated key above runs the full brute-force exact baseline
     // IN-BAND for its recall contract, so its bench entry times the
     // ground truth, not the operator — pins drift with verification

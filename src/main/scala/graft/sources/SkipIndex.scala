@@ -94,20 +94,18 @@ object SkipIndex {
     // at ±10% as hashable booleans.
     "q_block_sample_est" -> QDef(
       (s, dir) => {
-        val out = SourceOps.scratch("blocksample", dir)
-        if (!new java.io.File(out).exists()) {
-          Tables(s, dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .repartition(16, col("l_orderkey"))
-            .write.mode("overwrite").parquet(out)
-        }
+        val out = graft.Scratch.dir("blocksample-").toString
+        Tables(s, dir, "lineitem")
+          .select("l_orderkey", "l_extendedprice", "l_discount")
+          .repartition(16, col("l_orderkey"))
+          .write.mode("overwrite").parquet(out)
         val files = listParquet(s, out)
         val sampled = files.zipWithIndex.collect { case (f, i) if i % 4 == 0 => f }
         val factor = files.length.toDouble / sampled.length
         val est = s.read.parquet(sampled: _*)
           .agg(count(lit(1)).as("s_rows"),
             sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("s_rev"))
-        // Exact DECIMAL revenue sum (Money, r13): the double formulation
+        // Exact DECIMAL revenue sum (Money): the double formulation
         // drifted past the cent boundary at the sf10 row count — a
         // double SUM's value depends on partitioning order.
         val exact = Tables(s, dir, "lineitem")
@@ -138,15 +136,13 @@ object SkipIndex {
 
     "q_skipindex_scan" -> QDef(
       (s, dir) => {
-        val out = SourceOps.scratch("skipidx", dir)
-        if (!new java.io.File(out).exists()) {
-          Tables(s, dir, "lineitem")
-            .select("l_shipdate", "l_extendedprice", "l_discount", "l_quantity")
-            .repartitionByRange(16, col("l_shipdate"))
-            .write.mode("overwrite").parquet(out)
-        }
+        val out = graft.Scratch.dir("skipidx-").toString
+        Tables(s, dir, "lineitem")
+          .select("l_shipdate", "l_extendedprice", "l_discount", "l_quantity")
+          .repartitionByRange(16, col("l_shipdate"))
+          .write.mode("overwrite").parquet(out)
         val idx = build(s, out, "l_shipdate")
-        // Exact DECIMAL revenue (Money, r13 — the sf10 sweep caught the
+        // Exact DECIMAL revenue (Money — the sf10 sweep caught the
         // double SUM 4 cents off the oracle at 2.1M matching rows).
         prunedRead(s, idx, "l_shipdate", "1995-01-01", "1995-04-01")
           .agg(

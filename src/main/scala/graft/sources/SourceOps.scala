@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.queries.QDef
 
 /** Source/sink coverage: CSV and JSON-lines round-trips with explicit
@@ -19,20 +19,13 @@ import graft.queries.QDef
   */
 object SourceOps {
 
-  /** Scratch path per (operator, sf dir) under this JVM's
-    * [[graft.Scratch]] root, so concurrent bench and verify runs on the
-    * SAME sf dir can never overwrite each other mid-read.
-    */
-  private[graft] def scratch(op: String, dir: String): String =
-    graft.Scratch.root.resolve(s"${op}_${dir.replaceAll("[^A-Za-z0-9]", "_")}").toString
-
   val defs: Map[String, QDef] = Map(
 
     // CSV round-trip: header + explicit read schema (never inferSchema —
     // an extra pass over the data and nondeterministic typing at scale).
     "src_csv_roundtrip" -> QDef(
       (s, dir) => {
-        val path = scratch("csv", dir)
+        val path = Scratch.dir("csv-").toString
         Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_returnflag"))
           .write.mode("overwrite").option("header", "true").csv(path)
@@ -56,7 +49,7 @@ object SourceOps {
     // JSON is a full extra scan at scale).
     "src_json_roundtrip" -> QDef(
       (s, dir) => {
-        val path = scratch("json", dir)
+        val path = Scratch.dir("json-").toString
         Tables(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value"))
           .write.mode("overwrite").json(path)
@@ -79,7 +72,7 @@ object SourceOps {
     // and column pruning work the same as parquet).
     "src_orc_roundtrip" -> QDef(
       (s, dir) => {
-        val path = scratch("orc", dir)
+        val path = Scratch.dir("orc-").toString
         Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .write.mode("overwrite").orc(path)
@@ -105,7 +98,7 @@ object SourceOps {
     // that makes 100 TB event tables queryable by day/type.
     "src_partitioned_scan" -> QDef(
       (s, dir) => {
-        val path = scratch("part", dir)
+        val path = Scratch.dir("part-").toString
         Tables(s, dir, "events")
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
           .write.mode("overwrite").partitionBy("event_type").parquet(path)

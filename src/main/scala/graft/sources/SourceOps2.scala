@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.queries.QDef
 
-/** Round-7 source tranche: schema-evolution reads. */
+/** Source operators: schema-evolution reads. */
 object SourceOps2 {
 
   val defs: Map[String, QDef] = Map(
@@ -21,7 +21,7 @@ object SourceOps2 {
     // over the source table.
     "src_merge_schema" -> QDef(
       (s, dir) => {
-        val path = SourceOps.scratch("evolve", dir)
+        val path = graft.Scratch.dir("evolve-").toString
         val o = Tables(s, dir, "orders")
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")

@@ -58,14 +58,8 @@ object AnnealStream {
                   .as("c"))
           case None => bdw.select(col("doc_id"), col("w"), col("bc").as("c"))
         }
-        // Releasable form: this sink runs once per micro-batch for the
-        // stream's lifetime, so the schedule's internal caches must be
-        // dropped after the write or they accumulate per batch.
-        val (schedule, release) =
-          CCNetOps.annealScheduleFromRankedReleasable(
-            CCNetOps.ccnetRankedFromDocWord(merged))
-        try schedule.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        finally release()
+        CCNetOps.annealScheduleFromRanked(CCNetOps.ccnetRankedFromDocWord(merged))
+          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
         merged
     }
 

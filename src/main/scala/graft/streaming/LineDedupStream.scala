@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.queries.LineDedupOps
 
 /** Streaming twin of `text_line_dedup` (RefinedWeb/C4 boilerplate-line
@@ -40,8 +41,8 @@ object LineDedupStream {
       retainSnapshots: Int = 3): StreamingQuery =
     SnapshotStore.snapshotSinkWithId(docs, tableDir, checkpointDir, retainSnapshots) {
       (prev, batch, batchId) =>
-        val lines = LineDedupOps.docLines(batch)
-          .withColumn("lh", md5(col("line"))).cache()
+        val lines = Materialize.cache(LineDedupOps.docLines(batch)
+          .withColumn("lh", md5(col("line"))))
         val batchCnt = lines.groupBy("lh").agg(count(lit(1)).as("bc"))
         val merged = prev match {
           case Some(p) =>
@@ -63,11 +64,6 @@ object LineDedupStream {
                 struct(col("line_no"), col("line"))))),
               e => e.getField("line"))).as("clean_text"))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        // Drop the per-batch cache before handing `merged` to the store:
-        // a long-running stream would otherwise accumulate one cached
-        // block set per micro-batch. The store's snapshot write recomputes
-        // docLines once — a map-only transform on the batch, cheap.
-        lines.unpersist()
         merged
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.queries.TextOps3
 
 /** Streaming twin of `text_ngram_novelty` (§2 25kd) — the online
@@ -43,8 +44,8 @@ object NoveltyStream {
       retainSnapshots: Int = 3): StreamingQuery =
     SnapshotStore.snapshotSinkWithId(docs, tableDir, checkpointDir, retainSnapshots) {
       (prev, batch, batchId) =>
-        val tri = TextOps3.docTrigrams(batch)
-          .withColumn("gh", md5(col("g"))).drop("g").cache()
+        val tri = Materialize.cache(TextOps3.docTrigrams(batch)
+          .withColumn("gh", md5(col("g"))).drop("g"))
         val batchFirst = tri.groupBy("gh").agg(min("doc_id").as("bfd"))
         val merged = prev match {
           case Some(p) =>
@@ -63,11 +64,6 @@ object NoveltyStream {
           .withColumn("novelty",
             round(col("n_novel") / col("n_grams").cast("double"), 4))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        // Drop the per-batch cache before handing `merged` to the store
-        // (a long-running stream would otherwise accumulate one cached
-        // block set per micro-batch); the store's snapshot write
-        // recomputes docTrigrams once — map-only on the batch, cheap.
-        tri.unpersist()
         merged
     }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
+
 /** Streaming twin of the batch `text_dup_fraction` operator: maintain a
   * passage→seen-doc-count table under document ingestion, and tag every
   * arriving document with the share of its 8-gram passages ALREADY SEEN
@@ -48,10 +50,9 @@ object PassageStream {
     SnapshotStore.snapshotSinkWithId(docs, tableDir, checkpointDir, retainSnapshots) {
       (prev, batch, batchId) =>
         // Cached for the batch's three uses (tag join, per-doc counts,
-        // fresh passage counts); the reference drops at batch end and
-        // the ContextCleaner reaps the storage — no unpersist hook
-        // exists after the store's lazy snapshot write consumes it.
-        val win = passages(batch).cache()
+        // fresh passage counts); the store releases it after the
+        // snapshot write.
+        val win = Materialize.cache(passages(batch))
         // Tag against what was seen BEFORE this batch (prev snapshot).
         val seen = prev match {
           case Some(p) => win.join(p.select(col("ph")), Seq("ph"), "left_semi")

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
+
 /** The one snapshot-chain implementation every incremental sink shares
   * (mergeSink / AnnStream PQ + IVF / AggViewStream view + stats
   * catalog). A "store" is a directory of `snap_<batchId>` parquet
@@ -20,9 +22,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    and its checkpoint commit);
   *  - readers take the highest committed snapshot.
   *
-  * Extracted in round 7 from the four sinks that each re-implemented
-  * the walk (the LayoutStream landing/base chain keeps its own
-  * two-prefix protocol but shares the committed-id listing primitive).
+  * Each micro-batch's merge and writes run in one [[graft.Materialize]]
+  * scope, released after the snapshot write, so what a merge caches
+  * lives for its batch only. (The LayoutStream landing/base chain keeps
+  * its own two-prefix protocol but shares the committed-id listing
+  * primitive.)
   */
 object SnapshotStore {
 
@@ -103,8 +107,9 @@ object SnapshotStore {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val prev = latest(spark, tableDir, below = Some(batchId))
-        merge(prev, batch, batchId)
-          .write.mode("overwrite").parquet(s"$tableDir/snap_$batchId")
+        val (_, scope) = Materialize.scope(merge(prev, batch, batchId)
+          .write.mode("overwrite").parquet(s"$tableDir/snap_$batchId"))
+        scope.release()
         prune(spark, tableDir, batchId, retainSnapshots)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

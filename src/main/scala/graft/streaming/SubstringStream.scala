@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.queries.SubstringDedupOps
 
 /** Streaming twin of `dedup_substring_apply` (Lee et al. 2021 exact
@@ -48,10 +49,10 @@ object SubstringStream {
     SnapshotStore.snapshotSinkWithId(docs, tableDir, checkpointDir, retainSnapshots) {
       (prev, batch, batchId) =>
         // Cached for the batch's three uses (history probe, in-batch
-        // count table + join back, fresh-hash set); the reference drops
-        // at batch end and the ContextCleaner reaps the storage.
+        // count table + join back, fresh-hash set); the store releases
+        // it after the snapshot write.
         val t = SubstringDedupOps.tokens(batch)
-        val anchors = SubstringDedupOps.anchorsOf(t).cache()
+        val anchors = Materialize.cache(SubstringDedupOps.anchorsOf(t))
         val histDup = prev match {
           case Some(p) =>
             anchors.join(p.select(col("ph")), Seq("ph"), "left_semi")

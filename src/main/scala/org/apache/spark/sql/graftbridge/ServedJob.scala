@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, Row, classic}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
 
+import graft.Materialize
+
 /** The served engine's one way to run a frame: one SQL execution, as
   * listeners see it, whose executed plan is read by one Spark job.
   *
@@ -33,20 +35,18 @@ object ServedJob {
 
   /** Copy `df` into executor storage with one job that also counts its
     * rows. Returns a frame over the copy, whose statistics carry that
-    * exact row count, the copy's RDD and the count. The RDD is local
-    * checkpointed: the job stores every partition, so the checkpoint that
-    * `runJob` takes afterwards computes nothing and only cuts the lineage.
+    * exact row count, and the count. The copy is a [[Materialize]]
+    * checkpoint, released with the caller's scope: the job stores every
+    * partition, so the checkpoint that `runJob` takes afterwards computes
+    * nothing and only cuts the lineage.
     */
-  def snapshot(df: DataFrame): (DataFrame, RDD[InternalRow], Long) = run(df, "materialize") { (ds, rows) =>
-    val copy = rows.mapPartitionsInternal(_.map(_.copy()))
-    copy.localCheckpoint()
-    val n =
-      try job(copy, new CountRows).sum
-      catch { case e: Throwable => copy.unpersist(blocking = false); throw e }
+  def snapshot(df: DataFrame): (DataFrame, Long) = run(df, "materialize") { (ds, rows) =>
+    val copy = Materialize.checkpoint(rows.mapPartitionsInternal(_.map(_.copy())))
+    val n = job(copy, new CountRows).sum
     val relation = LogicalRDD.fromDataset(copy, ds, ds.isStreaming)
     val stats = relation.computeStats().copy(rowCount = Some(BigInt(n)))
     val exact = relation.copy()(ds.sparkSession, Some(stats), Some(relation.constraints))
-    (classic.Dataset.ofRows(ds.sparkSession, exact), copy, n)
+    (classic.Dataset.ofRows(ds.sparkSession, exact), n)
   }
 
   /** `body` over `df`'s executed plan, inside one SQL execution named

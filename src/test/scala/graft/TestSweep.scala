@@ -2,14 +2,17 @@ package graft
 
 /** Bounded-parallel full-inventory sweeps for the CI suites.
   *
-  * Three suites walk every `SparkEntry.queries` builder (determinism,
-  * runs-at-sf0.001, plan lint); run sequentially they alone cost ~18
-  * min and pushed `sbt test` past the 30-min CI budget. Per-query work
-  * is independent and Spark's scheduler runs concurrent driver threads'
-  * jobs side by side, so each sweep fans out over a fixed pool. Coverage
-  * is unchanged — every query still runs; only the wall-clock shrinks.
-  * Callers give each item its own `spark.newSession()`: builders
-  * register fixed temp-view names, and items run concurrently.
+  * Two suites walk every `SparkEntry.queries` builder on it
+  * (determinism, plan lint); run sequentially, the three inventory
+  * sweeps cost ~18 min and pushed `sbt test` past the 30-min CI budget.
+  * Per-query work is independent and Spark's scheduler runs concurrent
+  * driver threads' jobs side by side, so each sweep fans out over a
+  * fixed pool. Coverage is unchanged — every query still runs; only the
+  * wall-clock shrinks. Callers give each item its own
+  * `spark.newSession()`: builders register fixed temp-view names, and
+  * items run concurrently. OpsSpec's runs-at-sf0.001 sweep runs one key
+  * at a time, because it checks that each key's Materialize scope
+  * releases everything, and concurrent keys share cached relations.
   */
 object TestSweep {
 

@@ -226,39 +226,36 @@ class PlanLintInventorySpec extends SparkSpec {
     "non-equi fallback / missed broadcast / global window fails CI)") {
     val regressions = Seq.newBuilder[String]
     val improvements = Seq.newBuilder[String]
-    // Parallel sweep in bounded batches (graft.TestSweep doc), clearing
-    // the shared cache registry between batches instead of per query. A
-    // concurrently-registered cache can only SUBSTITUTE a subtree (hiding
+    // Parallel sweep (graft.TestSweep doc). Each item runs in its own
+    // session, so fixed view names (orders, documents, events) that
+    // builders register cannot leak between items, and in its own
+    // Materialize scope, released after its findings. A cache another
+    // item registered concurrently can only SUBSTITUTE a subtree (hiding
     // nodes below it), never add a cartesian/non-equi/window above — so
     // interference can only lower a count, which reports as info; the
-    // failure direction (now > was) is unaffected. Each item runs in its
-    // own session, so fixed view names (orders, documents, events) that
-    // builders register cannot leak between items.
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .grouped(graft.TestSweep.Threads).foreach { batch =>
-        val results = graft.TestSweep.sweepResults(batch) { case (name, fn) =>
-          val counts: Map[String, Int] =
-            try PlanLints.findings(fn(spark.newSession(), sfDir))
-              .groupBy(_.rule).view.mapValues(_.size).toMap
-            catch {
-              case e: Throwable =>
-                Map(s"builder threw ${e.getClass.getSimpleName}: ${e.getMessage}" -> -1)
-            }
-          name -> counts
+    // failure direction (now > was) is unaffected.
+    val results = graft.TestSweep.sweepResults(graft.SparkEntry.queries.toSeq.sortBy(_._1)) { case (name, fn) =>
+      val counts: Map[String, Int] =
+        try {
+          val (findings, scope) = graft.Materialize.scope(PlanLints.findings(fn(spark.newSession(), sfDir)))
+          scope.release()
+          findings.groupBy(_.rule).view.mapValues(_.size).toMap
+        } catch {
+          case e: Throwable =>
+            Map(s"builder threw ${e.getClass.getSimpleName}: ${e.getMessage}" -> -1)
         }
-        results.foreach { case (name, counts) =>
-          counts.collect { case (msg, -1) => regressions += s"$name: $msg" }
-          val real = counts.filter(_._2 >= 0)
-          val base = baseline.getOrElse(name, Map.empty)
-          (real.keySet ++ base.keySet).foreach { rule =>
-            val now = real.getOrElse(rule, 0); val was = base.getOrElse(rule, 0)
-            if (now > was) regressions += s"$name: $rule $was -> $now"
-            else if (now < was) improvements += s"$name: $rule $was -> $now"
-          }
-        }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      name -> counts
+    }
+    results.foreach { case (name, counts) =>
+      counts.collect { case (msg, -1) => regressions += s"$name: $msg" }
+      val real = counts.filter(_._2 >= 0)
+      val base = baseline.getOrElse(name, Map.empty)
+      (real.keySet ++ base.keySet).foreach { rule =>
+        val now = real.getOrElse(rule, 0); val was = base.getOrElse(rule, 0)
+        if (now > was) regressions += s"$name: $rule $was -> $now"
+        else if (now < was) improvements += s"$name: $rule $was -> $now"
       }
+    }
     val better = improvements.result()
     if (better.nonEmpty)
       info(s"plans improved vs baseline (update it): ${better.mkString("; ")}")

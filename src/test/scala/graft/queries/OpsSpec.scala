@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Materialize, SparkSpec}
 
 class OpsSpec extends SparkSpec {
 
@@ -261,13 +261,20 @@ class OpsSpec extends SparkSpec {
   }
 
   test("every declared query runs at sf0.001 and returns rows") {
-    // Parallel sweep (graft.TestSweep doc): same coverage, bounded pool.
-    // Each item gets its own session, so builders that register fixed
-    // view names (orders, documents, events) cannot see each other's.
-    val bad = graft.TestSweep.sweep(graft.SparkEntry.queries.toSeq) { case (name, fn) =>
-      val n = fn(spark.newSession(), sfDir).count()
+    // Each key gets its own session, so builders that register fixed
+    // view names (orders, documents, events) cannot see each other's,
+    // and its own Materialize scope, released after its count. One key
+    // at a time: sessions share one CacheManager, which hands a cached
+    // plan to every equal plan, so a key that released its cache while
+    // another key still read it would make that reader rebuild the
+    // cached blocks as an RDD no scope owns.
+    val before = contextHolds()
+    val bad = graft.SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      val (n, scope) = Materialize.scope(fn(spark.newSession(), sfDir).count())
+      scope.release()
       if (n > 0) None else Some(s"query $name returned no rows")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
+    assertHeldNoMoreThan(before)
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Materialize, SparkEntry, SparkSpec}
 
 /** Locks in the performance-critical plan properties and the determinism
   * contract the driver's hash-compare depends on.
@@ -317,12 +317,17 @@ class PlanPropertiesSpec extends SparkSpec {
     // budget; Spark schedules concurrent driver threads' jobs fine, and
     // determinism-per-query is independent, so sweep on a bounded pool,
     // each item in its own session (builders register fixed view names).
-    // Failures aggregate to one assertion.
+    // Each run's Materialize scope is released after its collect, so the
+    // second run reads nothing the first cached. Failures aggregate to
+    // one assertion.
     val bad = graft.TestSweep.sweep(SparkEntry.queries.toSeq) { case (name, fn) =>
       val s = spark.newSession()
-      val a = fn(s, sfDir).collect().map(canon).toSeq
-      val b = fn(s, sfDir).collect().map(canon).toSeq
-      if (a != b) Some(s"query $name is nondeterministic") else None
+      def run(): Seq[String] = {
+        val (rows, scope) = Materialize.scope(fn(s, sfDir).collect().map(canon).toSeq)
+        scope.release()
+        rows
+      }
+      if (run() != run()) Some(s"query $name is nondeterministic") else None
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }

@@ -12,7 +12,7 @@ class EvolutionSpec extends SparkSpec {
 
   test("mergeSchema reads old and new parquet batches as one evolved schema") {
     import spark.implicits._
-    val dir = SourceOps.scratch("evolve", "spec")
+    val dir = graft.Scratch.dir("evolve-").toString
     // Batch 1: (id). Batch 2 adds a column (id, score).
     Seq(1L, 2L).toDF("id").write.parquet(s"$dir/b=1")
     Seq((3L, 0.5)).toDF("id", "score").write.parquet(s"$dir/b=2")
@@ -26,7 +26,7 @@ class EvolutionSpec extends SparkSpec {
   }
 
   test("permissive JSON ingestion quarantines corrupt lines instead of failing the batch") {
-    val dir = SourceOps.scratch("corrupt_json", "spec")
+    val dir = graft.Scratch.dir("corrupt-json-").toString
     new java.io.File(dir).mkdirs()
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/data.jsonl"),

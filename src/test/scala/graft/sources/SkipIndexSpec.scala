@@ -13,7 +13,7 @@ class SkipIndexSpec extends SparkSpec {
   private val dir = sf("lineitem")
 
   private lazy val laidOut: String = {
-    val out = SourceOps.scratch("skipidx_spec", dir)
+    val out = graft.Scratch.dir("skipidx-spec-").toString
     Tables(spark, dir, "lineitem")
       .select("l_shipdate", "l_extendedprice", "l_discount", "l_quantity")
       .repartitionByRange(8, col("l_shipdate"))

@@ -17,7 +17,7 @@ class WapSpec extends SparkSpec {
 
   test("clean audit publishes; readers see the new batch") {
     import spark.implicits._
-    val dest = SourceOps.scratch("wap_ok", "spec")
+    val dest = graft.Scratch.dir("wap-ok-").toString
     val r = Wap.writeAuditPublish(spark, Seq(1L, 2L, 3L).toDF("v"), dest, auditNonEmpty)
     assert(r.isRight)
     assert(spark.read.parquet(dest).count() == 3)
@@ -29,7 +29,7 @@ class WapSpec extends SparkSpec {
 
   test("failed audit keeps the previous publication and removes staging") {
     import spark.implicits._
-    val dest = SourceOps.scratch("wap_bad", "spec")
+    val dest = graft.Scratch.dir("wap-bad-").toString
     assert(Wap.writeAuditPublish(spark, Seq(5L).toDF("v"), dest, auditNoNegatives).isRight)
     val bad = Wap.writeAuditPublish(spark, Seq(-1L).toDF("v"), dest, auditNoNegatives)
     assert(bad.isLeft, "negative batch must not publish")
@@ -45,7 +45,7 @@ class WapSpec extends SparkSpec {
     // The replay-idempotence contract for partitioned batch outputs:
     // re-running one day's load must not clobber sibling partitions.
     import spark.implicits._
-    val dest = SourceOps.scratch("dyn_overwrite", "spec")
+    val dest = graft.Scratch.dir("dyn-overwrite-").toString
     Seq(("a", 1L), ("a", 2L), ("b", 10L)).toDF("k", "v")
       .write.partitionBy("k").mode("overwrite").parquet(dest)
     // Replay partition a with corrected values; STATIC overwrite would

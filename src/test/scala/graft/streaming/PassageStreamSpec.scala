@@ -57,4 +57,20 @@ class PassageStreamSpec extends SparkSpec {
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
+
+  test("three micro-batches leave nothing cached or persisted behind") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("passage-release").toString
+    val input = MemoryStream[Doc]
+    val before = contextHolds()
+    Seq(Seq(Doc(1L, t1), Doc(3L, t3)), Seq(Doc(7L, t1)), Seq(Doc(9L, t3))).foreach { docs =>
+      input.addData(docs)
+      PassageStream.dupTagSink(input.toDF(), s"$base/counts", s"$base/tagged", s"$base/ckpt")
+        .awaitTermination()
+    }
+    assert(PassageStream.readTagged(spark, s"$base/tagged", 2L).count() == 1)
+    assertHeldNoMoreThan(before)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+  }
 }

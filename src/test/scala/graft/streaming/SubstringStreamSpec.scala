@@ -82,4 +82,20 @@ class SubstringStreamSpec extends SparkSpec {
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
+
+  test("three micro-batches leave nothing cached or persisted behind") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("substr-release").toString
+    val input = MemoryStream[Doc]
+    val before = contextHolds()
+    Seq(Seq(Doc(1L, t1), Doc(3L, d3), Doc(4L, d4)), Seq(Doc(7L, d7)), Seq(Doc(8L, d8))).foreach { docs =>
+      input.addData(docs)
+      SubstringStream.cleanSink(input.toDF(), s"$base/anchors", s"$base/clean", s"$base/ckpt")
+        .awaitTermination()
+    }
+    assert(SubstringStream.readCleaned(spark, s"$base/clean", 2L).count() == 1)
+    assertHeldNoMoreThan(before)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+  }
 }

@@ -54,8 +54,8 @@ object BQCompat {
     * happen to be columns named `day`/`month`/… stay columns.
     */
   private val UnitArgFunctions: Map[String, UnitPos.Value] = Map(
-    "timestamp_diff" -> UnitPos.Last,
-    "date_diff" -> UnitPos.Last,
+    "bq_timestamp_diff" -> UnitPos.Last,
+    "bq_date_diff" -> UnitPos.Last,
     "timestamp_trunc" -> UnitPos.Second,
     "date_trunc" -> UnitPos.Second)
 
@@ -116,10 +116,9 @@ object BQCompat {
     "regexp_contains" -> { case Seq(s, r) => RLike(s, r) },
 
     // FarmHash Fingerprint64 — the ACTUAL BigQuery FARM_FINGERPRINT hash
-    // family (round 4 replaces the earlier XxHash64 stand-in): a native
-    // codegen'd expression, spec'd bit-for-bit against an independent
-    // implementation. Real fingerprints migrate: a user's persisted
-    // BigQuery hashes now match what this engine computes.
+    // family: a native codegen'd expression, spec'd bit-for-bit against
+    // an independent implementation. Real fingerprints migrate: a user's
+    // persisted BigQuery hashes match what this engine computes.
     "farm_fingerprint" -> { case Seq(e) =>
       org.apache.spark.sql.graftbridge.FarmFingerprint64(e)
     },
@@ -215,7 +214,8 @@ object BQCompat {
     // TIMESTAMP_DIFF(t1, t2, unit) = t1 - t2 in whole units, truncated
     // toward zero (BigQuery semantics: microsecond difference div unit).
     // BigQuery supports exactly MICROSECOND..DAY here (no WEEK/MONTH/YEAR).
-    "timestamp_diff" -> { case Seq(a, b, u) =>
+    // Registered, like DATE_DIFF, under the name [[parse]] gives it.
+    "bq_timestamp_diff" -> { case Seq(a, b, u) =>
       val micros = Map("MICROSECOND" -> 1L, "MILLISECOND" -> 1000L,
         "SECOND" -> 1000000L, "MINUTE" -> 60000000L,
         "HOUR" -> 3600000000L, "DAY" -> 86400000000L)
@@ -226,7 +226,7 @@ object BQCompat {
     },
 
     // DATE_DIFF(d1, d2, unit) = boundary count between d2 and d1.
-    "date_diff" -> { case Seq(a, b, u) =>
+    "bq_date_diff" -> { case Seq(a, b, u) =>
       val da = Cast(a, DateType); val db = Cast(b, DateType)
       // Boundary counts need FLOOR division of days-since-epoch (negative
       // days must round toward -inf, which IntegralDivide's truncation
@@ -363,18 +363,19 @@ object BQCompat {
   def parse(spark: SparkSession, sql: String): LogicalPlan =
     unitArgsToLiterals(spark.sessionState.sqlParser.parsePlan(rewriteBqSyntax(sql)))
 
-  /** BigQuery constructs Spark's parser rejects, rewritten textually:
-    * `FROM UNNEST([1, 2, 3]) AS x` → a subquery exploding an array()
-    * literal (reference: client_test.clj test-bigquery-syntax). Kept
+  /** BigQuery constructs Spark's parser rejects or misreads, rewritten
+    * textually: `FROM UNNEST([1, 2, 3]) AS x` → a subquery exploding an
+    * array() literal (reference: client_test.clj test-bigquery-syntax),
+    * SAFE_CAST → TRY_CAST, and the *_DIFF functions renamed. Kept
     * deliberately narrow — bracket literals only inside UNNEST, so
     * subscripts are untouched — and applied over a LEXED view of the
     * query: string literals, backtick identifiers and comments are
     * masked behind placeholder tokens before any pattern runs, so a
     * literal containing `SAFE_CAST(` or `AS INT64)` survives verbatim
-    * (a raw-text pass would rewrite inside them). Masking also makes UNNEST arrays containing string literals
-    * robust: a `]` inside a quoted element no longer terminates the
-    * bracket match, because the literal is a single opaque token when
-    * the pattern runs.
+    * (a raw-text pass would rewrite inside them). Masking also makes
+    * UNNEST arrays containing string literals robust: a `]` inside a
+    * quoted element no longer terminates the bracket match, because the
+    * literal is a single opaque token when the pattern runs.
     */
   def rewriteBqSyntax(q: String): String = {
     val (masked, saved) = maskProtected(q)
@@ -392,9 +393,15 @@ object BQCompat {
     val typeMap = Seq(
       "INT64" -> "BIGINT", "FLOAT64" -> "DOUBLE", "BOOL" -> "BOOLEAN",
       "BYTES" -> "BINARY", "NUMERIC" -> "DECIMAL(38,9)")
-    val rewritten = typeMap.foldLeft(step2) { case (acc, (bq, sp)) =>
+    val step3 = typeMap.foldLeft(step2) { case (acc, (bq, sp)) =>
       s"(?i)\\bAS\\s+$bq\\s*\\)".r.replaceAllIn(acc, s"AS $sp)")
     }
+    // DATE_DIFF is also Spark grammar, unit FIRST: in DATE_DIFF(day, d2,
+    // MONTH) Spark takes a `day` column for the unit. So both BigQuery
+    // *_DIFF functions are called by graft's own names (bq_date_diff,
+    // bq_timestamp_diff), which no grammar rule knows.
+    val rewritten = "(?i)\\b(DATE_DIFF|TIMESTAMP_DIFF)\\s*\\(".r.replaceAllIn(step3,
+      m => s"bq_${m.group(1).toLowerCase(Locale.ROOT)}(")
     unmask(rewritten, saved)
   }
 

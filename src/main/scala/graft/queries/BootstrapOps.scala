@@ -34,20 +34,10 @@ object BootstrapOps {
   /** Poisson(1) CDF at k = 0..8 as 8-hex-char thresholds of floor(c·2³²):
     * the weight is the number of thresholds at or below the uniform.
     */
-  private val HexThresholds: Seq[String] = {
+  private[queries] val HexThresholds: Seq[String] = {
     val pdf = Iterator.iterate((0, math.exp(-1.0))) { case (k, p) => (k + 1, p / (k + 1)) }
     val cdf = pdf.take(9).map(_._2).scanLeft(0.0)(_ + _).drop(1)
     cdf.map(c => f"${math.floor(c * 4294967296.0).toLong}%08x").toSeq
-  }
-
-  /** The r16 expression-form per-(row, replica) weight — kept as the
-    * spec's reference for the kernel's bit-equality pin.
-    */
-  private[queries] def weightExprRef(keyCol: org.apache.spark.sql.Column,
-      bCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val u = substring(md5(concat(
-      keyCol.cast("string"), lit(":"), bCol.cast("string"))), 1, 8)
-    HexThresholds.map(t => when(u >= t, 1L).otherwise(0L)).reduce(_ + _)
   }
 
   /** Numeric thresholds for the native kernel: the same floor(cdf·2³²)
@@ -64,7 +54,7 @@ object BootstrapOps {
         import org.apache.spark.sql.expressions.Window
         val o = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice").cast("decimal(18,2)").as("x"))
-        // r17: all B weights per ROW in one native pass
+        // All B weights per ROW in one native pass
         // (graftbridge.PoissonKernel — one reused digest; the expression
         // form exploded B rows per order and re-built string + fresh-
         // MessageDigest md5 + 9 hex-string compares per exploded row),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,6 +15,26 @@ import graft.Tables
 object SketchOps2 {
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "events")
+
+  /** Count-min sketch shape of `curate_cms_counts` and of its stream
+    * twin (graft.streaming.CmsStream): d hash rows × w buckets.
+    */
+  val CmsDepth = 4
+  val CmsWidth = 2048
+
+  /** `df` (with a `user_id` column) once per sketch row `r`, with the
+    * bucket `b` its `user_id` hashes to in that row: the probes that
+    * build a sketch and that query one.
+    */
+  def cmsProbes(df: DataFrame): DataFrame =
+    df.select(col("*"), explode(array((0 until CmsDepth).map(lit(_)): _*)).as("r"))
+      .withColumn("b", pmod(xxhash64(col("user_id"), col("r")), lit(CmsWidth)))
+
+  /** The sketch's cells (r, b, c) from [[cmsProbes]]: one partial-agg
+    * shuffle keyed by (row, bucket), with `extra` aggregates beside `c`.
+    */
+  def cmsCells(probes: DataFrame, extra: Column*): DataFrame =
+    probes.groupBy("r", "b").agg(count(lit(1)).as("c"), extra: _*)
 
   val defs: Map[String, QDef] = Map(
 
@@ -31,24 +51,15 @@ object SketchOps2 {
     // daily sketches merge into monthly ones without rescanning.
     "curate_cms_counts" -> QDef(
       (s, dir) => {
-        val d = 4; val w = 2048
         val e = ev(s, dir).select(col("user_id"),
           (dayofmonth(col("ts")) <= 15).as("h1"))
-        val rows = e.select(col("user_id"), col("h1"),
-            explode(array((0 until d).map(lit(_)): _*)).as("r"))
-          .select(col("h1"), col("r"),
-            pmod(xxhash64(col("user_id"), col("r")), lit(w)).as("b"))
-        val cms = rows.groupBy("r", "b").agg(
-          count(lit(1)).as("c"),
+        val cms = cmsCells(cmsProbes(e),
           sum(when(col("h1"), 1L).otherwise(0L)).as("ca"),
           sum(when(!col("h1"), 1L).otherwise(0L)).as("cb"))
         val n = e.agg(count(lit(1)).as("n"))
         val keys = e.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
           .orderBy(col("exact_cnt").desc, col("user_id")).limit(10)
-        keys
-          .select(col("user_id"), col("exact_cnt"),
-            explode(array((0 until d).map(lit(_)): _*)).as("r"))
-          .withColumn("b", pmod(xxhash64(col("user_id"), col("r")), lit(w)))
+        cmsProbes(keys)
           .join(broadcast(cms), Seq("r", "b"))
           .groupBy("user_id", "exact_cnt")
           .agg(min(col("c")).as("est"),
@@ -57,7 +68,7 @@ object SketchOps2 {
           .crossJoin(broadcast(n))
           .select(col("user_id"), col("exact_cnt"),
             (col("est") >= col("exact_cnt") &&
-              col("est") - col("exact_cnt") <= lit(4.0) * col("n") / w).as("within_tol"),
+              col("est") - col("exact_cnt") <= lit(4.0) * col("n") / CmsWidth).as("within_tol"),
             (col("lin") === 1L).as("merge_ok"))
           .orderBy(col("exact_cnt").desc, col("user_id"))
       },

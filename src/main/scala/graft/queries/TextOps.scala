@@ -78,7 +78,7 @@ object TextOps {
     // under 2^62, safe under ANSI overflow checking. All k minima
     // in ONE native pass (graftbridge.VectorKernels.minhashSig — exact
     // integer arithmetic, bit-identical; VectorKernelSpec pins it
-    // against the k-transform HOF form below, which evaluated k
+    // against the k-transform HOF form, which evaluated k
     // interpreted array scans per row).
     val P = 2147483647L
     val rnd = new java.util.SplittableRandom(42)
@@ -87,16 +87,6 @@ object TextOps {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       org.apache.spark.sql.graftbridge.MinHashSigNative(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(hs), ms, as, P))
-  }
-
-  /** The HOF formulation, kept as the spec's reference. */
-  private[queries] def minhashSignatureRef(hs: Column, k: Int): Column = {
-    val P = 2147483647L
-    val rnd = new java.util.SplittableRandom(42)
-    val ms = Seq.fill(k)(1L + rnd.nextLong(P - 1))
-    val as = Seq.fill(k)(rnd.nextLong(P))
-    array((0 until k).map(i =>
-      array_min(transform(hs, h => pmod(pmod(h, lit(P)) * lit(ms(i)) + lit(as(i)), lit(P))))): _*)
   }
 
   /** LSH band hashes for a MinHash signature (bands × rowsPerBand = k). */
@@ -337,19 +327,38 @@ object TextOps {
         docs(s, dir)
           .select(col("doc_id"), split(col("text"), " ").as("toks"))
           .filter(size(col("toks")) >= n)))
-    val grams = base.select(col("doc_id"), explode(ngramShingles(col("toks"), n)).as("g"))
+    val grams = docGrams(base, n)
     val bench = grams.filter(col("doc_id") < benchBelow).select("g").distinct()
-    val hits = grams.filter(col("doc_id") >= benchBelow)
+    flagContaminated(
+      base.filter(col("doc_id") >= benchBelow), grams.filter(col("doc_id") >= benchBelow), bench)
+      .orderBy("doc_id")
+  }
+
+  /** The (doc_id, g) distinct word n-grams of each doc of a (doc_id,
+    * toks) frame. Every doc must hold at least `n` tokens: a shorter one
+    * makes an out-of-range shingle index.
+    */
+  def docGrams(toks: DataFrame, n: Int): DataFrame =
+    toks.select(col("doc_id"), explode(ngramShingles(col("toks"), n)).as("g"))
+
+  /** The decontamination flag step: each doc of `docs` (doc_id) gets
+    * `n_matched`, the number of its `grams` (doc_id, g) found in the
+    * benchmark gram set `bench` (g, distinct), and `contaminated`. The
+    * bench side broadcasts, so the corpus side is a map-only semi-join
+    * and the per-doc count is the only shuffle; a doc without grams
+    * flags clean.
+    */
+  def flagContaminated(docs: DataFrame, grams: DataFrame, bench: DataFrame): DataFrame = {
+    val hits = grams
       .join(broadcast(bench), Seq("g"), "left_semi")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_matched"))
-    base.filter(col("doc_id") >= benchBelow).select("doc_id")
+    docs.select("doc_id")
       .join(hits, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
         coalesce(col("n_matched"), lit(0L)).as("n_matched"),
         col("n_matched").isNotNull.as("contaminated"))
-      .orderBy("doc_id")
   }
 
   val defs: Map[String, QDef] = Map(

@@ -26,6 +26,24 @@ object TextOps2 {
           .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
           .filter(size(col("toks")) >= 3)))
 
+  /** The (doc_id, ph) 8-gram passage hashes of a (doc_id, toks) frame,
+    * distinct within each doc; docs under 8 tokens hold none. Shared by
+    * `text_dup_fraction` and its stream twin (graft.streaming.PassageStream).
+    */
+  def passages(toks: DataFrame): DataFrame =
+    toks.filter(size(col("toks")) >= 8)
+      .select(col("doc_id"),
+        explode(array_distinct(transform(sequence(lit(1), size(col("toks")) - 7),
+          i => xxhash64(concat_ws(" ",
+            (0 to 7).map(o => element_at(col("toks"), i + o)): _*))))).as("ph"))
+
+  /** Docs per passage, (ph, nd), from [[passages]]. Its rows are distinct
+    * (doc_id, ph) pairs, so COUNT(*) per passage IS the distinct doc
+    * count: the same integer without partial-distinct hash sets (§6s).
+    */
+  def passageDocCounts(win: DataFrame): DataFrame =
+    win.groupBy("ph").agg(count(lit(1)).as("nd"))
+
   val defs: Map[String, QDef] = Map(
 
     // §2 25fh bigram LM scoring with add-one smoothing: corpus bigram +
@@ -258,17 +276,10 @@ object TextOps2 {
     // keyed by passage hash. Integer counts → exact ratio both engines.
     "text_dup_fraction" -> QDef(
       (s, dir) => {
-        val t = tokd(s, dir).filter(size(col("toks")) >= 8)
         // win feeds both the global passage counts and the per-doc join —
         // cache, or the window explode runs twice.
-        val win = Materialize.cache(t.select(col("doc_id"),
-            explode(array_distinct(transform(sequence(lit(1), size(col("toks")) - 7),
-              i => xxhash64(concat_ws(" ",
-                (0 to 7).map(o => element_at(col("toks"), i + o)): _*))))).as("ph")))
-        // win's passages are array_distinct per doc, so (doc_id, ph)
-        // rows are already unique — COUNT(*) per passage IS the distinct
-        // doc count. Same integer, no partial-distinct hash sets (§6s).
-        val docsPer = win.groupBy("ph").agg(count(lit(1)).as("nd"))
+        val win = Materialize.cache(passages(tokd(s, dir)))
+        val docsPer = passageDocCounts(win)
         win.join(docsPer, "ph")
           .groupBy("doc_id")
           .agg(

@@ -32,44 +32,22 @@ object VectorOps {
     */
   def cosine(a: Column, b: Column): Column = graft.functions.GraftFunctions.cosineSim(a, b)
 
-  /** Random-hyperplane LSH bucket id for one hash table: `planes` sign
-    * bits against deterministic pseudo-random hyperplanes baked in as
-    * literal arrays (constant-folded once — per row cost is planes×dim
-    * multiply-adds, no hashing). `table` seeds independent hyperplane
-    * sets; `dim` is the embedding dimensionality.
-    */
   /** Deterministic hyperplane sets: per table, `planes` × `dim` draws in
     * a fixed order from a table-seeded SplittableRandom — the SAME
     * values whether baked in unrolled or as one nested literal.
     */
-  private def hyperplaneSets(planes: Int, tables: Int, dim: Int): Seq[Seq[Seq[Double]]] =
+  private[queries] def hyperplaneSets(planes: Int, tables: Int, dim: Int): Seq[Seq[Seq[Double]]] =
     (0 until tables).map { t =>
       val rnd = new java.util.SplittableRandom(42L * (t + 1))
       (0 until planes).map(_ => Seq.fill(dim)(rnd.nextDouble() - 0.5))
     }
-
-  /** Sign-bit bucket of `v` against one table's plane array (array of
-    * plane vectors): Σ_p [proj_p > 0]·2^p, computed as a Horner fold
-    * over the REVERSED plane list (acc·2 + bit — no per-row pow) — a
-    * single loop expression over the literal, O(1) codegen size in
-    * planes×dim (the unrolled form Janino-compiled planes×dim literal
-    * trees per table — the ANN codegen fix, same class as
-    * IvfOps.assignLiteral).
-    */
-  private def bucketOf(v: Column, tblPlanes: Column): Column =
-    aggregate(
-      reverse(tblPlanes),
-      lit(0L),
-      (acc, plane) => acc * 2 +
-        when(aggregate(zip_with(v, plane, (x, w) => x * w), lit(0.0), (a, x) => a + x) > 0.0,
-          lit(1L)).otherwise(lit(0L)))
 
   /** Multi-table LSH keys: array of (table, bucket) composite longs. Each
     * vector lands in `tables` buckets; a candidate pair only needs to
     * collide in ONE table, which is what buys recall. One native
     * codegen'd kernel call per row (graftbridge.VectorKernels.lshKeys —
     * identical Horner/dot arithmetic in identical order, pinned
-    * bit-equal to the HOF form below by VectorKernelSpec); the HOF form
+    * bit-equal to the HOF form by VectorKernelSpec); the HOF form
     * ran tables×planes×dim interpreted multiply-adds and allocated one
     * zipped array per (table, plane) per row.
     */
@@ -78,11 +56,6 @@ object VectorOps {
       org.apache.spark.sql.graftbridge.LshKeysNative(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(v),
         hyperplaneSets(planes, tables, dim), tables))
-
-  /** The HOF formulation, kept as the spec's reference. */
-  private[queries] def lshKeysRef(v: Column, planes: Int, tables: Int, dim: Int = 64): Column =
-    transform(typedlit(hyperplaneSets(planes, tables, dim)), (tbl, t) =>
-      bucketOf(v, tbl) * lit(tables.toLong) + t.cast("long"))
 
   /** Two-phase top-k per query over a scored candidate frame
     * `(q_id, neighbor_id, <scoreName>)`: the bounded-heap aggregate

@@ -126,7 +126,7 @@ object AnnStream {
   def searchIndex(
       spark: SparkSession, tableDir: String, model: PqModel,
       probes: Seq[(Long, Seq[Double])], k: Int = 10, shortlist: Int = 50): DataFrame = {
-    val snap = StreamOps.latestSnapshot(spark, tableDir).getOrElse(
+    val snap = SnapshotStore.latest(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed ANN snapshot under $tableDir"))
     PqOps.searchEncoded(spark, snap.select("vec_id", "v", "code"), model, probes, k, shortlist)
   }
@@ -140,7 +140,7 @@ object AnnStream {
       spark: SparkSession, tableDir: String, model: graft.queries.IvfPqOps.IvfPqModel,
       probes: Seq[(Long, Seq[Double])], k: Int = 10, nprobe: Int = 4,
       shortlist: Int = 50): DataFrame = {
-    val snap = StreamOps.latestSnapshot(spark, tableDir).getOrElse(
+    val snap = SnapshotStore.latest(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed ANN snapshot under $tableDir"))
     graft.queries.IvfPqOps.searchEncodedCells(
       spark, snap.select("vec_id", "v", "cid", "code"), model, probes, k, nprobe, shortlist)
@@ -153,7 +153,7 @@ object AnnStream {
   def searchIvfIndex(
       spark: SparkSession, tableDir: String, cents: Seq[Seq[Double]],
       probes: Seq[(Long, Seq[Double])], k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val snap = StreamOps.latestSnapshot(spark, tableDir).getOrElse(
+    val snap = SnapshotStore.latest(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed ANN snapshot under $tableDir"))
     val qs = spark.createDataFrame(
       spark.sparkContext.parallelize(probes, 1)).toDF("q_id", "qv")

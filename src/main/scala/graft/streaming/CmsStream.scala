@@ -4,29 +4,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.queries.SketchOps2.{cmsCells, cmsProbes}
+
 /** Streaming twin of the batch `curate_cms_counts` operator: maintain a
-  * count-min sketch of per-user event counts under ingestion. Unlike
-  * every other snapshot-chain sink (whose state tables grow with the
-  * key space), the CMS state is FIXED-SIZE FOREVER — at most d × w =
-  * 8192 cell rows no matter how many users or events flow through —
-  * which is the property that lets a frequency sketch sit in the hot
-  * path of an unbounded stream.
+  * count-min sketch of per-user event counts under ingestion, built by
+  * the batch operator's own probes and cells. Unlike every other
+  * snapshot-chain sink (whose state tables grow with the key space), the
+  * CMS state is FIXED-SIZE FOREVER — at most d × w = 8192 cell rows no
+  * matter how many users or events flow through — which is the property
+  * that lets a frequency sketch sit in the hot path of an unbounded
+  * stream.
   *
   * Merge algebra is cell-wise addition (count-min sketches are linear),
-  * so the maintained sketch is EXACTLY the sketch a full recompute
-  * would build — spec-checked, not approximate. Estimates keep the
-  * one-sided guarantee: est ≥ true count, always.
+  * so the maintained sketch is EXACTLY the sketch the batch operator
+  * builds over everything that flowed through — spec-checked, not
+  * approximate. Estimates keep the one-sided guarantee: est ≥ true
+  * count, always.
   */
 object CmsStream {
-
-  val D = 4; val W = 2048
-
-  /** Per-batch sketch cells (r, b, c) — one partial-agg over the batch. */
-  private[streaming] def cells(events: DataFrame): DataFrame =
-    events
-      .select(explode(array((0 until D).map(lit(_)): _*)).as("r"), col("user_id"))
-      .select(col("r"), pmod(xxhash64(col("user_id"), col("r")), lit(W)).as("b"))
-      .groupBy("r", "b").agg(count(lit(1)).as("c"))
 
   /** Maintain the sketch chain at `tableDir` under a stream of events
     * with a `user_id` column.
@@ -34,9 +29,9 @@ object CmsStream {
   def cmsSink(
       events: DataFrame, tableDir: String, checkpointDir: String,
       retainSnapshots: Int = 3): StreamingQuery =
-    SnapshotStore.snapshotSink(events, tableDir, checkpointDir, retainSnapshots) {
-      (prev, batch) =>
-        val fresh = cells(batch)
+    SnapshotStore.snapshotSinkWithId(events, tableDir, checkpointDir, retainSnapshots) {
+      (prev, batch, _) =>
+        val fresh = cmsCells(cmsProbes(batch))
         prev match {
           case Some(p) => p.unionByName(fresh).groupBy("r", "b").agg(sum("c").as("c"))
           case None => fresh
@@ -49,9 +44,7 @@ object CmsStream {
   def estimate(spark: SparkSession, tableDir: String, keys: DataFrame): DataFrame = {
     val snap = SnapshotStore.latest(spark, tableDir)
       .getOrElse(spark.emptyDataFrame.select(lit(0).as("r"), lit(0L).as("b"), lit(0L).as("c")))
-    keys
-      .select(col("user_id"), explode(array((0 until D).map(lit(_)): _*)).as("r"))
-      .withColumn("b", pmod(xxhash64(col("user_id"), col("r")), lit(W)))
+    cmsProbes(keys)
       .join(broadcast(snap), Seq("r", "b"), "left")
       .groupBy("user_id")
       .agg(min(coalesce(col("c"), lit(0L))).as("est"))

@@ -14,12 +14,13 @@ import graft.queries.TextOps
   * src/session/pipeline.rs — downstream consumers always read current
   * state).
   *
-  * Scale shape is identical to the batch `text_decontaminate` operator
-  * (TextOps.decontaminate): the benchmark gram set is the SMALL side
-  * (eval suites are MBs against a 100 TB corpus), so it broadcasts and
-  * the corpus-side check is a map-only semi-join — per batch, O(batch
-  * grams), no corpus-side shuffle. Re-reading the gram table per batch
-  * costs one small-file scan per trigger, the price of freshness.
+  * Each batch runs the batch `text_decontaminate` operator's own gram
+  * and flag steps ([[TextOps.docGrams]], [[TextOps.flagContaminated]]):
+  * the benchmark gram set is the SMALL side (eval suites are MBs against
+  * a 100 TB corpus), so it broadcasts and the corpus-side check is a
+  * map-only semi-join — per batch, O(batch grams), no corpus-side
+  * shuffle. Re-reading the gram table per batch costs one small-file
+  * scan per trigger, the price of freshness.
   */
 object DecontamStream {
 
@@ -44,18 +45,9 @@ object DecontamStream {
         val toks = batch
           .select(col("doc_id").cast("long").as("doc_id"),
             split(col("text"), " ").as("toks"))
-        val grams = toks
-          .filter(size(col("toks")) >= n)
-          .select(col("doc_id"), explode(TextOps.ngramShingles(col("toks"), n)).as("g"))
-        val hits = grams.join(broadcast(bench), Seq("g"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_matched"))
-        toks.select("doc_id")
-          .join(hits, Seq("doc_id"), "left")
-          .select(
-            col("doc_id"),
-            coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-            coalesce(col("n_matched") > 0, lit(false)).as("contaminated"),
-            lit(batchId).as("ingest_batch"))
+        TextOps.flagContaminated(
+          toks, TextOps.docGrams(toks.filter(size(col("toks")) >= n), n), bench)
+          .withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -55,8 +55,8 @@ object KMeansStream {
   def kmeansSink(
       vectors: DataFrame, init: Seq[Seq[Double]], tableDir: String,
       checkpointDir: String, retainSnapshots: Int = 3): StreamingQuery =
-    SnapshotStore.snapshotSink(vectors, tableDir, checkpointDir, retainSnapshots) {
-      (prev, batch) =>
+    SnapshotStore.snapshotSinkWithId(vectors, tableDir, checkpointDir, retainSnapshots) {
+      (prev, batch, _) =>
         val spark = batch.sparkSession
         val state = prev.getOrElse(initFrame(spark, init))
         val b = batch.select(col("vec_id").cast("long").as("vec_id"), col("v"))
@@ -102,7 +102,7 @@ object KMeansStream {
 
   /** Live centroids: (cid, n, cv) from the latest committed snapshot. */
   def centroids(spark: SparkSession, tableDir: String): DataFrame = {
-    val snap = StreamOps.latestSnapshot(spark, tableDir).getOrElse(
+    val snap = SnapshotStore.latest(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed k-means snapshot under $tableDir"))
     centroidFrame(snap).join(snap.select("cid", "n"), "cid")
       .select(col("cid"), col("n"), col("cv"))

@@ -49,8 +49,8 @@ object MinhashStream {
   def minhashSink(
       docs: DataFrame, tableDir: String, checkpointDir: String,
       retainSnapshots: Int = 3): StreamingQuery =
-    SnapshotStore.snapshotSink(docs, tableDir, checkpointDir, retainSnapshots) {
-      (prev, batch) =>
+    SnapshotStore.snapshotSinkWithId(docs, tableDir, checkpointDir, retainSnapshots) {
+      (prev, batch, _) =>
         val b =
           if (batch.columns.contains("deleted")) batch
           else batch.withColumn("deleted", lit(false))

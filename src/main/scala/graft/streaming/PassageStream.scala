@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Materialize
+import graft.queries.TextOps2.{passageDocCounts, passages}
 
 /** Streaming twin of the batch `text_dup_fraction` operator: maintain a
   * passage→seen-doc-count table under document ingestion, and tag every
@@ -13,31 +14,17 @@ import graft.Materialize
   * with dup_frac ≈ 1 is a reprint; ≈ 0 is fresh content).
   *
   * Scale shape: each micro-batch hashes its own passages map-side
-  * (O(batch)), merges per-passage counts into the [[SnapshotStore]]
-  * chain with count+count algebra (the AggViewStream pattern — state
-  * lives in parquet snapshots, not executor memory, so a 10⁹-passage
-  * vocabulary costs a keyed merge per batch), and tags the batch by
-  * joining its passages against the snapshot STRICTLY BELOW the current
-  * batch id. That strictly-below read gives replay determinism (a
-  * replayed batch tags against exactly what its first attempt saw) and
-  * gives the tag its meaning: "seen before this batch arrived".
+  * (O(batch)) with the batch operator's [[passages]], merges its
+  * [[passageDocCounts]] into the [[SnapshotStore]] chain with
+  * count+count algebra (state lives in parquet snapshots, not executor
+  * memory, so a 10⁹-passage vocabulary costs a keyed merge per batch),
+  * and tags the batch by joining its passages against the snapshot
+  * STRICTLY BELOW the current batch id. That strictly-below read gives
+  * replay determinism (a replayed batch tags against exactly what its
+  * first attempt saw) and gives the tag its meaning: "seen before this
+  * batch arrived".
   */
 object PassageStream {
-
-  /** 8-gram passage hashes per doc (distinct within doc) from a
-    * (doc_id, text) frame — identical construction to the batch
-    * operator.
-    */
-  private[streaming] def passages(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    docs
-      .select(col("doc_id"), toks.as("toks"))
-      .filter(size(col("toks")) >= 8)
-      .select(col("doc_id"),
-        explode(array_distinct(transform(sequence(lit(1), size(col("toks")) - 7),
-          i => xxhash64(concat_ws(" ",
-            (0 to 7).map(o => element_at(col("toks"), i + o)): _*))))).as("ph"))
-  }
 
   /** Maintain the passage-count snapshot chain at `tableDir` and write
     * per-batch tagged docs (doc_id, n_passages, seen_passages, dup_frac)
@@ -52,7 +39,8 @@ object PassageStream {
         // Cached for the batch's three uses (tag join, per-doc counts,
         // fresh passage counts); the store releases it after the
         // snapshot write.
-        val win = Materialize.cache(passages(batch))
+        val win = Materialize.cache(
+          passages(batch.select(col("doc_id"), split(col("text"), " ").as("toks"))))
         // Tag against what was seen BEFORE this batch (prev snapshot).
         val seen = prev match {
           case Some(p) => win.join(p.select(col("ph")), Seq("ph"), "left_semi")
@@ -68,15 +56,12 @@ object PassageStream {
               .as("dup_frac"))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
         // The next snapshot: previous counts + this batch's counts.
-        val fresh = win.groupBy("ph").agg(count(lit(1)).as("nd"))
+        val fresh = passageDocCounts(win)
         prev match {
           case Some(p) => p.unionByName(fresh).groupBy("ph").agg(sum("nd").as("nd"))
           case None => fresh
         }
     }
-
-  /** Test seam: the passage construction, for recompute comparisons. */
-  private[streaming] def passagesForTest(docs: DataFrame): DataFrame = passages(docs)
 
   /** Read the tagged output of one batch. */
   def readTagged(spark: SparkSession, outDir: String, batchId: Long): DataFrame =

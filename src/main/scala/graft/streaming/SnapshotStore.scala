@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Materialize
 
 /** The one snapshot-chain implementation every incremental sink shares
-  * (mergeSink / AnnStream PQ + IVF / AggViewStream view + stats
-  * catalog). A "store" is a directory of `snap_<batchId>` parquet
+  * (mergeSink, the AnnStream PQ and IVF indexes and the other stream
+  * sinks). A "store" is a directory of `snap_<batchId>` parquet
   * children; a snapshot is COMMITTED once Spark writes its _SUCCESS
   * marker. The chain is replay-idempotent by construction:
   *
@@ -24,9 +24,7 @@ import graft.Materialize
   *
   * Each micro-batch's merge and writes run in one [[graft.Materialize]]
   * scope, released after the snapshot write, so what a merge caches
-  * lives for its batch only. (The LayoutStream landing/base chain keeps
-  * its own two-prefix protocol but shares the committed-id listing
-  * primitive.)
+  * lives for its batch only.
   */
 object SnapshotStore {
 
@@ -41,8 +39,7 @@ object SnapshotStore {
   }
 
   /** Ids of COMMITTED `<prefix><id>` children of `root` (Spark writes
-    * _SUCCESS on completion) — the discovery primitive every
-    * batch-id-addressed directory chain shares (snap_/landing_/base_).
+    * _SUCCESS on completion) — the chain's discovery primitive.
     */
   def committedIds(
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
@@ -81,22 +78,14 @@ object SnapshotStore {
       }
   }
 
-  /** The shared sink skeleton: per micro-batch, `merge(prev, batch)`
-    * produces the next state, which commits as `snap_<batchId>` and then
-    * prunes. All chain semantics (strictly-below read, overwrite-own-id,
-    * retention floor) live HERE; the four sinks supply only their merge
-    * algebra. Trigger.AvailableNow drains what's present and stops —
-    * the incremental-batch pattern for scheduled backfills.
-    */
-  def snapshotSink(
-      src: DataFrame, tableDir: String, checkpointDir: String,
-      retainSnapshots: Int)(
-      merge: (Option[DataFrame], DataFrame) => DataFrame): StreamingQuery =
-    snapshotSinkWithId(src, tableDir, checkpointDir, retainSnapshots)(
-      (prev, batch, _) => merge(prev, batch))
-
-  /** [[snapshotSink]] for merges that need the batch id (e.g. an
-    * ingest-batch column in the stored rows).
+  /** The shared sink skeleton: per micro-batch,
+    * `merge(prev, batch, batchId)` produces the next state, which
+    * commits as `snap_<batchId>` and then prunes. All chain semantics
+    * (strictly-below read, overwrite-own-id, retention floor) live HERE;
+    * the sinks supply only their merge algebra, and may use the batch id
+    * (e.g. an ingest-batch column in the stored rows). Trigger.AvailableNow
+    * drains what's present and stops — the incremental-batch pattern for
+    * scheduled backfills.
     */
   def snapshotSinkWithId(
       src: DataFrame, tableDir: String, checkpointDir: String,

@@ -135,14 +135,14 @@ object StreamOps {
     * reads the latest snapshot with id strictly BELOW itself — the same
     * input state as the first attempt — and overwrites its own output
     * directory, converging to the identical snapshot. Readers take the
-    * highest complete snapshot ([[latestSnapshot]]).
+    * highest complete snapshot ([[SnapshotStore.latest]]).
     */
   def mergeSink(
       updates: DataFrame, tableDir: String, checkpointDir: String,
       retainSnapshots: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    SnapshotStore.snapshotSink(updates, tableDir, checkpointDir, retainSnapshots) {
-      (prev, batch) =>
+    SnapshotStore.snapshotSinkWithId(updates, tableDir, checkpointDir, retainSnapshots) {
+      (prev, batch, _) =>
         val all = prev match {
           case Some(p) => p.unionByName(batch)
           case None => batch
@@ -154,25 +154,6 @@ object StreamOps {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
     }
-
-  /** Chain walk + retention live in [[SnapshotStore]] (shared by every
-    * snapshot sink); these thin aliases keep the public read/maintenance
-    * surface where the streaming docs introduced it.
-    */
-  private[streaming] def fsOf(spark: org.apache.spark.sql.SparkSession, tableDir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) =
-    SnapshotStore.fsOf(spark, tableDir)
-
-  private[streaming] def committedIds(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      prefix: String): Seq[Long] =
-    SnapshotStore.committedIds(fs, root, prefix)
-
-  /** The current merged state — see [[SnapshotStore.latest]]. */
-  def latestSnapshot(
-      spark: org.apache.spark.sql.SparkSession, tableDir: String,
-      below: Option[Long] = None): Option[DataFrame] =
-    SnapshotStore.latest(spark, tableDir, below)
 
   /** NATIVE declarative sessionization: Spark's `session_window`
     * aggregation — the engine-managed sibling of the hand-rolled

@@ -5,14 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming twins of the SubShard per-user sequence operators (r15
-  * verdict task 3 / SURVEY §7c2 item 5): sessionization and
-  * first/last-touch attribution maintained AT INGESTION TIME with the
-  * exact boundary-summary stitching algebra the batch operators use
-  * for hot-user sub-sharding (graft.queries.SubShard) — each arriving
-  * micro-batch plays the role of one time-bucket sub-shard, and the
-  * snapshot state carries precisely what SubShard's per-bucket summary
-  * table carries:
+/** Streaming twins of the SubShard per-user sequence operators (SURVEY
+  * §7c2 item 5): sessionization and first/last-touch attribution
+  * maintained AT INGESTION TIME with the exact boundary-summary
+  * stitching algebra the batch operators use for hot-user sub-sharding
+  * (graft.queries.SubShard) — each arriving micro-batch plays the role
+  * of one time-bucket sub-shard, and the snapshot state carries
+  * precisely what SubShard's per-bucket summary table carries:
   *
   *  - sessionize: the per-user OPEN session row (the "last row of the
   *    previous non-empty bucket" that stitches the next bucket's first
@@ -55,8 +54,8 @@ object SubShardStream {
   def sessionSink(
       events: DataFrame, tableDir: String, checkpointDir: String,
       gapSecs: Long = 1800L, retainSnapshots: Int = 3): StreamingQuery =
-    SnapshotStore.snapshotSink(events, tableDir, checkpointDir, retainSnapshots) {
-      (prev, batch) =>
+    SnapshotStore.snapshotSinkWithId(events, tableDir, checkpointDir, retainSnapshots) {
+      (prev, batch, _) =>
         val flagged = batch.select("user_id", "event_id", "ts_s")
           .withColumn("__p", lag("ts_s", 1).over(ordW))
           .withColumn("__new",

@@ -161,6 +161,19 @@ class BQCompatSpec extends SparkSpec {
     assert(r.getLong(5) == 2L) // Q1 → Q3
   }
 
+  test("DATE_DIFF reads a DATE column named like a unit as its first argument") {
+    // Spark's grammar has a unit-first DATE_DIFF that would take the
+    // `day` column for the unit and MONTH for a column.
+    val r = bq.sql(
+      "SELECT DATE_DIFF(day, d2, MONTH) m, DATE_DIFF(`day`, d2, MONTH) mq, " +
+        "DATE_DIFF(day, d2, DAY) d, TIMESTAMP_DIFF(day, d2, DAY) t, " +
+        "date_diff(day, d2, 'MONTH') ml " +
+        "FROM (SELECT DATE '2024-03-01' AS day, DATE '2024-01-31' AS d2)").collect()(0)
+    assert(r.getLong(0) == 2L && r.getLong(1) == 2L)
+    assert(r.getLong(2) == 30L && r.getLong(3) == 30L)
+    assert(r.getLong(4) == 2L)
+  }
+
   test("unsupported or non-static units fail loudly, never silently default") {
     val e1 = intercept[Exception](
       bq.sql("SELECT TIMESTAMP_DIFF(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-01', 'MONTH')").collect())

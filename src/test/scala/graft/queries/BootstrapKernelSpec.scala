@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.KernelRefs.weightExprRef
 
-/** Bit-equality pin for the r17 Poisson-weight kernel
-  * (graftbridge.PoissonKernel) against the r16 expression form it
+/** Bit-equality pin for the Poisson-weight kernel
+  * (graftbridge.PoissonKernel) against the expression form it
   * replaced: per (order, replica), identical weight integer on the real
   * orders table — which pins the hex-vs-unsigned-int threshold-compare
   * argument and the digest-input byte equality in one sweep.
@@ -21,7 +22,7 @@ class BootstrapKernelSpec extends SparkSpec {
     val expr = o.select(col("o_orderkey"),
         explode(sequence(lit(0), lit(b - 1))).as("b"))
       .select(col("o_orderkey"), col("b"),
-        BootstrapOps.weightExprRef(col("o_orderkey"), col("b")).as("we"))
+        weightExprRef(col("o_orderkey"), col("b")).as("we"))
     val diff = kernel
       .select(col("o_orderkey"), posexplode(col("w")).as(Seq("b", "wk")))
       .join(expr, Seq("o_orderkey", "b"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.KernelRefs.{lshKeysRef, minhashSignatureRef}
 
 /** Bit-equality pins for the native LSH / MinHash / shingle kernels
   * (graftbridge.VectorKernels) against the interpreted HOF formulations
@@ -18,7 +19,7 @@ class VectorKernelSpec extends SparkSpec {
     for ((planes, tables) <- Seq((3, 8), (5, 8), (4, 2))) {
       val diff = e.select(
           VectorOps.lshKeys(col("v"), planes, tables).as("a"),
-          VectorOps.lshKeysRef(col("v"), planes, tables).as("b"))
+          lshKeysRef(col("v"), planes, tables).as("b"))
         .filter(col("a") =!= col("b"))
         .count()
       assert(diff === 0L, s"planes=$planes tables=$tables")
@@ -34,7 +35,7 @@ class VectorKernelSpec extends SparkSpec {
       .union(Seq(Seq.empty[Long]).toDF("hs"))
     val diff = hs.select(
         TextOps.minhashSignature(col("hs"), 32).as("a"),
-        TextOps.minhashSignatureRef(col("hs"), 32).as("b"))
+        minhashSignatureRef(col("hs"), 32).as("b"))
       .filter(not(col("a") <=> col("b")))
       .count()
     assert(diff === 0L)

@@ -37,7 +37,7 @@ class AnnStreamSpec extends SparkSpec {
       AnnStream.pqIndexSink(input.toDF(), model, table, ckpt, retainSnapshots = 1)
         .awaitTermination() // AvailableNow: drains what's present, stops
     def codes(): Map[Long, Seq[Int]] =
-      StreamOps.latestSnapshot(spark, table).get.collect()
+      SnapshotStore.latest(spark, table).get.collect()
         .map(r => r.getLong(r.fieldIndex("vec_id")) ->
           r.getSeq[Int](r.fieldIndex("code"))).toMap
     def top1(qv: Seq[Double]): Long =
@@ -104,7 +104,7 @@ class AnnStreamSpec extends SparkSpec {
       AnnStream.ivfIndexSink(input.toDF(), cents, table, ckpt, retainSnapshots = 1)
         .awaitTermination()
     def cids(): Map[Long, Int] =
-      StreamOps.latestSnapshot(spark, table).get.collect()
+      SnapshotStore.latest(spark, table).get.collect()
         .map(r => r.getLong(r.fieldIndex("vec_id")) -> r.getInt(r.fieldIndex("cid"))).toMap
     // nprobe=1: ONLY the query's nearest cell is scanned, so a vector
     // stored under the wrong cid is invisible to that query — which is
@@ -157,7 +157,7 @@ class AnnStreamSpec extends SparkSpec {
       AnnStream.ivfpqIndexSink(input.toDF(), composed, table, ckpt, retainSnapshots = 1)
         .awaitTermination()
     def rows(): Map[Long, (Int, Seq[Int])] =
-      StreamOps.latestSnapshot(spark, table).get.collect()
+      SnapshotStore.latest(spark, table).get.collect()
         .map(r => r.getLong(r.fieldIndex("vec_id")) ->
           (r.getInt(r.fieldIndex("cid")), r.getSeq[Int](r.fieldIndex("code")))).toMap
     // nprobe=1: only the query's nearest cell is ADC-scanned — a vector
@@ -203,7 +203,7 @@ class AnnStreamSpec extends SparkSpec {
       AnnStream.pqIndexSink(input.toDF(), model, table, ckpt, retainSnapshots = 1)
         .awaitTermination()
     def ids(): Set[Long] =
-      StreamOps.latestSnapshot(spark, table).get.collect()
+      SnapshotStore.latest(spark, table).get.collect()
         .map(_.getAs[Long]("vec_id")).toSet
     def search(qv: Seq[Double], k: Int): Seq[Long] =
       AnnStream.searchIndex(spark, table, model, Seq((100L, qv)), k = k)

@@ -6,16 +6,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.SparkSpec
 import graft.queries.PqOps.PqModel
 
-/** Failure-injection replay proof for the SnapshotStore chain (r8
-  * verdict task 6): the sinks CLAIM replay-idempotence by design
-  * (strictly-below reads, _SUCCESS gating, overwrite-own-id); this spec
-  * actually kills a run mid-write and checks the claim byte-for-byte.
+/** Failure-injection replay proof for the SnapshotStore chain: the
+  * sinks CLAIM replay-idempotence by design (strictly-below reads,
+  * _SUCCESS gating, overwrite-own-id); this spec actually kills a run
+  * mid-write and checks the claim byte-for-byte.
   *
-  * Scenario, per sink (PQ ANN index, aggregate view, MinHash-LSH
-  * near-dup): two identical pipelines drain the same file-source
-  * staging directory — a CONTROL that never fails, and a CRASH twin
-  * that, after its second batch commits, is rolled back to the exact
-  * on-disk state of a process that died mid-write:
+  * Scenario, per sink (PQ ANN index, MinHash-LSH near-dup): two
+  * identical pipelines drain the same file-source staging directory — a
+  * CONTROL that never fails, and a CRASH twin that, after its second
+  * batch commits, is rolled back to the exact on-disk state of a
+  * process that died mid-write:
   *
   *  - the checkpoint's `commits/<N>` marker is deleted (died after the
   *    sink's foreachBatch but before the engine committed the batch —
@@ -115,19 +115,7 @@ class CrashReplaySpec extends SparkSpec {
         Seq(row(3L, Seq(1.0, 0.0, 0.0, 1.0)), row(1L, Seq(0.0, 1.0, 1.0, 0.0))),
         Seq(row(4L, Seq(0.0, 1.0, 1.0, 0.0)))),
       (src, table, ckpt) => AnnStream.pqIndexSink(src, model, table, ckpt),
-      table => StreamOps.latestSnapshot(spark, table).get)
-  }
-
-  test("aggregate view (with retractions) converges through a mid-write crash + replay") {
-    runScenario(
-      "aggview",
-      "k STRING, v DOUBLE, op STRING",
-      Seq(
-        Seq(row("a", 1.0, "u"), row("a", 3.0, "u"), row("b", 10.0, "u")),
-        Seq(row("a", 1.0, "d"), row("b", 5.0, "u"), row("c", 7.0, "u")),
-        Seq(row("b", 10.0, "d"), row("c", 2.0, "u"))),
-      (src, table, ckpt) => AggViewStream.aggViewSink(src, "k", "v", table, ckpt),
-      table => AggViewStream.readView(spark, table))
+      table => SnapshotStore.latest(spark, table).get)
   }
 
   test("MinHash-LSH near-dup state (index + pair ledger) converges through a mid-write crash + replay") {
@@ -142,6 +130,6 @@ class CrashReplaySpec extends SparkSpec {
         Seq(row(3L, nearDup)),
         Seq(row(4L, doc + " extra"))),
       (src, table, ckpt) => MinhashStream.minhashSink(src, table, ckpt),
-      table => StreamOps.latestSnapshot(spark, table).get)
+      table => SnapshotStore.latest(spark, table).get)
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, size, split}
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
+import graft.queries.TextOps
 
 object DecontamStreamSpec {
   final case class Doc(doc_id: Long, text: String)
@@ -51,6 +53,39 @@ class DecontamStreamSpec extends SparkSpec {
       10L -> (1L, true), 11L -> (0L, false), 12L -> (0L, false),
       13L -> (1L, true), 14L -> (0L, false)))
 
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+  }
+
+  test("three micro-batches of sf0.001 documents flag as text_decontaminate does") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("decontam-sf").toString
+    val docs = Tables(spark, sf("documents"), "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    // text_decontaminate's benchmark set: the 4-grams of docs below 20.
+    val benchToks = docs.filter(col("doc_id") < 20)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .filter(size(col("toks")) >= 4)
+    TextOps.docGrams(benchToks, 4).select("g").distinct().write.parquet(s"$base/bench")
+    val corpus = docs.filter(col("doc_id") >= 20).orderBy("doc_id").as[Doc].collect()
+    val parts = corpus.grouped((corpus.length + 2) / 3).toSeq
+    assert(parts.size == 3)
+    val input = MemoryStream[Doc]
+    parts.foreach { part =>
+      input.addData(part.toSeq)
+      DecontamStream.decontamSink(input.toDF(), s"$base/bench", s"$base/out", s"$base/ckpt")
+        .awaitTermination()
+    }
+    def flags(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Boolean)] =
+      df.collect().map(r => r.getLong(r.fieldIndex("doc_id")) ->
+        (r.getLong(r.fieldIndex("n_matched")), r.getBoolean(r.fieldIndex("contaminated")))).toMap
+    val streamed = flags(spark.read.parquet(s"$base/out/batch_*"))
+    val batch = flags(TextOps.decontaminate(spark, sf("documents")))
+    assert(batch.values.exists(_._2) && batch.values.exists(!_._2))
+    // The key leaves out docs under 4 tokens; the stream flags them clean.
+    assert(streamed.keySet == corpus.map(_.doc_id).toSet)
+    assert(streamed.filter { case (id, _) => batch.contains(id) } == batch)
+    assert(streamed.filter { case (id, _) => !batch.contains(id) }.values.forall(_ == ((0L, false))))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
 }

@@ -77,7 +77,7 @@ class KMeansStreamSpec extends SparkSpec {
     assert(messages(ex).exists(m =>
       m.contains("ragged batch vector dimensions") || m.contains("state dimension")))
     // Nothing committed: no snapshot readable.
-    assert(StreamOps.latestSnapshot(spark, table).isEmpty)
+    assert(SnapshotStore.latest(spark, table).isEmpty)
   }
 
   test("one-batch stream state equals one batch Lloyd update from the same init") {

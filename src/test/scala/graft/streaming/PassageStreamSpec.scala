@@ -2,7 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, split}
+
+import graft.{SparkSpec, Tables}
+import graft.queries.TextOps2.{passageDocCounts, passages}
 
 object PassageStreamSpec {
   final case class Doc(doc_id: Long, text: String)
@@ -15,6 +19,11 @@ class PassageStreamSpec extends SparkSpec {
   // share ALL passages, d3 shares none.
   private val t1 = "alpha beta gamma delta epsilon zeta eta theta iota"
   private val t3 = "one two three four five six seven eight nine"
+
+  /** `text_dup_fraction`'s per-passage doc counts (ph -> nd) over (doc_id, text) docs. */
+  private def counts(docs: DataFrame): Map[Long, Long] =
+    passageDocCounts(passages(docs.select(col("doc_id"), split(col("text"), " ").as("toks"))))
+      .collect().map(r => r.getLong(r.fieldIndex("ph")) -> r.getLong(r.fieldIndex("nd"))).toMap
 
   test("arriving docs are tagged against passages seen in EARLIER batches only") {
     implicit val sqlCtx = spark.sqlContext
@@ -49,10 +58,7 @@ class PassageStreamSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val all = Seq(1L -> t1, 3L -> t3, 7L -> t1,
       8L -> "totally different words appear here in this new sentence")
-    val recomputed = PassageStream
-      .passagesForTest(all.toDF("doc_id", "text"))
-      .groupBy("ph").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val recomputed = counts(all.toDF("doc_id", "text"))
     assert(snap == recomputed, s"snapshot $snap vs recompute $recomputed")
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
@@ -70,6 +76,31 @@ class PassageStreamSpec extends SparkSpec {
         .awaitTermination()
     }
     assert(PassageStream.readTagged(spark, s"$base/tagged", 2L).count() == 1)
+    assertHeldNoMoreThan(before)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+  }
+
+  test("three micro-batches of sf0.001 documents maintain text_dup_fraction's passage counts") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("passage-sf").toString
+    val docs = Tables(spark, sf("documents"), "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val all = docs.orderBy("doc_id").as[Doc].collect()
+    val parts = all.grouped((all.length + 2) / 3).toSeq
+    assert(parts.size == 3)
+    val input = MemoryStream[Doc]
+    val before = contextHolds()
+    parts.foreach { part =>
+      input.addData(part.toSeq)
+      PassageStream.dupTagSink(input.toDF(), s"$base/counts", s"$base/tagged", s"$base/ckpt")
+        .awaitTermination()
+    }
+    val maintained = SnapshotStore.latest(spark, s"$base/counts").get.collect()
+      .map(r => r.getLong(r.fieldIndex("ph")) -> r.getLong(r.fieldIndex("nd"))).toMap
+    val batch = counts(docs)
+    assert(batch.nonEmpty && batch.values.exists(_ >= 2), "sf0.001 holds no shared passage")
+    assert(maintained == batch)
     assertHeldNoMoreThan(before)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 
 /** Direct contract tests for the shared snapshot chain — the semantics
-  * every sink (mergeSink, ANN index, agg view, stats catalog) inherits.
+  * every sink (mergeSink, the ANN indexes, the other stream sinks) inherits.
   */
 class SnapshotStoreSpec extends SparkSpec {
 

@@ -216,7 +216,7 @@ class StreamOpsSpec extends SparkSpec {
     input.addData(Ev(1, ts(5), "a", 1.0), Ev(2, ts(6), "a", 2.0))
     drain()
     def state(): Map[Long, (String, Double)] =
-      StreamOps.latestSnapshot(spark, table).get
+      SnapshotStore.latest(spark, table).get
         .collect().map(r => r.getLong(0) -> (r.getString(2), r.getDouble(3))).toMap
     assert(state() == Map(1L -> ("a", 1.0), 2L -> ("a", 2.0)))
     // second run (restart: same checkpoint): user 1 updated, user 3 new

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Materialize, SparkSpec}
 import graft.queries.SubstringDedupOps
 
 object SubstringStreamSpec {
@@ -32,6 +32,7 @@ class SubstringStreamSpec extends SparkSpec {
     val input = MemoryStream[Doc]
     def drain(): Unit =
       SubstringStream.cleanSink(input.toDF(), table, out, ckpt).awaitTermination()
+    val before = contextHolds()
 
     // Batch 0: d3 and d4 share `shared` WITHIN the batch — both lose it
     // (the batch operator's own cross-doc rule); d1 and d2 are unique
@@ -61,25 +62,28 @@ class SubstringStreamSpec extends SparkSpec {
     val all = Seq(1L -> t1, 2L -> d2, 3L -> d3, 4L -> d4, 7L -> d7, 8L -> d8)
       .toDF("doc_id", "text")
     val t = SubstringDedupOps.tokens(all)
-    val anchors = SubstringDedupOps.anchorsOf(t).cache()
-    val dup = anchors.join(
-      anchors.groupBy("ph").agg(countDistinct(col("doc_id")).as("nd"))
-        .filter(col("nd") >= 2).select("ph"),
-      Seq("ph")).select("doc_id", "pos")
-    val batchApply = SubstringDedupOps
-      .cleanWith(t, SubstringDedupOps.fuseSpans(dup))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    assert(batchApply(7L) == b1(7L), s"batch ${batchApply(7L)} vs stream ${b1(7L)}")
-    assert(batchApply(8L) == b1(8L), s"batch ${batchApply(8L)} vs stream ${b1(8L)}")
+    val (_, scope) = Materialize.scope {
+      val anchors = Materialize.cache(SubstringDedupOps.anchorsOf(t))
+      val dup = anchors.join(
+        anchors.groupBy("ph").agg(countDistinct(col("doc_id")).as("nd"))
+          .filter(col("nd") >= 2).select("ph"),
+        Seq("ph")).select("doc_id", "pos")
+      val batchApply = SubstringDedupOps
+        .cleanWith(t, SubstringDedupOps.fuseSpans(dup))
+        .collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+      assert(batchApply(7L) == b1(7L), s"batch ${batchApply(7L)} vs stream ${b1(7L)}")
+      assert(batchApply(8L) == b1(8L), s"batch ${batchApply(8L)} vs stream ${b1(8L)}")
 
-    // The maintained history equals a recompute over all ingested docs.
-    val snap = SnapshotStore.latest(spark, table).get
-      .select("ph").collect().map(_.getLong(0)).toSet
-    val recomputed = anchors.select("ph").distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(snap == recomputed, s"snapshot ${snap.size} vs recompute ${recomputed.size}")
-
+      // The maintained history equals a recompute over all ingested docs.
+      val snap = SnapshotStore.latest(spark, table).get
+        .select("ph").collect().map(_.getLong(0)).toSet
+      val recomputed = anchors.select("ph").distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(snap == recomputed, s"snapshot ${snap.size} vs recompute ${recomputed.size}")
+    }
+    scope.release()
+    assertHeldNoMoreThan(before)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
 
